@@ -35,7 +35,7 @@ from accident_prediction_montreal_spark.operators.text import (
     language_id,
     text_quality,
 )
-from accident_prediction_montreal_spark.plans.registry import register, chk_row as _chk
+from accident_prediction_montreal_spark.plans.registry import checks, register
 from accident_prediction_montreal_spark.sources.registry import load_table
 
 # DuckDB token expression mirroring operators/text.py::tokenize.
@@ -468,6 +468,14 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _zero_or_vacuous(c: str):
+    """Check that violation count ``c`` is 0. An aggregate over an EMPTY
+    input is NULL, and NULL == 0 is NULL where the literal-1 oracle
+    expects 1, so an empty input passes vacuously (r14 registry-wide
+    fuzz triage)."""
+    return F.coalesce(F.col(c), F.lit(0)) == 0
+
+
 @register(
     "dedup_near_invariants",
     oracle="""
@@ -530,42 +538,21 @@ def dedup_near_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("est_jaccard").isNotNull() & ~pair_valid, 1).otherwise(0)
         ).alias("n_bad"),
     )
-    minhash_checks = minhash_stats.select(
-        F.explode(
-            F.array(
-                # coalesce: a corpus with no plantable docs leaves the
-                # full-outer join EMPTY and the sums NULL — vacuous pass
-                # (r14 registry-wide fuzz triage)
-                F.struct(
-                    F.lit("minhash_planted_pairs_found").alias("chk"),
-                    (F.coalesce(F.col("n_missing"), F.lit(0)) == 0)
-                    .cast("long").alias("ok"),
-                ),
-                F.struct(
-                    F.lit("minhash_est_range").alias("chk"),
-                    (F.coalesce(F.col("n_bad"), F.lit(0)) == 0)
-                    .cast("long").alias("ok"),
-                ),
-            )
-        ).alias("c")
-    ).select("c.chk", "c.ok")
 
     sigs = corpus.select("doc_id", simhash("text").alias("sh"))
     orig = sigs.filter(F.col("doc_id") % 20 == 0).filter(F.col("doc_id") < shift)
     copy = sigs.filter(F.col("doc_id") >= shift).select(
         (F.col("doc_id") - shift).alias("doc_id"), F.col("sh").alias("sh_copy")
     )
-    sim_ok = (
-        orig.join(copy, "doc_id")
-        .agg(
-            F.sum(F.when(F.col("sh") == F.col("sh_copy"), 0).otherwise(1)).alias("n_bad")
-        )
-        .select(
-            F.lit("simhash_planted_identical").alias("chk"),
-            (F.coalesce(F.col("n_bad"), F.lit(0)) == 0).cast("long").alias("ok"),
-        )
+    sim_stats = orig.join(copy, "doc_id").agg(
+        F.sum(F.when(F.col("sh") == F.col("sh_copy"), 0).otherwise(1)).alias("n_sim_bad")
     )
-    return minhash_checks.unionByName(sim_ok)
+    # a corpus with no plantable docs leaves the joins EMPTY: vacuous pass
+    return checks(minhash_stats.crossJoin(sim_stats), {
+        "minhash_planted_pairs_found": _zero_or_vacuous("n_missing"),
+        "minhash_est_range": _zero_or_vacuous("n_bad"),
+        "simhash_planted_identical": _zero_or_vacuous("n_sim_bad"),
+    })
 
 
 @register(
@@ -604,8 +591,8 @@ def sim_ann_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned, cents = build_ivf_index(emb, n_cells=8)
     ivf = ivf_cosine_topk(queries_ivf, assigned, cents, k=k, n_probe=3)
 
-    def checks(method: str, out: DataFrame):
-        # All three checks from ONE pass over the ANN output: reusing `out`
+    def stats(method: str, out: DataFrame) -> DataFrame:
+        # All three counts from ONE pass over the ANN output: reusing `out`
         # in three agg branches would re-run the whole LSH/IVF pipeline per
         # branch (Spark re-executes shared lineage per action branch).
         corpus_ids = emb.select("vec_id", F.lit(1).alias("in_corpus"))
@@ -630,45 +617,28 @@ def sim_ann_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Anchor on the query-id set: a query with ZERO result rows would
         # otherwise vanish from the groupBy and evade both checks.
         anchored = queries_ivf.select("query_id").join(per_q, "query_id", "left")
-        stats = anchored.agg(
+        return anchored.agg(
             F.sum(
                 F.when(F.coalesce(F.col("self_hit"), F.lit(0)) == 0, 1).otherwise(0)
-            ).alias("n_no_self"),
+            ).alias(f"{method}_n_no_self"),
             F.sum(
                 F.when(
                     (F.coalesce(F.col("n"), F.lit(0)) >= 1)
                     & (F.coalesce(F.col("n"), F.lit(0)) <= k),
                     0,
                 ).otherwise(1)
-            ).alias("n_bad_k"),
-            F.sum(F.coalesce(F.col("n_stray"), F.lit(0))).alias("n_stray"),
+            ).alias(f"{method}_n_bad_k"),
+            F.sum(F.coalesce(F.col("n_stray"), F.lit(0))).alias(f"{method}_n_stray"),
         )
-        return stats.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.lit(f"{method}_self_hit").alias("chk"),
-                        (F.coalesce(F.col("n_no_self"), F.lit(0)) == 0)
-                        .cast("long")
-                        .alias("ok"),
-                    ),
-                    F.struct(
-                        F.lit(f"{method}_k_bound").alias("chk"),
-                        (F.coalesce(F.col("n_bad_k"), F.lit(0)) == 0)
-                        .cast("long")
-                        .alias("ok"),
-                    ),
-                    F.struct(
-                        F.lit(f"{method}_candidates_in_corpus").alias("chk"),
-                        (F.coalesce(F.col("n_stray"), F.lit(0)) == 0)
-                        .cast("long")
-                        .alias("ok"),
-                    ),
-                )
-            ).alias("c")
-        ).select("c.chk", "c.ok")
 
-    return checks("lsh", lsh).unionByName(checks("ivf", ivf))
+    return checks(stats("lsh", lsh).crossJoin(stats("ivf", ivf)), {
+        "lsh_self_hit": _zero_or_vacuous("lsh_n_no_self"),
+        "lsh_k_bound": _zero_or_vacuous("lsh_n_bad_k"),
+        "lsh_candidates_in_corpus": _zero_or_vacuous("lsh_n_stray"),
+        "ivf_self_hit": _zero_or_vacuous("ivf_n_no_self"),
+        "ivf_k_bound": _zero_or_vacuous("ivf_n_bad_k"),
+        "ivf_candidates_in_corpus": _zero_or_vacuous("ivf_n_stray"),
+    })
 
 
 
@@ -712,8 +682,8 @@ def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         num_hashes=32,
         bands=8,
         shingle_n=3,
-        # persist below: 4 contract branches fan out from `pairs`; without
-        # it the signature computation re-runs per branch (X3 pattern).
+        # persist below: 3 contract subtrees read `pairs`; without it
+        # the signature computation re-runs per subtree (X3 pattern).
         min_est_jaccard=0.5,
         max_bucket_size=1_000_000,
     ).persist()
@@ -725,9 +695,6 @@ def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     missing = expected.join(
         pairs.filter(F.col("est_jaccard") == 1.0), ["id_a", "id_b"], "left_anti"
-    )
-    planted_ok = missing.agg(F.count(F.lit(1)).alias("n_miss")).select(
-        *_chk("minhash_planted_pairs_found_est_1", F.col("n_miss") == 0)
     )
     # coalesce: min over an EMPTY pair set is NULL, and NULL==1 is NULL
     # where the oracle expects the vacuous 1 (r14 fuzz triage — a corpus
@@ -744,20 +711,23 @@ def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min((F.col("id_a") < F.col("id_b")).cast("long")), F.lit(1)
         ).alias("ordr"),
     )
-    rng_ok = stats.select(
-        *_chk("minhash_est_jaccard_in_threshold_range", F.col("rng") == 1)
-    )
-    ord_ok = stats.select(*_chk("minhash_pair_id_ordering", F.col("ordr") == 1))
     ids = corpus.select(F.col("doc_id").alias("cid"))
     stray = (
         pairs.select(F.col("id_a").alias("cid"))
         .unionByName(pairs.select(F.col("id_b").alias("cid")))
         .join(ids, "cid", "left_anti")
     )
-    stray_ok = stray.agg(F.count(F.lit(1)).alias("n_stray")).select(
-        *_chk("minhash_pair_ids_in_corpus", F.col("n_stray") == 0)
+    row = (
+        missing.agg(F.count(F.lit(1)).alias("n_miss"))
+        .crossJoin(stats)
+        .crossJoin(stray.agg(F.count(F.lit(1)).alias("n_stray")))
     )
-    return planted_ok.unionByName(rng_ok).unionByName(ord_ok).unionByName(stray_ok)
+    return checks(row, {
+        "minhash_planted_pairs_found_est_1": F.col("n_miss") == 0,
+        "minhash_est_jaccard_in_threshold_range": F.col("rng") == 1,
+        "minhash_pair_id_ordering": F.col("ordr") == 1,
+        "minhash_pair_ids_in_corpus": F.col("n_stray") == 0,
+    })
 
 
 @register(
@@ -827,47 +797,21 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.avg(F.bit_count(F.col("h").bitwiseXOR(F.col("h_other")))).alias("d_rand"),
         F.count(F.lit(1)).alias("n_paired"),
     )
-    return stats.select(
-        F.explode(
-            F.array(
-                # coalesce: aggregating an EMPTY qualified set (every
-                # doc under 8 tokens) leaves the sums/avgs NULL, and
-                # NULL==0 is NULL where the oracle's expected constant
-                # is 1 — a vacuously-true invariant must report 1
-                # (r14 registry-wide fuzz triage).
-                F.struct(
-                    F.lit("simhash_range_0_2pow62").alias("chk"),
-                    (F.coalesce(F.col("n_out_of_range"), F.lit(0)) == 0)
-                    .cast("long").alias("ok"),
-                ),
-                F.struct(
-                    F.lit("simhash_identical_text_same_hash").alias("chk"),
-                    (F.coalesce(F.col("n_identical_mismatch"), F.lit(0)) == 0)
-                    .cast("long").alias("ok"),
-                ),
-                F.struct(
-                    F.lit("simhash_odd_repetition_invariant").alias("chk"),
-                    (F.coalesce(F.col("n_rep_variant"), F.lit(0)) == 0)
-                    .cast("long").alias("ok"),
-                ),
-                # locality is a STATISTICAL property of realistic
-                # corpora: the truncated-vs-random margin concentrates
-                # as the paired count grows, but a handful of tiny
-                # word-salad docs can legitimately invert it (r14 fuzz
-                # triage drew one) — assert it only in the regime where
-                # it is a claim, vacuous-pass below 32 paired docs
-                # (every sf fixture is far above; the check keeps its
-                # bite where it means something).
-                F.struct(
-                    F.lit("simhash_locality_near_lt_random").alias("chk"),
-                    F.when(F.coalesce(F.col("n_paired"), F.lit(0)) < 32, F.lit(1))
-                    .otherwise(
-                        (F.col("d_near") + 5.0 < F.col("d_rand")).cast("long")
-                    ).alias("ok"),
-                ),
-            )
-        ).alias("c")
-    ).select("c.chk", "c.ok")
+    # an EMPTY qualified set (every doc under 8 tokens) passes vacuously
+    return checks(stats, {
+        "simhash_range_0_2pow62": _zero_or_vacuous("n_out_of_range"),
+        "simhash_identical_text_same_hash": _zero_or_vacuous("n_identical_mismatch"),
+        "simhash_odd_repetition_invariant": _zero_or_vacuous("n_rep_variant"),
+        # locality is a STATISTICAL property of realistic corpora: the
+        # truncated-vs-random margin concentrates as the paired count
+        # grows, but a handful of tiny word-salad docs can legitimately
+        # invert it (r14 fuzz triage drew one) — assert it only in the
+        # regime where it is a claim, vacuous-pass below 32 paired docs
+        # (every sf fixture is far above; the check keeps its bite where
+        # it means something).
+        "simhash_locality_near_lt_random": (F.coalesce(F.col("n_paired"), F.lit(0)) < 32)
+        | (F.col("d_near") + 5.0 < F.col("d_rand")),
+    })
 
 
 # --- Similarity search --------------------------------------------------------------
@@ -1002,37 +946,39 @@ def _ann_contract_checks(
             Window.partitionBy("query_id").orderBy("rank")
         )
 
-    n_queries = queries.agg(F.count(F.lit(1)).alias("n_q"))
-    self_hits = out.filter((F.col("query_id") == F.col("vec_id")) & self_hit).agg(
-        F.countDistinct("query_id").alias("n_self")
-    )
-    self_ok = self_hits.crossJoin(n_queries).select(
-        *_chk(f"{prefix}_self_hit_dist_zero", F.col("n_self") == F.col("n_q"))
-    )
     per_q = out.groupBy("query_id").agg(
         F.count(F.lit(1)).alias("n"),
         F.max("rank").alias("max_rank"),
         F.countDistinct("rank").alias("n_ranks"),
     )
-    k_ok = per_q.agg(
-        F.min(
-            (
-                (F.col("n") <= 5)
-                & (F.col("max_rank") == F.col("n"))
-                & (F.col("n_ranks") == F.col("n"))
-            ).cast("long")
-        ).alias("ok")
-    ).select(*_chk(f"{prefix}_k_bound_and_rank_dense", F.col("ok") == 1))
     stray = out.select("vec_id").join(emb.select("vec_id"), "vec_id", "left_anti")
-    corpus_ok = stray.agg(F.count(F.lit(1)).alias("n_stray")).select(
-        *_chk(f"{prefix}_results_in_corpus", F.col("n_stray") == 0)
+    row = (
+        out.filter((F.col("query_id") == F.col("vec_id")) & self_hit)
+        .agg(F.countDistinct("query_id").alias("n_self"))
+        .crossJoin(queries.agg(F.count(F.lit(1)).alias("n_q")))
+        .crossJoin(
+            per_q.agg(
+                F.min(
+                    (
+                        (F.col("n") <= 5)
+                        & (F.col("max_rank") == F.col("n"))
+                        & (F.col("n_ranks") == F.col("n"))
+                    ).cast("long")
+                ).alias("k_ok")
+            )
+        )
+        .crossJoin(stray.agg(F.count(F.lit(1)).alias("n_stray")))
+        .crossJoin(
+            out.withColumn("__ok", F.coalesce(mono, F.lit(True)))
+            .agg(F.min(F.col("__ok").cast("long")).alias("mono_ok"))
+        )
     )
-    mono_ok = (
-        out.withColumn("__ok", F.coalesce(mono, F.lit(True)))
-        .agg(F.min(F.col("__ok").cast("long")).alias("ok"))
-        .select(*_chk(f"{prefix}_dist_monotone_in_rank", F.col("ok") == 1))
-    )
-    return self_ok.unionByName(k_ok).unionByName(corpus_ok).unionByName(mono_ok)
+    return checks(row, {
+        f"{prefix}_self_hit_dist_zero": F.col("n_self") == F.col("n_q"),
+        f"{prefix}_k_bound_and_rank_dense": F.col("k_ok") == 1,
+        f"{prefix}_results_in_corpus": F.col("n_stray") == 0,
+        f"{prefix}_dist_monotone_in_rank": F.col("mono_ok") == 1,
+    })
 
 
 @register(
@@ -3434,23 +3380,6 @@ def x12_backfill_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     "is not.",
 )
 def mm_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _mm_png_decode_impl(spark, sf_dir)
-
-
-def _mm_png_decode_impl(
-    spark: SparkSession, sf_dir: str, timings: dict | None = None
-) -> DataFrame:
-    """Body of mm_png_decode. ``timings``, when a dict, receives the
-    stage split (r10 verdict #5): ``fixture_encode_s`` (synthesizing
-    and PNG-encoding the test rasters — pure fixture cost a real
-    pipeline never pays; its corpus arrives already encoded) and
-    ``decode_s`` (the Arrow-batched decode + feature scan — the
-    operator being graded), plus ``plan_setup_s``/``total_s`` so the
-    fields sum to the observed wall."""
-    import time as _time
-
-    _impl_t0 = _time.perf_counter()
-
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -3479,17 +3408,7 @@ def _mm_png_decode_impl(
             yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
 
     media = docs.mapInPandas(encode_batches, schema=enc_schema)
-    if timings is not None:
-        # Materialize the encoded fixture so the decode stage can be
-        # timed alone; the registered (timings=None) query keeps the
-        # single fused encode->decode pass.
-        _t0 = _time.perf_counter()
-        media = media.persist()
-        media.count()
-        timings["fixture_encode_s"] = round(_time.perf_counter() - _t0, 3)
-        _dec_t0 = _time.perf_counter()
-    out = png_features(media)
-    out = out.select(
+    return png_features(media).select(
         "media_id",
         "width",
         "height",
@@ -3498,16 +3417,6 @@ def _mm_png_decode_impl(
         (F.round("mean_b", 6) + 0.0).alias("mean_b"),
         (F.round("top_row_mean", 6) + 0.0).alias("top_row_mean"),
     )
-    if timings is not None:
-        out = out.persist()
-        out.count()
-        timings["decode_s"] = round(_time.perf_counter() - _dec_t0, 3)
-        wall = _time.perf_counter() - _impl_t0
-        staged = timings["fixture_encode_s"] + timings["decode_s"]
-        timings["plan_setup_s"] = round(max(0.0, wall - staged), 3)
-        timings["total_s"] = round(wall, 3)
-        media.unpersist()
-    return out
 
 
 @register(

@@ -14,7 +14,7 @@ from accident_prediction_montreal_spark.functions.money import dsum
 from accident_prediction_montreal_spark.ml.class_weighter import ClassWeighter, balanced_weights
 from accident_prediction_montreal_spark.ml.random_undersampler import RandomUnderSampler
 from accident_prediction_montreal_spark.operators.mixing import lcg_uniform_sql
-from accident_prediction_montreal_spark.plans.registry import register, chk_row as _chk
+from accident_prediction_montreal_spark.plans.registry import checks, register
 from accident_prediction_montreal_spark.sources.registry import load_table
 
 
@@ -296,42 +296,17 @@ def r_sampling_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("o_orderstatus") == "F", 1.0).otherwise(0.0).alias("label"),
     )
 
-    def one(chk: str, ok_col):
-        return F.lit(chk).alias("chk"), ok_col.cast("long").alias("ok")
-
     # R3: randomSplit is a partition of the input.
     train, test = orders.randomSplit([0.8, 0.2], seed=0)
-    n_tot = orders.agg(F.count(F.lit(1)).alias("n_tot"))
-    n_tr = train.agg(F.count(F.lit(1)).alias("n_tr"))
-    n_te = test.agg(F.count(F.lit(1)).alias("n_te"))
-    n_ov = (
-        train.select("o_orderkey")
-        .join(test.select("o_orderkey"), "o_orderkey")
-        .agg(F.count(F.lit(1)).alias("n_ov"))
-    )
-    split_ok = (
-        n_tot.crossJoin(n_tr).crossJoin(n_te).crossJoin(n_ov).select(
-            *one(
-                "r3_split_partition",
-                (F.col("n_tr") + F.col("n_te") == F.col("n_tot"))
-                & (F.col("n_ov") == 0),
-            )
-        )
-    )
+    overlap = train.select("o_orderkey").join(test.select("o_orderkey"), "o_orderkey")
 
     # R2: seeded sample is deterministic (named args — the positional form
     # silently drops the seed in pyspark 4) and a subset of the input.
     s1 = orders.sample(withReplacement=False, fraction=0.1, seed=42)
     s2 = orders.sample(withReplacement=False, fraction=0.1, seed=42)
     sym_diff = s1.exceptAll(s2).unionByName(s2.exceptAll(s1))
-    det_ok = sym_diff.agg(F.count(F.lit(1)).alias("n_diff")).select(
-        *one("r2_sample_deterministic", F.col("n_diff") == 0)
-    )
     not_in_input = s1.select("o_orderkey").join(
         orders.select("o_orderkey"), "o_orderkey", "left_anti"
-    )
-    subset_ok = not_in_input.agg(F.count(F.lit(1)).alias("n_out")).select(
-        *one("r2_sample_subset", F.col("n_out") == 0)
     )
 
     # M2: undersampling keeps all positives and only removes negatives.
@@ -339,26 +314,33 @@ def r_sampling_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
         targetImbalanceRatio=1.0, indexCol="o_orderkey", labelCol="label", seed=42
     ).fit(orders)
     sampled = model.transform(orders)
-    in_stats = orders.agg(
-        F.sum(F.col("label")).alias("pos_in"),
-        F.sum(F.lit(1.0) - F.col("label")).alias("neg_in"),
-    )
-    out_stats = sampled.agg(
-        F.sum(F.col("label")).alias("pos_out"),
-        F.sum(F.lit(1.0) - F.col("label")).alias("neg_out"),
-    )
-    stats = in_stats.crossJoin(out_stats)
-    pos_ok = stats.select(*one("m2_positives_preserved", F.col("pos_out") == F.col("pos_in")))
-    neg_ok = stats.select(
-        *one("m2_negatives_not_increased", F.col("neg_out") <= F.col("neg_in"))
-    )
 
-    return (
-        split_ok.unionByName(det_ok)
-        .unionByName(subset_ok)
-        .unionByName(pos_ok)
-        .unionByName(neg_ok)
+    row = (
+        orders.agg(
+            F.count(F.lit(1)).alias("n_tot"),
+            F.sum(F.col("label")).alias("pos_in"),
+            F.sum(F.lit(1.0) - F.col("label")).alias("neg_in"),
+        )
+        .crossJoin(train.agg(F.count(F.lit(1)).alias("n_tr")))
+        .crossJoin(test.agg(F.count(F.lit(1)).alias("n_te")))
+        .crossJoin(overlap.agg(F.count(F.lit(1)).alias("n_ov")))
+        .crossJoin(sym_diff.agg(F.count(F.lit(1)).alias("n_diff")))
+        .crossJoin(not_in_input.agg(F.count(F.lit(1)).alias("n_out")))
+        .crossJoin(
+            sampled.agg(
+                F.sum(F.col("label")).alias("pos_out"),
+                F.sum(F.lit(1.0) - F.col("label")).alias("neg_out"),
+            )
+        )
     )
+    return checks(row, {
+        "r3_split_partition": (F.col("n_tr") + F.col("n_te") == F.col("n_tot"))
+        & (F.col("n_ov") == 0),
+        "r2_sample_deterministic": F.col("n_diff") == 0,
+        "r2_sample_subset": F.col("n_out") == 0,
+        "m2_positives_preserved": F.col("pos_out") == F.col("pos_in"),
+        "m2_negatives_not_increased": F.col("neg_out") <= F.col("neg_in"),
+    })
 
 
 @register(
@@ -382,23 +364,9 @@ def r_stratified_sample_invariants(spark: SparkSession, sf_dir: str) -> DataFram
     s1 = orders.sampleBy("o_orderstatus", fractions, seed=7)
     s2 = orders.sampleBy("o_orderstatus", fractions, seed=7)
 
-    def one(chk: str, ok_col):
-        return F.lit(chk).alias("chk"), ok_col.cast("long").alias("ok")
-
     sym_diff = s1.exceptAll(s2).unionByName(s2.exceptAll(s1))
-    det_ok = sym_diff.agg(F.count(F.lit(1)).alias("n_diff")).select(
-        *one("strat_deterministic", F.col("n_diff") == 0)
-    )
     not_in_input = s1.select("o_orderkey").join(
         orders.select("o_orderkey"), "o_orderkey", "left_anti"
-    )
-    subset_ok = not_in_input.agg(F.count(F.lit(1)).alias("n_out")).select(
-        *one("strat_subset", F.col("n_out") == 0)
-    )
-    zero_ok = (
-        s1.filter(F.col("o_orderstatus") == "P")
-        .agg(F.count(F.lit(1)).alias("n_p"))
-        .select(*one("strat_zero_fraction_empty", F.col("n_p") == 0))
     )
 
     frac = F.element_at(
@@ -407,7 +375,7 @@ def r_stratified_sample_invariants(spark: SparkSession, sf_dir: str) -> DataFram
     )
     per_in = orders.groupBy("o_orderstatus").agg(F.count(F.lit(1)).alias("n_in"))
     per_s = s1.groupBy("o_orderstatus").agg(F.count(F.lit(1)).alias("n_got"))
-    bounds_ok = (
+    n_bad = (
         per_in.join(per_s, "o_orderstatus", "left")
         .na.fill(0, ["n_got"])
         .withColumn("f", frac)
@@ -420,9 +388,21 @@ def r_stratified_sample_invariants(spark: SparkSession, sf_dir: str) -> DataFram
             ).cast("int"),
         )
         .agg(F.sum("bad").alias("n_bad"))
-        .select(*one("strat_counts_in_bounds", F.col("n_bad") == 0))
     )
-    return det_ok.unionByName(subset_ok).unionByName(zero_ok).unionByName(bounds_ok)
+    row = (
+        sym_diff.agg(F.count(F.lit(1)).alias("n_diff"))
+        .crossJoin(not_in_input.agg(F.count(F.lit(1)).alias("n_out")))
+        .crossJoin(
+            s1.filter(F.col("o_orderstatus") == "P").agg(F.count(F.lit(1)).alias("n_p"))
+        )
+        .crossJoin(n_bad)
+    )
+    return checks(row, {
+        "strat_deterministic": F.col("n_diff") == 0,
+        "strat_subset": F.col("n_out") == 0,
+        "strat_zero_fraction_empty": F.col("n_p") == 0,
+        "strat_counts_in_bounds": F.col("n_bad") == 0,
+    })
 
 
 @register(
@@ -840,33 +820,17 @@ def m_rf_pipeline_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     rf = model.stages[-1]
     imp_sum = float(sum(rf.featureImportances.toArray()))
-    imp_ok = spark.createDataFrame(
-        [("importances_sum_to_one", 1 if abs(imp_sum - 1.0) < 1e-6 else 0)],
-        ["chk", "ok"],
-    )
-    stats = scored.agg(
+    row = scored.agg(
         F.sum(
             F.when((F.col("p1") >= 0.0) & (F.col("p1") <= 1.0), 0).otherwise(1)
         ).alias("n_bad_prob"),
         F.count(F.lit(1)).alias("n_out"),
     ).crossJoin(orders.agg(F.count(F.lit(1)).alias("n_in")))
-    checks = stats.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.lit("probabilities_valid").alias("chk"),
-                    (F.coalesce(F.col("n_bad_prob"), F.lit(0)) == 0)
-                    .cast("long")
-                    .alias("ok"),
-                ),
-                F.struct(
-                    F.lit("predictions_cover_input").alias("chk"),
-                    (F.col("n_out") == F.col("n_in")).cast("long").alias("ok"),
-                ),
-            )
-        ).alias("c")
-    ).select("c.chk", "c.ok")
-    return imp_ok.select("chk", F.col("ok").cast("long")).unionByName(checks)
+    return checks(row, {
+        "importances_sum_to_one": F.lit(abs(imp_sum - 1.0) < 1e-6),
+        "probabilities_valid": F.coalesce(F.col("n_bad_prob"), F.lit(0)) == 0,
+        "predictions_cover_input": F.col("n_out") == F.col("n_in"),
+    })
 
 
 # --- Sampling + sketches: the randomness itself has no ANSI oracle, so
@@ -902,31 +866,28 @@ def m2_random_undersampler(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).fit(orders)
     out = model.transform(orders)
 
-    stats = out.agg(
-        F.sum("label").alias("pos"),
-        F.sum(F.lit(1.0) - F.col("label")).alias("neg"),
-        F.count(F.lit(1)).alias("n"),
-        F.countDistinct("index").alias("n_ids"),
-    )
-    ratio_ok = stats.select(
-        *_chk(
-            "m2_ratio_achieved",
-            (F.col("neg") / F.col("pos") >= 0.75) & (F.col("neg") / F.col("pos") <= 1.25),
-        )
-    )
-    dup_ok = stats.select(*_chk("m2_no_duplicate_rows", F.col("n") == F.col("n_ids")))
     stray = out.select("index").join(orders.select("index"), "index", "left_anti")
-    subset_ok = stray.agg(F.count(F.lit(1)).alias("n_stray")).select(
-        *_chk("m2_subset_of_input", F.col("n_stray") == 0)
-    )
     out2 = model.transform(orders)
     sym = out.select("index").exceptAll(out2.select("index")).unionByName(
         out2.select("index").exceptAll(out.select("index"))
     )
-    det_ok = sym.agg(F.count(F.lit(1)).alias("n_diff")).select(
-        *_chk("m2_transform_deterministic", F.col("n_diff") == 0)
+    row = (
+        out.agg(
+            F.sum("label").alias("pos"),
+            F.sum(F.lit(1.0) - F.col("label")).alias("neg"),
+            F.count(F.lit(1)).alias("n"),
+            F.countDistinct("index").alias("n_ids"),
+        )
+        .crossJoin(stray.agg(F.count(F.lit(1)).alias("n_stray")))
+        .crossJoin(sym.agg(F.count(F.lit(1)).alias("n_diff")))
     )
-    return ratio_ok.unionByName(subset_ok).unionByName(dup_ok).unionByName(det_ok)
+    ratio = F.col("neg") / F.col("pos")
+    return checks(row, {
+        "m2_ratio_achieved": (ratio >= 0.75) & (ratio <= 1.25),
+        "m2_subset_of_input": F.col("n_stray") == 0,
+        "m2_no_duplicate_rows": F.col("n") == F.col("n_ids"),
+        "m2_transform_deterministic": F.col("n_diff") == 0,
+    })
 
 
 @register(
@@ -948,23 +909,21 @@ def r2_seeded_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     s1 = orders.sample(withReplacement=False, fraction=0.1, seed=42).select(
         "o_orderkey", "o_custkey"
     )
-    n_tot = orders.agg(F.count(F.lit(1)).alias("n_tot"))
-    stats = s1.agg(
-        F.count(F.lit(1)).alias("n"), F.countDistinct("o_orderkey").alias("n_ids")
-    ).crossJoin(n_tot)
-    frac = F.col("n") / F.col("n_tot")
-    frac_ok = stats.select(
-        *_chk("r2_fraction_within_tol", (frac >= 0.06) & (frac <= 0.14))
-    )
-    dup_ok = stats.select(*_chk("r2_no_duplicate_rows", F.col("n") == F.col("n_ids")))
     s_other = orders.sample(withReplacement=False, fraction=0.1, seed=43)
     sym = s1.select("o_orderkey").exceptAll(s_other.select("o_orderkey")).unionByName(
         s_other.select("o_orderkey").exceptAll(s1.select("o_orderkey"))
     )
-    seed_ok = sym.agg(F.count(F.lit(1)).alias("n_diff")).select(
-        *_chk("r2_seed_applies", F.col("n_diff") > 0)
+    row = (
+        s1.agg(F.count(F.lit(1)).alias("n"), F.countDistinct("o_orderkey").alias("n_ids"))
+        .crossJoin(orders.agg(F.count(F.lit(1)).alias("n_tot")))
+        .crossJoin(sym.agg(F.count(F.lit(1)).alias("n_diff")))
     )
-    return frac_ok.unionByName(dup_ok).unionByName(seed_ok)
+    frac = F.col("n") / F.col("n_tot")
+    return checks(row, {
+        "r2_fraction_within_tol": (frac >= 0.06) & (frac <= 0.14),
+        "r2_no_duplicate_rows": F.col("n") == F.col("n_ids"),
+        "r2_seed_applies": F.col("n_diff") > 0,
+    })
 
 
 @register(
@@ -985,27 +944,22 @@ def r2_seeded_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 def r3_random_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, "orders", sf_dir)
     train, test = orders.randomSplit([0.8, 0.2], seed=0)
-    n_tot = orders.agg(F.count(F.lit(1)).alias("n_tot"))
-    stats = (
-        train.agg(F.count(F.lit(1)).alias("n_tr"))
-        .crossJoin(test.agg(F.count(F.lit(1)).alias("n_te")))
-        .crossJoin(n_tot)
-    )
-    frac = F.col("n_tr") / F.col("n_tot")
-    frac_ok = stats.select(
-        *_chk("r3_fractions_within_tol", (frac >= 0.75) & (frac <= 0.85))
-    )
-    nonempty_ok = stats.select(
-        *_chk("r3_both_nonempty", (F.col("n_tr") > 0) & (F.col("n_te") > 0))
-    )
     train2, _ = orders.randomSplit([0.8, 0.2], seed=0)
     sym = train.select("o_orderkey").exceptAll(train2.select("o_orderkey")).unionByName(
         train2.select("o_orderkey").exceptAll(train.select("o_orderkey"))
     )
-    det_ok = sym.agg(F.count(F.lit(1)).alias("n_diff")).select(
-        *_chk("r3_split_deterministic", F.col("n_diff") == 0)
+    row = (
+        train.agg(F.count(F.lit(1)).alias("n_tr"))
+        .crossJoin(test.agg(F.count(F.lit(1)).alias("n_te")))
+        .crossJoin(orders.agg(F.count(F.lit(1)).alias("n_tot")))
+        .crossJoin(sym.agg(F.count(F.lit(1)).alias("n_diff")))
     )
-    return frac_ok.unionByName(nonempty_ok).unionByName(det_ok)
+    frac = F.col("n_tr") / F.col("n_tot")
+    return checks(row, {
+        "r3_fractions_within_tol": (frac >= 0.75) & (frac <= 0.85),
+        "r3_both_nonempty": (F.col("n_tr") > 0) & (F.col("n_te") > 0),
+        "r3_split_deterministic": F.col("n_diff") == 0,
+    })
 
 
 @register(
@@ -1109,23 +1063,22 @@ def a8_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.abs(F.col("approx_parts") - F.col("exact_parts"))
         / F.col("exact_parts").cast("double")
     )
-    group_ok = per_group.agg(
+    row = per_group.agg(
         F.min((rel_err <= 0.15).cast("long")).alias("all_ok"),
         F.min((F.col("approx_parts") > 0).cast("long")).alias("all_pos"),
-    )
-    g_rel = group_ok.select(*_chk("a8_group_rel_err_le_15pct", F.col("all_ok") == 1))
-    g_pos = group_ok.select(*_chk("a8_all_positive", F.col("all_pos") == 1))
-    global_stats = li.agg(
-        F.approx_count_distinct("l_partkey").alias("a"),
-        F.countDistinct("l_partkey").alias("e"),
-    )
-    glob_ok = global_stats.select(
-        *_chk(
-            "a8_global_rel_err_le_15pct",
-            F.abs(F.col("a") - F.col("e")) / F.col("e").cast("double") <= 0.15,
+    ).crossJoin(
+        li.agg(
+            F.approx_count_distinct("l_partkey").alias("a"),
+            F.countDistinct("l_partkey").alias("e"),
         )
     )
-    return g_rel.unionByName(glob_ok).unionByName(g_pos)
+    return checks(row, {
+        "a8_group_rel_err_le_15pct": F.col("all_ok") == 1,
+        "a8_global_rel_err_le_15pct": F.abs(F.col("a") - F.col("e"))
+        / F.col("e").cast("double")
+        <= 0.15,
+        "a8_all_positive": F.col("all_pos") == 1,
+    })
 
 
 @register(
@@ -2827,25 +2780,15 @@ def x15_hll_shard_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.hll_sketch_estimate(F.hll_sketch_agg("user_id")).alias("direct_est"),
         F.countDistinct("user_id").alias("exact"),
     )
-    both = merged.crossJoin(direct)
-    eq = both.select(
-        *_chk(
-            "hll_merge_close_to_direct_1pct",
-            F.abs(F.col("merged_est") - F.col("direct_est"))
-            / F.greatest(F.col("direct_est").cast("double"), F.lit(1.0))
-            <= 0.01,
-        )
-    )
-    err = both.select(
-        *_chk(
-            "hll_rel_err_le_5pct",
-            F.abs(F.col("merged_est") - F.col("exact"))
-            / F.col("exact").cast("double")
-            <= 0.05,
-        )
-    )
-    pos = both.select(*_chk("hll_estimate_positive", F.col("merged_est") > 0))
-    return eq.unionByName(err).unionByName(pos).orderBy("chk")
+    return checks(merged.crossJoin(direct), {
+        "hll_merge_close_to_direct_1pct": F.abs(F.col("merged_est") - F.col("direct_est"))
+        / F.greatest(F.col("direct_est").cast("double"), F.lit(1.0))
+        <= 0.01,
+        "hll_rel_err_le_5pct": F.abs(F.col("merged_est") - F.col("exact"))
+        / F.col("exact").cast("double")
+        <= 0.05,
+        "hll_estimate_positive": F.col("merged_est") > 0,
+    }).orderBy("chk")
 
 
 @register(

@@ -21,7 +21,7 @@ from accident_prediction_montreal_spark.operators.polygon import (
     point_in_polygon_join,
 )
 from accident_prediction_montreal_spark.operators.zorder import write_zordered
-from accident_prediction_montreal_spark.plans.registry import register
+from accident_prediction_montreal_spark.plans.registry import checks, register
 from accident_prediction_montreal_spark.plans.relational_extra import _scratch
 from accident_prediction_montreal_spark.sources.registry import load_table
 
@@ -145,7 +145,7 @@ def x18_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x19_dq_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, "events", sf_dir)
-    checks = [
+    expectations = [
         Q.bounded("value", 0.0, 500.0),
         Q.completeness("ts", 0.999),
         Q.in_set("event_type", ["click", "view", "purchase", "signup", "error"]),
@@ -153,7 +153,7 @@ def x19_dq_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
         Q.min_fraction("purchase_rate", F.col("event_type") == "purchase", 0.15),
         Q.uniqueness("event_id"),
     ]
-    return Q.run_checks(ev, checks)
+    return Q.run_checks(ev, expectations)
 
 
 @register(
@@ -487,25 +487,6 @@ _ER_TITLE_SQL = """
     "end-to-end parity for an ITERATIVE algorithm.",
 )
 def er_golden_records(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _er_golden_records_impl(spark, sf_dir)
-
-
-def _er_golden_records_impl(
-    spark: SparkSession, sf_dir: str, timings: dict | None = None
-) -> DataFrame:
-    """Body of er_golden_records. ``timings``, when a dict, receives the
-    stage split (r10 verdict #5): ``matching_s`` (blocked pair
-    generation — the n-gram Jaccard + editdist-1 similarity joins, the
-    block-bounded quadratic heart), ``cc_s`` (connected components over
-    the match edges), ``survivorship_s`` (golden-record aggregation +
-    broadcast-back), plus ``plan_setup_s``/``total_s`` so the fields sum
-    to the observed wall. Persisting the stage boundaries adds
-    barriers the registered query doesn't have — the split is for
-    attribution, the unsplit number remains the headline."""
-    import time as _time
-
-    _impl_t0 = _time.perf_counter()
-
     from accident_prediction_montreal_spark.operators.components import (
         connected_components,
     )
@@ -529,21 +510,7 @@ def _er_golden_records_impl(
         "id_a", "id_b"
     )
     edges = jp.unionByName(ep)
-    if timings is not None:
-        _t0 = _time.perf_counter()
-        edges = edges.persist()
-        edges.count()
-        timings["matching_s"] = round(_time.perf_counter() - _t0, 3)
-    # connected_components is EAGER (localCheckpoint + checksum per
-    # star round), so the cc timer must start before the call, not at
-    # the materializing count.
-    _t0 = _time.perf_counter()
     comp = connected_components(edges, src="id_a", dst="id_b")
-    if timings is not None:
-        comp = comp.persist()
-        comp.count()
-        timings["cc_s"] = round(_time.perf_counter() - _t0, 3)
-        _surv_t0 = _time.perf_counter()
     labeled = docs.join(
         comp.withColumnRenamed("node", "doc_id"), on="doc_id", how="left"
     ).withColumn("component_id", F.coalesce("component", "doc_id"))
@@ -557,7 +524,7 @@ def _er_golden_records_impl(
         F.countDistinct("source").cast("long").alias("n_sources"),
     )
     # golden rows are one-per-cluster (tiny): broadcast the join back
-    out = (
+    return (
         labeled.select("doc_id", "component_id")
         .join(F.broadcast(golden), on="component_id")
         .select(
@@ -565,19 +532,6 @@ def _er_golden_records_impl(
         )
         .orderBy("doc_id")
     )
-    if timings is not None:
-        out = out.persist()
-        out.count()
-        timings["survivorship_s"] = round(_time.perf_counter() - _surv_t0, 3)
-        wall = _time.perf_counter() - _impl_t0
-        staged = (
-            timings["matching_s"] + timings["cc_s"] + timings["survivorship_s"]
-        )
-        timings["plan_setup_s"] = round(max(0.0, wall - staged), 3)
-        timings["total_s"] = round(wall, 3)
-        edges.unpersist()
-        comp.unpersist()
-    return out
 
 
 @register(
@@ -955,33 +909,13 @@ def a21_approx_topk_invariant(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary = F.element_at(ex_counts_desc, F.size(ex_counts_desc))
     sk_items = F.transform(F.col("tk"), lambda e: e["item"])
     strict_above = F.filter(F.col("ex"), lambda e: e["cnt"] > boundary)
-    # ONE pass over `both`, not a 3-branch union (the x21 restructure,
-    # r15): each union branch re-planned the sketch x exact crossJoin —
-    # two full events aggregates per check row. inline() emits the same
-    # three (chk, ok) rows from a single evaluation.
-    def _chk(chk: str, ok_col):
-        return F.struct(
-            F.lit(chk).alias("chk"), ok_col.cast("long").alias("ok")
-        )
-
-    return both.select(
-        F.inline(
-            F.array(
-                _chk(
-                    "topk_counts_exact_on_skew",
-                    sk_counts_desc == ex_counts_desc,
-                ),
-                _chk(
-                    "topk_items_match_exact",
-                    F.forall(
-                        strict_above,
-                        lambda e: F.array_contains(sk_items, e["hh_key"]),
-                    ),
-                ),
-                _chk("topk_ordered_desc", ordered_ok),
-            )
-        )
-    ).orderBy("chk")
+    return checks(both, {
+        "topk_counts_exact_on_skew": sk_counts_desc == ex_counts_desc,
+        "topk_items_match_exact": F.forall(
+            strict_above, lambda e: F.array_contains(sk_items, e["hh_key"])
+        ),
+        "topk_ordered_desc": ordered_ok,
+    }).orderBy("chk")
 
 
 @register(
@@ -1186,23 +1120,6 @@ def j16_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     "as partition pruning itself, never a data collect.",
 )
 def x21_ann_pruned_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _x21_ann_pruned_layout_impl(spark, sf_dir)
-
-
-def _x21_ann_pruned_layout_impl(
-    spark: SparkSession, sf_dir: str, timings: dict | None = None
-) -> DataFrame:
-    """Body of x21_ann_pruned_layout. ``timings``, when a dict, receives
-    the stage split (r10 verdict #5): ``quantizer_fit_s`` (MLlib k-means
-    on a sample — one-off model cost), ``layout_write_s`` (the at-rest
-    cell-partitioned parquet WRITE — paid once per corpus version, NOT
-    per query), ``probe_s`` (the steady-state pruned read + top-k — the
-    only per-query cost), plus ``plan_setup_s``/``total_s`` so the
-    fields sum to the observed wall."""
-    import time as _time
-
-    _impl_t0 = _time.perf_counter()
-
     from accident_prediction_montreal_spark.functions.vectors import cosine_similarity
     from accident_prediction_montreal_spark.operators.ivf import (
         build_ivf_index,
@@ -1212,7 +1129,6 @@ def _x21_ann_pruned_layout_impl(
     # Coarse quantizers train on a SAMPLE (standard IVF practice — the
     # layout contracts below are invariant to centroid quality): the
     # full-corpus MLlib fit was half this query's sf1 wall time.
-    _t0 = _time.perf_counter()
     assigned, centroids = build_ivf_index(
         emb, n_cells=16, sample_fraction=0.25, max_iter=5
     )
@@ -1223,21 +1139,13 @@ def _x21_ann_pruned_layout_impl(
 
     assigned = assigned.persist()
     cachereg.register("plans.x21_ann_pruned_layout", assigned)
-    if timings is not None:
-        # build_ivf_index's MLlib fit is eager; assignment stays lazy
-        # (it materializes inside the write below).
-        timings["quantizer_fit_s"] = round(_time.perf_counter() - _t0, 3)
     out_dir, _ = _scratch("ivfpart", sf_dir)
-    _t0 = _time.perf_counter()
     (
         assigned.select("vec_id", "embedding", "cell_id")
         .write.mode("overwrite")
         .partitionBy("cell_id")
         .parquet(out_dir)
     )
-    if timings is not None:
-        timings["layout_write_s"] = round(_time.perf_counter() - _t0, 3)
-    _probe_t0 = _time.perf_counter()
     disk = spark.read.parquet(out_dir)
 
     queries = emb.filter(F.col("vec_id") < 3).select(
@@ -1290,53 +1198,15 @@ def _x21_ann_pruned_layout_impl(
         .count()
     )
 
-    both = hd.crossJoin(hm)
-    # ONE pass over `both`, not a 3-branch union: each union branch
-    # re-planned the crossJoin of the two top-k hash aggregates (the
-    # branches' exchanges are NOT AQE-reusable across union sides of
-    # independent single-row aggregates), so the disk and in-memory
-    # top-k subtrees executed once per check row. inline() emits the
-    # same three (chk, ok) rows from a single evaluation (r15, guide
-    # §1.2 don't compute what you throw away). The first check stays a
-    # plain boolean literal, NOT `lit(int(..)) == 1` — the latter was
-    # the "trivially true equals predicate" WARN source (r13 verdict
-    # ask #4).
-    def _chk(chk: str, ok_col):
-        return F.struct(
-            F.lit(chk).alias("chk"), ok_col.cast("long").alias("ok")
-        )
-
-    out = both.select(
-        F.inline(
-            F.array(
-                _chk(
-                    "partition_pruning_files",
-                    F.lit(bool(0 < pruned_files < total_files)),
-                ),
-                _chk(
-                    "pruned_equals_inmemory_topk",
-                    (F.col("h") == F.col("hm")) & (F.col("n") == F.col("nm")),
-                ),
-                _chk("topk_rows", F.col("n") == 3 * k),
-            )
-        )
-    ).orderBy("chk")
-    if timings is not None:
-        out = out.persist()
-        out.count()
-        # probe_s includes the file-pruning contract counts (the
-        # input_file_name() scans) — they ARE reads of the pruned
-        # layout, i.e. the steady-state serving path being graded.
-        timings["probe_s"] = round(_time.perf_counter() - _probe_t0, 3)
-        wall = _time.perf_counter() - _impl_t0
-        staged = (
-            timings["quantizer_fit_s"]
-            + timings["layout_write_s"]
-            + timings["probe_s"]
-        )
-        timings["plan_setup_s"] = round(max(0.0, wall - staged), 3)
-        timings["total_s"] = round(wall, 3)
-    return out
+    # The first check stays a plain boolean literal, NOT
+    # `lit(int(..)) == 1` — the latter was the "trivially true equals
+    # predicate" WARN source (r13 verdict ask #4).
+    return checks(hd.crossJoin(hm), {
+        "partition_pruning_files": F.lit(bool(0 < pruned_files < total_files)),
+        "pruned_equals_inmemory_topk": (F.col("h") == F.col("hm"))
+        & (F.col("n") == F.col("nm")),
+        "topk_rows": F.col("n") == 3 * k,
+    }).orderBy("chk")
 
 
 @register(

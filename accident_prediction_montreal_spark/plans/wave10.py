@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from accident_prediction_montreal_spark.plans.registry import register
+from accident_prediction_montreal_spark.plans.registry import checks, register
 from accident_prediction_montreal_spark.plans.relational_extra import _scratch
 from accident_prediction_montreal_spark.plans.snapshot_fixture import (
     SQL_SNAPSHOT_B,
@@ -398,7 +398,6 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_incremental_pairs,
     )
     from accident_prediction_montreal_spark.operators.text import tokenize
-    from accident_prediction_montreal_spark.plans.registry import chk_row as _chk
 
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
     dup_src = docs.filter(
@@ -430,14 +429,8 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["new_id", "corpus_id"],
         "left_anti",
     )
-    planted_ok = missing.agg(F.count(F.lit(1)).alias("n")).select(
-        *_chk("incr_planted_dups_found_est_1", F.col("n") == 0)
-    )
     novel_hits = pairs.join(
         novel.select(F.col("doc_id").alias("new_id")), "new_id", "left_semi"
-    )
-    novel_ok = novel_hits.agg(F.count(F.lit(1)).alias("n")).select(
-        *_chk("incr_novel_docs_clean", F.col("n") == 0)
     )
     stray = (
         pairs.select(F.col("new_id").alias("k"))
@@ -448,21 +441,26 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    sides_ok = stray.agg(F.count(F.lit(1)).alias("n")).select(
-        *_chk("incr_sides_correct", F.col("n") == 0)
+    row = (
+        missing.agg(F.count(F.lit(1)).alias("n_missing"))
+        .crossJoin(novel_hits.agg(F.count(F.lit(1)).alias("n_novel")))
+        .crossJoin(stray.agg(F.count(F.lit(1)).alias("n_stray")))
+        .crossJoin(
+            pairs.agg(
+                F.min(
+                    (
+                        (F.col("est_jaccard") >= 0.5) & (F.col("est_jaccard") <= 1.0)
+                    ).cast("long")
+                ).alias("r")
+            )
+        )
     )
-    rng_ok = pairs.agg(
-        F.min(
-            (
-                (F.col("est_jaccard") >= 0.5) & (F.col("est_jaccard") <= 1.0)
-            ).cast("long")
-        ).alias("r")
-    ).select(
-        *_chk("incr_est_jaccard_in_range", F.coalesce(F.col("r") == 1, F.lit(True)))
-    )
-    return (
-        planted_ok.unionByName(novel_ok).unionByName(sides_ok).unionByName(rng_ok)
-    )
+    return checks(row, {
+        "incr_planted_dups_found_est_1": F.col("n_missing") == 0,
+        "incr_novel_docs_clean": F.col("n_novel") == 0,
+        "incr_sides_correct": F.col("n_stray") == 0,
+        "incr_est_jaccard_in_range": F.coalesce(F.col("r") == 1, F.lit(True)),
+    })
 
 
 @register(
@@ -488,24 +486,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     "not different answers).",
 )
 def st_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _st_incremental_dedup_impl(spark, sf_dir)
-
-
-def _st_incremental_dedup_impl(
-    spark: SparkSession, sf_dir: str, timings: dict | None = None
-) -> DataFrame:
-    """Body of st_incremental_dedup. ``timings``, when a dict, receives
-    ``index_build_s`` (the one-off at-rest corpus index materialization
-    — the cost a real pipeline pays once, NOT per batch) and
-    ``probe_s`` (the steady-state streaming probe) so bench artifacts
-    can report the two separately: a bundled number misrepresents a
-    sub-second steady-state operator as an 11 s one
-    (BENCH_stress_r9.json established the split; this keeps it in the
-    per-round artifact)."""
     import os
-    import time as _time
-
-    _impl_t0 = _time.perf_counter()
 
     from pyspark.sql import types as T
 
@@ -518,7 +499,6 @@ def _st_incremental_dedup_impl(
     )
     from accident_prediction_montreal_spark.operators.text import tokenize
     from accident_prediction_montreal_spark.plans.llm_ops import _run_to_memory_sink
-    from accident_prediction_montreal_spark.plans.registry import chk_row as _chk
 
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
     dup_src = docs.filter(
@@ -541,10 +521,7 @@ def _st_incremental_dedup_impl(
     # probe run across 3 genuine micro-batches.
     base, _ = _scratch("stincr", sf_dir)
     fix_dir = os.path.join(base, "batch")
-    _t0 = _time.perf_counter()
     new_batch.repartition(3).write.mode("overwrite").parquet(fix_dir)
-    if timings is not None:
-        timings["fixture_write_s"] = round(_time.perf_counter() - _t0, 3)
 
     # The at-rest index is persisted PRE-PARTITIONED on the probe key —
     # the cached HashPartitioning then satisfies every micro-batch's
@@ -578,10 +555,7 @@ def _st_incremental_dedup_impl(
     # micro-batch would run the signature aggregation under the sink
     # runner's small state-partition pin (8-way instead of the session's
     # full parallelism — measured ~4x slower on the 52.5k-doc corpus).
-    _t0 = _time.perf_counter()
     bands_full.count()
-    if timings is not None:
-        timings["index_build_s"] = round(_time.perf_counter() - _t0, 3)
 
     schema = T.StructType(
         [
@@ -615,28 +589,19 @@ def _st_incremental_dedup_impl(
     probed = stream_bands.join(idx, ["band_id", "band_hash"]).select(
         "new_id", "corpus_id"
     )
-    _t0 = _time.perf_counter()
     streamed = (
         _run_to_memory_sink(spark, probed, "append")
         .dropDuplicates(["new_id", "corpus_id"])
         .persist()
     )
-    if timings is not None:
-        timings["probe_s"] = round(_time.perf_counter() - _t0, 3)
 
     expected = dup_src.select(
         (F.col("doc_id") + 200_000).alias("new_id"),
         F.col("doc_id").alias("corpus_id"),
     )
     missing = expected.join(streamed, ["new_id", "corpus_id"], "left_anti")
-    planted_ok = missing.agg(F.count(F.lit(1)).alias("n")).select(
-        *_chk("st_incr_planted_found", F.col("n") == 0)
-    )
     novel_hits = streamed.join(
         novel.select(F.col("doc_id").alias("new_id")), "new_id", "left_semi"
-    )
-    novel_ok = novel_hits.agg(F.count(F.lit(1)).alias("n")).select(
-        *_chk("st_incr_novel_clean", F.col("n") == 0)
     )
     # Band-collision candidates from the batch twin (threshold 0 keeps
     # every collision so the sets are comparable pre-scoring).
@@ -649,35 +614,16 @@ def _st_incremental_dedup_impl(
     diff = streamed.join(twin, ["new_id", "corpus_id"], "left_anti").unionByName(
         twin.join(streamed, ["new_id", "corpus_id"], "left_anti")
     )
-    twin_ok = diff.agg(F.count(F.lit(1)).alias("n")).select(
-        *_chk("st_incr_matches_batch_twin", F.col("n") == 0)
+    row = (
+        missing.agg(F.count(F.lit(1)).alias("n_missing"))
+        .crossJoin(novel_hits.agg(F.count(F.lit(1)).alias("n_novel")))
+        .crossJoin(diff.agg(F.count(F.lit(1)).alias("n_diff")))
     )
-    checks = planted_ok.unionByName(novel_ok).unionByName(twin_ok)
-    if timings is not None:
-        # VERIFICATION contracts, not the operator: the batch-twin
-        # parity check re-signatures the corpus (a second full minhash
-        # pass), which is why the bundled query total far exceeds
-        # index_build + probe. Materialize here so the split fields
-        # sum to ~the query total (r10 verdict #6: 12.7 s read with
-        # only 6.2 s attributed).
-        _t0 = _time.perf_counter()
-        checks = checks.persist()
-        checks.count()
-        timings["contracts_s"] = round(_time.perf_counter() - _t0, 3)
-        staged = (
-            timings.get("fixture_write_s", 0.0)
-            + timings.get("index_build_s", 0.0)
-            + timings.get("probe_s", 0.0)
-            + timings["contracts_s"]
-        )
-        wall = _time.perf_counter() - _impl_t0
-        # Driver-side analysis/setup BETWEEN the timed actions (plan
-        # construction, stream checkpoint dirs, catalyst analysis of
-        # ~10 actions) — named so the stage fields always sum to the
-        # observed wall (±ε), never leaving a silent remainder.
-        timings["plan_setup_s"] = round(max(0.0, wall - staged), 3)
-        timings["total_s"] = round(wall, 3)
-    return checks
+    return checks(row, {
+        "st_incr_planted_found": F.col("n_missing") == 0,
+        "st_incr_novel_clean": F.col("n_novel") == 0,
+        "st_incr_matches_batch_twin": F.col("n_diff") == 0,
+    })
 
 
 @register(
@@ -1305,7 +1251,6 @@ def st_source_quota_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     from accident_prediction_montreal_spark.plans.llm_ops import _run_to_memory_sink
-    from accident_prediction_montreal_spark.plans.registry import chk_row as _chk
 
     K = 25
     docs = load_table(spark, "documents", sf_dir).select(
@@ -1382,19 +1327,15 @@ def st_source_quota_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         | (F.col("n_want").isNull())
         | (F.col("n_admitted") != F.col("n_want"))
     )
-    counts_ok = counts_bad.agg(F.count(F.lit(1)).alias("n")).select(
-        *_chk("st_quota_counts_match", F.col("n") == 0)
+    dups = got.groupBy("doc_id").agg(F.count(F.lit(1)).alias("c")).filter(F.col("c") > 1)
+    strays = got.join(docs.select("doc_id", "source"), ["doc_id", "source"], "left_anti")
+    row = (
+        counts_bad.agg(F.count(F.lit(1)).alias("n_counts_bad"))
+        .crossJoin(dups.agg(F.count(F.lit(1)).alias("n_dup")))
+        .crossJoin(strays.agg(F.count(F.lit(1)).alias("n_stray")))
     )
-    dup_ok = (
-        got.groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") > 1)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(*_chk("st_quota_no_dup", F.col("n") == 0))
-    )
-    subset_ok = (
-        got.join(docs.select("doc_id", "source"), ["doc_id", "source"], "left_anti")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(*_chk("st_quota_subset", F.col("n") == 0))
-    )
-    return counts_ok.unionByName(dup_ok).unionByName(subset_ok).orderBy("chk")
+    return checks(row, {
+        "st_quota_counts_match": F.col("n_counts_bad") == 0,
+        "st_quota_no_dup": F.col("n_dup") == 0,
+        "st_quota_subset": F.col("n_stray") == 0,
+    }).orderBy("chk")

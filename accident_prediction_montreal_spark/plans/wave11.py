@@ -207,23 +207,6 @@ def _index_maintenance_oracle() -> str:
     "expressed here as the anti-join.",
 )
 def llm_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _llm_index_maintenance_impl(spark, sf_dir)
-
-
-def _llm_index_maintenance_impl(
-    spark: SparkSession, sf_dir: str, timings: dict | None = None
-) -> DataFrame:
-    """Body of llm_index_maintenance. ``timings``, when a dict, receives
-    the stage split: ``maintain_s`` (the OPERATOR — diff, delta
-    signatures, anti-join, union; O(|delta|) signature work) vs
-    ``verify_s`` (the CONTRACT — a from-scratch corpus re-signature
-    folded to a 1-row multiset checksum per side, the cost the operator
-    exists to avoid), plus ``plan_setup_s``/``total_s`` so the fields
-    sum to the wall."""
-    import time as _time
-
-    _impl_t0 = _time.perf_counter()
-
     from accident_prediction_montreal_spark import cachereg
     from accident_prediction_montreal_spark.operators.dedup import (
         banded_signatures,
@@ -246,15 +229,6 @@ def _llm_index_maintenance_impl(
     # recomputation — so the branches would read cheap pruned parquet,
     # and caching corpus-scale frames would be the real anti-pattern.
     idx_a = banded_signatures(docs).select(*bands)
-    if timings is not None:
-        # The at-rest index of A pre-exists in production (one-off
-        # build); charged separately so maintain_s is the real
-        # per-snapshot cost.
-        _t0 = _time.perf_counter()
-        idx_a = idx_a.persist()
-        idx_a.count()
-        timings["index_build_s"] = round(_time.perf_counter() - _t0, 3)
-        _t0 = _time.perf_counter()
     stale = diff.filter(F.col("status").isin("removed", "changed")).select(
         F.col("doc_id").alias("doc")
     )
@@ -266,12 +240,6 @@ def _llm_index_maintenance_impl(
     inserted = banded_signatures(fresh_docs).select(*bands)
     kept = idx_a.join(stale, "doc", "left_anti")
     maintained = kept.unionByName(inserted)
-    if timings is not None:
-        maintained = maintained.persist()
-        inserted = inserted.persist()
-        maintained.count()
-        timings["maintain_s"] = round(_time.perf_counter() - _t0, 3)
-        _verify_t0 = _time.perf_counter()
     rebuild = banded_signatures(b).select(*bands)
 
     # Multiset-checksum equality (operators/checksum.py): each side
@@ -293,28 +261,12 @@ def _llm_index_maintenance_impl(
             F.lit(facet).alias("facet"), "n"
         )
 
-    facts = (
+    return (
         doc_counts.unionByName(one("rows_deleted", idx_a.join(stale, "doc", "left_semi")))
         .unionByName(one("rows_inserted", inserted))
         .unionByName(one("rows_final", maintained))
         .unionByName(mismatches)
     ).orderBy("facet")
-    if timings is not None:
-        facts = facts.persist()
-        facts.count()
-        timings["verify_s"] = round(_time.perf_counter() - _verify_t0, 3)
-        wall = _time.perf_counter() - _impl_t0
-        staged = (
-            timings["index_build_s"]
-            + timings["maintain_s"]
-            + timings["verify_s"]
-        )
-        timings["plan_setup_s"] = round(max(0.0, wall - staged), 3)
-        timings["total_s"] = round(wall, 3)
-        maintained.unpersist()
-        inserted.unpersist()
-        idx_a.unpersist()
-    return facts
 
 
 _REG["llm_index_maintenance"] = _QS(
@@ -521,21 +473,6 @@ def _embedding_refresh_oracle() -> str:
     "diff co-locate shuffle-free.",
 )
 def llm_embedding_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _llm_embedding_refresh_impl(spark, sf_dir)
-
-
-def _llm_embedding_refresh_impl(
-    spark: SparkSession, sf_dir: str, timings: dict | None = None
-) -> DataFrame:
-    """Body of llm_embedding_refresh. ``timings``, when a dict, gets
-    ``encode_base_s`` (embedding table of A — pre-exists in production),
-    ``refresh_s`` (the OPERATOR: diff + delta encode + carry join),
-    ``verify_s`` (full re-encode + compare — the cost the operator
-    avoids), ``plan_setup_s``/``total_s``."""
-    import time as _time
-
-    _impl_t0 = _time.perf_counter()
-
     from accident_prediction_montreal_spark import cachereg
     from accident_prediction_montreal_spark.operators.text import corpus_diff
 
@@ -548,12 +485,6 @@ def _llm_embedding_refresh_impl(
     # production embedding table is at rest anyway (see the
     # llm_index_maintenance note).
     emb_a = _encode_stub(docs)
-    if timings is not None:
-        _t0 = _time.perf_counter()
-        emb_a = emb_a.persist()
-        emb_a.count()
-        timings["encode_base_s"] = round(_time.perf_counter() - _t0, 3)
-        _t0 = _time.perf_counter()
 
     diff = corpus_diff(docs, b).persist()
     cachereg.register("plans.llm_embedding_refresh", diff)
@@ -569,12 +500,6 @@ def _llm_embedding_refresh_impl(
     )
     recomputed = _encode_stub(fresh_docs)
     refreshed = carried.unionByName(recomputed)
-    if timings is not None:
-        refreshed = refreshed.persist()
-        recomputed = recomputed.persist()
-        refreshed.count()
-        timings["refresh_s"] = round(_time.perf_counter() - _t0, 3)
-        _verify_t0 = _time.perf_counter()
 
     recompute_full = _encode_stub(b)
 
@@ -618,7 +543,7 @@ def _llm_embedding_refresh_impl(
     # encode passes. The encoder itself stays fully exercised where it
     # carries information: the refresh-equals-recompute multiset
     # checksum over the actual vectors.
-    facts = (
+    return (
         doc_counts.unionByName(
             one(
                 "emb_recomputed",
@@ -629,22 +554,6 @@ def _llm_embedding_refresh_impl(
         .unionByName(one("emb_final", b))
         .unionByName(mismatches)
     ).orderBy("facet")
-    if timings is not None:
-        facts = facts.persist()
-        facts.count()
-        timings["verify_s"] = round(_time.perf_counter() - _verify_t0, 3)
-        wall = _time.perf_counter() - _impl_t0
-        staged = (
-            timings["encode_base_s"]
-            + timings["refresh_s"]
-            + timings["verify_s"]
-        )
-        timings["plan_setup_s"] = round(max(0.0, wall - staged), 3)
-        timings["total_s"] = round(wall, 3)
-        refreshed.unpersist()
-        recomputed.unpersist()
-        emb_a.unpersist()
-    return facts
 
 
 def _encode_stub(docs: DataFrame, dim: int = 8) -> DataFrame:

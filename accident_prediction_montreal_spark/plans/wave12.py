@@ -22,7 +22,7 @@ from accident_prediction_montreal_spark.functions.url import (
     registrable_domain_join,
     registrable_domain_sql,
 )
-from accident_prediction_montreal_spark.plans.registry import register
+from accident_prediction_montreal_spark.plans.registry import checks, register
 from accident_prediction_montreal_spark.sources.registry import load_table
 
 #: fixture rules: apex / exact-subdomain / registrable-suffix rules that
@@ -212,8 +212,6 @@ def sim_ann_bucketed_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from accident_prediction_montreal_spark.operators.similarity import (
         cosine_topk,
     )
-    from accident_prediction_montreal_spark.plans.registry import chk_row as _chk
-
     from accident_prediction_montreal_spark.functions.vectors import valid_vectors
 
     k, floor, n_probe = 10, 0.8, 5
@@ -291,24 +289,6 @@ def sim_ann_bucketed_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vacuously true on an empty/all-degenerate corpus.
     n_q = queries.select(F.count(F.lit(1)).alias("n_q"))
     n_c = emb.select(F.count(F.lit(1)).alias("n_c"))
-    recall_ok = (
-        matched.agg(F.sum(F.coalesce("in_exact", F.lit(0))).alias("n_match"))
-        .crossJoin(F.broadcast(n_q))
-        .crossJoin(F.broadcast(n_c))
-        .select(
-            *_chk(
-                f"bucketed_recall_at_{k}_ge_{floor}",
-                (F.col("n_q") == 0)
-                | (
-                    F.try_divide(
-                        F.col("n_match"),
-                        F.col("n_q") * F.least(F.lit(k), F.col("n_c")),
-                    )
-                    >= floor
-                ),
-            )
-        )
-    )
     # Multiset checksum instead of symmetric exceptAll: the id-set
     # equality contract at O(1) rows, computing each ANN path once per
     # branch instead of twice (operators/checksum.py — the same
@@ -320,8 +300,24 @@ def sim_ann_bucketed_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         window_form.select("query_id", "vec_id"),
         ["query_id", "vec_id"],
         "bucketed_equals_window_form",
-    ).select(F.col("facet").alias("chk"), F.col("n").alias("ok"))
-    return recall_ok.unionByName(plans_agree).orderBy("chk")
+    ).select(F.col("n").alias("agree"))
+    row = (
+        matched.agg(F.sum(F.coalesce("in_exact", F.lit(0))).alias("n_match"))
+        .crossJoin(F.broadcast(n_q))
+        .crossJoin(F.broadcast(n_c))
+        .crossJoin(plans_agree)
+    )
+    return checks(row, {
+        f"bucketed_recall_at_{k}_ge_{floor}": (F.col("n_q") == 0)
+        | (
+            F.try_divide(
+                F.col("n_match"),
+                F.col("n_q") * F.least(F.lit(k), F.col("n_c")),
+            )
+            >= floor
+        ),
+        "bucketed_equals_window_form": F.col("agree") == 1,
+    }).orderBy("chk")
 
 
 # --- quality-filter attrition cascade ------------------------------------------

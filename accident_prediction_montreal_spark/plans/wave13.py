@@ -760,28 +760,20 @@ def x27_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- incremental line-dedup maintenance ------------------------------------------
 
 
-def _line_dedup_incremental_impl(
-    base_docs: DataFrame,
-    delta_docs: DataFrame,
-    timings: dict | None = None,
-) -> DataFrame:
-    """Delta-only line-dedup maintenance: given the at-rest digest STATE
-    of the base corpus's lines, admit only the delta's first-seen-new
-    lines — the base corpus is never re-exploded per delta (the
-    llm_index_maintenance O(|delta|) pattern applied to C4 line dedup).
-    ``timings`` receives state_build_s (one-off in production — the
-    state is a bucketed digest table at rest) vs maintain_s (the
-    per-delta cost the operator exists to bound)."""
-    import time as _time
-
+def _line_digest_state(base_docs: DataFrame) -> DataFrame:
+    """The digest STATE of the base corpus's lines: one xxhash64 per
+    distinct line. Built once in production (a bucketed digest table at
+    rest); every delta is maintained against it."""
     _, _, base_lines = doc_line_frames(base_docs)
-    state = base_lines.select(F.xxhash64("line").alias("dig")).distinct()
-    if timings is not None:
-        _t0 = _time.perf_counter()
-        state = state.persist()
-        state.count()
-        timings["state_build_s"] = round(_time.perf_counter() - _t0, 3)
-        _t0 = _time.perf_counter()
+    return base_lines.select(F.xxhash64("line").alias("dig")).distinct()
+
+
+def _line_dedup_maintain(state: DataFrame, delta_docs: DataFrame) -> DataFrame:
+    """Delta-only line-dedup maintenance: given the digest ``state`` of
+    the base corpus's lines (``_line_digest_state``), admit only the
+    delta's first-seen-new lines — the base corpus is never re-exploded
+    per delta (the llm_index_maintenance O(|delta|) pattern applied to
+    C4 line dedup)."""
     _, _, delta_lines = doc_line_frames(delta_docs)
     # collapse the delta to ONE candidate row per line BEFORE the state
     # join (min(struct) — the skew-immune survivor pick), so the
@@ -797,7 +789,7 @@ def _line_dedup_incremental_impl(
         .agg(F.min("k").alias("keep"))
     )
     admitted = cand.join(state, "dig", "left_anti")
-    out = (
+    return (
         admitted.groupBy(F.col("keep.source").alias("source"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_new_kept"),
@@ -808,11 +800,6 @@ def _line_dedup_incremental_impl(
         )
         .orderBy("source")
     )
-    if timings is not None:
-        rows = out.collect()
-        timings["maintain_s"] = round(_time.perf_counter() - _t0, 3)
-        timings["n_report_rows"] = len(rows)
-    return out
 
 
 @register(
@@ -866,7 +853,7 @@ def llm_line_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir).select(
         "doc_id", "source", "text"
     )
-    return _line_dedup_incremental_impl(
-        docs.filter(F.col("doc_id") % 2 == 0),
+    return _line_dedup_maintain(
+        _line_digest_state(docs.filter(F.col("doc_id") % 2 == 0)),
         docs.filter(F.col("doc_id") % 2 == 1),
     )

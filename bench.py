@@ -6,6 +6,12 @@ JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 Each query is executed to completion with a count-style action (the
 plans are lazy; collect() would bill driver transfer, count() bills the
 actual computation). A warm-up query first amortizes JVM/codegen start.
+
+Each query is timed as the one plan it registers; nothing here
+persists at stage boundaries. Per-stage and per-layer splits come from
+the event-log runner, ``python3 perfbench/run.py --workload <w>
+--trace 1``, which attributes jobs, stages and task time to the engine
+modules that submitted them.
 """
 
 from __future__ import annotations
@@ -338,46 +344,6 @@ def run_headline(spark, sf_dir: str, runs: int) -> dict:
     canary_start = {name: min_of(name) for name in CANARY}
     timings = {name: min_of(name) for name in HEADLINE}
     ext = {name: min_of(name) for name in EXTENDED}
-    # Stage splits (r9 verdict #7 / r10 verdict #5): queries that bundle
-    # one-off build/fixture cost with steady-state cost report the split
-    # so the bundled number can't misread as per-batch/per-query cost.
-    # Each impl, given a timings dict, persists at stage boundaries and
-    # reports plan_setup_s so the fields sum to the observed wall.
-    from accident_prediction_montreal_spark.plans.llm_ops import (
-        _mm_png_decode_impl,
-    )
-    from accident_prediction_montreal_spark.plans.scale_ops import (
-        _er_golden_records_impl,
-        _x21_ann_pruned_layout_impl,
-    )
-    from accident_prediction_montreal_spark.plans.wave10 import (
-        _st_incremental_dedup_impl,
-    )
-    from accident_prediction_montreal_spark.plans.wave11 import (
-        _llm_embedding_refresh_impl,
-        _llm_index_maintenance_impl,
-    )
-
-    stage_splits: dict = {}
-    for split_name, impl in (
-        ("st_incremental_dedup", _st_incremental_dedup_impl),
-        ("x21_ann_pruned_layout", _x21_ann_pruned_layout_impl),
-        ("er_golden_records", _er_golden_records_impl),
-        ("mm_png_decode", _mm_png_decode_impl),
-        ("llm_index_maintenance", _llm_index_maintenance_impl),
-        ("llm_embedding_refresh", _llm_embedding_refresh_impl),
-    ):
-        spark.catalog.clearCache()
-        cachereg.release_all()
-        t: dict = {}
-        impl(spark, sf_dir, timings=t).count()
-        stage_splits[split_name] = t
-    # The last impl's persisted frames would otherwise stay resident on
-    # executors through the canary_end measurements (the loop clears
-    # cache BEFORE each impl, not after the last one).
-    spark.catalog.clearCache()
-    cachereg.release_all()
-    split = stage_splits["st_incremental_dedup"]
     canary_end = {name: min_of(name) for name in CANARY}
     scale_safe = round(
         sum(t for n, t in timings.items() if n not in PARITY_TWINS), 3
@@ -397,8 +363,6 @@ def run_headline(spark, sf_dir: str, runs: int) -> dict:
         ),
         "extended_queries": ext,
         "extended_total": round(sum(ext.values()), 3),
-        "st_incremental_dedup_split": split,
-        "stage_splits": stage_splits,
         "canary_start": canary_start,
         "canary_end": canary_end,
     }
@@ -423,8 +387,6 @@ def main() -> None:
     ext = {
         "extended_queries": out.pop("extended_queries"),
         "extended_total": out.pop("extended_total"),
-        "st_incremental_dedup_split": out.pop("st_incremental_dedup_split"),
-        "stage_splits": out.pop("stage_splits"),
         "sf": out["sf"],
     }
     # canary_start/canary_end stay on stdout: the driver's BENCH_r{N}

@@ -13,12 +13,12 @@ Usage: python scripts/check_determinism.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
-
-from pyspark.sql import SparkSession  # noqa: E402
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from accident_prediction_montreal_spark.plans import REGISTRY  # noqa: E402
+from check_oracle import vanilla_session  # noqa: E402
 
 
 def main() -> int:
@@ -29,13 +29,8 @@ def main() -> int:
     if unknown:
         print(f"FAIL unknown queries: {sorted(unknown)}")
         return 1
-    spark = (
-        SparkSession.builder.appName("determinism-audit")
-        .master("local[32]")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
+    # local[SPARK_GRAFT_CPUS], the oracle sweep's vanilla session
+    spark = vanilla_session()
     spark.sparkContext.setLogLevel("ERROR")
     bad = []
     for n in names:

@@ -81,3 +81,37 @@ def test_knn_is_true_nearest(spark):
         la, lo = lefts[r["id"]]
         best = min(right_rows, key=lambda x: dist(la, lo, x[1], x[2]))
         assert r["rid"] == best[0]
+
+
+def test_checks_rows_types_nulls_and_single_pass(spark):
+    from accident_prediction_montreal_spark.plans.registry import checks
+
+    src = spark.range(10).withColumnRenamed("id", "x")
+    row = src.agg(F.count(F.lit(1)).alias("n"), F.sum("x").alias("s"))
+    out = checks(row, {
+        "n_is_10": F.col("n") == 10,
+        "sum_is_0": F.col("s") == 0,
+        "unknown": F.lit(None).cast("boolean"),
+    })
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema.fields] == [
+        ("chk", "string"),
+        ("ok", "bigint"),
+    ]
+    # one row per name, in dict order; a NULL check stays NULL (fails)
+    assert [tuple(r) for r in out.collect()] == [
+        ("n_is_10", 1), ("sum_is_0", 0), ("unknown", None),
+    ]
+    # every check is emitted in ONE pass over the row, not a union
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "Union" not in plan
+
+    # an ungrouped aggregate over EMPTY input is still one row, so every
+    # check is emitted (the coalesce guard gives the vacuous pass)
+    empty = src.filter(F.col("x") < 0).agg(
+        F.count(F.lit(1)).alias("n"), F.sum("x").alias("s")
+    )
+    assert [tuple(r) for r in checks(empty, {
+        "none_seen": F.col("n") == 0,
+        "vacuous": F.coalesce(F.col("s") == 0, F.lit(True)),
+        "unguarded": F.col("s") == 0,
+    }).collect()] == [("none_seen", 1), ("vacuous", 1), ("unguarded", None)]
