@@ -9,6 +9,8 @@ hand-computed fixtures instead.
 
 from __future__ import annotations
 
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -36,7 +38,15 @@ from accident_prediction_montreal_spark.operators.text import (
     text_quality,
 )
 from accident_prediction_montreal_spark.plans.registry import checks, register
+from accident_prediction_montreal_spark.plans.relational_extra import _scratch
 from accident_prediction_montreal_spark.sources.registry import load_table
+from accident_prediction_montreal_spark.streaming.finite import (
+    drain,
+    events_stream,
+    late_data_fixture,
+    read_events_stream,
+    two_batch_fixture,
+)
 
 # DuckDB token expression mirroring operators/text.py::tokenize.
 _SQL_TOKENS = (
@@ -1657,166 +1667,6 @@ def st_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _probe_events_ts_encoding(path: str):
-    """Read the parquet footer of the events table (pyarrow — no Spark
-    session involved, and crucially the EXACT file the stream will list,
-    not an assumption about what the testdata "should" contain) and return
-    ``(encoding, first_micros)`` where encoding is ``"nanos"`` for INT64
-    TIMESTAMP(NANOS) and ``"us"`` for timestamp[us]/NTZ, and first_micros
-    is row 0's ts in epoch micros — used as a planted sanity check on the
-    decoded stream so an encoding/data mismatch fails loudly instead of
-    silently compressing time 1000x (the round-3 bug)."""
-    import pyarrow.parquet as pq
-
-    pf = pq.ParquetFile(path)
-    typ = pf.schema_arrow.field("ts").type
-    unit = getattr(typ, "unit", None)
-    if unit == "ns":
-        enc = "nanos"
-    elif unit == "us":
-        enc = "us"
-    else:
-        raise ValueError(f"events.ts has unsupported parquet type {typ!r} at {path}")
-    first = pf.read_row_group(0, columns=["ts"]).column("ts")[0]
-    import pyarrow as pa
-
-    first_us = pa.compute.cast(first, pa.int64()).as_py()
-    if enc == "nanos":
-        first_us //= 1000
-    return enc, first_us
-
-
-def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming read of the events testdata table.
-
-    The file stream source lists a DIRECTORY; the testdata table may be a
-    single parquet file — expose it through a per-sf_dir temp directory of
-    symlinks (no data copied). The on-disk ts encoding has shipped both as
-    INT64 TIMESTAMP(NANOS) and as timestamp[us] (no timezone): probe the
-    actual file's parquet footer and branch, then assert the decoded
-    stream's min(ts) matches the footer's row-0 micros so any mismatch
-    fails loudly.
-    """
-    import hashlib
-    import os
-    import tempfile
-
-    from pyspark.sql import types as T
-
-    src = os.path.join(sf_dir, "events.parquet")
-    if os.path.isdir(src):
-        stream_dir = src
-        parts = sorted(
-            os.path.join(src, f)
-            for f in os.listdir(src)
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        )
-        if not parts:
-            raise FileNotFoundError(
-                f"events table directory {src} holds no top-level *.parquet "
-                "files to probe (nested layouts are not supported here)"
-            )
-        probe_target = parts[0]
-    else:
-        tag = hashlib.md5(os.path.realpath(src).encode()).hexdigest()[:12]
-        stream_dir = os.path.join(tempfile.gettempdir(), "spark_graft_stream", tag)
-        os.makedirs(stream_dir, exist_ok=True)
-        link = os.path.join(stream_dir, "events.parquet")
-        target = os.path.realpath(src)
-        if os.path.islink(link) and os.readlink(link) != target:
-            os.remove(link)
-        if not os.path.exists(link):
-            try:
-                os.symlink(target, link)
-            except FileExistsError:
-                # Concurrent process won the exists-check race; accept its
-                # link if it points at the same file, else fail loudly.
-                if os.path.realpath(link) != target:
-                    raise
-        # Probe through the LINK so a stale symlink (pointing at an old
-        # sf_dir's data) is caught by the first-batch assertion below.
-        probe_target = link
-
-    encoding, first_us = _probe_events_ts_encoding(probe_target)
-    if encoding == "nanos":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        disk_schema = T.StructType(
-            [
-                T.StructField("event_id", T.LongType()),
-                T.StructField("ts", T.LongType()),
-                T.StructField("user_id", T.LongType()),
-                T.StructField("event_type", T.StringType()),
-                T.StructField("value", T.DoubleType()),
-                T.StructField("props", T.StringType()),
-            ]
-        )
-        raw = spark.readStream.schema(disk_schema).parquet(stream_dir)
-        decoded = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    else:
-        from accident_prediction_montreal_spark.sources.registry import (
-            ntz_to_timestamp,
-        )
-
-        disk_schema = T.StructType(
-            [
-                T.StructField("event_id", T.LongType()),
-                T.StructField("ts", T.TimestampNTZType()),
-                T.StructField("user_id", T.LongType()),
-                T.StructField("event_type", T.StringType()),
-                T.StructField("value", T.DoubleType()),
-                T.StructField("props", T.StringType()),
-            ]
-        )
-        raw = spark.readStream.schema(disk_schema).parquet(stream_dir)
-        decoded = raw.withColumn("ts", ntz_to_timestamp(F.col("ts")))
-
-    # Planted-timestamp sanity gate: batch-decode THE FILE THE FOOTER WAS
-    # READ FROM (not the whole directory — Spark orders a multi-file scan
-    # by size, so directory row 0 need not be the probed file's row 0) and
-    # compare row 0 against the footer's micros. Cheap (one row, one file)
-    # and catches encoding drift the moment it happens.
-    check = spark.read.schema(disk_schema).parquet(probe_target).limit(1)
-    if encoding == "nanos":
-        check = check.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    else:
-        check = check.withColumn("ts", ntz_to_timestamp(F.col("ts")))
-    got = check.select(F.unix_micros("ts").alias("us")).first()
-    if got is None or got["us"] != first_us:
-        raise AssertionError(
-            f"events stream decode mismatch at {stream_dir}: footer says first "
-            f"ts={first_us}us ({encoding}), decoded row gives "
-            f"{got['us'] if got else None}us — refusing to stream wrong time"
-        )
-    return decoded
-
-
-def _run_to_memory_sink(
-    spark: SparkSession, agg: DataFrame, output_mode: str
-) -> DataFrame:
-    """Execute a streaming plan to completion (availableNow) into a memory
-    sink; return the sink table. The table name is unique per invocation
-    so repeated runs in one session never collide. State partitions are
-    pinned small for the duration (see session.state_partitions: the
-    per-micro-batch state-store commit count is the fixed cost that
-    dominates these finite fixtures — 31 s → ~3 s for the stream-stream
-    outer join under a vanilla 200-partition session)."""
-    import uuid
-
-    from accident_prediction_montreal_spark.session import state_partitions
-
-    name = "st_an_" + uuid.uuid4().hex[:8]
-    with state_partitions(spark):
-        query = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    return spark.table(name)
-
-
 @register(
     "st_availablenow_stream",
     oracle="""
@@ -1835,11 +1685,11 @@ def _run_to_memory_sink(
 def st_availablenow_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from accident_prediction_montreal_spark.streaming.windows import tumbling_counts
 
-    events = _events_stream(spark, sf_dir)
+    events = events_stream(spark, sf_dir)
     agg = tumbling_counts(events).select("win_start", "event_type", "n")
     # complete mode: append over a finite source never passes the final
     # watermark, so nothing would be emitted.
-    out = _run_to_memory_sink(spark, agg, "complete")
+    out = drain(agg, "complete")
     return out.select("win_start", "event_type", F.col("n").cast("long").alias("n"))
 
 
@@ -1862,14 +1712,14 @@ def st_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup_within_watermark,
     )
 
-    base = _events_stream(spark, sf_dir)
-    dups = _events_stream(spark, sf_dir).filter(F.col("event_id") % 10 == 0)
+    base = events_stream(spark, sf_dir)
+    dups = events_stream(spark, sf_dir).filter(F.col("event_id") % 10 == 0)
     merged = base.unionByName(dups)
     deduped = dedup_within_watermark(merged).select("event_id", "ts", "event_type")
     # append mode: dedup is the only stateful operator, rows flow through
     # as they clear the state store; the aggregation runs as a batch query
     # over the sink table.
-    out = _run_to_memory_sink(spark, deduped, "append")
+    out = drain(deduped, "append")
     return out.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.countDistinct("event_id").alias("n_ids"),
@@ -1897,8 +1747,8 @@ def st_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_stream_join,
     )
 
-    left = _events_stream(spark, sf_dir).select("event_id", "ts", "event_type", "value")
-    right = _events_stream(spark, sf_dir).select(
+    left = events_stream(spark, sf_dir).select("event_id", "ts", "event_type", "value")
+    right = events_stream(spark, sf_dir).select(
         F.col("event_id").alias("r_event_id"),
         F.col("ts").alias("r_ts"),
         (F.col("value") * 2).alias("r_value"),
@@ -1906,7 +1756,7 @@ def st_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = stream_stream_join(left, right).select(
         "event_type", (F.col("value") + F.col("r_value")).alias("v")
     )
-    out = _run_to_memory_sink(spark, joined, "append")
+    out = drain(joined, "append")
     return out.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"), dsum("v").alias("value_sum")
     )
@@ -1928,16 +1778,15 @@ def st_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "micro-batch hash-mismatches.",
 )
 def st_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from accident_prediction_montreal_spark.streaming.windows import (
-        run_foreach_batch_parquet,
-    )
-
-    stream = _events_stream(spark, sf_dir).select("event_id", "event_type", "value")
-    base = tempfile.mkdtemp(prefix="spark_graft_fb_")
+    stream = events_stream(spark, sf_dir).select("event_id", "event_type", "value")
+    base, _ = _scratch("fb", sf_dir)
+    shutil.rmtree(base, ignore_errors=True)
     out_dir, ckpt_dir = f"{base}/out", f"{base}/ckpt"
-    run_foreach_batch_parquet(stream, out_dir, ckpt_dir)
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.write.mode("append").parquet(out_dir)
+
+    drain(stream, "append", sink=write_batch, checkpoint=ckpt_dir)
     written = spark.read.parquet(out_dir)
     return written.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"), dsum("value").alias("value_sum")
@@ -1968,9 +1817,9 @@ def st_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .withColumn("type_weight", F.length("event_type").cast("long"))
     )
-    stream = _events_stream(spark, sf_dir).select("event_id", "event_type")
+    stream = events_stream(spark, sf_dir).select("event_id", "event_type")
     enriched = enrich_with_dim(stream, dim, key="event_type")
-    out = _run_to_memory_sink(spark, enriched, "append")
+    out = drain(enriched, "append")
     return out.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.max("type_weight").alias("type_weight"),
@@ -2002,8 +1851,8 @@ def st_stateful_running(spark: SparkSession, sf_dir: str) -> DataFrame:
         running_user_stats,
     )
 
-    events = _events_stream(spark, sf_dir)
-    out = _run_to_memory_sink(spark, running_user_stats(events), "update")
+    events = events_stream(spark, sf_dir)
+    out = drain(running_user_stats(events), "update")
     # update mode appends one row per user per micro-batch; the final
     # state is the row with the largest n_events.
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
@@ -2088,7 +1937,7 @@ def st_session_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         session_aggregates,
     )
 
-    events = _events_stream(spark, sf_dir).withColumn(
+    events = events_stream(spark, sf_dir).withColumn(
         # Decimal-exact inside the streaming agg: per-session double sums
         # would be stream-arrival-order-dependent (functions/money.py).
         "value",
@@ -2097,7 +1946,7 @@ def st_session_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = session_aggregates(events, gap="30 minutes")
     # complete mode, like st_availablenow_stream: append over a finite
     # source never passes the final watermark, so nothing would be emitted.
-    out = _run_to_memory_sink(spark, agg, "complete")
+    out = drain(agg, "complete")
     return out.select(
         "user_id",
         "session_start",
@@ -2105,86 +1954,6 @@ def st_session_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_events").cast("long").alias("n_events"),
         F.col("value_sum").cast("double").alias("value_sum"),
     )
-
-
-def _late_data_fixture(sf_dir: str) -> str:
-    """Build (once per events file) a 3-file stream fixture directory:
-
-      1. ``a_bulk.parquet``   — the events table, byte-copied via pyarrow
-         with ts normalized to timestamp[us];
-      2. ``b_clock.parquet``  — ONE synthetic event 10 hours after the bulk
-         max(ts), which advances the watermark past every bulk window;
-      3. ``c_late.parquet``   — ONE synthetic event back inside the bulk
-         range, now far below the watermark, which a correct engine MUST
-         drop.
-
-    File mtimes are pinned ascending so the file stream source (which
-    orders by modification time) processes them as three separate
-    micro-batches under maxFilesPerTrigger=1 — watermarks only advance
-    BETWEEN micro-batches, so the ordering is what makes the late row
-    actually late. The fixture is keyed by the source file's identity
-    (path, size, mtime) so regenerated testdata invalidates it.
-    """
-    import hashlib
-    import os
-    import tempfile
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    src = os.path.realpath(os.path.join(sf_dir, "events.parquet"))
-    st = os.stat(src)
-    tag = hashlib.md5(f"{src}:{st.st_size}:{st.st_mtime_ns}".encode()).hexdigest()[:12]
-    fix_dir = os.path.join(tempfile.gettempdir(), "spark_graft_late", tag)
-    paths = [
-        os.path.join(fix_dir, "a_bulk.parquet"),
-        os.path.join(fix_dir, "b_clock.parquet"),
-        os.path.join(fix_dir, "c_late.parquet"),
-    ]
-    if all(os.path.exists(p) for p in paths):
-        return fix_dir
-    os.makedirs(fix_dir, exist_ok=True)
-
-    bulk = pq.read_table(src)
-    ts_us = pa.timestamp("us")
-    idx = bulk.schema.get_field_index("ts")
-    bulk = bulk.set_column(idx, "ts", pc.cast(bulk.column("ts"), ts_us))
-    pq.write_table(bulk, paths[0])
-
-    max_us = pc.max(pc.cast(bulk.column("ts"), pa.int64())).as_py()
-    min_us = pc.min(pc.cast(bulk.column("ts"), pa.int64())).as_py()
-    mid_us = (min_us + max_us) // 2
-    schema = pa.schema(
-        [
-            pa.field("event_id", pa.int64()),
-            pa.field("ts", ts_us),
-            pa.field("user_id", pa.int64()),
-            pa.field("event_type", pa.string()),
-            pa.field("value", pa.float64()),
-            pa.field("props", pa.string()),
-        ]
-    )
-
-    def one_row(event_id: int, us: int, etype: str) -> pa.Table:
-        return pa.table(
-            {
-                "event_id": pa.array([event_id], pa.int64()),
-                "ts": pa.array([us], pa.int64()).cast(ts_us),
-                "user_id": pa.array([-1], pa.int64()),
-                "event_type": pa.array([etype], pa.string()),
-                "value": pa.array([0.0], pa.float64()),
-                "props": pa.array(["{}"], pa.string()),
-            },
-            schema=schema,
-        )
-
-    pq.write_table(one_row(-101, max_us + 10 * 3600 * 1_000_000, "clock_advance"), paths[1])
-    pq.write_table(one_row(-102, mid_us, "late_planted"), paths[2])
-    # Ascending mtimes pin micro-batch order (values are arbitrary epochs).
-    for i, p in enumerate(paths):
-        os.utime(p, (1_000_000_000 + i, 1_000_000_000 + i))
-    return fix_dir
 
 
 @register(
@@ -2206,27 +1975,9 @@ def _late_data_fixture(sf_dir: str) -> str:
     "cannot exercise.",
 )
 def st_late_data_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
-    from accident_prediction_montreal_spark.sources.registry import ntz_to_timestamp
-
-    fix_dir = _late_data_fixture(sf_dir)
-    disk_schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampNTZType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
+    events = read_events_stream(
+        spark, late_data_fixture(sf_dir), max_files_per_trigger=1
     )
-    raw = (
-        spark.readStream.schema(disk_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(fix_dir)
-    )
-    events = raw.withColumn("ts", ntz_to_timestamp(F.col("ts")))
     agg = (
         events.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("win"))
@@ -2235,7 +1986,7 @@ def st_late_data_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # APPEND mode is the point: only watermark-finalized windows are
     # emitted, so eviction (not just aggregation) is what's value-checked.
-    return _run_to_memory_sink(spark, agg, "append")
+    return drain(agg, "append")
 
 
 @register(
@@ -2305,13 +2056,13 @@ def x5_month_shard_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
 def st_sliding_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from accident_prediction_montreal_spark.streaming.windows import sliding_counts
 
-    events = _events_stream(spark, sf_dir).withColumn(
+    events = events_stream(spark, sf_dir).withColumn(
         "value", F.col("value").cast("decimal(38,6)")
     )
     agg = sliding_counts(events)
     # complete mode: append over a finite source never passes the final
     # watermark, so nothing would be emitted.
-    out = _run_to_memory_sink(spark, agg, "complete")
+    out = drain(agg, "complete")
     return out.select(
         "win_start",
         F.col("n").cast("long").alias("n"),
@@ -2825,11 +2576,11 @@ def st_stream_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("start_ts")
     ).withColumn("end_ts", F.col("start_ts") + F.expr("interval 2 hours"))
-    stream = _events_stream(spark, sf_dir).select("ts", "value")
+    stream = events_stream(spark, sf_dir).select("ts", "value")
     joined = point_in_interval_join(
         stream, windows, ts_col="ts", bucket_seconds=2 * 3600
     ).select("start_ts", "value")
-    out = _run_to_memory_sink(spark, joined, "append")
+    out = drain(joined, "append")
     return out.groupBy("start_ts").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("value_sum"),
@@ -3073,47 +2824,6 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _two_batch_fixture(sf_dir: str) -> str:
-    """Split the events table into TWO parquet files at the 60%-of-time
-    point, mtime-pinned ascending, so maxFilesPerTrigger=1 yields two
-    micro-batches whose boundary cuts through live sessions — the
-    capstone's cross-batch session-merge is then load-bearing, not
-    vacuous. Keyed by the source file's identity like _late_data_fixture."""
-    import hashlib
-    import os
-    import tempfile
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    src = os.path.realpath(os.path.join(sf_dir, "events.parquet"))
-    st = os.stat(src)
-    tag = hashlib.md5(f"{src}:{st.st_size}:{st.st_mtime_ns}".encode()).hexdigest()[:12]
-    fix_dir = os.path.join(tempfile.gettempdir(), "spark_graft_2batch", tag)
-    paths = [
-        os.path.join(fix_dir, "a_early.parquet"),
-        os.path.join(fix_dir, "b_late.parquet"),
-    ]
-    if all(os.path.exists(p) for p in paths):
-        return fix_dir
-    os.makedirs(fix_dir, exist_ok=True)
-
-    tbl = pq.read_table(src)
-    ts_us = pa.timestamp("us")
-    idx = tbl.schema.get_field_index("ts")
-    tbl = tbl.set_column(idx, "ts", pc.cast(tbl.column("ts"), ts_us))
-    as_i64 = pc.cast(tbl.column("ts"), pa.int64())
-    lo, hi = pc.min(as_i64).as_py(), pc.max(as_i64).as_py()
-    cut = lo + (hi - lo) * 6 // 10
-    mask = pc.less(as_i64, pa.scalar(cut))
-    pq.write_table(tbl.filter(mask), paths[0])
-    pq.write_table(tbl.filter(pc.invert(mask)), paths[1])
-    for i, p in enumerate(paths):
-        os.utime(p, (1_000_000_000 + i, 1_000_000_000 + i))
-    return fix_dir
-
-
 @register(
     "st_pipeline_capstone",
     oracle="""
@@ -3165,32 +2875,11 @@ def _two_batch_fixture(sf_dir: str) -> str:
     "hash-mismatch.",
 )
 def st_pipeline_capstone(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from pyspark.sql import types as T
-
-    from accident_prediction_montreal_spark.sources.registry import ntz_to_timestamp
     from accident_prediction_montreal_spark.streaming.windows import session_aggregates
 
-    fix_dir = _two_batch_fixture(sf_dir)
-    disk_schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampNTZType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    raw = (
-        spark.readStream.schema(disk_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(fix_dir)
-    )
-    events = raw.withColumn("ts", ntz_to_timestamp(F.col("ts"))).withColumn(
-        "value", F.col("value").cast("decimal(38,6)")
-    )
+    events = read_events_stream(
+        spark, two_batch_fixture(sf_dir), max_files_per_trigger=1
+    ).withColumn("value", F.col("value").cast("decimal(38,6)"))
     sessions = session_aggregates(events, gap="30 minutes")
 
     # Static tier dimension — STATIC by contract, so persist and
@@ -3210,7 +2899,8 @@ def st_pipeline_capstone(spark: SparkSession, sf_dir: str) -> DataFrame:
     cachereg.register("plans.st_pipeline_capstone", dim)
     dim.count()
 
-    base = tempfile.mkdtemp(prefix="spark_graft_stcap_")
+    base, _ = _scratch("stcap", sf_dir)
+    shutil.rmtree(base, ignore_errors=True)
     out_dir, ckpt_dir = f"{base}/out", f"{base}/ckpt"
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -3219,17 +2909,7 @@ def st_pipeline_capstone(spark: SparkSession, sf_dir: str) -> DataFrame:
         enriched = batch_df.join(F.broadcast(dim), "user_id", "left")
         enriched.write.mode("overwrite").partitionBy("tier").parquet(out_dir)
 
-    from accident_prediction_montreal_spark.session import state_partitions
-
-    with state_partitions(spark):
-        (
-            sessions.writeStream.foreachBatch(write_batch)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+    drain(sessions, "complete", sink=write_batch, checkpoint=ckpt_dir)
 
     back = spark.read.parquet(out_dir).filter(F.col("tier").isin(0, 2, 4))
     return back.groupBy(F.col("tier").cast("long").alias("tier")).agg(
@@ -3511,7 +3191,7 @@ def st_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("days_per_batch", "9")
         .load()
     )
-    out = _run_to_memory_sink(spark, stream, "append")
+    out = drain(stream, "append")
     return out.groupBy("station_id").agg(
         F.count(F.lit(1)).alias("n_obs"),
         F.sum(F.col("temp").cast("decimal(38,6)")).cast("double").alias("temp_sum"),
@@ -3616,29 +3296,10 @@ def mm_audio_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the batch left join, which is the oracle.",
 )
 def st_stream_stream_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
-    from accident_prediction_montreal_spark.sources.registry import ntz_to_timestamp
-
-    fix_dir = _late_data_fixture(sf_dir)
-    disk_schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampNTZType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
+    fix_dir = late_data_fixture(sf_dir)
 
     def stream():
-        raw = (
-            spark.readStream.schema(disk_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(fix_dir)
-        )
-        return raw.withColumn("ts", ntz_to_timestamp(F.col("ts")))
+        return read_events_stream(spark, fix_dir, max_files_per_trigger=1)
 
     left = (
         stream()
@@ -3669,7 +3330,7 @@ def st_stream_stream_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("r_ts") <= F.col("ts") + F.expr("INTERVAL 1 hour"))
     )
     joined = left.join(right, cond, "leftOuter").select("event_id", "value", "r_value")
-    return _run_to_memory_sink(spark, joined, "append")
+    return drain(joined, "append")
 
 
 @register(

@@ -8,6 +8,8 @@ operator module; every one is ANSI-expressible and oracle-backed.
 
 from __future__ import annotations
 
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -24,6 +26,11 @@ from accident_prediction_montreal_spark.operators.zorder import write_zordered
 from accident_prediction_montreal_spark.plans.registry import checks, register
 from accident_prediction_montreal_spark.plans.relational_extra import _scratch
 from accident_prediction_montreal_spark.sources.registry import load_table
+from accident_prediction_montreal_spark.streaming.finite import (
+    drain,
+    read_events_stream,
+    two_batch_fixture,
+)
 
 _CDC_CUTOFF = "2024-01-16"
 
@@ -630,63 +637,27 @@ def g1_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     "x18 query; streaming and batch MUST converge to one table.",
 )
 def st_cdc_upsert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from pyspark.sql import types as T
-
-    from accident_prediction_montreal_spark.plans.llm_ops import _two_batch_fixture
-    from accident_prediction_montreal_spark.sources.registry import ntz_to_timestamp
-
-    fix_dir = _two_batch_fixture(sf_dir)
-    disk_schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampNTZType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    raw = (
-        spark.readStream.schema(disk_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(fix_dir)
-    )
+    raw = read_events_stream(spark, two_batch_fixture(sf_dir), max_files_per_trigger=1)
     cutoff = F.lit(_CDC_CUTOFF).cast("timestamp")
-    versions = (
-        raw.withColumn("ts", ntz_to_timestamp(F.col("ts")))
-        .select(
-            "user_id",
-            "value",
-            "ts",
-            "event_id",
-            F.when(
-                (F.col("event_type") == "error") & (F.col("ts") >= cutoff), F.lit("D")
-            )
-            .otherwise(F.lit("U"))
-            .alias("op"),
-        )
+    versions = raw.select(
+        "user_id",
+        "value",
+        "ts",
+        "event_id",
+        F.when((F.col("event_type") == "error") & (F.col("ts") >= cutoff), F.lit("D"))
+        .otherwise(F.lit("U"))
+        .alias("op"),
     )
 
-    base = tempfile.mkdtemp(prefix="spark_graft_stcdc_")
+    base, _ = _scratch("stcdc", sf_dir)
+    shutil.rmtree(base, ignore_errors=True)
     log_dir, ckpt_dir = f"{base}/log", f"{base}/ckpt"
 
     def append_batch(batch_df: DataFrame, batch_id: int) -> None:
         # merge-on-read: the sink is an append-only version log
         batch_df.write.mode("append").parquet(log_dir)
 
-    from accident_prediction_montreal_spark.session import state_partitions
-
-    with state_partitions(spark):
-        (
-            versions.writeStream.foreachBatch(append_batch)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+    drain(versions, "append", sink=append_batch, checkpoint=ckpt_dir)
 
     log = spark.read.parquet(log_dir)
     latest = latest_change_per_key(
@@ -979,32 +950,11 @@ def w9_distribution_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the batch a17 — stream state and batch must agree exactly.",
 )
 def st_heavy_hitters_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
-    from accident_prediction_montreal_spark.plans.llm_ops import (
-        _run_to_memory_sink,
-        _two_batch_fixture,
-    )
     from accident_prediction_montreal_spark.streaming.stateful import (
         sharded_heavy_hitter_candidates,
     )
 
-    fix_dir = _two_batch_fixture(sf_dir)
-    disk_schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampNTZType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    raw = (
-        spark.readStream.schema(disk_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(fix_dir)
-    )
+    raw = read_events_stream(spark, two_batch_fixture(sf_dir), max_files_per_trigger=1)
     hh_key = (
         F.when(F.col("event_id") % 2 == 0, F.col("event_id") % 5)
         .otherwise(F.col("event_id"))
@@ -1013,9 +963,7 @@ def st_heavy_hitters_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed = raw.select(hh_key).select(
         F.pmod(F.xxhash64("hh_key"), F.lit(16)).cast("int").alias("shard"), "hh_key"
     )
-    cand_log = _run_to_memory_sink(
-        spark, sharded_heavy_hitter_candidates(keyed, capacity=41), "update"
-    )
+    cand_log = drain(sharded_heavy_hitter_candidates(keyed, capacity=41), "update")
     candidates = cand_log.select("hh_key").distinct()
 
     batch_keyed = load_table(spark, "events", sf_dir).select(hh_key)

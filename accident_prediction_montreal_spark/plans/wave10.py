@@ -20,6 +20,7 @@ from accident_prediction_montreal_spark.plans.snapshot_fixture import (
     snapshot_b,
 )
 from accident_prediction_montreal_spark.sources.registry import load_table
+from accident_prediction_montreal_spark.streaming.finite import drain
 
 _SQL_TOKS = (
     "CASE WHEN trim(lower(text)) = '' THEN CAST([] AS VARCHAR[]) "
@@ -498,7 +499,6 @@ def st_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_signature_hashed,
     )
     from accident_prediction_montreal_spark.operators.text import tokenize
-    from accident_prediction_montreal_spark.plans.llm_ops import _run_to_memory_sink
 
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
     dup_src = docs.filter(
@@ -590,7 +590,7 @@ def st_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "new_id", "corpus_id"
     )
     streamed = (
-        _run_to_memory_sink(spark, probed, "append")
+        drain(probed, "append")
         .dropDuplicates(["new_id", "corpus_id"])
         .persist()
     )
@@ -1250,8 +1250,6 @@ def st_source_quota_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import types as T
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from accident_prediction_montreal_spark.plans.llm_ops import _run_to_memory_sink
-
     K = 25
     docs = load_table(spark, "documents", sf_dir).select(
         "doc_id", "source", "n_chars"
@@ -1314,7 +1312,7 @@ def st_source_quota_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    got = _run_to_memory_sink(spark, admitted, "append").persist()
+    got = drain(admitted, "append").persist()
 
     per_source = got.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_admitted")

@@ -26,6 +26,10 @@ from accident_prediction_montreal_spark.plans.snapshot_fixture import (
 )
 from accident_prediction_montreal_spark.plans.snapshot_fixture import snapshot_b
 from accident_prediction_montreal_spark.sources.registry import load_table
+from accident_prediction_montreal_spark.streaming.finite import (
+    drain,
+    pin_arrival_order,
+)
 
 _N_SHARDS = 16
 _SHARD_SALT = 5
@@ -701,7 +705,6 @@ def st_corpus_diff_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import types as T
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from accident_prediction_montreal_spark.plans.llm_ops import _run_to_memory_sink
     from accident_prediction_montreal_spark.plans.relational_extra import _scratch
 
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
@@ -715,13 +718,10 @@ def st_corpus_diff_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     b.withColumn("rev", F.lit(2).cast("long")).coalesce(1).write.mode(
         "overwrite"
     ).parquet(p2)
-    # mtime-pinned ascending (the _two_batch_fixture convention):
-    # maxFilesPerTrigger=1 then replays rev1 before rev2. The fold below
-    # is rev-ordered anyway, so even a merged/reordered delivery yields
-    # the same statuses.
-    for i, p in enumerate((p1, p2)):
-        for f in os.listdir(p):
-            os.utime(os.path.join(p, f), (1_000_000_000 + i, 1_000_000_000 + i))
+    # maxFilesPerTrigger=1 replays rev1 before rev2. The fold below is
+    # rev-ordered anyway, so even a merged/reordered delivery yields the
+    # same statuses.
+    pin_arrival_order([p1, p2])
 
     schema = T.StructType(
         [
@@ -791,7 +791,7 @@ def st_corpus_diff_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    got = _run_to_memory_sink(spark, classified, "append")
+    got = drain(classified, "append")
     return (
         got.groupBy("rev", "status")
         .agg(

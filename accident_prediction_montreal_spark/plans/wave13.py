@@ -27,6 +27,10 @@ from accident_prediction_montreal_spark.plans.wave12 import (
     doc_line_frames,
 )
 from accident_prediction_montreal_spark.sources.registry import load_table
+from accident_prediction_montreal_spark.streaming.finite import (
+    drain,
+    pin_arrival_order,
+)
 
 # DuckDB mirror of the shared line-ification (wave12's convention):
 # 5-token groups under the shared tokenizer, empty docs dropped.
@@ -201,9 +205,6 @@ def _st_line_dedup_impl(
     from pyspark.sql import types as T
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from accident_prediction_montreal_spark.plans.llm_ops import (
-        _run_to_memory_sink,
-    )
     from accident_prediction_montreal_spark.plans.relational_extra import (
         _scratch,
     )
@@ -220,14 +221,9 @@ def _st_line_dedup_impl(
     docs.filter(F.col("doc_id") % 2 == 1).withColumn(
         "rev", F.lit(2).cast("long")
     ).coalesce(1).write.mode("overwrite").parquet(p2)
-    # mtime-pinned ascending: maxFilesPerTrigger=1 replays rev1 before
-    # rev2 (the _two_batch_fixture convention); the fold below is
+    # maxFilesPerTrigger=1 replays rev1 before rev2; the fold below is
     # (rev, doc_id, pos)-ordered anyway, so merged delivery is identical.
-    for i, p in enumerate((p1, p2)):
-        for f in os.listdir(p):
-            os.utime(
-                os.path.join(p, f), (1_000_000_000 + i, 1_000_000_000 + i)
-            )
+    pin_arrival_order([p1, p2])
 
     schema = T.StructType(
         [
@@ -283,7 +279,7 @@ def _st_line_dedup_impl(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    got = _run_to_memory_sink(spark, kept, "append")
+    got = drain(kept, "append")
     return (
         got.groupBy("rev", "source")
         .agg(

@@ -22,6 +22,11 @@ from pyspark.sql import functions as F
 from accident_prediction_montreal_spark.plans.registry import register
 from accident_prediction_montreal_spark.plans.relational_extra import _scratch
 from accident_prediction_montreal_spark.sources.registry import load_table
+from accident_prediction_montreal_spark.streaming.finite import (
+    drain,
+    read_events_stream,
+    two_batch_fixture,
+)
 
 
 @register(
@@ -45,10 +50,6 @@ from accident_prediction_montreal_spark.sources.registry import load_table
     "metadata read, never a rescan of committed input.",
 )
 def st_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
-    from accident_prediction_montreal_spark.plans.llm_ops import _two_batch_fixture
-
     base, _ = _scratch("stresume", sf_dir)
     # Re-runs within a session must start from a clean slate or the old
     # checkpoint would mark the first file as already committed.
@@ -58,41 +59,17 @@ def st_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = os.path.join(base, "ckpt")
     os.makedirs(in_dir, exist_ok=True)
 
-    fix_dir = _two_batch_fixture(sf_dir)
-    early = os.path.join(fix_dir, "a_early.parquet")
-    late = os.path.join(fix_dir, "b_late.parquet")
+    fix_dir = two_batch_fixture(sf_dir)
+    stream = read_events_stream(spark, in_dir)
 
-    disk_schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampNTZType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
+    def append_batch(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.write.mode("append").parquet(out_dir)
 
-    def run_once() -> None:
-        stream = spark.readStream.schema(disk_schema).parquet(in_dir)
-
-        def append_batch(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.write.mode("append").parquet(out_dir)
-
-        q = (
-            stream.writeStream.foreachBatch(append_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    # Run 1: only the early file exists.
-    shutil.copyfile(early, os.path.join(in_dir, "a_early.parquet"))
-    run_once()
-    # New data lands; run 2 resumes from the SAME checkpoint.
-    shutil.copyfile(late, os.path.join(in_dir, "b_late.parquet"))
-    run_once()
+    # Run 1: only the early file exists. New data lands; run 2 resumes
+    # from the SAME checkpoint.
+    for name in ("a_early.parquet", "b_late.parquet"):
+        shutil.copyfile(os.path.join(fix_dir, name), os.path.join(in_dir, name))
+        drain(stream, "append", sink=append_batch, checkpoint=ckpt)
 
     got = spark.read.parquet(out_dir)
     return (

@@ -87,9 +87,9 @@ def state_partitions(spark: SparkSession, n: int = STATE_PARTITIONS):
     identical results. Production picks this the same way: partitions
     sized to state volume, not to the session's batch-shuffle default.
 
-    The conf is session-scoped, so the pin only surrounds the synchronous
-    start→awaitTermination window of one query; batch plans built outside
-    it are untouched (and AQE coalesces their shuffles at runtime anyway).
+    The conf is session-scoped, so the pin only surrounds one finite
+    drain (``streaming/finite.py::drain``); batch plans built outside it
+    are untouched (and AQE coalesces their shuffles at runtime anyway).
     """
     old = spark.conf.get("spark.sql.shuffle.partitions", None)
     spark.conf.set("spark.sql.shuffle.partitions", str(n))

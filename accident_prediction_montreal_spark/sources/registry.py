@@ -127,7 +127,7 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     Side effect: sets ``spark.sql.legacy.parquet.nanosAsLong=true`` on
     the caller's session and leaves it set, so INT64 TIMESTAMP(NANOS)
     files are readable (as bigint) by every later read on that session.
-    ``plans/llm_ops.py::_events_stream`` sets the same conf, the same
+    ``streaming/finite.py::events_stream`` sets the same conf, the same
     way, when its events file is INT64 nanos.
     """
     if name not in TABLES:

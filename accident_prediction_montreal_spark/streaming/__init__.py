@@ -1,5 +1,8 @@
-from accident_prediction_montreal_spark.streaming.windows import (
+from accident_prediction_montreal_spark.streaming.finite import (
+    drain,
     read_events_stream,
+)
+from accident_prediction_montreal_spark.streaming.windows import (
     tumbling_counts,
     sliding_counts,
     session_aggregates,
@@ -7,6 +10,7 @@ from accident_prediction_montreal_spark.streaming.windows import (
 )
 
 __all__ = [
+    "drain",
     "read_events_stream",
     "tumbling_counts",
     "sliding_counts",

@@ -7,8 +7,9 @@ windows, session windows, and within-watermark dedup, over an
 events-shaped stream (event_id, ts, user_id, event_type, value, props).
 
 Every builder takes a streaming DataFrame and returns a streaming
-DataFrame — source/sink wiring stays with the caller, so the same
-transformations run against file, Kafka or rate sources. Batch twins of
+DataFrame — source/sink wiring stays with the caller (streaming/finite.py
+for the engine's finite streams), so the same transformations run against
+file, Kafka or rate sources. Batch twins of
 these aggregations (identical result semantics on bounded input) are in
 plans/llm_ops.py (`st_*` queries), which is how the DuckDB oracle
 checks them.
@@ -21,42 +22,8 @@ allowMultiple` semantics left at defaults. Keys are (user_id) or
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-# Streaming event-time must be TIMESTAMP (watermarks reject NTZ with
-# EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE), so the stream schema differs from
-# the batch contract (sources/registry.py TABLES declares NTZ for parquet
-# pushdown). Fixtures written by the engine carry instant timestamps;
-# testdata parquet goes through plans/llm_ops.py::_events_stream, which
-# probes the footer and converts TZ-independently.
-EVENTS_STREAM_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)
-
-
-def read_events_stream(
-    spark: SparkSession, path: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """File-source stream of events-shaped parquet under ``path``.
-
-    Timestamps must already be micros (the nanos conversion in
-    sources/registry.py applies to batch reads; streaming fixtures are
-    written by the engine itself).
-    """
-    reader = spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
-
 
 def tumbling_counts(
     events: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
@@ -151,30 +118,3 @@ def stream_stream_join(
         & (F.col(right_ts) <= F.col(left_ts) + F.expr(f"INTERVAL {within}"))
     )
     return l.join(r, cond, "inner")
-
-
-def run_foreach_batch_parquet(
-    stream: DataFrame, out_dir: str, checkpoint_dir: str
-) -> None:
-    """Drain ``stream`` into parquet via foreachBatch (Trigger.AvailableNow).
-
-    The production sink pattern: foreachBatch hands each micro-batch to
-    ordinary batch writers (parquet here; JDBC/Delta/multi-sink fan-out
-    in real deployments), while the checkpoint tracks committed batch
-    ids so a restart never re-runs an acknowledged batch. Blocks until
-    the finite source drains.
-    """
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out_dir)
-
-    from accident_prediction_montreal_spark.session import state_partitions
-
-    with state_partitions(stream.sparkSession):
-        (
-            stream.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )

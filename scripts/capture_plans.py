@@ -12,9 +12,10 @@ from __future__ import annotations
 
 import os
 import sys
+from pathlib import Path
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from accident_prediction_montreal_spark.plans import REGISTRY  # noqa: E402
 from accident_prediction_montreal_spark.session import get_session  # noqa: E402

@@ -20,11 +20,12 @@ from __future__ import annotations
 import math
 import os
 import sys
+from pathlib import Path
 import traceback
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from pyspark.sql import SparkSession  # noqa: E402
 

@@ -15,8 +15,9 @@ Then:  python scripts/find_trivial_warn.py --scan /tmp/warn.log
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
 def scan(path: str) -> None:

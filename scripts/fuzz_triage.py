@@ -19,10 +19,12 @@ from __future__ import annotations
 import inspect
 import random
 import sys
+from pathlib import Path
 import tempfile
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
+sys.path.insert(0, str(ROOT / "tests"))
 
 _TABLES = (
     "region nation customer supplier part orders lineitem "

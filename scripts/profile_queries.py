@@ -16,9 +16,10 @@ from __future__ import annotations
 import json
 import os
 import sys
+from pathlib import Path
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from accident_prediction_montreal_spark import cachereg  # noqa: E402
 from accident_prediction_montreal_spark.plans import REGISTRY  # noqa: E402

@@ -11,8 +11,9 @@ Usage: python scripts/train_reference_pipeline.py [brf|urf|gbt] [out_dir]
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from accident_prediction_montreal_spark import get_session
 from accident_prediction_montreal_spark.ml.reference_run import (

@@ -15,7 +15,10 @@ from accident_prediction_montreal_spark.sources.files import (
 )
 from accident_prediction_montreal_spark.sources.registry import TABLES
 from accident_prediction_montreal_spark.streaming.stateful import running_user_stats
-from accident_prediction_montreal_spark.streaming.windows import read_events_stream
+from accident_prediction_montreal_spark.streaming.finite import (
+    drain,
+    read_events_stream,
+)
 
 CSV_SCHEMA = T.StructType(
     [
@@ -78,7 +81,7 @@ def test_running_user_stats_stateful(spark, tmp_path):
         rows, ["event_id", "ts_s", "user_id", "event_type", "value", "props"]
     ).select(
         F.col("event_id").cast("long"),
-        F.col("ts_s").cast("timestamp").alias("ts"),
+        F.col("ts_s").cast("timestamp_ntz").alias("ts"),
         F.col("user_id").cast("long"),
         "event_type",
         F.col("value").cast("double"),
@@ -88,17 +91,8 @@ def test_running_user_stats_stateful(spark, tmp_path):
     df.select(*TABLES["events"].fieldNames()).write.parquet(path)
 
     stream = read_events_stream(spark, path)
-    q = (
-        running_user_stats(stream)
-        .writeStream.format("memory")
-        .queryName("t_stateful")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
     # take the LAST emitted row per user (update mode may emit per batch)
-    out = spark.sql("SELECT * FROM t_stateful").toPandas()
+    out = drain(running_user_stats(stream), "update").toPandas()
     last = out.sort_values("n_events").groupby("user_id").last()
     assert last.loc[10, "n_events"] == 3 and last.loc[10, "value_sum"] == 7.0
     d = math.exp(-0.5)

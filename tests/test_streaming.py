@@ -1,6 +1,7 @@
 """Structured Streaming surface: run the builders against a file-source
-stream (availableNow trigger → memory sink) and check the results match
-the batch twins."""
+stream drained by streaming/finite.py::drain and check the results match
+the batch twins; pin the drain contract itself (catalog left as found,
+timeout, partition pin restored, scratch reuse)."""
 
 from __future__ import annotations
 
@@ -9,9 +10,14 @@ from pyspark.sql import functions as F
 
 from accident_prediction_montreal_spark.operators.sessionize import sessionize
 from accident_prediction_montreal_spark.sources.registry import TABLES
+from accident_prediction_montreal_spark.streaming import finite
+from accident_prediction_montreal_spark.streaming.finite import (
+    StreamDrainTimeout,
+    drain,
+    read_events_stream,
+)
 from accident_prediction_montreal_spark.streaming.windows import (
     dedup_within_watermark,
-    read_events_stream,
     session_aggregates,
     tumbling_counts,
 )
@@ -33,7 +39,7 @@ def event_fixture(spark, tmp_path_factory):
         rows, ["event_id", "ts_s", "user_id", "event_type", "value", "props"]
     ).select(
         F.col("event_id").cast("long"),
-        F.col("ts_s").cast("timestamp").alias("ts"),
+        F.col("ts_s").cast("timestamp_ntz").alias("ts"),
         F.col("user_id").cast("long"),
         "event_type",
         F.col("value").cast("double"),
@@ -43,24 +49,12 @@ def event_fixture(spark, tmp_path_factory):
     return path
 
 
-def _run_stream(spark, stream_df, name, mode):
-    query = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination(120)
-    return spark.sql(f"SELECT * FROM {name}")
-
-
 def test_tumbling_stream_counts(spark, event_fixture):
     # complete mode: with availableNow the watermark never passes the last
     # window, so append would emit nothing on a finite fixture.
     stream = read_events_stream(spark, event_fixture)
     assert stream.isStreaming
-    out = _run_stream(spark, tumbling_counts(stream), "t_tumbling", "complete")
+    out = drain(tumbling_counts(stream), "complete")
     rows = {(r["win_start"].hour, r["event_type"]): r["n"] for r in out.collect()}
     assert rows[(10, "click")] == 4  # duplicate included here (no dedup)
     assert rows[(11, "view")] == 1
@@ -68,9 +62,7 @@ def test_tumbling_stream_counts(spark, event_fixture):
 
 def test_session_stream_matches_batch_twin(spark, event_fixture):
     stream = read_events_stream(spark, event_fixture)
-    out = _run_stream(
-        spark, session_aggregates(stream, gap="30 minutes"), "t_session", "complete"
-    )
+    out = drain(session_aggregates(stream, gap="30 minutes"), "complete")
     got = {
         (r["user_id"], r["session_start"]): r["n_events"] for r in out.collect()
     }
@@ -85,7 +77,7 @@ def test_session_stream_matches_batch_twin(spark, event_fixture):
 
 def test_dedup_within_watermark(spark, event_fixture):
     stream = read_events_stream(spark, event_fixture)
-    out = _run_stream(spark, dedup_within_watermark(stream), "t_dedup", "append")
+    out = drain(dedup_within_watermark(stream), "append")
     ids = sorted(r["event_id"] for r in out.collect())
     assert ids == [1, 2, 3, 4]  # duplicate event_id 4 dropped
 
@@ -95,7 +87,7 @@ def test_stream_static_enrichment(spark, event_fixture):
 
     dim = spark.createDataFrame([(1, "gold"), (2, "silver")], ["user_id", "tier"])
     stream = read_events_stream(spark, event_fixture)
-    out = _run_stream(spark, enrich_with_dim(stream, dim), "t_enrich", "append")
+    out = drain(enrich_with_dim(stream, dim), "append")
     rows = out.collect()
     assert len(rows) == 5  # all events pass through
     tiers = {r["user_id"]: r["tier"] for r in rows}
@@ -171,26 +163,78 @@ def test_checkpoint_resume_processes_only_new_files(spark, tmp_path):
         src = next((tmp_path / stage).glob("*.parquet"))
         shutil.copyfile(src, tmp_path / "in" / name)
 
-    def run_once() -> None:
-        stream = spark.readStream.schema("id long, src string").parquet(in_dir)
-        q = (
-            stream.writeStream.foreachBatch(
-                lambda df, _id: df.write.mode("append").parquet(out_dir)
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    stream = spark.readStream.schema("id long, src string").parquet(in_dir)
+
+    def append(df, _id):
+        df.write.mode("append").parquet(out_dir)
 
     land("stage_a", "f1.parquet")
-    run_once()
+    drain(stream, "append", sink=append, checkpoint=ckpt)
     first = spark.read.parquet(out_dir)
     assert first.count() == 100 and first.filter("src = 'b'").count() == 0
 
     land("stage_b", "f2.parquet")
-    run_once()
+    drain(stream, "append", sink=append, checkpoint=ckpt)
     final = spark.read.parquet(out_dir)
     # exactly-once: 250 distinct ids, no id seen twice
     assert final.count() == 250
     assert final.select("id").distinct().count() == 250
+
+
+def test_memory_drain_leaves_catalog_as_found(spark, event_fixture):
+    before = sorted(t.name for t in spark.catalog.listTables())
+    out = drain(read_events_stream(spark, event_fixture), "append")
+    assert sorted(t.name for t in spark.catalog.listTables()) == before
+    # the view is gone, the frame still evaluates over the sink's rows
+    assert out.count() == 5
+
+
+def test_hung_drain_times_out_and_cleans_up(
+    spark, event_fixture, tmp_path, monkeypatch
+):
+    import time
+
+    monkeypatch.setattr(finite, "DRAIN_TIMEOUT_S", 1)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+
+    def slow(df, _id):
+        time.sleep(5)
+
+    with pytest.raises(StreamDrainTimeout, match="within 1 s"):
+        drain(
+            read_events_stream(spark, event_fixture),
+            "append",
+            sink=slow,
+            checkpoint=str(tmp_path / "ckpt"),
+        )
+    assert spark.streams.active == []
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+@pytest.fixture(scope="module")
+def sf_dir(spark, event_fixture, tmp_path_factory):
+    """A dataset directory whose events table is the stream fixture."""
+    path = tmp_path_factory.mktemp("sf")
+    spark.read.parquet(event_fixture).write.parquet(str(path / "events.parquet"))
+    return str(path)
+
+
+@pytest.mark.parametrize(
+    "query, prefix", [("st_cdc_upsert_stream", "stcdc"), ("st_foreachbatch_sink", "fb")]
+)
+def test_repeat_calls_reuse_one_scratch_dir(
+    spark, sf_dir, tmp_path, monkeypatch, query, prefix
+):
+    """Two calls of a foreachBatch-sink query in one session return the
+    same rows and leave one scratch directory, not one per call."""
+    import tempfile
+
+    from accident_prediction_montreal_spark.plans import REGISTRY
+
+    monkeypatch.setenv("TMPDIR", str(tmp_path))
+    monkeypatch.setattr(tempfile, "tempdir", None)
+    fn = REGISTRY[query].fn
+    first = sorted(fn(spark, sf_dir).collect())
+    second = sorted(fn(spark, sf_dir).collect())
+    assert first and first == second
+    assert len(list(tmp_path.glob(f"spark_graft_{prefix}*/**/ckpt"))) == 1
