@@ -17,24 +17,23 @@ checked in-window by the *_invariants queries instead).
 
 from accident_prediction_montreal_spark.plans.registry import REGISTRY, QuerySpec
 
-# Populate the registry.
+# Populate the registry, one module per operator family (registration
+# order is fixed by _PRIORITY/_TAIL_HEAD/_reorder below, not by import order).
 from accident_prediction_montreal_spark.plans import relational  # noqa: F401,E402
-from accident_prediction_montreal_spark.plans import relational_extra  # noqa: F401,E402
-from accident_prediction_montreal_spark.plans import composite  # noqa: F401,E402
-from accident_prediction_montreal_spark.plans import llm_ops  # noqa: F401,E402
-from accident_prediction_montreal_spark.plans import apm_pipeline  # noqa: F401,E402
-from accident_prediction_montreal_spark.plans import scale_ops  # noqa: F401,E402
-from accident_prediction_montreal_spark.plans import wave5  # noqa: F401,E402
-from accident_prediction_montreal_spark.plans import wave6  # noqa: F401,E402
+from accident_prediction_montreal_spark.plans import tpch  # noqa: F401,E402
+from accident_prediction_montreal_spark.plans import spatial  # noqa: F401,E402
+from accident_prediction_montreal_spark.plans import timeseries  # noqa: F401,E402
+from accident_prediction_montreal_spark.plans import ml  # noqa: F401,E402
+from accident_prediction_montreal_spark.plans import text  # noqa: F401,E402
+from accident_prediction_montreal_spark.plans import dedup  # noqa: F401,E402
+from accident_prediction_montreal_spark.plans import curation  # noqa: F401,E402
+from accident_prediction_montreal_spark.plans import similarity  # noqa: F401,E402
+from accident_prediction_montreal_spark.plans import graph  # noqa: F401,E402
+from accident_prediction_montreal_spark.plans import streaming  # noqa: F401,E402
+from accident_prediction_montreal_spark.plans import storage  # noqa: F401,E402
+from accident_prediction_montreal_spark.plans import multimodal  # noqa: F401,E402
 from accident_prediction_montreal_spark.plans import privacy  # noqa: F401,E402
-from accident_prediction_montreal_spark.plans import wave7_streaming  # noqa: F401,E402
-from accident_prediction_montreal_spark.plans import wave8  # noqa: F401,E402
-from accident_prediction_montreal_spark.plans import wave9  # noqa: F401,E402
-from accident_prediction_montreal_spark.plans import wave10  # noqa: F401,E402
-from accident_prediction_montreal_spark.plans import wave11  # noqa: F401,E402
-from accident_prediction_montreal_spark.plans import wave12  # noqa: F401,E402
-from accident_prediction_montreal_spark.plans import wave13  # noqa: F401,E402
-from accident_prediction_montreal_spark.plans import wave14  # noqa: F401,E402
+from accident_prediction_montreal_spark.plans import apm_pipeline  # noqa: F401,E402
 
 # First 50 = the driver's check window.
 #

@@ -50,9 +50,10 @@ from accident_prediction_montreal_spark.operators.mixing import (
     lcg_uniform,
     lcg_uniform_sql,
 )
-from accident_prediction_montreal_spark.plans.composite import _haversine_sql
 from accident_prediction_montreal_spark.plans.registry import register
+from accident_prediction_montreal_spark.plans.spatial import _haversine_sql
 from accident_prediction_montreal_spark.sources.registry import load_table
+
 
 # Fixture constants — shared by the Spark plan and the SQL oracle.
 _N_STREETS = 10

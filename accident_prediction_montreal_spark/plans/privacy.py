@@ -20,6 +20,7 @@ from accident_prediction_montreal_spark.operators.mixing import (
 from accident_prediction_montreal_spark.plans.registry import register
 from accident_prediction_montreal_spark.sources.registry import load_table
 
+
 _K = 5
 
 # Quasi-identifier projection shared by the audits: coarse enough to

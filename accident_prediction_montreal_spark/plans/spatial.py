@@ -1,38 +1,31 @@
-"""Composite-operator inventory (SURVEY.md §2 J8, A6, A7, W4, M8, M9 + §2.9
-composites) as oracle-checked queries.
-
-The testdata has no coordinates, so geo queries derive deterministic
-pseudo-coordinates from integer keys — the SAME closed-form formula in the
-Spark plan and the DuckDB oracle, so both engines see identical inputs.
-All trig outputs are rounded to 6 decimals (meters to 3), far coarser than
-cross-engine libm drift (SURVEY.md §7.4 float-parity note).
+"""Spatial operator family (SURVEY.md §2 J8, A6, J15) as oracle-checked queries:
+haversine distances, k-nearest-neighbour joins (brute force, grid-bucketed and
+across the antimeridian and pole seams), inverse-distance-weighted
+interpolation and point-in-polygon joins. The testdata has no coordinates, so
+the queries derive deterministic pseudo-coordinates from integer keys with the
+same closed-form formula in the Spark plan and the DuckDB oracle; trig outputs
+are rounded far coarser than cross-engine libm drift (SURVEY.md §7.4).
 """
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from accident_prediction_montreal_spark.functions.cyclic import cyclic_encode
 from accident_prediction_montreal_spark.functions.geo import haversine_meters
-from accident_prediction_montreal_spark.functions.solar import solar_elevation
-from accident_prediction_montreal_spark.operators.encoding import target_encode
-from accident_prediction_montreal_spark.operators.metrics import (
-    count_rate_model,
-    threshold_sweep,
+from accident_prediction_montreal_spark.operators.polygon import (
+    demo_polygons,
+    point_in_polygon_join,
 )
 from accident_prediction_montreal_spark.operators.spatial import (
     idw_interpolate,
     idw_interpolate_radius,
     knn_join,
-    knn_join_grid,
     knn_join_grid_exact,
 )
-from accident_prediction_montreal_spark.operators.windows import exp_weighted_moving_average
 from accident_prediction_montreal_spark.plans.registry import register
 from accident_prediction_montreal_spark.sources.registry import load_table
+
 
 # Derived pseudo-coordinates (identical formulas on both sides).
 CUST_LAT = "45.4 + (c_custkey % 997) / 3000.0"
@@ -342,353 +335,6 @@ def a6_idw_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("c_custkey", F.round("acctbal_idw", 6).alias("acctbal_idw"))
 
 
-# --- W4: stacked-lag EWMA ----------------------------------------------------------
-
-_EWMA_WINDOW = 12
-_EWMA_RATE = 0.5
-
-
-def _ewma_oracle() -> str:
-    offsets = range(-(_EWMA_WINDOW - 1), 1)
-    raw = [math.exp(_EWMA_RATE * t) for t in offsets]
-    norm = sum(raw)
-    # Explicit DOUBLE casts: DuckDB parses bare float literals as DECIMAL,
-    # which would silently turn the whole sum into decimal arithmetic.
-    terms = " + ".join(
-        f"COALESCE(LAG(risky, {-t}) OVER w * CAST({wt / norm!r} AS DOUBLE), CAST(0.0 AS DOUBLE))"
-        for t, wt in zip(offsets, raw)
-    )
-    return f"""
-    SELECT user_id, event_id, ROUND({terms}, 6) AS risky_ewma
-    FROM (
-      SELECT user_id, event_id, ts,
-             CASE WHEN value > 100 THEN CAST(1.0 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END AS risky
-      FROM events
-    )
-    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    """
-
-
-@register(
-    "w4_ewma",
-    oracle=_ewma_oracle(),
-    description="Exponentially-weighted moving average via stacked lag windows "
-    "(W4, weather.py:228-244; ordered by (ts, event_id) per §7.4)",
-)
-def w4_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = load_table(spark, "events", sf_dir)
-    risky = events.withColumn(
-        "risky", F.when(F.col("value") > 100, 1.0).otherwise(0.0)
-    )
-    ewma = exp_weighted_moving_average(
-        "risky",
-        partition_by=["user_id"],
-        order_by=["ts", "event_id"],
-        window_size=_EWMA_WINDOW,
-        rate=_EWMA_RATE,
-    )
-    return risky.select("user_id", "event_id", F.round(ewma, 6).alias("risky_ewma"))
-
-
-# --- §2.9 composites: cyclic + solar features ------------------------------------------
-
-_TWO_PI_24 = 2.0 * math.pi / 24.0
-
-
-@register(
-    "f_cyclic_encode",
-    oracle=f"""
-    SELECT DISTINCT CAST(EXTRACT(hour FROM ts) AS BIGINT) AS hour,
-      ROUND(cos(EXTRACT(hour FROM ts) * {_TWO_PI_24!r}), 6) + 0.0 AS hour_cos,
-      ROUND(sin(EXTRACT(hour FROM ts) * {_TWO_PI_24!r}), 6) + 0.0 AS hour_sin
-    FROM events
-    """,
-    description="Cyclic (cos, sin) feature encoding (§2.9, preprocess.py:401-419)",
-)
-def f_cyclic_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = load_table(spark, "events", sf_dir)
-    hour = F.hour("ts")
-    cos_c, sin_c = cyclic_encode(hour, 24.0)
-    return events.select(
-        hour.cast("long").alias("hour"),
-        # + 0.0 folds IEEE −0.0 into +0.0 (cross-engine repr parity).
-        (F.round(cos_c, 6) + 0.0).alias("hour_cos"),
-        (F.round(sin_c, 6) + 0.0).alias("hour_sin"),
-    ).distinct()
-
-
-def _solar_oracle() -> str:
-    two_pi_365 = 2.0 * math.pi / 365.0
-    # DST offset (post-2007 rule): DuckDB dayofweek is Sunday=0, so the
-    # first Sunday on/after a date d is d + (7 - dayofweek(d)) % 7 days.
-    y = "EXTRACT(year FROM o_orderdate)"
-    mar8 = f"make_date(CAST({y} AS INT), 3, 8)"
-    nov1 = f"make_date(CAST({y} AS INT), 11, 1)"
-    dst_start = (
-        f"(CAST({mar8} + to_days(CAST((7 - dayofweek({mar8})) % 7 AS INT)) AS TIMESTAMP)"
-        f" + INTERVAL 2 HOUR)"
-    )
-    dst_end = (
-        f"(CAST({nov1} + to_days(CAST((7 - dayofweek({nov1})) % 7 AS INT)) AS TIMESTAMP)"
-        f" + INTERVAL 2 HOUR)"
-    )
-    off = (
-        f"(CASE WHEN o_orderdate > {dst_start} AND o_orderdate < {dst_end} "
-        f"THEN CAST(-4.0 AS DOUBLE) ELSE CAST(-5.0 AS DOUBLE) END)"
-    )
-    doy = "dayofyear(o_orderdate)"
-    decl = f"radians(-23.45 * cos({two_pi_365!r} * ({doy} + 10)))"
-    d = f"({two_pi_365!r} * {doy})"
-    eot = f"(-7.655 * sin({d}) + 9.873 * sin({d} * 2 + 3.588))"
-    tc = f"(4.0 * ((-73.554) - 15.0 * {off}) + {eot})"
-    lsh = f"((o_orderkey % 24) + 0.5 + {tc} / 60.0)"
-    ha = f"(0.2618 * ({lsh} - 12.0))"
-    elev = (
-        f"degrees(asin(sin({decl}) * sin(radians(45.5078)) "
-        f"+ cos({decl}) * cos(radians(45.5078)) * cos({ha})))"
-    )
-    return (
-        f"SELECT o_orderkey, {off} AS utc_offset, "
-        f"ROUND({elev}, 6) + 0.0 AS solar_elev FROM orders"
-    )
-
-
-@register(
-    "f_solar_elevation",
-    oracle=_solar_oracle(),
-    description="Solar-elevation geometry pipeline with DST-aware local-time "
-    "offset (§2.9, solar_features.py:6-79): eastern_utc_offset_hours derives "
-    "the −4/−5 UTC offset from the post-2007 DST rule instead of the "
-    "reference's hardcoded per-year chain, and feeds the hour-angle chain.",
-)
-def f_solar_elevation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from accident_prediction_montreal_spark.functions.solar import (
-        eastern_utc_offset_hours,
-    )
-
-    orders = load_table(spark, "orders", sf_dir)
-    offset = eastern_utc_offset_hours("o_orderdate")
-    elev = solar_elevation(
-        date="o_orderdate",
-        hour=F.col("o_orderkey") % 24,
-        lat=F.lit(45.5078),
-        lon=F.lit(-73.554),
-        utc_offset_hours=offset,
-    )
-    return orders.select(
-        "o_orderkey",
-        offset.alias("utc_offset"),
-        (F.round(elev, 6) + 0.0).alias("solar_elev"),
-    )
-
-
-# --- M8: single-pass threshold sweep ------------------------------------------------------
-
-_SWEEP_N = 20
-
-_SWEEP_ORACLE = f"""
-    WITH scored AS (
-      SELECT ((o_orderkey * 2654435761) % 1001) / 1000.0 AS prob,
-             CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS label
-      FROM orders
-    ),
-    hist AS (
-      SELECT label, CAST(floor(prob * {_SWEEP_N}) AS INT) AS id_bucket, COUNT(*) AS cnt
-      FROM scored GROUP BY 1, 2
-    ),
-    grid AS (
-      SELECT CAST(b AS INT) AS id_bucket, l AS label
-      FROM (SELECT UNNEST(range(-1, {_SWEEP_N} + 1)) AS b)
-      CROSS JOIN (VALUES (0), (1)) t(l)
-    ),
-    filled AS (
-      SELECT COALESCE(g.id_bucket, h.id_bucket) AS id_bucket,
-             COALESCE(g.label, h.label) AS label,
-             COALESCE(h.cnt, 0) AS cnt
-      FROM grid g FULL OUTER JOIN hist h
-        ON g.id_bucket = h.id_bucket AND g.label = h.label
-    ),
-    cum AS (
-      SELECT id_bucket, label,
-        SUM(cnt) OVER (PARTITION BY label ORDER BY id_bucket
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS n_below,
-        COALESCE(SUM(cnt) OVER (PARTITION BY label ORDER BY id_bucket
-                       ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING), 0) AS n_above
-      FROM filled
-    ),
-    piv AS (
-      -- COALESCE 0 mirrors Spark's pivot([0,1]) + fill(0) zero-fill of a
-      -- missing label slot (reference random_forest.py:176-184 na.fill);
-      -- the grid spans -1..n inclusive so both labels have cumulative
-      -- rows even at the prob=1.0 bucket.
-      SELECT (id_bucket + 1) / {_SWEEP_N}.0 AS threshold,
-        CAST(COALESCE(SUM(CASE WHEN label = 0 THEN n_below END), 0) AS BIGINT) AS true_negative,
-        CAST(COALESCE(SUM(CASE WHEN label = 0 THEN n_above END), 0) AS BIGINT) AS false_positive,
-        CAST(COALESCE(SUM(CASE WHEN label = 1 THEN n_below END), 0) AS BIGINT) AS false_negative,
-        CAST(COALESCE(SUM(CASE WHEN label = 1 THEN n_above END), 0) AS BIGINT) AS true_positive
-      FROM cum GROUP BY id_bucket
-    )
-    SELECT threshold, true_negative, false_positive, false_negative, true_positive,
-      ROUND(CASE WHEN true_positive + false_positive <> 0
-            THEN true_positive / CAST(true_positive + false_positive AS DOUBLE) END, 6)
-        AS precision,
-      ROUND(CASE WHEN true_positive <> 0
-            THEN true_positive / CAST(true_positive + false_negative AS DOUBLE)
-            ELSE 0.0 END, 6) AS recall,
-      ROUND(CASE WHEN false_positive + true_negative <> 0
-            THEN false_positive / CAST(false_positive + true_negative AS DOUBLE) END, 6)
-        AS false_positive_rate,
-      ROUND((true_positive + true_negative)
-            / CAST(true_positive + true_negative + false_positive + false_negative AS DOUBLE), 6)
-        AS accuracy
-    FROM piv
-    """
-
-
-@register(
-    "m8_threshold_sweep",
-    oracle=_SWEEP_ORACLE,
-    description="Single-pass threshold-dependent metrics: histogram + grid OUTER join "
-    "+ cumulative windows + pivot (M8, random_forest.py:136-221). The prob "
-    "formula lands on exactly 1.0 for some rows, exercising the bucket-n "
-    "path the reference's outer join preserves.",
-)
-def m8_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, "orders", sf_dir)
-    scored = orders.select(
-        (((F.col("o_orderkey") * 2654435761) % 1001) / 1000.0).alias("prob_positive"),
-        F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("label"),
-    )
-    out = threshold_sweep(spark, scored, n_points=_SWEEP_N)
-    return out.select(
-        "threshold",
-        F.col("true_negative").cast("long").alias("true_negative"),
-        F.col("false_positive").cast("long").alias("false_positive"),
-        F.col("false_negative").cast("long").alias("false_negative"),
-        F.col("true_positive").cast("long").alias("true_positive"),
-        F.round("precision", 6).alias("precision"),
-        F.round("recall", 6).alias("recall"),
-        F.round("false_positive_rate", 6).alias("false_positive_rate"),
-        F.round("accuracy", 6).alias("accuracy"),
-    )
-
-
-@register(
-    "m_calibration_bins",
-    oracle=f"""
-    WITH scored AS (
-      SELECT ((o_orderkey * 2654435761) % 1001) / 1000.0 AS prob,
-             CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS label
-      FROM orders
-    )
-    SELECT CAST(LEAST(FLOOR(prob * 10), 9) AS INT) AS bin,
-      CAST(COUNT(*) AS BIGINT) AS n,
-      ROUND(CAST(SUM(CAST(prob AS DECIMAL(38,6))) AS DOUBLE) / COUNT(*), 6)
-        AS mean_prob,
-      ROUND(SUM(label) / CAST(COUNT(*) AS DOUBLE), 6) AS frac_pos
-    FROM scored GROUP BY 1
-    """,
-    description="Calibration / reliability bins (ML-evaluation surface): decile "
-    "buckets of predicted probability (top bucket closed at 1.0) with "
-    "decimal-exact mean predicted prob vs empirical positive rate — one "
-    "map-side-combined aggregation pass, the companion diagnostic to the "
-    "M8 threshold sweep.",
-)
-def m_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, "orders", sf_dir)
-    scored = orders.select(
-        (((F.col("o_orderkey") * 2654435761) % 1001) / 1000.0).alias("prob"),
-        F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("label"),
-    )
-    binned = scored.select(
-        F.least(F.floor(F.col("prob") * 10), F.lit(9)).cast("int").alias("bin"),
-        "prob",
-        "label",
-    )
-    return binned.groupBy("bin").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(
-            F.sum(F.col("prob").cast("decimal(38,6)")).cast("double") / F.count(F.lit(1)), 6
-        ).alias("mean_prob"),
-        F.round(F.sum("label") / F.count(F.lit(1)).cast("double"), 6).alias("frac_pos"),
-    )
-
-
-# --- M9: one-pass count-threshold baseline model ----------------------------------------------
-
-@register(
-    "m9_count_rate_model",
-    oracle="""
-    WITH per_cust AS (
-      SELECT o_custkey, COUNT(*) AS cnt,
-             MAX(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS label
-      FROM orders GROUP BY o_custkey
-    ),
-    hist AS (
-      SELECT cnt AS threshold, COUNT(*) AS n_total, SUM(label) AS n_pos
-      FROM per_cust GROUP BY cnt
-    )
-    SELECT CAST(threshold AS BIGINT) AS threshold,
-      CAST(SUM(n_total) OVER w AS BIGINT) AS n_at_or_above,
-      ROUND(CAST(SUM(n_pos) OVER w AS DOUBLE) / CAST(SUM(n_total) OVER w AS DOUBLE), 6)
-        AS p_positive
-    FROM hist
-    WINDOW w AS (ORDER BY threshold ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
-    """,
-    description="Empirical P(label | count ≥ t) in one pass: histogram + suffix window "
-    "(M9 rewrite of main_train_base.py:25-51)",
-)
-def m9_count_rate_model(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, "orders", sf_dir)
-    per_cust = orders.groupBy("o_custkey").agg(
-        F.count(F.lit(1)).alias("order_count"),
-        F.max(F.when(F.col("o_orderstatus") == "F", 1).otherwise(0)).alias("label"),
-    )
-    out = count_rate_model(per_cust, count_col="order_count", label_col="label")
-    return out.select(
-        F.col("threshold").cast("long").alias("threshold"),
-        F.col("n_at_or_above").cast("long").alias("n_at_or_above"),
-        F.round("p_positive", 6).alias("p_positive"),
-    )
-
-
-# --- A7: target / risk encoding -----------------------------------------------------------------
-
-@register(
-    "a7_target_encode",
-    oracle="""
-    WITH stats AS (
-      SELECT COUNT(*) AS n_all,
-             SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS n_pos
-      FROM orders
-    ),
-    risk AS (
-      SELECT o_orderpriority,
-        SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END)
-          / CAST((SELECT n_pos FROM stats) AS DOUBLE)
-        - COUNT(*) / CAST((SELECT n_all FROM stats) AS DOUBLE) AS risk
-      FROM orders GROUP BY o_orderpriority
-    )
-    SELECT o_orderpriority, ROUND(risk, 6) + 0.0 AS risk,
-      CAST(ROW_NUMBER() OVER (ORDER BY risk DESC, o_orderpriority ASC) AS BIGINT)
-        AS risk_index
-    FROM risk
-    """,
-    description="Category risk = P(cat|pos) − P(cat|all) + ordinal index "
-    "(A7, preprocess.py:531-556)",
-)
-def a7_target_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, "orders", sf_dir).withColumn(
-        "label", F.when(F.col("o_orderstatus") == "F", 1).otherwise(0)
-    )
-    out = target_encode(orders, category_col="o_orderpriority", label_col="label")
-    return out.select(
-        "o_orderpriority",
-        (F.round("risk", 6) + 0.0).alias("risk"),
-        F.col("risk_index").cast("long").alias("risk_index"),
-    )
-
-
 # --- A6 radius IDW across the antimeridian (r6: wrapped lon cells) ------------
 
 # MID-latitude seam fixture (~45.4 N, lon raw 179.9..180.24 wrapping to
@@ -766,3 +412,73 @@ def a6_idw_seam(spark: SparkSession, sf_dir: str) -> DataFrame:
         power=2.0,
     )
     return out.select("c_custkey", F.round("acctbal_idw", 6).alias("acctbal_idw"))
+
+
+_EDGES = demo_polygons()
+
+
+def _edges_values_sql() -> str:
+    rows = ", ".join(
+        f"({p}, {x1!r}, {y1!r}, {x2!r}, {y2!r})" for p, x1, y1, x2, y2 in _EDGES
+    )
+    return rows
+
+
+@register(
+    "j15_point_in_polygon",
+    oracle=f"""
+    WITH edges AS (
+      SELECT CAST(poly_id AS INTEGER) AS poly_id,
+        CAST(x1 AS DOUBLE) AS x1, CAST(y1 AS DOUBLE) AS y1,
+        CAST(x2 AS DOUBLE) AS x2, CAST(y2 AS DOUBLE) AS y2
+      FROM (VALUES {_edges_values_sql()}) v(poly_id, x1, y1, x2, y2)
+    ),
+    pts AS (
+      SELECT c_custkey AS pid,
+        (c_custkey % 997) / CAST(99.7 AS DOUBLE) AS x,
+        ((c_custkey * 7919) % 997) / CAST(99.7 AS DOUBLE) AS y
+      FROM customer
+    ),
+    inside AS (
+      SELECT pid, poly_id
+      FROM pts CROSS JOIN edges
+      GROUP BY pid, x, y, poly_id
+      HAVING SUM(CASE WHEN ((y1 > y) <> (y2 > y))
+                       AND (x < x1 + (y - y1) * (x2 - x1) / (y2 - y1))
+                      THEN 1 ELSE 0 END) % 2 = 1
+    )
+    SELECT poly_id, CAST(COUNT(*) AS BIGINT) AS n_inside,
+      CAST(SUM(pid) AS BIGINT) AS pid_sum
+    FROM inside GROUP BY poly_id ORDER BY poly_id
+    """,
+    description="POINT-IN-POLYGON containment join (J-surface, spatial "
+    "family; operators/polygon.py; the zone-assignment the reference's "
+    "KML polygons imply — sources/kml.py parses rings, this joins "
+    "against them): deterministic points derived from customer keys vs "
+    "8 literal polygons. Even-odd ray casting; the grid path buckets "
+    "each polygon's bbox onto coarse cells and equi-joins points by "
+    "cell, so a point only ever meets polygons whose bbox grid it "
+    "touches — cost is data x local polygon density, not data x all "
+    "polygons. The oracle ray-casts every point against every edge "
+    "with the IDENTICAL IEEE expression, so the grid prune is proven "
+    "lossless.",
+)
+def j15_point_in_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
+    cust = load_table(spark, "customer", sf_dir)
+    points = cust.select(
+        F.col("c_custkey").alias("pid"),
+        ((F.col("c_custkey") % 997) / 99.7).alias("x"),
+        (((F.col("c_custkey") * 7919) % 997) / 99.7).alias("y"),
+    )
+    edges = cust.sparkSession.createDataFrame(
+        _EDGES, "poly_id INT, x1 DOUBLE, y1 DOUBLE, x2 DOUBLE, y2 DOUBLE"
+    )
+    inside = point_in_polygon_join(points, edges, cell_size=1.0)
+    return (
+        inside.groupBy("poly_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_inside"),
+            F.sum("pid").cast("long").alias("pid_sum"),
+        )
+        .orderBy("poly_id")
+    )

@@ -23,7 +23,7 @@ sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from accident_prediction_montreal_spark.plans.wave13 import (  # noqa: E402
+from accident_prediction_montreal_spark.plans.dedup import (  # noqa: E402
     _line_dedup_maintain,
     _line_digest_state,
 )

@@ -958,7 +958,7 @@ digest_events = st.lists(
 
 
 def _run_fold(batches):
-    from accident_prediction_montreal_spark.plans.wave11 import (
+    from accident_prediction_montreal_spark.plans.curation import (
         _fold_digest_revisions,
     )
 

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 def test_shuffle_shards_matches_naive_permutation(spark):
     from accident_prediction_montreal_spark.operators.mixing import lcg_uniform
-    from accident_prediction_montreal_spark.plans.wave11 import (
+    from accident_prediction_montreal_spark.plans.curation import (
         _N_SHARDS,
         _SHARD_SALT,
         llm_shuffle_shards,
@@ -121,7 +121,7 @@ def test_index_maintenance_delta_equals_rebuild_tiny_corpus(spark):
 
 
 def test_embedding_refresh_carry_plus_recompute_equals_full(spark):
-    from accident_prediction_montreal_spark.plans.wave11 import _encode_stub
+    from accident_prediction_montreal_spark.plans.curation import _encode_stub
 
     rows = [(1, "alpha beta"), (2, None), (3, "gamma delta epsilon")]
     df = spark.createDataFrame(rows, ["doc_id", "text"])

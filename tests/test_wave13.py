@@ -45,7 +45,7 @@ def test_best_policy_kept_quality_dominates_first(spark):
         for r in REGISTRY["llm_line_dedup_best"].fn(spark, SF).collect()
     }
     # recompute keep-first's kept doc_toks (not part of its report)
-    from accident_prediction_montreal_spark.plans.wave12 import (
+    from accident_prediction_montreal_spark.plans.dedup import (
         doc_line_frames,
     )
     from accident_prediction_montreal_spark.sources.registry import load_table
@@ -75,7 +75,7 @@ def test_stream_line_dedup_batching_invariance(spark):
     # the registered two-batch delivery and a merged single-batch
     # delivery must emit identical survivor reports (the fold is
     # (rev, doc_id, pos)-ordered inside each shard)
-    from accident_prediction_montreal_spark.plans.wave13 import (
+    from accident_prediction_montreal_spark.plans.dedup import (
         _st_line_dedup_impl,
     )
 
