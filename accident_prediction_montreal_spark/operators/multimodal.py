@@ -26,7 +26,7 @@ design:
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -166,6 +166,43 @@ def decode_wav(payload: bytes) -> dict:
     }
 
 
+_L, _D = T.LongType(), T.DoubleType()
+#: The raster codecs' common fields: size and mean channel values.
+_RGB = [
+    ("width", _L),
+    ("height", _L),
+    ("mean_r", _D),
+    ("mean_g", _D),
+    ("mean_b", _D),
+]
+
+
+def decoded_features(
+    media: DataFrame,
+    decode: Callable[[bytes], dict],
+    fields: list[tuple[str, T.DataType]],
+    id_col: str,
+    payload_col: str,
+) -> DataFrame:
+    """(id, *fields) with ``decode`` run over every payload inside the
+    Arrow batch loop: one pandas DataFrame per batch, and each named field
+    copied out of the dict the decoder returns."""
+    out_schema = T.StructType(
+        [T.StructField(id_col, T.LongType())]
+        + [T.StructField(name, dtype) for name, dtype in fields]
+    )
+
+    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            feats = [decode(p) for p in pdf[payload_col]]
+            cols = {name: [f[name] for f in feats] for name, _ in fields}
+            yield pd.DataFrame({id_col: pdf[id_col], **cols})
+
+    return media.select(id_col, payload_col).mapInPandas(
+        decode_batches, schema=out_schema
+    )
+
+
 def wav_features(
     media: DataFrame, id_col: str = "media_id", payload_col: str = "payload"
 ) -> DataFrame:
@@ -176,32 +213,8 @@ def wav_features(
     features are exact functions of the PCM samples, so any SQL engine
     that can reproduce the samples can oracle-check the decode.
     """
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("sample_rate", T.LongType()),
-            T.StructField("n_samples", T.LongType()),
-            T.StructField("mean_amp", T.DoubleType()),
-            T.StructField("rms_amp", T.DoubleType()),
-        ]
-    )
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [decode_wav(p) for p in pdf[payload_col]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "sample_rate": [f["sample_rate"] for f in feats],
-                    "n_samples": [f["n_samples"] for f in feats],
-                    "mean_amp": [f["mean_amp"] for f in feats],
-                    "rms_amp": [f["rms_amp"] for f in feats],
-                }
-            )
-
-    return media.select(id_col, payload_col).mapInPandas(
-        decode_batches, schema=out_schema
-    )
+    fields = [("sample_rate", _L), ("n_samples", _L), ("mean_amp", _D), ("rms_amp", _D)]
+    return decoded_features(media, decode_wav, fields, id_col, payload_col)
 
 
 def encode_ppm_p6(pixels, width: int, height: int) -> bytes:
@@ -274,8 +287,8 @@ def encode_pgm_p5(pixels, width: int, height: int) -> bytes:
 def decode_pgm_raster(payload: bytes):
     """REAL PGM (P5) decode returning the raw raster: (width, height,
     uint8 ndarray of length width*height). Shared by the stats decode
-    below and the perceptual-hash path (plans/wave10.py), which needs
-    pixels, not aggregates."""
+    below and the perceptual-hash path (plans/multimodal.py::
+    mm_image_dedup), which needs pixels, not aggregates."""
     import numpy as np
 
     width, height, pos = _parse_pnm_header(payload, b"P5", "PGM (P5)")
@@ -311,34 +324,7 @@ def ppm_features(
 ) -> DataFrame:
     """(id, width, height, mean_r/g/b) via the REAL PPM decoder inside the
     Arrow batch loop — the image twin of ``wav_features``."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("width", T.LongType()),
-            T.StructField("height", T.LongType()),
-            T.StructField("mean_r", T.DoubleType()),
-            T.StructField("mean_g", T.DoubleType()),
-            T.StructField("mean_b", T.DoubleType()),
-        ]
-    )
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [decode_ppm(p) for p in pdf[payload_col]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": [f["width"] for f in feats],
-                    "height": [f["height"] for f in feats],
-                    "mean_r": [f["mean_r"] for f in feats],
-                    "mean_g": [f["mean_g"] for f in feats],
-                    "mean_b": [f["mean_b"] for f in feats],
-                }
-            )
-
-    return media.select(id_col, payload_col).mapInPandas(
-        decode_batches, schema=out_schema
-    )
+    return decoded_features(media, decode_ppm, _RGB, id_col, payload_col)
 
 
 def pgm_features(
@@ -346,32 +332,8 @@ def pgm_features(
 ) -> DataFrame:
     """(id, width, height, mean_gray, max_gray) via the REAL PGM decoder
     inside the Arrow batch loop — grayscale twin of ``ppm_features``."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("width", T.LongType()),
-            T.StructField("height", T.LongType()),
-            T.StructField("mean_gray", T.DoubleType()),
-            T.StructField("max_gray", T.DoubleType()),
-        ]
-    )
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [decode_pgm(p) for p in pdf[payload_col]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": [f["width"] for f in feats],
-                    "height": [f["height"] for f in feats],
-                    "mean_gray": [f["mean_gray"] for f in feats],
-                    "max_gray": [f["max_gray"] for f in feats],
-                }
-            )
-
-    return media.select(id_col, payload_col).mapInPandas(
-        decode_batches, schema=out_schema
-    )
+    fields = [("width", _L), ("height", _L), ("mean_gray", _D), ("max_gray", _D)]
+    return decoded_features(media, decode_pgm, fields, id_col, payload_col)
 
 
 def encode_bmp_24(pixels, width: int, height: int) -> bytes:
@@ -459,35 +421,8 @@ def bmp_features(
     decoder inside the Arrow batch loop — second image codec next to PPM,
     exercising padding/bottom-up/BGR parsing the PPM path has no analog
     for."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("width", T.LongType()),
-            T.StructField("height", T.LongType()),
-            T.StructField("mean_r", T.DoubleType()),
-            T.StructField("mean_g", T.DoubleType()),
-            T.StructField("mean_b", T.DoubleType()),
-            T.StructField("top_row_mean", T.DoubleType()),
-        ]
-    )
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [decode_bmp(p) for p in pdf[payload_col]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": [f["width"] for f in feats],
-                    "height": [f["height"] for f in feats],
-                    "mean_r": [f["mean_r"] for f in feats],
-                    "mean_g": [f["mean_g"] for f in feats],
-                    "mean_b": [f["mean_b"] for f in feats],
-                    "top_row_mean": [f["top_row_mean"] for f in feats],
-                }
-            )
-
-    return media.select(id_col, payload_col).mapInPandas(
-        decode_batches, schema=out_schema
+    return decoded_features(
+        media, decode_bmp, _RGB + [("top_row_mean", _D)], id_col, payload_col
     )
 
 
@@ -893,35 +828,8 @@ def png_features(
     decoder inside the Arrow batch loop — the COMPRESSED raster codec
     next to BMP/PPM/PGM: chunk CRCs, multi-IDAT inflate, and the five
     filter reconstructions are all exercised per row."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("width", T.LongType()),
-            T.StructField("height", T.LongType()),
-            T.StructField("mean_r", T.DoubleType()),
-            T.StructField("mean_g", T.DoubleType()),
-            T.StructField("mean_b", T.DoubleType()),
-            T.StructField("top_row_mean", T.DoubleType()),
-        ]
-    )
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [decode_png(p) for p in pdf[payload_col]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": [f["width"] for f in feats],
-                    "height": [f["height"] for f in feats],
-                    "mean_r": [f["mean_r"] for f in feats],
-                    "mean_g": [f["mean_g"] for f in feats],
-                    "mean_b": [f["mean_b"] for f in feats],
-                    "top_row_mean": [f["top_row_mean"] for f in feats],
-                }
-            )
-
-    return media.select(id_col, payload_col).mapInPandas(
-        decode_batches, schema=out_schema
+    return decoded_features(
+        media, decode_png, _RGB + [("top_row_mean", _D)], id_col, payload_col
     )
 
 
@@ -1221,33 +1129,6 @@ def gif_features(
 ) -> DataFrame:
     """(id, width, height, mean_r/g/b, idx_sum) via the REAL GIF decoder
     (variable-width LZW) inside the Arrow batch loop."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("width", T.LongType()),
-            T.StructField("height", T.LongType()),
-            T.StructField("mean_r", T.DoubleType()),
-            T.StructField("mean_g", T.DoubleType()),
-            T.StructField("mean_b", T.DoubleType()),
-            T.StructField("idx_sum", T.LongType()),
-        ]
-    )
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [decode_gif(p) for p in pdf[payload_col]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": [f["width"] for f in feats],
-                    "height": [f["height"] for f in feats],
-                    "mean_r": [f["mean_r"] for f in feats],
-                    "mean_g": [f["mean_g"] for f in feats],
-                    "mean_b": [f["mean_b"] for f in feats],
-                    "idx_sum": [f["idx_sum"] for f in feats],
-                }
-            )
-
-    return media.select(id_col, payload_col).mapInPandas(
-        decode_batches, schema=out_schema
+    return decoded_features(
+        media, decode_gif, _RGB + [("idx_sum", _L)], id_col, payload_col
     )

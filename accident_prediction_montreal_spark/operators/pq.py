@@ -17,7 +17,7 @@ Engine-reproducible by construction, like operators/kmeans.py (whose
 assign/update steps this module composes per-subspace): deterministic
 rank-based seeding, sequential-fold distances, DECIMAL-exact centroid
 means — so the full PQ pipeline (train → encode → ADC scan → top-k)
-has a literal ANSI-SQL value oracle (plans/wave14.py).
+has a literal ANSI-SQL value oracle (plans/similarity.py).
 
 Scale design (100 TB):
   * train: each subspace's Lloyd update shuffles K×sub_dim rows —

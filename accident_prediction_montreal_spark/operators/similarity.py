@@ -229,7 +229,7 @@ def cell_cosine_pairs(
     self-dot both ways.
 
     Scale: cells are the unit of parallelism and the adaptive-K contract
-    (plans/wave9.py) keeps them ~1024 rows, so per-task memory is flat
+    (plans/similarity.py) keeps them ~1024 rows, so per-task memory is flat
     and total work is linear in corpus size; the groupBy(cell) shuffle
     moves each vector once.
     """

@@ -1,6 +1,6 @@
-"""The reference's FULL dataset pipeline as one oracle-checked query
-(round-6 capstone; reference preprocess.py:313-357 get_positive_samples
-and :464-508 get_dataset_df):
+"""Pipelines family: the reference's FULL dataset pipeline as one
+oracle-checked query (reference preprocess.py:313-357
+get_positive_samples and :464-508 get_dataset_df):
 
   accidents -> two-pass spatial matching -> road features -> EWMA-
   smoothed station weather -> IDW interpolation -> cyclic/solar date
@@ -15,7 +15,7 @@ geo-side sibling of llm_pretrain_pipeline, proving the §3.1-3.3 chain
 COMPOSES under a DuckDB oracle, not just stage-by-stage.
 
 Fixtures are closed-form derivations of the parquet tables (the same
-formulas on both engines, the composite.py pattern):
+formulas on both engines, the plans/spatial.py pattern):
 
   * streets   <- suppliers 1..10: 4-point polylines around key-derived
     centers, reference-style names (rue/avenue/.../xyz) so the F1
@@ -51,7 +51,7 @@ from accident_prediction_montreal_spark.operators.mixing import (
     lcg_uniform_sql,
 )
 from accident_prediction_montreal_spark.plans.registry import register
-from accident_prediction_montreal_spark.plans.spatial import _haversine_sql
+from accident_prediction_montreal_spark.plans.spatial import haversine_sql
 from accident_prediction_montreal_spark.sources.registry import load_table
 
 
@@ -249,7 +249,7 @@ def _build_oracle() -> str:
     roadfeat AS (
       SELECT a.street_id, a.street_level, a.street_type,
              a.center_lat, a.center_long,
-             MAX({_haversine_sql("a.coord_lat", "a.coord_long",
+             MAX({haversine_sql("a.coord_lat", "a.coord_long",
                                  "b.coord_lat", "b.coord_long")}) AS street_length
       FROM pts a JOIN pts b USING (street_id)
       GROUP BY 1, 2, 3, 4, 5
@@ -270,7 +270,7 @@ def _build_oracle() -> str:
       SELECT accident_id, street_id, loc_lat, loc_long FROM (
         SELECT a.accident_id, r.street_id, a.loc_lat, a.loc_long,
           ROW_NUMBER() OVER (PARTITION BY a.accident_id ORDER BY
-            {_haversine_sql("a.loc_lat", "a.loc_long",
+            {haversine_sql("a.loc_lat", "a.loc_long",
                             "r.center_lat", "r.center_long")} ASC,
             r.street_id ASC) AS rk
         FROM acc a CROSS JOIN roadfeat r
@@ -278,7 +278,7 @@ def _build_oracle() -> str:
     ),
     cand1 AS (
       SELECT t.accident_id, t.street_id, t.loc_lat, t.loc_long,
-        {_haversine_sql("t.loc_lat", "t.loc_long",
+        {haversine_sql("t.loc_lat", "t.loc_long",
                         "p.coord_lat", "p.coord_long")} AS point_dist
       FROM topk t JOIN pts p USING (street_id)
     ),
@@ -316,7 +316,7 @@ def _build_oracle() -> str:
     refined AS (
       SELECT accident_id, street_id FROM (
         SELECT accident_id, street_id,
-          {_haversine_sql("loc_lat", "loc_long",
+          {haversine_sql("loc_lat", "loc_long",
                           "coord_lat", "coord_long")} AS pd
         FROM dens
       ) QUALIFY ROW_NUMBER() OVER (PARTITION BY accident_id
@@ -329,7 +329,7 @@ def _build_oracle() -> str:
       SELECT accident_id, street_id FROM (
         SELECT m.accident_id, m.street_id,
           ROW_NUMBER() OVER (PARTITION BY m.accident_id ORDER BY
-            {_haversine_sql("a.loc_lat", "a.loc_long",
+            {haversine_sql("a.loc_lat", "a.loc_long",
                             "r.center_lat", "r.center_long")} ASC,
             m.street_id ASC) AS rk
         FROM matched m
@@ -370,7 +370,7 @@ def _build_oracle() -> str:
         SUM(w * risky_weather) / SUM(w) AS risky_weather
       FROM (
         SELECT s.accident_id, o.temp, o.risky_weather,
-          1.0 / pow({_haversine_sql("s.loc_lat", "s.loc_long",
+          1.0 / pow({haversine_sql("s.loc_lat", "s.loc_long",
                      "o.station_lat", "o.station_long")}, 2.0) AS w
         FROM pos_base s JOIN obs o ON s.date = o.date AND s.hour = o.hour
       ) s
@@ -400,7 +400,7 @@ def _build_oracle() -> str:
         SUM(w * risky_weather) / SUM(w) AS risky_weather
       FROM (
         SELECT s.street_id, s.date, s.hour, o.temp, o.risky_weather,
-          1.0 / pow({_haversine_sql("s.loc_lat", "s.loc_long",
+          1.0 / pow({haversine_sql("s.loc_lat", "s.loc_long",
                      "o.station_lat", "o.station_long")}, 2.0) AS w
         FROM neg_kept s JOIN obs o ON s.date = o.date AND s.hour = o.hour
       ) s

@@ -24,17 +24,13 @@ from accident_prediction_montreal_spark.operators.mixing import (
     lcg_uniform_sql,
 )
 from accident_prediction_montreal_spark.plans.registry import checks, register
-from accident_prediction_montreal_spark.plans.registry import QuerySpec as _QS
-from accident_prediction_montreal_spark.plans.registry import REGISTRY as _REG
 from accident_prediction_montreal_spark.plans.snapshot_fixture import (
     SQL_SNAPSHOT_B,
     snapshot_b,
 )
-from accident_prediction_montreal_spark.plans.snapshot_fixture import (
-    SQL_SNAPSHOT_B as _SQL_SNAPSHOT_B,
-)
-from accident_prediction_montreal_spark.plans.storage import _scratch
+from accident_prediction_montreal_spark.plans.text import SQL_TOKENS
 from accident_prediction_montreal_spark.sources.registry import load_table
+from accident_prediction_montreal_spark.sources.scratch import session_dir
 from accident_prediction_montreal_spark.streaming.finite import (
     drain,
     pin_arrival_order,
@@ -223,9 +219,32 @@ def llm_epoch_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("domain")
 
 
+def _source_quota_oracle() -> str:
+    from accident_prediction_montreal_spark.operators.mixing import lcg_uniform_sql
+
+    return f"""
+    WITH ranked AS (
+      SELECT source, doc_id, n_chars,
+        ROW_NUMBER() OVER (
+          PARTITION BY source
+          ORDER BY {lcg_uniform_sql('doc_id', 7)}, doc_id
+        ) AS rnk
+      FROM documents
+    )
+    SELECT source,
+      CAST(COUNT(*) AS BIGINT) AS n_total,
+      CAST(SUM(CASE WHEN rnk <= 40 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
+      CAST(SUM(CASE WHEN rnk <= 40 THEN doc_id ELSE 0 END) AS BIGINT)
+        AS kept_id_sum,
+      CAST(SUM(CASE WHEN rnk <= 40 THEN n_chars ELSE 0 END) AS BIGINT)
+        AS kept_chars
+    FROM ranked GROUP BY source ORDER BY source
+    """
+
+
 @register(
     "llm_source_quota",
-    oracle=None,  # set below: needs lcg_uniform_sql at import time
+    oracle=_source_quota_oracle(),
     description="PER-SOURCE QUOTA CAP — the domain-rebalancing step every "
     "web-corpus curation pipeline runs (over-represented domains are "
     "down-sampled to a per-domain budget before mixing): each source "
@@ -297,39 +316,6 @@ def llm_source_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     return totals.join(kept, "source").select(
         "source", "n_total", "n_kept", "kept_id_sum", "kept_chars"
     ).orderBy("source")
-
-
-def _source_quota_oracle() -> str:
-    from accident_prediction_montreal_spark.operators.mixing import lcg_uniform_sql
-
-    return f"""
-    WITH ranked AS (
-      SELECT source, doc_id, n_chars,
-        ROW_NUMBER() OVER (
-          PARTITION BY source
-          ORDER BY {lcg_uniform_sql('doc_id', 7)}, doc_id
-        ) AS rnk
-      FROM documents
-    )
-    SELECT source,
-      CAST(COUNT(*) AS BIGINT) AS n_total,
-      CAST(SUM(CASE WHEN rnk <= 40 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-      CAST(SUM(CASE WHEN rnk <= 40 THEN doc_id ELSE 0 END) AS BIGINT)
-        AS kept_id_sum,
-      CAST(SUM(CASE WHEN rnk <= 40 THEN n_chars ELSE 0 END) AS BIGINT)
-        AS kept_chars
-    FROM ranked GROUP BY source ORDER BY source
-    """
-
-
-# Patch the oracle in (the registry stores a frozen QuerySpec, so
-# re-register with the same fn + description).
-
-_REG["llm_source_quota"] = _QS(
-    fn=_REG["llm_source_quota"].fn,
-    oracle=_source_quota_oracle(),
-    description=_REG["llm_source_quota"].description,
-)
 
 
 @register(
@@ -429,7 +415,7 @@ def st_source_quota_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir).select(
         "doc_id", "source", "n_chars"
     )
-    base, _ = _scratch("stquota", sf_dir)
+    base, _ = session_dir("stquota", sf_dir)
     fix_dir = os.path.join(base, "docs")
     docs.repartition(3).write.mode("overwrite").parquet(fix_dir)
 
@@ -545,7 +531,7 @@ def _shuffle_shards_oracle() -> str:
 
 @register(
     "llm_shuffle_shards",
-    oracle=None,  # set below: needs lcg_uniform_sql at import time
+    oracle=_shuffle_shards_oracle(),
     description="TRAINING-SHUFFLE SHARD MATERIALIZATION — the global "
     "deterministic permutation every pretraining run consumes: each "
     "document draws a seeded LCG uniform (operators/mixing.lcg_uniform, "
@@ -602,13 +588,6 @@ def llm_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_REG["llm_shuffle_shards"] = _QS(
-    fn=_REG["llm_shuffle_shards"].fn,
-    oracle=_shuffle_shards_oracle(),
-    description=_REG["llm_shuffle_shards"].description,
-)
-
-
 # --- incremental index maintenance -------------------------------------------
 
 # Snapshot B: the SAME planted revision as llm_corpus_diff, shared via
@@ -629,7 +608,7 @@ _SQL_HAS_SHINGLES = (
 
 def _index_maintenance_oracle() -> str:
     return f"""
-    WITH b AS ({_SQL_SNAPSHOT_B}),
+    WITH b AS ({SQL_SNAPSHOT_B}),
     d AS (
       SELECT COALESCE(a.doc_id, b.doc_id) AS doc_id,
         CASE
@@ -661,9 +640,27 @@ def _index_maintenance_oracle() -> str:
     """
 
 
+def _delta_facts(
+    diff: DataFrame, counted: dict[str, DataFrame], mismatches: DataFrame
+) -> DataFrame:
+    """(facet, n) rows of the snapshot-delta queries, ordered by facet:
+    one ``docs_<status>`` count per corpus_diff status, one row count per
+    ``counted`` frame, then the checksum ``mismatches`` facts."""
+    out = diff.groupBy("status").agg(
+        F.count(F.lit(1)).cast("long").alias("n")
+    ).select(F.concat(F.lit("docs_"), F.col("status")).alias("facet"), "n")
+    for facet, frame in counted.items():
+        out = out.unionByName(
+            frame.agg(F.count(F.lit(1)).cast("long").alias("n")).select(
+                F.lit(facet).alias("facet"), "n"
+            )
+        )
+    return out.unionByName(mismatches).orderBy("facet")
+
+
 @register(
     "llm_index_maintenance",
-    oracle=None,  # set below (composed SQL)
+    oracle=_index_maintenance_oracle(),
     description="INCREMENTAL LSH-INDEX MAINTENANCE — the at-rest dedup "
     "index (operators/dedup.banded_signatures: one (doc, band_id, "
     "band_hash) row per band) kept current from a corpus snapshot diff "
@@ -732,28 +729,15 @@ def llm_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     mismatches = checksum_equal_fact(
         maintained, rebuild, bands, "delta_equals_rebuild"
     )
-    doc_counts = diff.groupBy("status").agg(
-        F.count(F.lit(1)).cast("long").alias("n")
-    ).select(F.concat(F.lit("docs_"), F.col("status")).alias("facet"), "n")
-
-    def one(facet: str, frame: DataFrame) -> DataFrame:
-        return frame.agg(F.count(F.lit(1)).cast("long").alias("n")).select(
-            F.lit(facet).alias("facet"), "n"
-        )
-
-    return (
-        doc_counts.unionByName(one("rows_deleted", idx_a.join(stale, "doc", "left_semi")))
-        .unionByName(one("rows_inserted", inserted))
-        .unionByName(one("rows_final", maintained))
-        .unionByName(mismatches)
-    ).orderBy("facet")
-
-
-_REG["llm_index_maintenance"] = _QS(
-    fn=_REG["llm_index_maintenance"].fn,
-    oracle=_index_maintenance_oracle(),
-    description=_REG["llm_index_maintenance"].description,
-)
+    return _delta_facts(
+        diff,
+        {
+            "rows_deleted": idx_a.join(stale, "doc", "left_semi"),
+            "rows_inserted": inserted,
+            "rows_final": maintained,
+        },
+        mismatches,
+    )
 
 
 # --- URL canonicalization + variant dedup -------------------------------------
@@ -808,7 +792,7 @@ def _url_canonicalize_oracle() -> str:
 
 @register(
     "llm_url_canonicalize",
-    oracle=None,  # set below (composed SQL)
+    oracle=_url_canonicalize_oracle(),
     description="URL CANONICALIZATION + VARIANT DEDUP — the first "
     "normalization pass of a web corpus (CCNet-style pipelines dedup "
     "on the canonical URL before any content hashing): lowercase "
@@ -886,19 +870,12 @@ def llm_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_REG["llm_url_canonicalize"] = _QS(
-    fn=_REG["llm_url_canonicalize"].fn,
-    oracle=_url_canonicalize_oracle(),
-    description=_REG["llm_url_canonicalize"].description,
-)
-
-
 # --- incremental embedding refresh --------------------------------------------
 
 
 def _embedding_refresh_oracle() -> str:
     return f"""
-    WITH b AS ({_SQL_SNAPSHOT_B}),
+    WITH b AS ({SQL_SNAPSHOT_B}),
     d AS (
       SELECT COALESCE(a.doc_id, b.doc_id) AS doc_id,
         CASE
@@ -929,7 +906,7 @@ def _embedding_refresh_oracle() -> str:
 
 @register(
     "llm_embedding_refresh",
-    oracle=None,  # set below (composed SQL)
+    oracle=_embedding_refresh_oracle(),
     description="INCREMENTAL EMBEDDING REFRESH — the third leg of the "
     "snapshot-delta trilogy (llm_corpus_diff classifies, "
     "llm_index_maintenance patches the dedup index, THIS patches the "
@@ -1002,15 +979,6 @@ def llm_embedding_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["doc_id", "emb_r"],
         "refresh_equals_recompute",
     )
-    doc_counts = diff.groupBy("status").agg(
-        F.count(F.lit(1)).cast("long").alias("n")
-    ).select(F.concat(F.lit("docs_"), F.col("status")).alias("facet"), "n")
-
-    def one(facet: str, frame: DataFrame) -> DataFrame:
-        return frame.agg(F.count(F.lit(1)).cast("long").alias("n")).select(
-            F.lit(facet).alias("facet"), "n"
-        )
-
     # Count facts from the cached DIFF, not from encoder passes (r15;
     # guide §1.2 don't compute what you throw away): the encoder is a
     # 1:1 row map, so |emb_recomputed| = |added ∪ changed|,
@@ -1023,17 +991,15 @@ def llm_embedding_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # encode passes. The encoder itself stays fully exercised where it
     # carries information: the refresh-equals-recompute multiset
     # checksum over the actual vectors.
-    return (
-        doc_counts.unionByName(
-            one(
-                "emb_recomputed",
-                diff.filter(F.col("status").isin("added", "changed")),
-            )
-        )
-        .unionByName(one("emb_carried", diff.filter(F.col("status") == "unchanged")))
-        .unionByName(one("emb_final", b))
-        .unionByName(mismatches)
-    ).orderBy("facet")
+    return _delta_facts(
+        diff,
+        {
+            "emb_recomputed": diff.filter(F.col("status").isin("added", "changed")),
+            "emb_carried": diff.filter(F.col("status") == "unchanged"),
+            "emb_final": b,
+        },
+        mismatches,
+    )
 
 
 def _encode_stub(docs: DataFrame, dim: int = 8) -> DataFrame:
@@ -1075,13 +1041,6 @@ def _encode_stub(docs: DataFrame, dim: int = 8) -> DataFrame:
     return docs.mapInPandas(encode, schema=out_schema)
 
 
-_REG["llm_embedding_refresh"] = _QS(
-    fn=_REG["llm_embedding_refresh"].fn,
-    oracle=_embedding_refresh_oracle(),
-    description=_REG["llm_embedding_refresh"].description,
-)
-
-
 # --- streaming digest change filter (CDC twin of the trilogy) -----------------
 
 
@@ -1120,7 +1079,7 @@ def _fold_digest_revisions(st_rev, st_dig, ids, revs, texts):
 
 def _corpus_diff_stream_oracle() -> str:
     return f"""
-    WITH b AS ({_SQL_SNAPSHOT_B}),
+    WITH b AS ({SQL_SNAPSHOT_B}),
     rev1 AS (
       SELECT CAST(1 AS BIGINT) AS rev, 'added' AS status,
         CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(doc_id) AS BIGINT) AS id_sum
@@ -1147,7 +1106,7 @@ def _corpus_diff_stream_oracle() -> str:
 
 @register(
     "st_corpus_diff_stream",
-    oracle=None,  # set below (composed SQL)
+    oracle=_corpus_diff_stream_oracle(),
     description="STREAMING DIGEST CHANGE FILTER — the CDC twin of the "
     "snapshot-delta trilogy: document upserts stream in (two snapshot "
     "replays as mtime-pinned micro-batches, the 'periodic full-crawl "
@@ -1181,11 +1140,9 @@ def st_corpus_diff_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import types as T
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from accident_prediction_montreal_spark.plans.storage import _scratch
-
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
     b = snapshot_b(docs)
-    base, _ = _scratch("stdiff", sf_dir)
+    base, _ = session_dir("stdiff", sf_dir)
     p1 = os.path.join(base, "rev1.parquet")
     p2 = os.path.join(base, "rev2.parquet")
     docs.withColumn("rev", F.lit(1).cast("long")).coalesce(1).write.mode(
@@ -1278,13 +1235,6 @@ def st_corpus_diff_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_REG["st_corpus_diff_stream"] = _QS(
-    fn=_REG["st_corpus_diff_stream"].fn,
-    oracle=_corpus_diff_stream_oracle(),
-    description=_REG["st_corpus_diff_stream"].description,
-)
-
-
 # --- blocklist domain filtering ------------------------------------------------
 
 
@@ -1328,7 +1278,7 @@ def _blocklist_oracle() -> str:
 
 @register(
     "llm_blocklist_filter",
-    oracle=None,  # set below (composed SQL)
+    oracle=_blocklist_oracle(),
     description="BLOCKLIST DOMAIN FILTERING with SUFFIX-match semantics "
     "— the C4/CCNet gating step that drops documents from banned "
     "domains, where a rule like 'example.org' must block EVERY "
@@ -1395,13 +1345,6 @@ def llm_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_REG["llm_blocklist_filter"] = _QS(
-    fn=_REG["llm_blocklist_filter"].fn,
-    oracle=_blocklist_oracle(),
-    description=_REG["llm_blocklist_filter"].description,
-)
-
-
 #: fixture rules: apex / exact-subdomain / registrable-suffix rules that
 #: MUST block, and public-suffix rules that MUST be inert.
 _PSL_RULES = [
@@ -1466,7 +1409,7 @@ def _blocklist_psl_oracle() -> str:
 
 @register(
     "llm_blocklist_filter_psl",
-    oracle=None,  # set below (composed SQL)
+    oracle=_blocklist_psl_oracle(),
     description="PSL-AWARE BLOCKLIST FILTERING — llm_blocklist_filter's "
     "suffix semantics refined to what a real C4/CCNet gate enforces: a "
     "rule blocks a host only if the rule is AT OR BELOW the host's "
@@ -1543,20 +1486,7 @@ def llm_blocklist_filter_psl(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_REG["llm_blocklist_filter_psl"] = _QS(
-    fn=_REG["llm_blocklist_filter_psl"].fn,
-    oracle=_blocklist_psl_oracle(),
-    description=_REG["llm_blocklist_filter_psl"].description,
-)
-
-
 # --- quality-filter attrition cascade ------------------------------------------
-
-_CASCADE_SQL_TOKS = (
-    "CASE WHEN trim(lower(text)) = '' THEN CAST([] AS VARCHAR[]) "
-    "ELSE regexp_split_to_array(trim(lower(text)), '\\s+') END"
-)
-
 
 def _cascade_oracle() -> str:
     from accident_prediction_montreal_spark.plans.snapshot_fixture import (
@@ -1575,7 +1505,7 @@ def _cascade_oracle() -> str:
         (lang = 'en') AS c1,
         (lang = 'en' AND n_chars BETWEEN 100 AND 400) AS c2,
         (lang = 'en' AND n_chars BETWEEN 100 AND 400
-         AND len({_CASCADE_SQL_TOKS}) >= 20) AS c3,
+         AND len({SQL_TOKENS}) >= 20) AS c3,
         md5(text) AS dig
       FROM corpus
     ),
@@ -1619,7 +1549,7 @@ def _cascade_oracle() -> str:
 
 @register(
     "llm_quality_cascade",
-    oracle=None,  # set below (composed SQL)
+    oracle=_cascade_oracle(),
     description="QUALITY-FILTER ATTRITION CASCADE — the funnel report "
     "every curation pipeline publishes (C4/RefinedWeb/FineWeb all "
     "document per-stage attrition): documents flow through language "
@@ -1743,13 +1673,6 @@ def llm_quality_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("r.*")
         .orderBy("stage")
     )
-
-
-_REG["llm_quality_cascade"] = _QS(
-    fn=_REG["llm_quality_cascade"].fn,
-    oracle=_cascade_oracle(),
-    description=_REG["llm_quality_cascade"].description,
-)
 
 
 # --- DoReMi-style domain reweighting -------------------------------------------

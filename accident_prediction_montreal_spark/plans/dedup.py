@@ -23,14 +23,16 @@ from accident_prediction_montreal_spark.operators.dedup import (
     simhash,
 )
 from accident_prediction_montreal_spark.operators.text import tokenize
-from accident_prediction_montreal_spark.plans.registry import checks, register
-from accident_prediction_montreal_spark.plans.registry import QuerySpec as _QS
-from accident_prediction_montreal_spark.plans.registry import REGISTRY as _REG
+from accident_prediction_montreal_spark.plans.registry import (
+    checks,
+    register,
+    zero_or_vacuous,
+)
 from accident_prediction_montreal_spark.plans.snapshot_fixture import (
     REID_SHIFT as _CONTAIN_SHIFT,
 )
-from accident_prediction_montreal_spark.plans.storage import _scratch
 from accident_prediction_montreal_spark.sources.registry import load_table
+from accident_prediction_montreal_spark.sources.scratch import session_dir
 from accident_prediction_montreal_spark.streaming.finite import (
     drain,
     pin_arrival_order,
@@ -147,14 +149,6 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _zero_or_vacuous(c: str):
-    """Check that violation count ``c`` is 0. An aggregate over an EMPTY
-    input is NULL, and NULL == 0 is NULL where the literal-1 oracle
-    expects 1, so an empty input passes vacuously (r14 registry-wide
-    fuzz triage)."""
-    return F.coalesce(F.col(c), F.lit(0)) == 0
-
-
 @register(
     "dedup_near_invariants",
     oracle="""
@@ -228,9 +222,9 @@ def dedup_near_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # a corpus with no plantable docs leaves the joins EMPTY: vacuous pass
     return checks(minhash_stats.crossJoin(sim_stats), {
-        "minhash_planted_pairs_found": _zero_or_vacuous("n_missing"),
-        "minhash_est_range": _zero_or_vacuous("n_bad"),
-        "simhash_planted_identical": _zero_or_vacuous("n_sim_bad"),
+        "minhash_planted_pairs_found": zero_or_vacuous("n_missing"),
+        "minhash_est_range": zero_or_vacuous("n_bad"),
+        "simhash_planted_identical": zero_or_vacuous("n_sim_bad"),
     })
 
 
@@ -391,9 +385,9 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # an EMPTY qualified set (every doc under 8 tokens) passes vacuously
     return checks(stats, {
-        "simhash_range_0_2pow62": _zero_or_vacuous("n_out_of_range"),
-        "simhash_identical_text_same_hash": _zero_or_vacuous("n_identical_mismatch"),
-        "simhash_odd_repetition_invariant": _zero_or_vacuous("n_rep_variant"),
+        "simhash_range_0_2pow62": zero_or_vacuous("n_out_of_range"),
+        "simhash_identical_text_same_hash": zero_or_vacuous("n_identical_mismatch"),
+        "simhash_odd_repetition_invariant": zero_or_vacuous("n_rep_variant"),
         # locality is a STATISTICAL property of realistic corpora: the
         # truncated-vs-random margin concentrates as the paired count
         # grows, but a handful of tiny word-salad docs can legitimately
@@ -743,6 +737,29 @@ def dedup_ppjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("id_a", "id_b")
 
 
+def _incremental_batch(docs: DataFrame):
+    """(dup_src, novel, new_batch): the new batch that dedup_incremental
+    and st_incremental_dedup probe against the corpus ``docs``. It holds
+    an exact copy, re-id'd by +200000, of every 13th doc with at least 3
+    tokens (``dup_src``), and one synthetic doc per doc_id % 13 == 1
+    whose tokens occur nowhere in the corpus (``novel``)."""
+    dup_src = docs.filter(
+        (F.col("doc_id") % 13 == 0) & (F.size(tokenize(F.col("text"))) >= 3)
+    )
+    planted = dup_src.select((F.col("doc_id") + 200_000).alias("doc_id"), "text")
+    novel = docs.filter(F.col("doc_id") % 13 == 1).select(
+        (F.col("doc_id") + 200_000).alias("doc_id"),
+        F.concat_ws(
+            " ",
+            *[
+                F.concat(F.lit(f"zq{i}x"), F.col("doc_id").cast("string"))
+                for i in range(6)
+            ],
+        ).alias("text"),
+    )
+    return dup_src, novel, planted.unionByName(novel)
+
+
 @register(
     "dedup_incremental",
     oracle="""
@@ -772,24 +789,9 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from accident_prediction_montreal_spark.operators.dedup import (
         minhash_incremental_pairs,
     )
-    from accident_prediction_montreal_spark.operators.text import tokenize
 
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    dup_src = docs.filter(
-        (F.col("doc_id") % 13 == 0) & (F.size(tokenize(F.col("text"))) >= 3)
-    )
-    planted = dup_src.select((F.col("doc_id") + 200_000).alias("doc_id"), "text")
-    novel = docs.filter(F.col("doc_id") % 13 == 1).select(
-        (F.col("doc_id") + 200_000).alias("doc_id"),
-        F.concat_ws(
-            " ",
-            *[
-                F.concat(F.lit(f"zq{i}x"), F.col("doc_id").cast("string"))
-                for i in range(6)
-            ],
-        ).alias("text"),
-    )
-    new_batch = planted.unionByName(novel)
+    dup_src, novel, new_batch = _incremental_batch(docs)
     pairs = minhash_incremental_pairs(
         new_batch, docs, min_est_jaccard=0.5
     ).persist()
@@ -872,28 +874,13 @@ def st_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_incremental_pairs,
         minhash_signature_hashed,
     )
-    from accident_prediction_montreal_spark.operators.text import tokenize
 
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    dup_src = docs.filter(
-        (F.col("doc_id") % 13 == 0) & (F.size(tokenize(F.col("text"))) >= 3)
-    )
-    planted = dup_src.select((F.col("doc_id") + 200_000).alias("doc_id"), "text")
-    novel = docs.filter(F.col("doc_id") % 13 == 1).select(
-        (F.col("doc_id") + 200_000).alias("doc_id"),
-        F.concat_ws(
-            " ",
-            *[
-                F.concat(F.lit(f"zq{i}x"), F.col("doc_id").cast("string"))
-                for i in range(6)
-            ],
-        ).alias("text"),
-    )
-    new_batch = planted.unionByName(novel)
+    dup_src, novel, new_batch = _incremental_batch(docs)
 
     # The batch lands as 3 parquet files; maxFilesPerTrigger=1 makes the
     # probe run across 3 genuine micro-batches.
-    base, _ = _scratch("stincr", sf_dir)
+    base, _ = session_dir("stincr", sf_dir)
     fix_dir = os.path.join(base, "batch")
     new_batch.repartition(3).write.mode("overwrite").parquet(fix_dir)
 
@@ -1000,8 +987,7 @@ def st_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     })
 
 
-# --- round 9 additions (r10 rotate-in set) --------------------------------
-
+# --- containment (asymmetric near-duplicates) -----------------------------
 
 _CONTAIN_T = 0.9
 _CONTAIN_CAP = 8
@@ -1107,7 +1093,7 @@ def doc_line_frames(docs: DataFrame, *extra: str):
     ``w`` (so a totals branch never pays the explode); ``lines`` is the
     posexploded (doc_id, source, doc_toks, *extra, pos, line) frame.
     Used by llm_line_dedup (keep-first), llm_line_dedup_best
-    (keep-best-quality, wave13) and st_line_dedup_stream (wave13)."""
+    (keep-best-quality) and st_line_dedup_stream."""
     from accident_prediction_montreal_spark.operators.text import tokenize
 
     w = tokenize(F.col("text"))
@@ -1231,7 +1217,7 @@ def llm_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# DuckDB mirror of the shared line-ification (wave12's convention):
+# DuckDB mirror of the shared line-ification (doc_line_frames):
 # 5-token groups under the shared tokenizer, empty docs dropped.
 _SQL_TOKS = (
     "SELECT doc_id, source, "
@@ -1404,14 +1390,10 @@ def _st_line_dedup_impl(
     from pyspark.sql import types as T
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from accident_prediction_montreal_spark.plans.storage import (
-        _scratch,
-    )
-
     docs = load_table(spark, "documents", sf_dir).select(
         "doc_id", "source", "text"
     )
-    base, _ = _scratch("stlined", sf_dir)
+    base, _ = session_dir("stlined", sf_dir)
     p1 = os.path.join(base, "rev1.parquet")
     p2 = os.path.join(base, "rev2.parquet")
     docs.filter(F.col("doc_id") % 2 == 0).withColumn(
@@ -1500,7 +1482,6 @@ def _cluster_safe_split_oracle() -> str:
         SALT_SPLIT,
         lcg_uniform_sql,
     )
-    from accident_prediction_montreal_spark.plans.dedup import _JACCARD_CTES
 
     u_safe = lcg_uniform_sql("skey", SALT_SPLIT)
     u_naive = lcg_uniform_sql("doc_id", SALT_SPLIT)
@@ -1544,7 +1525,7 @@ def _cluster_safe_split_oracle() -> str:
 
 @register(
     "llm_cluster_safe_split",
-    oracle=None,  # set below (composed SQL)
+    oracle=_cluster_safe_split_oracle(),
     description="LEAKAGE-SAFE TRAIN/EVAL SPLIT — near-duplicate documents "
     "must not straddle train and eval (the contamination mechanism the "
     "GPT-3/C4 overlap analyses measure after the fact): the split key "
@@ -1618,13 +1599,6 @@ def llm_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_REG["llm_cluster_safe_split"] = _QS(
-    fn=_REG["llm_cluster_safe_split"].fn,
-    oracle=_cluster_safe_split_oracle(),
-    description=_REG["llm_cluster_safe_split"].description,
-)
-
-
 # --- cross-document longest common verbatim run ----------------------------------
 
 _RUN_K = 3  # window width (tokens) for run detection
@@ -1691,7 +1665,7 @@ def _longest_run_oracle() -> str:
 
 @register(
     "dedup_longest_common_run",
-    oracle=None,  # set below (composed SQL)
+    oracle=_longest_run_oracle(),
     description="CROSS-DOCUMENT LONGEST COMMON VERBATIM RUN — the "
     "'longest duplicated substring' analysis of Lee et al. 2021 (and "
     "the quote/plagiarism-detection primitive): for every document "
@@ -1807,13 +1781,6 @@ def dedup_longest_common_run(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("id_a", "id_b")
     )
-
-
-_REG["dedup_longest_common_run"] = _QS(
-    fn=_REG["dedup_longest_common_run"].fn,
-    oracle=_longest_run_oracle(),
-    description=_REG["dedup_longest_common_run"].description,
-)
 
 
 # --- incremental line-dedup maintenance ------------------------------------------

@@ -91,6 +91,32 @@ def g1_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranks.select("node", F.round("rank", 6).alias("rank")).orderBy("node")
 
 
+def _capped_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(u, v) unique undirected edges of the bucket-capped co-occurrence
+    graph (users sharing an (event_type, hour) bucket; 5 smallest uids
+    per bucket — the g2_triangle_count construction)."""
+    ev = load_table(spark, "events", sf_dir)
+    b0 = ev.select(
+        F.col("user_id").alias("uid"),
+        "event_type",
+        F.date_trunc("hour", "ts").alias("h"),
+    ).distinct()
+    cap_w = Window.partitionBy("event_type", "h").orderBy("uid")
+    b = (
+        b0.withColumn("__rn", F.row_number().over(cap_w))
+        .filter(F.col("__rn") <= 5)
+        .drop("__rn")
+    )
+    x = b.select(F.col("uid").alias("u"), "event_type", "h")
+    y = b.select(F.col("uid").alias("v"), "event_type", "h")
+    return (
+        x.join(y, on=["event_type", "h"])
+        .filter(F.col("u") < F.col("v"))
+        .select("u", "v")
+        .distinct()
+    )
+
+
 @register(
     "g2_triangle_count",
     oracle="""
@@ -150,28 +176,7 @@ def g1_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
 def g2_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     from accident_prediction_montreal_spark.operators.graph import triangle_stats
 
-    from pyspark.sql import Window
-
-    ev = load_table(spark, "events", sf_dir)
-    b0 = ev.select(
-        F.col("user_id").alias("uid"),
-        "event_type",
-        F.date_trunc("hour", "ts").alias("h"),
-    ).distinct()
-    cap_w = Window.partitionBy("event_type", "h").orderBy("uid")
-    b = (
-        b0.withColumn("__rn", F.row_number().over(cap_w))
-        .filter(F.col("__rn") <= 5)
-        .drop("__rn")
-    )
-    x = b.select(F.col("uid").alias("u"), "event_type", "h")
-    y = b.select(F.col("uid").alias("v"), "event_type", "h")
-    edges = (
-        x.join(y, on=["event_type", "h"])
-        .filter(F.col("u") < F.col("v"))
-        .select("u", "v")
-        .distinct()
-    )
+    edges = _capped_graph(spark, sf_dir)
     return triangle_stats(edges)
 
 
@@ -230,32 +235,13 @@ def g2_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     "every round, so iterations never recompute the edge subtree.",
 )
 def g3_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, "events", sf_dir)
-    b0 = ev.select(
-        F.col("user_id").alias("uid"),
-        "event_type",
-        F.date_trunc("hour", "ts").alias("h"),
-    ).distinct()
-    cap_w = Window.partitionBy("event_type", "h").orderBy("uid")
-    b = (
-        b0.withColumn("__rn", F.row_number().over(cap_w))
-        .filter(F.col("__rn") <= 5)
-        .drop("__rn")
-    )
-    x = b.select(F.col("uid").alias("u"), "event_type", "h")
-    y = b.select(F.col("uid").alias("v"), "event_type", "h")
-    edges = (
-        x.join(y, on=["event_type", "h"])
-        .filter(F.col("u") < F.col("v"))
-        .select("u", "v")
-        .distinct()
-    )
+    edges = _capped_graph(spark, sf_dir)
     nbr = (
         edges.select(F.col("u").alias("a"), F.col("v").alias("b"))
         .unionByName(edges.select(F.col("v").alias("a"), F.col("u").alias("b")))
         .persist()
     )
-    cachereg.register("plans.wave5.labelprop", nbr)
+    cachereg.register("plans.graph.labelprop", nbr)
     labels = (
         nbr.select(F.col("a").alias("node"))
         .distinct()
@@ -308,32 +294,6 @@ _GRAPH_CTES = """
     nbr AS (SELECT u AS a, v AS b FROM e UNION ALL SELECT v, u FROM e),
     nodes AS (SELECT u AS node FROM e UNION SELECT v FROM e)
 """
-
-
-def _capped_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(u, v) unique undirected edges of the bucket-capped co-occurrence
-    graph (users sharing an (event_type, hour) bucket; 5 smallest uids
-    per bucket — the g2_triangle_count construction)."""
-    ev = load_table(spark, "events", sf_dir)
-    b0 = ev.select(
-        F.col("user_id").alias("uid"),
-        "event_type",
-        F.date_trunc("hour", "ts").alias("h"),
-    ).distinct()
-    cap_w = Window.partitionBy("event_type", "h").orderBy("uid")
-    b = (
-        b0.withColumn("__rn", F.row_number().over(cap_w))
-        .filter(F.col("__rn") <= 5)
-        .drop("__rn")
-    )
-    x = b.select(F.col("uid").alias("u"), "event_type", "h")
-    y = b.select(F.col("uid").alias("v"), "event_type", "h")
-    return (
-        x.join(y, on=["event_type", "h"])
-        .filter(F.col("u") < F.col("v"))
-        .select("u", "v")
-        .distinct()
-    )
 
 
 def _bfs_round(sql_prev: str) -> str:
@@ -420,7 +380,7 @@ def g4_bfs_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
             .persist()
         )
         frames.append(dist)
-    cachereg.register("plans.wave6.bfs", *frames)
+    cachereg.register("plans.graph.bfs", *frames)
     return (
         dist.filter(F.col("dist") < _BFS_INF)
         .select("node", F.col("dist").cast("long").alias("dist"))

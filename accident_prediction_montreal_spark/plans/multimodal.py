@@ -13,6 +13,65 @@ from accident_prediction_montreal_spark.plans.registry import register
 from accident_prediction_montreal_spark.sources.registry import load_table
 
 
+def _synthetic_media(spark: SparkSession, sf_dir: str, encode) -> DataFrame:
+    """(media_id, payload) with one synthetic payload per document:
+    ``encode(doc_id)`` returns its bytes, run inside the Arrow batch loop
+    so payloads are built on the executors. ``encode`` is a closure, so it
+    is shipped by value and the workers need not import this module."""
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    enc_schema = T.StructType(
+        [
+            T.StructField("media_id", T.LongType()),
+            T.StructField("payload", T.BinaryType()),
+        ]
+    )
+
+    def encode_batches(batches):
+        for pdf in batches:
+            payloads = [encode(d) for d in pdf["doc_id"]]
+            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
+
+    docs = load_table(spark, "documents", sf_dir).select("doc_id")
+    return docs.mapInPandas(encode_batches, schema=enc_schema)
+
+
+def _wav_media(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """16-bit PCM WAV payloads, 100-149 closed-form samples per document
+    (the input of mm_wav_decode and mm_audio_frames)."""
+    import numpy as np
+
+    from accident_prediction_montreal_spark.operators.multimodal import (
+        encode_wav_pcm16,
+    )
+
+    def encode(d):
+        n = 100 + d % 50
+        i = np.arange(n, dtype=np.int64)
+        s = (d * 7919 + i * 104729) % 65536 - 32768
+        return encode_wav_pcm16(s)
+
+    return _synthetic_media(spark, sf_dir, encode)
+
+
+def _ppm_media(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Binary PPM (P6) payloads with a closed-form RGB8 raster per
+    document (the input of mm_ppm_decode and mm_ppm_resize)."""
+    import numpy as np
+
+    from accident_prediction_montreal_spark.operators.multimodal import (
+        encode_ppm_p6,
+    )
+
+    def encode(d):
+        w, h = 8 + d % 8, 6 + d % 6
+        p = np.arange(w * h * 3, dtype=np.int64)
+        return encode_ppm_p6((d * 13 + p * 17) % 256, w, h)
+
+    return _synthetic_media(spark, sf_dir, encode)
+
+
 @register(
     "mm_payload_stats",
     oracle="""
@@ -63,36 +122,11 @@ def mm_payload_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "payload->decode->features plumbing end to end.",
 )
 def mm_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
     from accident_prediction_montreal_spark.operators.multimodal import (
-        encode_wav_pcm16,
         wav_features,
     )
 
-    docs = load_table(spark, "documents", sf_dir).select("doc_id")
-
-    enc_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def encode_batches(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                n = 100 + d % 50
-                i = np.arange(n, dtype=np.int64)
-                s = (d * 7919 + i * 104729) % 65536 - 32768
-                payloads.append(encode_wav_pcm16(s))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(encode_batches, schema=enc_schema)
-    out = wav_features(media)
+    out = wav_features(_wav_media(spark, sf_dir))
     return out.select(
         "media_id",
         "sample_rate",
@@ -131,35 +165,11 @@ def mm_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     "engines.",
 )
 def mm_ppm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
     from accident_prediction_montreal_spark.operators.multimodal import (
-        encode_ppm_p6,
         ppm_features,
     )
 
-    docs = load_table(spark, "documents", sf_dir).select("doc_id")
-
-    enc_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def encode_batches(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                w, h = 8 + d % 8, 6 + d % 6
-                p = np.arange(w * h * 3, dtype=np.int64)
-                payloads.append(encode_ppm_p6((d * 13 + p * 17) % 256, w, h))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(encode_batches, schema=enc_schema)
-    out = ppm_features(media)
+    out = ppm_features(_ppm_media(spark, sf_dir))
     return out.select(
         "media_id",
         "width",
@@ -199,34 +209,18 @@ def mm_ppm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def mm_pgm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
 
     from accident_prediction_montreal_spark.operators.multimodal import (
         encode_pgm_p5,
         pgm_features,
     )
 
-    docs = load_table(spark, "documents", sf_dir).select("doc_id")
+    def encode(d):
+        w, h = 8 + d % 9, 5 + d % 7
+        p = np.arange(w * h, dtype=np.int64)
+        return encode_pgm_p5((d * 7 + p * 13) % 256, w, h)
 
-    enc_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def encode_batches(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                w, h = 8 + d % 9, 5 + d % 7
-                p = np.arange(w * h, dtype=np.int64)
-                payloads.append(encode_pgm_p5((d * 7 + p * 13) % 256, w, h))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(encode_batches, schema=enc_schema)
-    out = pgm_features(media)
+    out = pgm_features(_synthetic_media(spark, sf_dir, encode))
     return out.select(
         "media_id",
         "width",
@@ -269,34 +263,18 @@ def mm_pgm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def mm_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
 
     from accident_prediction_montreal_spark.operators.multimodal import (
         bmp_features,
         encode_bmp_24,
     )
 
-    docs = load_table(spark, "documents", sf_dir).select("doc_id")
+    def encode(d):
+        w, h = 5 + d % 7, 4 + d % 5
+        p = np.arange(w * h * 3, dtype=np.int64)
+        return encode_bmp_24((d * 11 + p * 29) % 256, w, h)
 
-    enc_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def encode_batches(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                w, h = 5 + d % 7, 4 + d % 5
-                p = np.arange(w * h * 3, dtype=np.int64)
-                payloads.append(encode_bmp_24((d * 11 + p * 29) % 256, w, h))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(encode_batches, schema=enc_schema)
-    out = bmp_features(media)
+    out = bmp_features(_synthetic_media(spark, sf_dir, encode))
     return out.select(
         "media_id",
         "width",
@@ -344,34 +322,11 @@ def mm_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     "row/column swap, or channel leak changes a mean and hash-mismatches.",
 )
 def mm_ppm_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
     from accident_prediction_montreal_spark.operators.multimodal import (
-        encode_ppm_p6,
         ppm_resize_features,
     )
 
-    docs = load_table(spark, "documents", sf_dir).select("doc_id")
-    enc_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def encode_batches(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                w, h = 8 + d % 8, 6 + d % 6
-                p = np.arange(w * h * 3, dtype=np.int64)
-                payloads.append(encode_ppm_p6((d * 13 + p * 17) % 256, w, h))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(encode_batches, schema=enc_schema)
-    out = ppm_resize_features(media, scale_den=2)
+    out = ppm_resize_features(_ppm_media(spark, sf_dir), scale_den=2)
     return out.select(
         "media_id",
         "out_w",
@@ -412,35 +367,20 @@ def mm_ppm_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
 
     from accident_prediction_montreal_spark.operators.multimodal import (
         encode_rawvideo_pv1,
         frame_sample_features,
     )
 
-    docs = load_table(spark, "documents", sf_dir).select("doc_id")
-    enc_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
+    def encode(d):
+        nf, w, h = 4 + d % 9, 6 + d % 5, 4 + d % 4
+        p = np.arange(nf * w * h, dtype=np.int64)
+        # frame k pixel p: (d*7 + k*w*h*11 + p_in_frame*11) % 256
+        # == (d*7 + global_p*11) % 256 with global_p = k*w*h + p
+        return encode_rawvideo_pv1((d * 7 + p * 11) % 256, nf, w, h)
 
-    def encode_batches(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                nf, w, h = 4 + d % 9, 6 + d % 5, 4 + d % 4
-                p = np.arange(nf * w * h, dtype=np.int64)
-                # frame k pixel p: (d*7 + k*w*h*11 + p_in_frame*11) % 256
-                # == (d*7 + global_p*11) % 256 with global_p = k*w*h + p
-                payloads.append(encode_rawvideo_pv1((d * 7 + p * 11) % 256, nf, w, h))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(encode_batches, schema=enc_schema)
-    out = frame_sample_features(media, stride=3)
+    out = frame_sample_features(_synthetic_media(spark, sf_dir, encode), stride=3)
     return out.select(
         "media_id",
         "frame_idx",
@@ -483,33 +423,18 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def mm_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
 
     from accident_prediction_montreal_spark.operators.multimodal import (
         encode_png_rgb8,
         png_features,
     )
 
-    docs = load_table(spark, "documents", sf_dir).select("doc_id")
+    def encode(d):
+        w, h = 4 + d % 6, 5 + d % 4
+        p = np.arange(w * h * 3, dtype=np.int64)
+        return encode_png_rgb8((d * 13 + p * 17) % 256, w, h)
 
-    enc_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def encode_batches(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                w, h = 4 + d % 6, 5 + d % 4
-                p = np.arange(w * h * 3, dtype=np.int64)
-                payloads.append(encode_png_rgb8((d * 13 + p * 17) % 256, w, h))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(encode_batches, schema=enc_schema)
+    media = _synthetic_media(spark, sf_dir, encode)
     return png_features(media).select(
         "media_id",
         "width",
@@ -554,35 +479,11 @@ def mm_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     "frames from the closed form with a LAG window.",
 )
 def mm_audio_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
     from accident_prediction_montreal_spark.operators.multimodal import (
-        encode_wav_pcm16,
         wav_frame_features,
     )
 
-    docs = load_table(spark, "documents", sf_dir).select("doc_id")
-    enc_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def encode_batches(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                n = 100 + d % 50
-                i = np.arange(n, dtype=np.int64)
-                s = (d * 7919 + i * 104729) % 65536 - 32768
-                payloads.append(encode_wav_pcm16(s))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(encode_batches, schema=enc_schema)
-    out = wav_frame_features(media, frame_len=25)
+    out = wav_frame_features(_wav_media(spark, sf_dir), frame_len=25)
     return out.select(
         "media_id",
         "frame_id",
@@ -626,33 +527,17 @@ def mm_audio_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     "boundaries in tests/test_multimodal_kml.py.",
 )
 def mm_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-    from pyspark.sql import types as T
-
     from accident_prediction_montreal_spark.operators.multimodal import (
         encode_gif87a,
         gif_features,
     )
 
-    docs = load_table(spark, "documents", sf_dir).select("doc_id")
-    enc_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
+    def encode(d):
+        w, h = 8 + d % 8, 6 + d % 6
+        idx = [(d * 31 + p * 7) % 16 for p in range(w * h)]
+        return encode_gif87a(idx, w, h)
 
-    def encode_batches(batches):
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                w, h = 8 + d % 8, 6 + d % 6
-                idx = [(d * 31 + p * 7) % 16 for p in range(w * h)]
-                payloads.append(encode_gif87a(idx, w, h))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(encode_batches, schema=enc_schema)
-    out = gif_features(media)
+    out = gif_features(_synthetic_media(spark, sf_dir, encode))
     return out.select(
         "media_id",
         "width",

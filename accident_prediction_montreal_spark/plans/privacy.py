@@ -1,4 +1,4 @@
-"""Privacy / data-release queries (r7 wave 7): the auditing and
+"""Privacy family (SURVEY.md §2.14) as queries: the auditing and
 anonymization surface a training-data platform needs before shipping a
 corpus — k-anonymity and l-diversity audits over quasi-identifier
 groups, a generalization ladder that prices coarsening against

@@ -19,8 +19,11 @@ from accident_prediction_montreal_spark.operators.similarity import (
     brp_lsh_ann,
     cosine_topk,
 )
-from accident_prediction_montreal_spark.plans.dedup import _zero_or_vacuous
-from accident_prediction_montreal_spark.plans.registry import checks, register
+from accident_prediction_montreal_spark.plans.registry import (
+    checks,
+    register,
+    zero_or_vacuous,
+)
 from accident_prediction_montreal_spark.sources.registry import load_table
 
 
@@ -101,12 +104,12 @@ def sim_ann_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return checks(stats("lsh", lsh).crossJoin(stats("ivf", ivf)), {
-        "lsh_self_hit": _zero_or_vacuous("lsh_n_no_self"),
-        "lsh_k_bound": _zero_or_vacuous("lsh_n_bad_k"),
-        "lsh_candidates_in_corpus": _zero_or_vacuous("lsh_n_stray"),
-        "ivf_self_hit": _zero_or_vacuous("ivf_n_no_self"),
-        "ivf_k_bound": _zero_or_vacuous("ivf_n_bad_k"),
-        "ivf_candidates_in_corpus": _zero_or_vacuous("ivf_n_stray"),
+        "lsh_self_hit": zero_or_vacuous("lsh_n_no_self"),
+        "lsh_k_bound": zero_or_vacuous("lsh_n_bad_k"),
+        "lsh_candidates_in_corpus": zero_or_vacuous("lsh_n_stray"),
+        "ivf_self_hit": zero_or_vacuous("ivf_n_no_self"),
+        "ivf_k_bound": zero_or_vacuous("ivf_n_bad_k"),
+        "ivf_candidates_in_corpus": zero_or_vacuous("ivf_n_stray"),
     })
 
 
@@ -897,6 +900,21 @@ def llm_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _decontam_sides(spark: SparkSession, sf_dir: str):
+    """(train, eval_set) embeddings for the semantic decontamination
+    queries: every valid vector trains, and every 37th re-id'd by
+    +20000000 is an eval item whose exact copy sits in train.
+    Degenerate vectors drop (the operator REFUSES NULL embeddings by
+    design, so the plan guarantees it never sees one)."""
+    emb = valid_vectors(load_table(spark, "embeddings", sf_dir)).select(
+        "vec_id", "embedding"
+    )
+    eval_set = emb.filter(F.col("vec_id") % 37 == 0).select(
+        (F.col("vec_id") + 20_000_000).alias("eval_id"), "embedding"
+    )
+    return emb.select(F.col("vec_id").alias("train_id"), "embedding"), eval_set
+
+
 @register(
     "llm_decontaminate_semantic",
     oracle="""
@@ -955,17 +973,7 @@ def llm_decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         semantic_contamination,
     )
 
-    from accident_prediction_montreal_spark.functions.vectors import valid_vectors
-
-    # degenerate vectors drop (r14 contract; the operator itself REFUSES
-    # NULL embeddings by design — the plan guarantees it never sees one)
-    emb = valid_vectors(load_table(spark, "embeddings", sf_dir)).select(
-        "vec_id", "embedding"
-    )
-    eval_set = emb.filter(F.col("vec_id") % 37 == 0).select(
-        (F.col("vec_id") + 20_000_000).alias("eval_id"), "embedding"
-    )
-    train = emb.select(F.col("vec_id").alias("train_id"), "embedding")
+    train, eval_set = _decontam_sides(spark, sf_dir)
     out = semantic_contamination(train, eval_set, threshold=0.95)
     return out.select(
         "train_id", "eval_id", (F.round("cosine", 5) + 0.0).alias("cosine")
@@ -1031,17 +1039,7 @@ def llm_decontaminate_semantic_bucketed(
         semantic_contamination,
     )
 
-    from accident_prediction_montreal_spark.functions.vectors import valid_vectors
-
-    # degenerate vectors drop (r14 contract; the operator itself REFUSES
-    # NULL embeddings by design — the plan guarantees it never sees one)
-    emb = valid_vectors(load_table(spark, "embeddings", sf_dir)).select(
-        "vec_id", "embedding"
-    )
-    eval_set = emb.filter(F.col("vec_id") % 37 == 0).select(
-        (F.col("vec_id") + 20_000_000).alias("eval_id"), "embedding"
-    )
-    train = emb.select(F.col("vec_id").alias("train_id"), "embedding")
+    train, eval_set = _decontam_sides(spark, sf_dir)
     # n_cells=8/n_probe=2/max_iter=10: the quantizer fit is pure fixed
     # overhead on a benchmark-sized eval side (one tiny MLlib job per
     # iteration — 20 iters measured 2.8 s at sf0.1, ~all of it fit), and

@@ -51,7 +51,7 @@ def _suppliers_with_coords(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _haversine_sql(lat1: str, lon1: str, lat2: str, lon2: str) -> str:
+def haversine_sql(lat1: str, lon1: str, lat2: str, lon2: str) -> str:
     """DuckDB expression mirroring functions/geo.py::haversine_meters term-for-term."""
     return f"""(2.0 * 6371000.0) * atan2(
       sqrt(
@@ -73,7 +73,7 @@ def _haversine_sql(lat1: str, lon1: str, lat2: str, lon2: str) -> str:
     "geo_haversine",
     oracle=f"""
     SELECT c_custkey,
-      ROUND({_haversine_sql(CUST_LAT, CUST_LON, "45.5", "-73.6")}, 3) AS dist_m
+      ROUND({haversine_sql(CUST_LAT, CUST_LON, "45.5", "-73.6")}, 3) AS dist_m
     FROM customer
     """,
     description="Haversine distance expression factory (§2.9, road_network.py:311-324)",
@@ -98,7 +98,7 @@ _KNN_ORACLE = f"""
     ),
     pairs AS (
       SELECT c_custkey, s_suppkey,
-        {_haversine_sql("lat", "lon", "rlat", "rlon")} AS distance_m
+        {haversine_sql("lat", "lon", "rlat", "rlon")} AS distance_m
       FROM samples CROSS JOIN sites
     )
     SELECT c_custkey, s_suppkey, ROUND(distance_m, 3) AS distance_m,
@@ -190,7 +190,7 @@ def _wrap_col(raw):
     ),
     pairs AS (
       SELECT c_custkey, s_suppkey,
-        {_haversine_sql("lat", "lon", "rlat", "rlon")} AS distance_m
+        {haversine_sql("lat", "lon", "rlat", "rlon")} AS distance_m
       FROM samples CROSS JOIN sites
     )
     SELECT c_custkey, s_suppkey, ROUND(distance_m, 3) AS distance_m,
@@ -246,7 +246,7 @@ def j8_knn_seam_polar(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     pairs AS (
       SELECT c_custkey, s_acctbal,
-        1.0 / pow({_haversine_sql("lat", "lon", "slat", "slon")}, 2.0) AS w
+        1.0 / pow({haversine_sql("lat", "lon", "slat", "slon")}, 2.0) AS w
       FROM samples CROSS JOIN stations
     )
     SELECT c_custkey,
@@ -293,7 +293,7 @@ def a6_idw_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
         1.0 / pow(d, 2.0) AS w
       FROM (
         SELECT c_custkey, s_acctbal,
-          {_haversine_sql("lat", "lon", "slat", "slon")} AS d
+          {haversine_sql("lat", "lon", "slat", "slon")} AS d
         FROM samples CROSS JOIN stations
       ) WHERE d <= 2000.0
     )
@@ -365,7 +365,7 @@ IDW_SEAM_RLON_RAW = "179.9 + (s_suppkey % 97) / 300.0"
       SELECT c_custkey, s_acctbal, d, 1.0 / pow(d, 2.0) AS w
       FROM (
         SELECT c_custkey, s_acctbal,
-          {_haversine_sql("lat", "lon", "slat", "slon")} AS d
+          {haversine_sql("lat", "lon", "slat", "slon")} AS d
         FROM samples CROSS JOIN stations
       ) WHERE d <= 2000.0
     )

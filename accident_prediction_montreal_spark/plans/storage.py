@@ -25,30 +25,15 @@ from accident_prediction_montreal_spark.operators.cdc import (
 from accident_prediction_montreal_spark.operators.zorder import write_zordered
 from accident_prediction_montreal_spark.plans.registry import checks, register
 from accident_prediction_montreal_spark.sources.registry import load_table
+from accident_prediction_montreal_spark.sources.scratch import (
+    fixture_dir,
+    session_dir,
+)
 from accident_prediction_montreal_spark.streaming.finite import (
     drain,
     read_events_stream,
     two_batch_fixture,
 )
-
-
-def _scratch(prefix: str, sf_dir: str) -> tuple[str, str]:
-    """(scratch dir, charset-safe key) for queries that write shards:
-    TMPDIR-honoring like the llm_ops scratch convention, md5-keyed over
-    the dataset path AND the Spark applicationId so (a) any dataset path
-    (hyphens, unicode, ...) yields a filesystem- and SQL-identifier-safe
-    suffix, and (b) two concurrent sessions on the same dataset never
-    race on one sink/evo/csv/bq dir (each session writes its own key;
-    re-runs within a session stay idempotent via mode('overwrite'))."""
-    import hashlib
-    import os
-    import tempfile
-
-    active = SparkSession.getActiveSession()
-    app = active.sparkContext.applicationId if active else f"pid{os.getpid()}"
-    token = f"{os.path.realpath(sf_dir)}\x00{app}"
-    key = hashlib.md5(token.encode()).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"spark_graft_{prefix}", key), key
 
 
 @register(
@@ -72,7 +57,7 @@ def _scratch(prefix: str, sf_dir: str) -> tuple[str, str]:
     "keeps the query idempotent across driver reruns.",
 )
 def x8_partitioned_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path, _ = _scratch("sink", sf_dir)
+    path, _ = session_dir("sink", sf_dir)
     ev = load_table(spark, "events", sf_dir).select(
         F.col("ts").cast("date").alias("d"), "value"
     )
@@ -105,7 +90,7 @@ def x8_partitioned_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     "defaults hash-mismatches against the single-table oracle.",
 )
 def x9_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base, _ = _scratch("evo", sf_dir)
+    base, _ = session_dir("evo", sf_dir)
     ev = load_table(spark, "events", sf_dir).select("event_id", "event_type")
     old = ev.filter(F.col("event_id") % 2 == 1)
     new = ev.filter(F.col("event_id") % 2 == 0).withColumn(
@@ -149,7 +134,7 @@ def x9_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x10_permissive_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import types as T
 
-    base, _ = _scratch("csv", sf_dir)
+    base, _ = session_dir("csv", sf_dir)
     ev = load_table(spark, "events", sf_dir).select("event_id")
     lines = ev.select(
         F.concat(
@@ -205,7 +190,7 @@ def x10_permissive_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x11_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     dec4 = lambda c: c.cast("decimal(18,4)")  # noqa: E731
-    base, key = _scratch("bq", sf_dir)
+    base, key = session_dir("bq", sf_dir)
     t_o, t_l = f"bq_orders_{key}", f"bq_lineitem_{key}"
     spark.sql(f"DROP TABLE IF EXISTS {t_o}")
     spark.sql(f"DROP TABLE IF EXISTS {t_l}")
@@ -263,7 +248,7 @@ def x11_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "reduced total file count.",
 )
 def x13_small_files_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base, _ = _scratch("compact", sf_dir)
+    base, _ = session_dir("compact", sf_dir)
     frag_dir, out_dir = base + "/frag", base + "/compacted"
 
     from accident_prediction_montreal_spark.sources.files import compact_partitions
@@ -479,7 +464,7 @@ def s12_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x16_python_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from accident_prediction_montreal_spark.sources.pydatasource import register_sink
 
-    base, _ = _scratch("pysink", sf_dir)
+    base, _ = session_dir("pysink", sf_dir)
     register_sink(spark)
     rollup = load_table(spark, "events", sf_dir).groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -595,7 +580,7 @@ def x17_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     "replays the restatement relationally from the source table.",
 )
 def x22_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path, _ = _scratch("dynpo", sf_dir)
+    path, _ = session_dir("dynpo", sf_dir)
     ev = load_table(spark, "events", sf_dir).select(
         F.col("ts").cast("date").alias("d"), "value", "event_type"
     )
@@ -638,18 +623,11 @@ def x22_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFra
     "misfiltered shard hash-mismatches.",
 )
 def x5_month_shard_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-    import tempfile
-
     from accident_prediction_montreal_spark.pipeline.backfill import (
         monthly_event_rollup,
     )
 
-    src = os.path.realpath(os.path.join(sf_dir, "events.parquet"))
-    st = os.stat(src)
-    tag = hashlib.md5(f"{src}:{st.st_size}:{st.st_mtime_ns}".encode()).hexdigest()[:12]
-    out_dir = os.path.join(tempfile.gettempdir(), "spark_graft_backfill", tag)
+    _, out_dir = fixture_dir("backfill", sf_dir)
     combined = monthly_event_rollup(spark, sf_dir, out_dir)
     return combined.select(
         F.col("month_key").cast("string").alias("month_key"),
@@ -685,19 +663,11 @@ def x5_month_shard_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(n_evolved/evolved_sum) all fail against the single-table oracle.",
 )
 def x12_backfill_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from accident_prediction_montreal_spark.pipeline.backfill import (
         backfill_month_shards,
     )
 
-    src = os.path.realpath(os.path.join(sf_dir, "events.parquet"))
-    st = os.stat(src)
-    tag = hashlib.md5(f"{src}:{st.st_size}:{st.st_mtime_ns}".encode()).hexdigest()[:12]
-    out_dir = os.path.join(tempfile.gettempdir(), "spark_graft_bfevo", tag)
+    _, out_dir = fixture_dir("bfevo", sf_dir)
     # The two-phase _SUCCESS choreography below is the test subject;
     # stale shards from an interrupted earlier run would make phase-1
     # completeness ambiguous, so start clean.
@@ -919,7 +889,7 @@ def x19_dq_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x20_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, "lineitem", sf_dir)
-    out_dir, _ = _scratch("zorder", sf_dir)
+    out_dir, _ = session_dir("zorder", sf_dir)
     write_zordered(
         li.select("l_partkey", "l_suppkey", "l_extendedprice"),
         out_dir,
@@ -980,7 +950,7 @@ def st_cdc_upsert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("op"),
     )
 
-    base, _ = _scratch("stcdc", sf_dir)
+    base, _ = session_dir("stcdc", sf_dir)
     shutil.rmtree(base, ignore_errors=True)
     log_dir, ckpt_dir = f"{base}/log", f"{base}/ckpt"
 
@@ -1051,7 +1021,7 @@ def x21_ann_pruned_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     assigned = assigned.persist()
     cachereg.register("plans.x21_ann_pruned_layout", assigned)
-    out_dir, _ = _scratch("ivfpart", sf_dir)
+    out_dir, _ = session_dir("ivfpart", sf_dir)
     (
         assigned.select("vec_id", "embedding", "cell_id")
         .write.mode("overwrite")
@@ -1183,7 +1153,7 @@ _TT_CUTOFF = "2024-01-16"
     "mismatch.",
 )
 def x25_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base, _ = _scratch("ttravel", sf_dir)
+    base, _ = session_dir("ttravel", sf_dir)
     v1_dir = os.path.join(base, "v1")
     v2_dir = os.path.join(base, "v2")
     ev = load_table(spark, "events", sf_dir)
@@ -1245,7 +1215,7 @@ def s13_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import types as T
 
-    base, _ = _scratch("jsonl", sf_dir)
+    base, _ = session_dir("jsonl", sf_dir)
     out_dir = os.path.join(base, "docs")
     docs = load_table(spark, "documents", sf_dir).select(
         "doc_id",
@@ -1325,11 +1295,8 @@ def s13_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "mode keeps the query idempotent across driver reruns.",
 )
 def x26_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from accident_prediction_montreal_spark.plans.storage import (
-        _scratch,
-    )
 
-    base, _ = _scratch("orc", sf_dir)
+    base, _ = session_dir("orc", sf_dir)
     li = load_table(spark, "lineitem", sf_dir).select(
         "l_orderkey", "l_quantity", "l_returnflag", "l_linestatus",
         "l_shipdate",
@@ -1384,11 +1351,7 @@ def x26_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x27_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import types as T
 
-    from accident_prediction_montreal_spark.plans.storage import (
-        _scratch,
-    )
-
-    base, _ = _scratch("csvsink", sf_dir)
+    base, _ = session_dir("csvsink", sf_dir)
     adv = F.concat(
         F.lit('a,"b"\\'),
         F.lit("\n"),

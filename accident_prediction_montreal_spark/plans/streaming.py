@@ -19,8 +19,8 @@ from accident_prediction_montreal_spark import cachereg
 from accident_prediction_montreal_spark.functions.money import dsum
 from accident_prediction_montreal_spark.operators.sessionize import sessionize
 from accident_prediction_montreal_spark.plans.registry import register
-from accident_prediction_montreal_spark.plans.storage import _scratch
 from accident_prediction_montreal_spark.sources.registry import load_table
+from accident_prediction_montreal_spark.sources.scratch import session_dir
 from accident_prediction_montreal_spark.streaming.finite import (
     drain,
     events_stream,
@@ -224,7 +224,7 @@ def st_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def st_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = events_stream(spark, sf_dir).select("event_id", "event_type", "value")
-    base, _ = _scratch("fb", sf_dir)
+    base, _ = session_dir("fb", sf_dir)
     shutil.rmtree(base, ignore_errors=True)
     out_dir, ckpt_dir = f"{base}/out", f"{base}/ckpt"
 
@@ -599,7 +599,7 @@ def st_pipeline_capstone(spark: SparkSession, sf_dir: str) -> DataFrame:
     cachereg.register("plans.st_pipeline_capstone", dim)
     dim.count()
 
-    base, _ = _scratch("stcap", sf_dir)
+    base, _ = session_dir("stcap", sf_dir)
     shutil.rmtree(base, ignore_errors=True)
     out_dir, ckpt_dir = f"{base}/out", f"{base}/ckpt"
 
@@ -753,7 +753,7 @@ def st_stream_stream_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     "metadata read, never a rescan of committed input.",
 )
 def st_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base, _ = _scratch("stresume", sf_dir)
+    base, _ = session_dir("stresume", sf_dir)
     # Re-runs within a session must start from a clean slate or the old
     # checkpoint would mark the first file as already committed.
     shutil.rmtree(base, ignore_errors=True)

@@ -28,8 +28,8 @@ from accident_prediction_montreal_spark.plans.registry import register
 from accident_prediction_montreal_spark.sources.registry import load_table
 
 
-# DuckDB token expression mirroring operators/text.py::tokenize.
-_SQL_TOKENS = (
+#: DuckDB token expression mirroring operators/text.py::tokenize.
+SQL_TOKENS = (
     "CASE WHEN trim(lower(text)) = '' THEN CAST([] AS VARCHAR[]) "
     "ELSE regexp_split_to_array(trim(lower(text)), '\\s+') END"
 )
@@ -45,7 +45,7 @@ def _stop_in(langcode: str) -> str:
     "text_quality_signals",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, text, {_SQL_TOKENS} AS w FROM documents
+      SELECT doc_id, text, {SQL_TOKENS} AS w FROM documents
     )
     SELECT doc_id,
       CAST(length(text) AS BIGINT) AS n_chars,
@@ -91,7 +91,7 @@ def _lang_id_oracle() -> str:
     best = "GREATEST(" + ", ".join(f"h_{lang}" for lang in langs) + ")"
     case = " ".join(f"WHEN h_{lang} = {best} THEN '{lang}'" for lang in langs)
     return f"""
-    WITH toks AS (SELECT doc_id, {_SQL_TOKENS} AS w FROM documents),
+    WITH toks AS (SELECT doc_id, {SQL_TOKENS} AS w FROM documents),
     scored AS (SELECT doc_id, {hits} FROM toks)
     SELECT doc_id,
       CASE WHEN {best} = 0 THEN 'und' {case} END AS lang_pred
@@ -166,7 +166,7 @@ _CHUNK_SIZE, _CHUNK_STRIDE = 32, 24
 @register(
     "text_chunking",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, {_SQL_TOKENS} AS w FROM documents),
+    WITH toks AS (SELECT doc_id, {SQL_TOKENS} AS w FROM documents),
     starts AS (
       SELECT doc_id, w,
         UNNEST(range(0,
@@ -199,7 +199,7 @@ def text_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH n AS (SELECT COUNT(*) AS n_docs FROM documents),
     tf AS (
-      SELECT doc_id AS doc, UNNEST({_SQL_TOKENS}) AS term FROM documents
+      SELECT doc_id AS doc, UNNEST({SQL_TOKENS}) AS term FROM documents
     ),
     counts AS (
       SELECT doc, term, COUNT(*) AS tf FROM tf GROUP BY doc, term
@@ -233,7 +233,7 @@ def text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_repetition",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, {_SQL_TOKENS} AS w FROM documents),
+    WITH toks AS (SELECT doc_id, {SQL_TOKENS} AS w FROM documents),
     grams AS (
       SELECT doc_id,
         UNNEST(list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i+1])) AS g
@@ -352,7 +352,7 @@ def text_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_quality_deciles",
     oracle=f"""
     WITH sized AS (
-      SELECT doc_id, COALESCE(len({_SQL_TOKENS}), 0) AS n_tokens FROM documents
+      SELECT doc_id, COALESCE(len({SQL_TOKENS}), 0) AS n_tokens FROM documents
     )
     SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
       CAST(MIN(n_tokens) AS BIGINT) AS min_tokens,
@@ -429,7 +429,7 @@ def text_quality_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_quality_deciles_exact",
     oracle=f"""
     WITH sized AS (
-      SELECT doc_id, COALESCE(len({_SQL_TOKENS}), 0) AS n_tokens FROM documents
+      SELECT doc_id, COALESCE(len({SQL_TOKENS}), 0) AS n_tokens FROM documents
     ),
     tiled AS (
       SELECT doc_id, n_tokens,
@@ -814,7 +814,7 @@ def text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     # at 100 TB this is the "materialize the term-frequency table"
     # step every two-phase ranking pipeline has.
     tf = docs.select("doc_id", F.inline(F.array(_bind_once(toks, packed)))).persist()
-    cachereg.register("plans.wave5.bm25", tf)
+    cachereg.register("plans.text.bm25", tf)
     stats = tf.agg(
         F.count(F.lit(1)).cast("double").alias("n_docs"),
         F.avg("dl").alias("avgdl"),
@@ -853,16 +853,10 @@ def text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_QC_TOKENS = (
-    "CASE WHEN trim(lower(text)) = '' THEN CAST([] AS VARCHAR[]) "
-    "ELSE regexp_split_to_array(trim(lower(text)), '\\s+') END"
-)
-
-
 @register(
     "text_quality_classifier",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, {_SQL_QC_TOKENS} AS w FROM documents),
+    WITH toks AS (SELECT doc_id, {SQL_TOKENS} AS w FROM documents),
     per AS (
       SELECT doc_id, CAST(len(w) AS BIGINT) AS n_tokens,
         -- NULL text -> NULL score (mirrors Spark's aggregate-over-NULL-
@@ -931,7 +925,7 @@ def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
       ROUND(CAST(s AS DOUBLE) / n_tokens, 6) + 0.0 AS avg_nll,
       ROUND(exp(CAST(s AS DOUBLE) / n_tokens), 4) + 0.0 AS ppl
     FROM per
-    """.replace("{tokens}", _SQL_QC_TOKENS),
+    """.replace("{tokens}", SQL_TOKENS),
     description="CCNet-style unigram-LM perplexity filter (Wenzek et al. 2020 "
     "pattern) — the third quality-filter modality next to the heuristic "
     "signals and the hashed classifier: an add-1-smoothed unigram model "
@@ -950,17 +944,11 @@ def text_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lm_perplexity(docs)
 
 
-_SQL_TOKS = (
-    "CASE WHEN trim(lower(text)) = '' THEN CAST([] AS VARCHAR[]) "
-    "ELSE regexp_split_to_array(trim(lower(text)), '\\s+') END"
-)
-
-
 @register(
     "text_bpe_merges",
     oracle=f"""
     WITH toks AS (
-      SELECT unnest({_SQL_TOKS}) AS t FROM documents
+      SELECT unnest({SQL_TOKENS}) AS t FROM documents
     ),
     vocab AS (SELECT t, CAST(COUNT(*) AS BIGINT) AS freq FROM toks GROUP BY t),
     bigrams AS (
@@ -1026,7 +1014,7 @@ def text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH per AS (
       SELECT source, n_chars,
-        COALESCE(len({_SQL_TOKS}), 0) AS n_tokens,
+        COALESCE(len({SQL_TOKENS}), 0) AS n_tokens,
         CASE WHEN trim(text) = '' THEN 1 ELSE 0 END AS is_empty
       FROM documents
     ),

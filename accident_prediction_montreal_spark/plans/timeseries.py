@@ -20,6 +20,19 @@ from accident_prediction_montreal_spark.plans.registry import register
 from accident_prediction_montreal_spark.sources.registry import load_table
 
 
+def _click_events(ev: DataFrame) -> DataFrame:
+    """The right side of every j9 as-of join: click events, one per
+    (user_id, ts), the highest event_id winning the tie."""
+    w = Window.partitionBy("user_id", "ts").orderBy(F.col("event_id").desc())
+    return (
+        ev.filter(F.col("event_type") == "click")
+        .select("user_id", "ts", "event_id", "value")
+        .withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
+
+
 @register(
     "j9_asof_join",
     oracle="""
@@ -41,18 +54,10 @@ from accident_prediction_montreal_spark.sources.registry import load_table
     "checked against DuckDB's native ASOF JOIN",
 )
 def j9_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
     from accident_prediction_montreal_spark.operators.asof import asof_join
 
     ev = load_table(spark, "events", sf_dir)
-    w = Window.partitionBy("user_id", "ts").orderBy(F.col("event_id").desc())
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .select("user_id", "ts", "event_id", "value")
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    clicks = _click_events(ev)
     errors = ev.filter(F.col("event_type") == "error").select(
         "event_id", "ts", "user_id", "value"
     )
@@ -239,19 +244,10 @@ def w7_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     "oracle is DuckDB's native ASOF with the <= inequality.",
 )
 def j9_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     from accident_prediction_montreal_spark.operators.asof import asof_join
 
     ev = load_table(spark, "events", sf_dir)
-    w = Window.partitionBy("user_id", "ts").orderBy(F.col("event_id").desc())
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .select("user_id", "ts", "event_id", "value")
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    clicks = _click_events(ev)
     errors = ev.filter(F.col("event_type") == "error").select(
         "event_id", "ts", "user_id"
     )
@@ -294,19 +290,10 @@ def j9_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     "timestamp arithmetic on both engines.",
 )
 def j9_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     from accident_prediction_montreal_spark.operators.asof import asof_join
 
     ev = load_table(spark, "events", sf_dir)
-    w = Window.partitionBy("user_id", "ts").orderBy(F.col("event_id").desc())
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .select("user_id", "ts", "event_id", "value")
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    clicks = _click_events(ev)
     errors = ev.filter(F.col("event_type") == "error").select(
         "event_id", "ts", "user_id"
     )
@@ -1340,20 +1327,11 @@ def a36_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     "two native ASOF directions with the identical tie rule.",
 )
 def j9_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     from accident_prediction_montreal_spark.operators.asof import asof_join
     from accident_prediction_montreal_spark.sources.registry import epoch_us
 
     ev = load_table(spark, "events", sf_dir)
-    w = Window.partitionBy("user_id", "ts").orderBy(F.col("event_id").desc())
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .select("user_id", "ts", "event_id", "value")
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    clicks = _click_events(ev)
     errors = ev.filter(F.col("event_type") == "error").select(
         "event_id", "ts", "user_id"
     )

@@ -66,7 +66,7 @@ def get_session(
 # Default state-store partition count for the finite streaming fixtures
 # — shared by the ``state_partitions`` pin and by any batch side that
 # pre-partitions itself to match a streaming join (e.g. the incremental
-# dedup index, plans/wave10.py): the counts MUST agree or the cached
+# dedup index, plans/dedup.py::st_incremental_dedup): the counts MUST agree or the cached
 # HashPartitioning no longer satisfies the micro-batch join and the
 # index re-shuffles every trigger.
 STATE_PARTITIONS = 8

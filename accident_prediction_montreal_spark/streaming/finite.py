@@ -23,9 +23,9 @@ The drain contract (``drain``), stated once:
   ``sink(batch_df, batch_id)``, with ``checkpoint`` as the query's
   checkpoint location.
 * Scratch reuse: a query whose sink or checkpoint lives on disk puts it
-  under ``plans/relational_extra.py::_scratch`` (one directory per
-  query, dataset and session) and removes that directory before it
-  runs. The checkpoint log is opened in append mode, so a stale one
+  under ``sources/scratch.py::session_dir`` (one directory per query,
+  dataset and session, removed when the process exits) and removes that
+  directory before it runs. The checkpoint log is opened in append mode, so a stale one
   would mark the input as already committed. A scratch-backed result
   therefore stays valid only until the next call of the same query in
   that session.
@@ -39,9 +39,7 @@ and ``pin_arrival_order``.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
 import uuid
 from collections.abc import Callable
 
@@ -50,6 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from accident_prediction_montreal_spark.session import state_partitions
+from accident_prediction_montreal_spark.sources.scratch import fixture_dir
 from accident_prediction_montreal_spark.sources.registry import (
     TABLES,
     ntz_to_timestamp,
@@ -189,11 +188,9 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         probe_target = parts[0]
     else:
-        tag = hashlib.md5(os.path.realpath(src).encode()).hexdigest()[:12]
-        stream_dir = os.path.join(tempfile.gettempdir(), "spark_graft_stream", tag)
+        target, stream_dir = fixture_dir("stream", sf_dir)
         os.makedirs(stream_dir, exist_ok=True)
         link = os.path.join(stream_dir, "events.parquet")
-        target = os.path.realpath(src)
         if os.path.islink(link) and os.readlink(link) != target:
             os.remove(link)
         if not os.path.exists(link):
@@ -242,15 +239,6 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return decoded
 
 
-def _fixture_dir(kind: str, sf_dir: str) -> tuple[str, str]:
-    """(events source file, fixture dir keyed by its path, size and mtime)
-    — regenerated testdata invalidates the fixture."""
-    src = os.path.realpath(os.path.join(sf_dir, "events.parquet"))
-    st = os.stat(src)
-    tag = hashlib.md5(f"{src}:{st.st_size}:{st.st_mtime_ns}".encode()).hexdigest()[:12]
-    return src, os.path.join(tempfile.gettempdir(), f"spark_graft_{kind}", tag)
-
-
 def late_data_fixture(sf_dir: str) -> str:
     """Build (once per events file) a 3-file stream fixture directory:
 
@@ -273,7 +261,7 @@ def late_data_fixture(sf_dir: str) -> str:
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    src, fix_dir = _fixture_dir("late", sf_dir)
+    src, fix_dir = fixture_dir("late", sf_dir)
     paths = [
         os.path.join(fix_dir, "a_bulk.parquet"),
         os.path.join(fix_dir, "b_clock.parquet"),
@@ -332,7 +320,7 @@ def two_batch_fixture(sf_dir: str) -> str:
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    src, fix_dir = _fixture_dir("2batch", sf_dir)
+    src, fix_dir = fixture_dir("2batch", sf_dir)
     paths = [
         os.path.join(fix_dir, "a_early.parquet"),
         os.path.join(fix_dir, "b_late.parquet"),

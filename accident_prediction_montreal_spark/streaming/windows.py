@@ -11,7 +11,7 @@ DataFrame — source/sink wiring stays with the caller (streaming/finite.py
 for the engine's finite streams), so the same transformations run against
 file, Kafka or rate sources. Batch twins of
 these aggregations (identical result semantics on bounded input) are in
-plans/llm_ops.py (`st_*` queries), which is how the DuckDB oracle
+plans/streaming.py (`st_*` queries), which is how the DuckDB oracle
 checks them.
 
 State-store sizing at scale: watermark delay bounds state; session

@@ -424,7 +424,7 @@ def test_bm25_is_map_plus_scalar_broadcast(spark):
     assert plan.count("BroadcastNestedLoopJoin") <= 1
     from accident_prediction_montreal_spark import cachereg
 
-    cachereg.release("plans.wave5.bm25")
+    cachereg.release("plans.text.bm25")
 
 
 def test_seasonal_baseline_is_broadcast_back(spark):
@@ -440,7 +440,7 @@ def test_label_propagation_rounds_are_hash_joins(spark):
     assert "CartesianProduct" not in plan
     from accident_prediction_montreal_spark import cachereg
 
-    cachereg.release("plans.wave5.labelprop")
+    cachereg.release("plans.graph.labelprop")
 
 
 def test_robust_zscore_stats_broadcast(spark):
@@ -471,7 +471,7 @@ def test_bfs_rounds_are_hash_joins(spark):
             assert "Cross" in line
     from accident_prediction_montreal_spark import cachereg
 
-    cachereg.release("plans.wave6.bfs")
+    cachereg.release("plans.graph.bfs")
 
 
 def test_autocorr_window_runs_on_reduced_series(spark):
