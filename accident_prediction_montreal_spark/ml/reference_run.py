@@ -15,6 +15,7 @@ from pyspark.ml.functions import array_to_vector
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from accident_prediction_montreal_spark import cachereg
 from accident_prediction_montreal_spark.ml.class_weighter import balanced_weights
 from accident_prediction_montreal_spark.ml.export import (
     create_result_dir,
@@ -38,6 +39,7 @@ from accident_prediction_montreal_spark.pipeline import (
 from accident_prediction_montreal_spark.pipeline.dataset import FEATURES_COL
 
 ALGORITHMS = ("brf", "urf", "gbt")
+_PRED_SITE = "ml.reference_run.test_pred"
 
 
 def build_training_frames(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
@@ -48,27 +50,31 @@ def build_training_frames(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
     flat-0.5 AUROC golden would not catch a pipeline that stopped
     learning (r4 verdict #5).
     """
-    roads = generate_road_points(spark, n_streets=40).cache()
-    accidents = generate_accidents(spark, roads, n=400, days=25, risk_bias=True).cache()
+    cached = cachereg.generation("ml.reference_run.frames")
+    roads = cached.persist(generate_road_points(spark, n_streets=40))
+    accidents = cached.persist(
+        generate_accidents(spark, roads, n=400, days=25, risk_bias=True)
+    )
     weather = generate_weather(spark, n_stations=5, days=25)
     stations = generate_station_coords(spark, n_stations=5)
 
-    pos = positive_samples(spark, accidents, roads, weather, stations).persist()
-    neg = negative_samples(
-        spark, roads, weather, stations, "2017-01-01", "2017-01-25", sample_ratio=0.05
-    ).persist()
+    pos = cached.persist(positive_samples(spark, accidents, roads, weather, stations))
+    neg = cached.persist(
+        negative_samples(
+            spark, roads, weather, stations, "2017-01-01", "2017-01-25", sample_ratio=0.05
+        )
+    )
     train, test = build_dataset(spark, pos, neg, split_date="2017-01-18")
     # Deterministic layout before fit: tree/boosting fits are sensitive to
     # per-partition sample order, so pin partitioning + intra-partition
     # order to the data itself (not to session config / AQE decisions) —
     # the goldens must reproduce under any harness session. Fixture-scale
     # cost only; production fits don't need bit-identical models.
-    to_ml = lambda df: (  # noqa: E731
+    to_ml = lambda df: cached.persist(  # noqa: E731
         df.withColumn("features", array_to_vector("features_arr"))
         .na.drop()
         .repartition(8, "sample_id")
         .sortWithinPartitions("sample_id", "date", "hour")
-        .persist()
     )
     return to_ml(train), to_ml(test)
 
@@ -101,7 +107,7 @@ def train_reference(
             recall_at_flag_rate,
         )
 
-        test_pred = model.transform(test).persist()
+        test_pred = cachereg.generation(_PRED_SITE).persist(model.transform(test))
         test_metrics = evaluate_binary_classifier(test_pred)
         # The reference's headline operating point (README.md:9 "top 13%
         # flagged => 85% of collisions"), asserted at fixture scale by
@@ -113,7 +119,7 @@ def train_reference(
             "test": test_metrics,
             "train": evaluate_binary_classifier(model.transform(train)),
         }
-        test_pred.unpersist()
+        cachereg.release(_PRED_SITE)
         return out
     n_neg = train.filter(F.col("label") == 0.0).count()
     result_dir = create_result_dir(out_base, algo)

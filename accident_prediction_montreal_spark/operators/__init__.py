@@ -17,7 +17,6 @@ from accident_prediction_montreal_spark.operators.encoding import target_encode
 from accident_prediction_montreal_spark.operators.dedup import (
     exact_dedup,
     word_shingles,
-    minhash_signature,
     minhash_dedup_pairs,
     simhash,
     ngram_jaccard_pairs,
@@ -52,7 +51,6 @@ __all__ = [
     "target_encode",
     "exact_dedup",
     "word_shingles",
-    "minhash_signature",
     "minhash_dedup_pairs",
     "simhash",
     "ngram_jaccard_pairs",

@@ -16,13 +16,19 @@ iterative algorithms use. The checkpoint is LAZY (eager=False): the
 round's checksum action is what materializes it, so each round costs
 ONE Spark job, not two (r14 measurement: rounds on a small edge set
 are pure fixed cost — 2.5 s/round -> 1.5 s/round with the fused
-action and the dropped large-star distinct).
+action and the dropped large-star distinct). The checkpoints belong
+to the cachereg site "operators.components": the returned frame reads
+them lazily, so they live until the caller releases that site.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from accident_prediction_montreal_spark import cachereg
+
+_SITE = "operators.components"
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -74,7 +80,8 @@ def connected_components(
     (count, xor-of-hashes) checksum. Isolated nodes don't appear in an
     edge list; callers wanting them union the node table afterwards.
     """
-    e = (
+    e = cachereg.checkpoint(
+        _SITE,
         edges.select(
             F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
         )
@@ -82,10 +89,10 @@ def connected_components(
         .select(
             F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v")
         )
-        .distinct()
+        .distinct(),
         # Lazy checkpoint: the round-stats action below is the
         # materializing action, so normalization + stats cost one job.
-        .localCheckpoint(eager=False)
+        eager=False,
     )
 
     def round_stats(df: DataFrame) -> tuple:
@@ -147,7 +154,7 @@ def connected_components(
     prev, done = round_stats(e)
     if not done:
         for _ in range(max_iter):
-            e = _small_star(_large_star(e)).localCheckpoint(eager=False)
+            e = cachereg.checkpoint(_SITE, _small_star(_large_star(e)), eager=False)
             cur, done = round_stats(e)
             if done or cur == prev:
                 break

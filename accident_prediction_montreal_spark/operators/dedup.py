@@ -53,35 +53,6 @@ def word_shingles(text: Column | str, n: int = 3) -> Column:
     )
 
 
-def _hash_family(shingle: Column, seed: int) -> Column:
-    # xxhash64 with a per-family salt: cheap, JVM-side, well-mixed.
-    return F.xxhash64(shingle, F.lit(seed))
-
-
-def minhash_signature(text: Column | str, num_hashes: int = 32, n: int = 3) -> Column:
-    """MinHash signature (array<long>, length ``num_hashes``) of word shingles.
-
-    signature[i] = min over shingles of xxhash64(shingle, salt_i); null for
-    documents with no shingles. No explode, no shuffle: transform+array_min
-    per row, with the shingle array bound once across the num_hashes
-    families (``_bind_once``).
-    """
-
-    def family(i: int):
-        # closure per family — NOT `lambda s, i=i`: a two-parameter lambda
-        # makes pyspark pass the ELEMENT INDEX as the second argument,
-        # silently rebinding i and collapsing every family to the same hash
-        return lambda s: _hash_family(s, i)
-
-    def body(sh: Column) -> Column:
-        sig = F.array(
-            *[F.array_min(F.transform(sh, family(i))) for i in range(num_hashes)]
-        )
-        return F.when(F.size(sh) > 0, sig)
-
-    return _bind_once(word_shingles(text, n), body)
-
-
 def _bind_once(value: Column, body) -> Column:
     """Evaluate ``value`` once and feed it to ``body`` as a lambda variable.
 
@@ -249,6 +220,9 @@ def minhash_signature_hashed(
     codegen note)."""
 
     def family(i: int):
+        # closure per family — NOT `lambda h, i=i`: a two-parameter lambda
+        # makes pyspark pass the ELEMENT INDEX as the second argument,
+        # silently rebinding i and collapsing every family to the same hash
         return lambda h: F.xxhash64(h, F.lit(i))
 
     def body(th: Column) -> Column:
@@ -751,14 +725,14 @@ def ppjoin_pairs(
             word_shingle_hashes(text_col, n).alias("sh"),
         )
         .filter(F.size("sh") > 0)
-        # Tokenize+hash ONCE: four branches read the shingle arrays
-        # (frequency build, prefix build, and both verification sides) —
-        # unpersisted, the tokenization pass re-ran per branch and was
-        # ~40% of sf1 wall time. cachereg bounds the leak to one
-        # generation per session (see module docstring).
-        .persist()
     )
-    # (registered with cachereg together with the prefix below)
+    # Tokenize+hash ONCE: four branches read the shingle arrays
+    # (frequency build, prefix build, and both verification sides) —
+    # unpersisted, the tokenization pass re-ran per branch and was
+    # ~40% of sf1 wall time. cachereg bounds the leak to one generation
+    # per session.
+    cached = cachereg.generation("dedup.ppjoin_pairs")
+    docs = cached.persist(docs)
 
     post = docs.select("doc", F.size("sh").alias("len"), F.explode("sh").alias("h"))
     freq = post.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
@@ -773,16 +747,14 @@ def ppjoin_pairs(
         - F.ceil(F.lit(t) * F.col("len") - F.lit(1e-9)).cast("int")
         + 1
     )
-    pref = (
+    # Both sides of the candidate self-join read the prefix — without
+    # the persist, the freq join + ranking window ran twice.
+    pref = cached.persist(
         post.join(freq, "h")
         .withColumn("__r", F.row_number().over(w))
         .filter(F.col("__r") <= prefix_len)
         .select("doc", "len", F.col("__r").alias("pos"), "h")
-        # Both sides of the candidate self-join read the prefix — without
-        # the persist, the freq join + ranking window ran twice.
-        .persist()
     )
-    cachereg.register("dedup.ppjoin_pairs", docs, pref)
     # Candidate generation is a plain SELF EQUI-JOIN of the prefix
     # postings on the token — whole-stage-codegen'd, with both PPJoin
     # filters applied in the join's streamed filter. (An earlier form

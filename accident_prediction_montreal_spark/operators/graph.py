@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from accident_prediction_montreal_spark import cachereg
+
 
 def normalize_edges(
     edges: DataFrame, src: str = "src", dst: str = "dst", weight: str = "w"
@@ -106,8 +108,6 @@ def triangle_stats(
     distinct + degree-join subtree — measured 4× on the sf0.1
     co-occurrence graph.
     """
-    from accident_prediction_montreal_spark import cachereg
-
     # NOTE (r14): persisting the input edge list here was MEASURED a
     # non-win (interleaved A/B at sf0.1: 3.4 s without vs 4.3 s with) —
     # AQE's ReusedExchange already dedups the upstream distinct subtree
@@ -126,12 +126,13 @@ def triangle_stats(
     u_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col(u) < F.col(v))
     )
-    oriented = e.select(
-        F.when(u_first, F.col(u)).otherwise(F.col(v)).alias("a"),
-        F.when(u_first, F.col(v)).otherwise(F.col(u)).alias("b"),
-        F.when(u_first, F.col("dv")).otherwise(F.col("du")).alias("db"),
-    ).persist()
-    cachereg.register("operators.graph.triangles", oriented)
+    oriented = cachereg.generation("operators.graph.triangles").persist(
+        e.select(
+            F.when(u_first, F.col(u)).otherwise(F.col(v)).alias("a"),
+            F.when(u_first, F.col(v)).otherwise(F.col(u)).alias("b"),
+            F.when(u_first, F.col("dv")).otherwise(F.col("du")).alias("db"),
+        )
+    )
 
     # wedges inside each out-neighborhood, pair ordered by (deg, id) so
     # (lo, hi) is exactly how the closing edge is oriented.

@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from accident_prediction_montreal_spark.functions.vectors import dot_product
 
 
-def _sq_dist(vec: Column, cvec: Column, dvv: Column, dcc: Column) -> Column:
+def sq_dist(vec: Column, cvec: Column, dvv: Column, dcc: Column) -> Column:
     """‖v‖² − 2·v·c + ‖c‖², with BOTH norms precomputed: ‖v‖² once per
     row, ‖c‖² once per centroid (inside pack_centroids — recomputing it
     per (row, centroid) doubled the interpreted fold work; the VALUE is
@@ -90,7 +90,7 @@ def assign_cells(
         F.transform(
             F.col("__cents"),
             lambda c: F.struct(
-                _sq_dist(
+                sq_dist(
                     F.col(vec_col), c["cvec"], F.col("__dvv"), c["dcc"]
                 ).alias("d2"),
                 c["cell"].alias("cell"),

@@ -38,8 +38,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from accident_prediction_montreal_spark import cachereg
 from accident_prediction_montreal_spark.functions.vectors import dot_product
-from accident_prediction_montreal_spark.operators.kmeans import pack_centroids
+from accident_prediction_montreal_spark.operators.kmeans import pack_centroids, sq_dist
 
 
 def _pack_books(codebooks: list[DataFrame]) -> DataFrame:
@@ -58,6 +59,11 @@ def _pack_books(codebooks: list[DataFrame]) -> DataFrame:
     for mi, book in enumerate(codebooks):
         t = book.select(F.lit(mi).alias("mi"), "cell", "cvec")
         tagged = t if tagged is None else tagged.unionByName(t)
+    return _pack_tagged(tagged, len(codebooks))
+
+
+def _pack_tagged(tagged: DataFrame, n_books: int) -> DataFrame:
+    """(mi, cell, cvec) rows → the one packed row of ``_pack_books``."""
     entry = F.struct(
         F.col("cell"),
         F.col("cvec"),
@@ -68,13 +74,22 @@ def _pack_books(codebooks: list[DataFrame]) -> DataFrame:
             F.collect_list(F.when(F.col("mi") == mi, entry)).alias(
                 f"__cents_{mi}"
             )
-            for mi in range(len(codebooks))
+            for mi in range(n_books)
         ]
     )
 
 
 def _book_entries(mi: int):
     return F.col(f"__cents_{mi}")
+
+
+def _nearest(sub, dvv):
+    """Packed-centroid entry → (d2, cell), the (d² ASC, cell ASC)
+    argmin key of kmeans.assign_cells."""
+    return lambda c: F.struct(
+        sq_dist(sub, c["cvec"], dvv, c["dcc"]).alias("d2"),
+        c["cell"].alias("cell"),
+    )
 
 
 def train_pq_codebooks(
@@ -141,8 +156,6 @@ def train_books(
     and the DECIMAL(24,9) component sums are order-independent by
     construction.
     """
-    from accident_prediction_montreal_spark import cachereg
-
     n_books = len(specs)
     vecs = emb.select(id_col, vec_col)
     seeds = vecs.orderBy(F.col(id_col).asc()).limit(k)
@@ -171,21 +184,11 @@ def train_books(
     # one set while its consumers are still lazy.
     spec_key = ",".join(f"{o}:{w}" for o, w in specs)
     site = f"operators.pq.train_books[{spec_key},k={k}]"
-    # Release the site's PREVIOUS generation BEFORE persisting the new
-    # table, not after (r15 find): two train calls with the same
-    # geometry over the same corpus build canonically IDENTICAL plans,
-    # so persist-then-register no-opped the new persist against the old
-    # generation's cache entry and then released that entry — leaving
-    # the new table silently UNCACHED and the whole train replayed once
-    # per consumer (visible as 44 parquet scans in the r14/r15 before-
-    # captures, where sim_pq_adc_topk ran earlier in the session).
-    cachereg.release(site)
     # coalesce(1): the table is <= n_books*k rows by construction
     # (corpus-size independent), but its lineage ends in a 32-partition
     # groupBy and CACHED plans skip AQE coalescing — without this every
     # consumer pays a 32-task read of a 512-row cache.
-    cents_all = cents_all.coalesce(1).persist()
-    cachereg.register(site, cents_all)
+    cents_all = cachereg.generation(site).persist(cents_all.coalesce(1))
     return [
         cents_all.filter(F.col("mi") == mi).select("cell", "cvec")
         for mi in range(n_books)
@@ -202,36 +205,14 @@ def _assign_books(
     argmin against ONE broadcast packed row of all books' centroids.
     Same d² expression shape and (d² ASC, cell ASC) tie-break as
     kmeans.assign_cells, evaluated per book slice."""
-    entry = F.struct(
-        F.col("cell"),
-        F.col("cvec"),
-        dot_product("cvec", "cvec").alias("dcc"),
-    )
-    packed = cents_all.agg(
-        *[
-            F.collect_list(F.when(F.col("mi") == mi, entry)).alias(
-                f"__cents_{mi}"
-            )
-            for mi in range(len(specs))
-        ]
-    )
+    packed = _pack_tagged(cents_all, len(specs))
     df = vecs.crossJoin(F.broadcast(packed))
 
     cols = [F.col(vec_col)]
     for mi, (off, width) in enumerate(specs):
         sub = F.slice(F.col(vec_col), off + 1, width)
         dvv = dot_product(sub, sub)
-        best = F.array_min(
-            F.transform(
-                F.col(f"__cents_{mi}"),
-                lambda c: F.struct(
-                    (dvv - F.lit(2.0) * dot_product(sub, c["cvec"]) + c["dcc"]).alias(
-                        "d2"
-                    ),
-                    c["cell"].alias("cell"),
-                ),
-            )
-        )
+        best = F.array_min(F.transform(_book_entries(mi), _nearest(sub, dvv)))
         cols.append(best["cell"].alias(f"__cell_{mi}"))
     return df.select(*cols)
 
@@ -350,22 +331,11 @@ def pq_encode(
     """
     df = emb.crossJoin(F.broadcast(_pack_books(codebooks)))
 
-    def _argmin(sub, dvv):
-        def body(c):
-            return F.struct(
-                (dvv - F.lit(2.0) * dot_product(sub, c["cvec"]) + c["dcc"]).alias(
-                    "d2"
-                ),
-                c["cell"].alias("cell"),
-            )
-
-        return body
-
     outs = [F.col(id_col)] + [F.col(c) for c in (keep_cols or [])]
     for mi in range(len(codebooks)):
         sub = F.slice(F.col(vec_col), mi * sub_dim + 1, sub_dim)
         dvv = dot_product(sub, sub)
-        best = F.array_min(F.transform(_book_entries(mi), _argmin(sub, dvv)))
+        best = F.array_min(F.transform(_book_entries(mi), _nearest(sub, dvv)))
         outs.append(best["cell"].alias(f"code_{mi}"))
     return df.select(*outs)
 
@@ -389,22 +359,36 @@ def pq_adc_topk(
     the oracle so IEEE addition order is identical. Top-k per query by
     (adc ASC, id ASC) row_number.
     """
-    m = len(codebooks)
+    return _adc_scan(
+        codes, queries, codebooks, sub_dim, k, id_col, query_id_col, query_vec_col
+    )
+
+
+def _adc_scan(
+    rows: DataFrame,
+    queries: DataFrame,
+    codebooks: list[DataFrame],
+    sub_dim: int,
+    k: int,
+    id_col: str,
+    query_id_col: str,
+    query_vec_col: str,
+    on: str | None = None,
+) -> DataFrame:
+    """Per-query LUTs, the ADC sum over ``rows``' codes and the top-k
+    window. ``on`` joins the broadcast LUT rows on that query key (the
+    IVF-PQ candidates carry one); without it every row meets every
+    query."""
     q = queries.crossJoin(F.broadcast(_pack_books(codebooks)))
 
     def _lut_entry(sub, dqq):
-        def body(c):
-            return F.struct(
-                c["cell"].alias("cell"),
-                (dqq - F.lit(2.0) * dot_product(sub, c["cvec"]) + c["dcc"]).alias(
-                    "d"
-                ),
-            )
-
-        return body
+        return lambda c: F.struct(
+            c["cell"].alias("cell"),
+            sq_dist(sub, c["cvec"], dqq, c["dcc"]).alias("d"),
+        )
 
     luts = [F.col(query_id_col)]
-    for mi in range(m):
+    for mi in range(len(codebooks)):
         sub = F.slice(F.col(query_vec_col), mi * sub_dim + 1, sub_dim)
         dqq = dot_product(sub, sub)
         luts.append(
@@ -412,15 +396,16 @@ def pq_adc_topk(
                 F.transform(_book_entries(mi), _lut_entry(sub, dqq))
             ).alias(f"__lut_{mi}")
         )
-    lut_rows = q.select(*luts)
+    lut_rows = F.broadcast(q.select(*luts))
 
-    paired = codes.crossJoin(F.broadcast(lut_rows))
+    if on is None:
+        paired = rows.crossJoin(lut_rows)
+    else:
+        paired = rows.join(lut_rows, on)
     adc = F.element_at(F.col("__lut_0"), F.col("code_0"))
-    for mi in range(1, m):
+    for mi in range(1, len(codebooks)):
         adc = adc + F.element_at(F.col(f"__lut_{mi}"), F.col(f"code_{mi}"))
-    scored = paired.select(
-        query_id_col, id_col, adc.alias("adc_d2")
-    )
+    scored = paired.select(query_id_col, id_col, adc.alias("adc_d2"))
     w = Window.partitionBy(query_id_col).orderBy(
         F.col("adc_d2").asc(), F.col(id_col).asc()
     )
@@ -447,22 +432,10 @@ def coarse_probes(
     cell ASC), the same total order the SQL oracle's ROW_NUMBER uses.
     """
     packed = pack_centroids(coarse_cents)
-
-    def _scored(sub, dvv):
-        def body(c):
-            return F.struct(
-                (dvv - F.lit(2.0) * dot_product(sub, c["cvec"]) + c["dcc"]).alias(
-                    "d2"
-                ),
-                c["cell"].alias("cell"),
-            )
-
-        return body
-
     q = queries.crossJoin(F.broadcast(packed))
     dqq = dot_product(query_vec_col, query_vec_col)
     ranked = F.slice(
-        F.array_sort(F.transform(F.col("__cents"), _scored(F.col(query_vec_col), dqq))),
+        F.array_sort(F.transform(F.col("__cents"), _nearest(F.col(query_vec_col), dqq))),
         1,
         n_probe,
     )
@@ -502,51 +475,14 @@ def ivfpq_topk(
     Approximate when a true neighbor lives in an unprobed cell;
     n_probe = n_cells is exact-ADC (equals pq_adc_topk).
     """
-    m = len(codebooks)
     probes = coarse_probes(
         queries, coarse_cents, n_probe, query_id_col, query_vec_col
     )
-
     # candidate codes: the cell-carrying index ⋈ broadcast probe pairs
     cand = codes.join(F.broadcast(probes), probes["cell"] == codes[cell_col]).drop(
         probes["cell"]
     )
-
-    # per-query LUTs (reuses pq_adc_topk's construction)
-    q = queries.crossJoin(F.broadcast(_pack_books(codebooks)))
-
-    def _lut_entry(sub, dqq):
-        def body(c):
-            return F.struct(
-                c["cell"].alias("cell"),
-                (dqq - F.lit(2.0) * dot_product(sub, c["cvec"]) + c["dcc"]).alias(
-                    "d"
-                ),
-            )
-
-        return body
-
-    luts = [F.col(query_id_col)]
-    for mi in range(m):
-        sub = F.slice(F.col(query_vec_col), mi * sub_dim + 1, sub_dim)
-        dqq = dot_product(sub, sub)
-        luts.append(
-            F.map_from_entries(
-                F.transform(_book_entries(mi), _lut_entry(sub, dqq))
-            ).alias(f"__lut_{mi}")
-        )
-    lut_rows = q.select(*luts)
-
-    paired = cand.join(F.broadcast(lut_rows), query_id_col)
-    adc = F.element_at(F.col("__lut_0"), F.col("code_0"))
-    for mi in range(1, m):
-        adc = adc + F.element_at(F.col(f"__lut_{mi}"), F.col(f"code_{mi}"))
-    scored = paired.select(query_id_col, id_col, adc.alias("adc_d2"))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("adc_d2").asc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "adc_d2", "rank")
+    return _adc_scan(
+        cand, queries, codebooks, sub_dim, k, id_col, query_id_col,
+        query_vec_col, on=query_id_col,
     )

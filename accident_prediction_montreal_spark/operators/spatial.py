@@ -19,6 +19,7 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from accident_prediction_montreal_spark import cachereg
 from accident_prediction_montreal_spark.functions.geo import (
     haversine_meters,
     haversine_meters_coslat,
@@ -26,6 +27,10 @@ from accident_prediction_montreal_spark.functions.geo import (
 
 
 _EARTH_RADIUS_M = 6371000.0
+# knn_join_grid_exact's cachereg sites: its checkpointed results, and
+# the per-round candidate caches it frees once the result is cut.
+_KNN_SITE = "operators.spatial.knn_join_grid_exact"
+_KNN_ROUNDS_SITE = "operators.spatial.knn_join_grid_exact.rounds"
 
 
 def _dist_and_rank(
@@ -454,13 +459,13 @@ def knn_join_grid_exact(
                 right_coords, max_broadcast_rows=None,
             )
             # Same materialize-and-cut contract as the grid path below.
-            return out.localCheckpoint(eager=True)
+            return cachereg.checkpoint(_KNN_SITE, out, eager=True)
 
     remaining = left
     residue: DataFrame | None = None
     residue_bounds: DataFrame | None = None
     resolved_chunks: list[DataFrame] = []
-    persisted: list[DataFrame] = []
+    rounds = cachereg.generation(_KNN_ROUNDS_SITE)
     out_cols = None
     for _ in range(max_rounds):
         # LEFT OUTER grid join: a left point whose 3x3 block is EMPTY
@@ -513,13 +518,11 @@ def knn_join_grid_exact(
             & (dk <= F.lit(cell_deg * _M_PER_DEG * margin) * worst_cos),
             F.lit(False),
         )
-        flagged = (
+        flagged = rounds.persist(
             cand.withColumn("_nk", nk)
             .withColumn("_dk", dk)
             .withColumn("_proven", proven)
-            .persist()
         )
-        persisted.append(flagged)
         # Null-candidate rows are never proven, so the resolved output
         # stays free of them.
         resolved_chunks.append(
@@ -677,9 +680,8 @@ def knn_join_grid_exact(
     # the per-round candidate caches can be released NOW — without this,
     # each call leaks up to max_rounds persisted candidate joins for the
     # rest of the session.
-    out = out.localCheckpoint(eager=True)
-    for f in persisted:
-        f.unpersist(blocking=False)
+    out = cachereg.checkpoint(_KNN_SITE, out, eager=True)
+    cachereg.release(_KNN_ROUNDS_SITE)
     return out
 
 

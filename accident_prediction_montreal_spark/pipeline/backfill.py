@@ -65,7 +65,7 @@ def backfill_month_shards(
     writes overlap and a failed shard no longer stops later shards from
     being submitted (a caller needing strict month-by-month sequencing
     gets it via ``session_factory``, which stays sequential by
-    contract, or ``SPARK_GRAFT_BACKFILL_PAR=1``). Schemas may EVOLVE
+    contract). Schemas may EVOLVE
     across shards — a long-running backfill adds columns mid-run — when
     ``merge_schema`` is set the combined scan surfaces old shards'
     missing columns as NULL (S2/x9 semantics); without it all shards
@@ -106,20 +106,9 @@ def backfill_month_shards(
         # the session's core count so the pool never over-subscribes a
         # small cluster (guide §2.6: 'enough to fill the tail, not so
         # many that they fight for executors'). Scale-adaptive, not a
-        # local[32] constant: derives from the same env the session
-        # master uses when set, else from the session's own parallelism,
-        # overridable per deployment.
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
-        n_cores = (
-            int(cpus) if cpus.isdigit() else spark.sparkContext.defaultParallelism
-        )
-        default_par = max(2, n_cores // 2)
-        par_env = os.environ.get("SPARK_GRAFT_BACKFILL_PAR", "")
-        # Defensive parse, matching the SPARK_GRAFT_CPUS handling: a
-        # non-numeric value falls back to the default instead of
-        # crashing the whole backfill mid-run.
-        par = int(par_env) if par_env.isdigit() else default_par
-        if len(pending) <= 1 or par <= 1:
+        # local[32] constant: half the session's own parallelism.
+        par = max(2, spark.sparkContext.defaultParallelism // 2)
+        if len(pending) <= 1:
             for mk, shard_dir in pending:
                 compute_shard(spark, mk).write.mode("overwrite").parquet(shard_dir)
         else:

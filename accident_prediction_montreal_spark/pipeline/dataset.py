@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from accident_prediction_montreal_spark import cachereg
 from accident_prediction_montreal_spark.functions.cyclic import cyclic_encode
 from accident_prediction_montreal_spark.functions.solar import solar_elevation
 from accident_prediction_montreal_spark.operators.encoding import target_encode
@@ -109,7 +110,7 @@ def positive_samples(
     roads = road_features(road_points)
     match = match_accidents_with_roads(accidents, road_points)
     if truncate_lineage:
-        match = match.localCheckpoint()
+        match = cachereg.checkpoint("pipeline.dataset", match, eager=True)
     base = (
         accidents.join(match, "accident_id")
         .join(roads.drop("loc_lat", "loc_long"), "street_id")
@@ -118,7 +119,7 @@ def positive_samples(
     )
     wx = weather_for_samples(base, smooth_risky_weather(weather), station_coords)
     if truncate_lineage:
-        wx = wx.localCheckpoint()
+        wx = cachereg.checkpoint("pipeline.dataset", wx, eager=True)
     return _add_date_features(base.join(wx, "sample_id"))
 
 

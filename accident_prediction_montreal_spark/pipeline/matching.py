@@ -104,19 +104,26 @@ def match_accidents_with_roads(
     acc = accidents.select("accident_id", "loc_lat", "loc_long")
     points = road_points.select("street_id", "coord_lat", "coord_long")
 
-    caches: list[DataFrame] = []
+    # NOT unpersisted at return: the result is a LAZY plan over these
+    # caches, and an eager unpersist at return time (as r1-r5 did) drops
+    # them before any action runs, so every downstream branch (accept +
+    # refine + disambiguation, and the caller's fan-out into
+    # counts/encoders/splits) silently re-ran the kNN matching —
+    # measured 2x on apm_dataset_pipeline at sf0.1. The NEXT invocation
+    # (e.g. the month-shard backfill loop) releases this generation, and
+    # callers that materialize eagerly can release the site themselves.
+    cached = cachereg.generation("pipeline.matching")
     size_known = False
     if exhaustive is None:
-        road_centers = road_centers.persist()
-        caches.append(road_centers)
+        road_centers = cached.persist(road_centers)
         exhaustive = road_centers.count() <= small_side_threshold
         size_known = exhaustive
 
-    top_k = _top_k_centers(
-        acc, road_centers, k, exhaustive, cell_deg, size_known=size_known
-    ).persist()
+    top_k = cached.persist(
+        _top_k_centers(acc, road_centers, k, exhaustive, cell_deg, size_known=size_known)
+    )
 
-    first_match = _closest_point(top_k.join(points, "street_id")).persist()
+    first_match = cached.persist(_closest_point(top_k.join(points, "street_id")))
     accepted = first_match.filter(F.col("point_dist") < max_distance_m).select(
         "accident_id", "street_id"
     )
@@ -162,14 +169,4 @@ def match_accidents_with_roads(
         .agg(F.min(F.struct("center_dist", "street_id")).alias("__best"))
         .select("accident_id", F.col("__best.street_id").alias("street_id"))
     )
-    # NOTE: deliberately NOT unpersisting top_k/first_match here. The
-    # return value is a LAZY plan over both; an eager unpersist at return
-    # time (as r1-r5 did) drops the caches before any action runs, so
-    # every downstream branch (accept + refine + disambiguation, and the
-    # caller's fan-out into counts/encoders/splits) silently re-ran the
-    # kNN matching — measured 2x on apm_dataset_pipeline at sf0.1.
-    # Lifecycle goes through cachereg: the NEXT invocation (e.g. the
-    # month-shard backfill loop) releases this generation, and callers
-    # that materialize eagerly can release the site themselves.
-    cachereg.register("pipeline.matching", top_k, first_match, *caches)
     return out

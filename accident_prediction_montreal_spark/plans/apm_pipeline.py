@@ -547,20 +547,21 @@ def apm_dataset_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~15 downstream DataFrame analyses over shallow RDD leaves. On a
     # real cluster use a reliable checkpoint dir for executor-loss
     # recovery.
+    site = "plans.apm_dataset_pipeline"
     roads = road_features(road_points)
-    match = match_accidents_with_roads(accidents, road_points).localCheckpoint(
-        eager=False
+    match = cachereg.checkpoint(
+        site, match_accidents_with_roads(accidents, road_points), eager=False
     )
     # Both bases feed TWO consumers (the fused weather union and their
     # own sample side) — persisted, or each recomputes per consumer
     # (the neg crossJoin+filter twice was the regression seen when the
     # fusion first landed).
-    pos_base = (
+    cached = cachereg.generation(site)
+    pos_base = cached.persist(
         accidents.join(match, "accident_id")
         .join(roads.drop("loc_lat", "loc_long"), "street_id")
         # keyed on accident_id: two accidents may share (date, hour, street)
         .withColumn("sample_id", _sample_id(F.lit("pos"), "accident_id"))
-        .persist()
     )
 
     # Negative date x road grid with the DETERMINISTIC keep decision
@@ -570,26 +571,25 @@ def apm_dataset_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     neg_key = (
         F.col("street_id") * 100000 + F.dayofyear("date").cast("long") * 24 + F.col("hour")
     )
-    neg_base = (
+    neg_base = cached.persist(
         roads.crossJoin(grid)
         .filter(lcg_uniform(neg_key, salt=_NEG_SALT) < _NEG_FRAC)
         .withColumn("sample_id", _sample_id(F.lit("neg"), "date", "hour", "street_id"))
-        .persist()
     )
 
     keys = ["sample_id", "date", "hour", "loc_lat", "loc_long"]
     all_points = pos_base.select(keys).unionByName(neg_base.select(keys))
-    wx = weather_for_samples(
-        all_points, smooth_risky_weather(weather), stations
-    ).localCheckpoint(eager=False)
+    wx = cachereg.checkpoint(
+        site, weather_for_samples(all_points, smooth_risky_weather(weather), stations),
+        eager=False,
+    )
 
-    pos = _add_date_features(pos_base.join(wx, "sample_id")).localCheckpoint(
-        eager=False
+    pos = cachereg.checkpoint(
+        site, _add_date_features(pos_base.join(wx, "sample_id")), eager=False
     )
-    neg = _add_date_features(neg_base.join(wx, "sample_id")).localCheckpoint(
-        eager=False
+    neg = cachereg.checkpoint(
+        site, _add_date_features(neg_base.join(wx, "sample_id")), eager=False
     )
-    cachereg.register("plans.apm_dataset_pipeline", pos_base, neg_base)
 
     train, test = build_dataset(spark, pos, neg, split_date=_SPLIT_DATE)
     both = train.withColumn("split", F.lit("train")).unionByName(

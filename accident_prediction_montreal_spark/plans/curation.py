@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from accident_prediction_montreal_spark import cachereg
 from accident_prediction_montreal_spark.functions.url import (
     PSL_SNAPSHOT,
     registrable_domain_join,
@@ -473,7 +474,9 @@ def st_source_quota_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    got = drain(admitted, "append").persist()
+    got = cachereg.generation("plans.st_source_quota_stream").persist(
+        drain(admitted, "append")
+    )
 
     per_source = got.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_admitted")
@@ -684,7 +687,6 @@ def _delta_facts(
     "expressed here as the anti-join.",
 )
 def llm_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from accident_prediction_montreal_spark import cachereg
     from accident_prediction_montreal_spark.operators.dedup import (
         banded_signatures,
     )
@@ -694,8 +696,9 @@ def llm_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = snapshot_b(docs)
     # diff feeds four consumers (status counts, stale set, fresh set);
     # it is tiny ((id, status) rows) — persist, lifecycle via cachereg.
-    diff = corpus_diff(docs, b).persist()
-    cachereg.register("plans.llm_index_maintenance", diff)
+    diff = cachereg.generation("plans.llm_index_maintenance").persist(
+        corpus_diff(docs, b)
+    )
 
     bands = ["doc", "band_id", "band_hash"]
     # The fact branches re-reference idx_a/maintained/rebuild; the
@@ -930,7 +933,6 @@ def _embedding_refresh_oracle() -> str:
     "diff co-locate shuffle-free.",
 )
 def llm_embedding_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from accident_prediction_montreal_spark import cachereg
     from accident_prediction_montreal_spark.operators.text import corpus_diff
 
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
@@ -943,8 +945,9 @@ def llm_embedding_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # llm_index_maintenance note).
     emb_a = _encode_stub(docs)
 
-    diff = corpus_diff(docs, b).persist()
-    cachereg.register("plans.llm_embedding_refresh", diff)
+    diff = cachereg.generation("plans.llm_embedding_refresh").persist(
+        corpus_diff(docs, b)
+    )
     carried = emb_a.join(
         diff.filter(F.col("status") == "unchanged").select("doc_id"),
         "doc_id",

@@ -261,19 +261,20 @@ def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") + _MINHASH_PLANT_OFFSET).alias("doc_id"), "text"
     )
     corpus = docs.unionByName(planted)
-    pairs = minhash_dedup_pairs(
-        corpus,
-        "doc_id",
-        "text",
-        num_hashes=32,
-        bands=8,
-        shingle_n=3,
-        # persist below: 3 contract subtrees read `pairs`; without it
-        # the signature computation re-runs per subtree (X3 pattern).
-        min_est_jaccard=0.5,
-        max_bucket_size=1_000_000,
-    ).persist()
-    cachereg.register("plans.dedup_minhash_pairs", pairs)
+    # persisted: 3 contract subtrees read `pairs`; without it the
+    # signature computation re-runs per subtree (X3 pattern).
+    pairs = cachereg.generation("plans.dedup_minhash_pairs").persist(
+        minhash_dedup_pairs(
+            corpus,
+            "doc_id",
+            "text",
+            num_hashes=32,
+            bands=8,
+            shingle_n=3,
+            min_est_jaccard=0.5,
+            max_bucket_size=1_000_000,
+        )
+    )
 
     expected = plantable.select(
         F.col("doc_id").alias("id_a"),
@@ -785,17 +786,15 @@ def _incremental_batch(docs: DataFrame):
     "threshold.",
 )
 def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from accident_prediction_montreal_spark import cachereg
     from accident_prediction_montreal_spark.operators.dedup import (
         minhash_incremental_pairs,
     )
 
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
     dup_src, novel, new_batch = _incremental_batch(docs)
-    pairs = minhash_incremental_pairs(
-        new_batch, docs, min_est_jaccard=0.5
-    ).persist()
-    cachereg.register("plans.dedup_incremental", pairs)
+    pairs = cachereg.generation("plans.dedup_incremental").persist(
+        minhash_incremental_pairs(new_batch, docs, min_est_jaccard=0.5)
+    )
 
     expected = dup_src.select(
         (F.col("doc_id") + 200_000).alias("new_id"),
@@ -867,7 +866,6 @@ def st_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import types as T
 
-    from accident_prediction_montreal_spark import cachereg
     from accident_prediction_montreal_spark.operators.dedup import (
         band_explode,
         banded_signatures,
@@ -902,15 +900,13 @@ def st_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scratch). Projections preserve the cached HashPartitioning, so
     # the stream probe's join requirement is still satisfied from
     # cache and only the stream side shuffles per micro-batch.
-    bands_full = (
-        banded_signatures(docs)
-        .repartition(STATE_PARTITIONS, "band_id", "band_hash")
-        .persist()
+    cached = cachereg.generation("plans.st_incremental_dedup")
+    bands_full = cached.persist(
+        banded_signatures(docs).repartition(STATE_PARTITIONS, "band_id", "band_hash")
     )
     idx = bands_full.select(
         F.col("doc").alias("corpus_id"), "band_id", "band_hash"
     )
-    cachereg.register("plans.st_incremental_dedup", bands_full)
     # Materialize the index BEFORE the stream starts: it is the at-rest
     # side by contract, and building it lazily inside the first
     # micro-batch would run the signature aggregation under the sink
@@ -950,10 +946,8 @@ def st_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     probed = stream_bands.join(idx, ["band_id", "band_hash"]).select(
         "new_id", "corpus_id"
     )
-    streamed = (
-        drain(probed, "append")
-        .dropDuplicates(["new_id", "corpus_id"])
-        .persist()
+    streamed = cached.persist(
+        drain(probed, "append").dropDuplicates(["new_id", "corpus_id"])
     )
 
     expected = dup_src.select(

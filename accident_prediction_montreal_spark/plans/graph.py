@@ -236,12 +236,10 @@ def g2_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def g3_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _capped_graph(spark, sf_dir)
-    nbr = (
+    nbr = cachereg.generation("plans.graph.labelprop").persist(
         edges.select(F.col("u").alias("a"), F.col("v").alias("b"))
         .unionByName(edges.select(F.col("v").alias("a"), F.col("u").alias("b")))
-        .persist()
     )
-    cachereg.register("plans.graph.labelprop", nbr)
     labels = (
         nbr.select(F.col("a").alias("node"))
         .distinct()
@@ -335,10 +333,10 @@ def _bfs_round(sql_prev: str) -> str:
 )
 def g4_bfs_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _capped_graph(spark, sf_dir)
-    nbr = (
+    cached = cachereg.generation("plans.graph.bfs")
+    nbr = cached.persist(
         edges.select(F.col("u").alias("a"), F.col("v").alias("b"))
         .unionByName(edges.select(F.col("v").alias("a"), F.col("u").alias("b")))
-        .persist()
     )
     # nodes feeds the seed aggregate AND the initial dist frame, and the
     # initial dist frame is itself referenced twice by round 0 (the
@@ -346,41 +344,34 @@ def g4_bfs_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ran three times before the first relaxation (r14 measurement:
     # ~1.4 s per replay at sf0.1, pure fixed cost). Node-sized frames,
     # tiny at any scale (same argument as the per-round persists below).
-    nodes = nbr.select(F.col("a").alias("node")).distinct().persist()
+    nodes = cached.persist(nbr.select(F.col("a").alias("node")).distinct())
     seed1 = nodes.agg(F.min("node").alias("__seed"))
-    dist = (
-        nodes.crossJoin(F.broadcast(seed1))
-        .select(
+    dist = cached.persist(
+        nodes.crossJoin(F.broadcast(seed1)).select(
             "node",
             F.when(F.col("node") == F.col("__seed"), 0)
             .otherwise(_BFS_INF)
             .alias("dist"),
         )
-        .persist()
     )
     # Each round references `dist` TWICE (relaxation join + left join):
     # left lazy, the per-round lineage doubles and round 1 re-executes
     # 2^rounds times (measured 5.6 s -> 1.4 s at sf1 with the per-round
     # persist). The frames are node-sized, tiny at any data scale.
-    frames = [nbr, nodes, dist]
     for _ in range(_BFS_ROUNDS):
         cand = (
             nbr.join(dist, nbr["b"] == dist["node"])
             .groupBy("a")
             .agg((F.min("dist") + 1).alias("__nd"))
         )
-        dist = (
-            dist.join(cand, dist["node"] == cand["a"], "left")
-            .select(
+        dist = cached.persist(
+            dist.join(cand, dist["node"] == cand["a"], "left").select(
                 "node",
                 F.least(
                     F.col("dist"), F.coalesce(F.col("__nd"), F.col("dist"))
                 ).alias("dist"),
             )
-            .persist()
         )
-        frames.append(dist)
-    cachereg.register("plans.graph.bfs", *frames)
     return (
         dist.filter(F.col("dist") < _BFS_INF)
         .select("node", F.col("dist").cast("long").alias("dist"))

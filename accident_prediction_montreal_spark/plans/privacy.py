@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from accident_prediction_montreal_spark import cachereg
 from accident_prediction_montreal_spark.operators.mixing import (
     lcg_uniform,
     lcg_uniform_sql,
@@ -312,7 +313,6 @@ _PHONE = r"\+?[0-9][0-9()\- ]{6,}[0-9]"
     "full CTE composition.",
 )
 def privacy_release_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from accident_prediction_montreal_spark import cachereg
     from accident_prediction_montreal_spark.operators.text import (
         EMAIL_PATTERN,
         PHONE_PATTERN,
@@ -365,7 +365,7 @@ def privacy_release_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     widths = F.array(*[F.lit(w) for w in _WIDTHS])
-    grp = (
+    grp = cachereg.generation("plans.privacy.capstone").persist(
         ev.select("event_type", "value", F.explode(widths).alias("width"))
         .select(
             "width",
@@ -374,9 +374,7 @@ def privacy_release_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("width", "event_type", "bucket")
         .agg(F.count(F.lit(1)).alias("sz"))
-        .persist()
     )
-    cachereg.register("plans.privacy.capstone", grp)
 
     ladder = grp.groupBy("width").agg(
         F.min("sz").alias("mg"), F.count(F.lit(1)).alias("ng")

@@ -1976,16 +1976,13 @@ def _rfm_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     events is scanned exactly once and the anchor is still a 1-row
     broadcast, never a driver collect."""
     ev = load_table(spark, "events", sf_dir)
-    base = (
-        ev.groupBy("user_id")
-        .agg(
+    base = cachereg.generation("plans.a26_rfm_base").persist(
+        ev.groupBy("user_id").agg(
             F.max("ts").alias("last_ts"),
             F.count(F.lit(1)).cast("long").alias("frequency"),
             F.sum(F.col("value").cast("decimal(38,6)")).cast("double").alias("monetary"),
         )
-        .persist()
     )
-    cachereg.register("plans.a26_rfm_base", base)
     anchor = base.agg(F.max("last_ts").alias("amax"))
     return (
         base.crossJoin(F.broadcast(anchor))
@@ -2047,8 +2044,7 @@ _RFM_USERS_SQL = """
     "counts summing to the user count.",
 )
 def a26_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    u = _rfm_users(spark, sf_dir).persist()
-    cachereg.register("plans.a26_rfm", u)
+    u = cachereg.generation("plans.a26_rfm").persist(_rfm_users(spark, sf_dir))
     qs = F.array(F.lit(0.2), F.lit(0.4), F.lit(0.6), F.lit(0.8))
     # MELT to (metric, v) rows, then ONE percentile_approx aggregation
     # keyed by metric and ONE bin/invariant pipeline over the melted

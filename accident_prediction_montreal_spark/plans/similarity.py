@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from accident_prediction_montreal_spark import cachereg
 from accident_prediction_montreal_spark.functions.vectors import (
     l2_norm,
     valid_vectors,
@@ -1173,7 +1174,14 @@ def sim_ann_bucketed_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     k, floor, n_probe = 10, 0.8, 5
     # degenerate vectors drop BEFORE the normalize: x / ||v|| on a zero
     # vector is an ANSI DIVIDE_BY_ZERO crash (r14 embeddings fuzz)
-    emb = (
+    # The normalized corpus feeds SIX consumers (stride count, the
+    # query sample x3, the exact baseline's corpus side, the KMeans
+    # fit sample, the assignment scan, the n_c count) — unpersisted,
+    # each replayed the scan + per-element normalize (guide §5:
+    # cache what is reused and expensive). The stride count below
+    # is already an action, so materialization costs nothing extra.
+    cached = cachereg.generation("plans.sim_ann_bucketed_recall")
+    emb = cached.persist(
         valid_vectors(
             load_table(spark, "embeddings", sf_dir), positive_norm=False
         )
@@ -1193,13 +1201,6 @@ def sim_ann_bucketed_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "embedding"
             ),
         )
-        # The normalized corpus feeds SIX consumers (stride count, the
-        # query sample x3, the exact baseline's corpus side, the KMeans
-        # fit sample, the assignment scan, the n_c count) — unpersisted,
-        # each replayed the scan + per-element normalize (guide §5:
-        # cache what is reused and expensive). The stride count below
-        # is already an action, so materialization costs nothing extra.
-        .persist()
     )
     # FIXED-SIZE query sample (~50 at any scale): recall estimation
     # needs a constant sample, not a corpus-proportional one — the
@@ -1220,13 +1221,10 @@ def sim_ann_bucketed_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # regime at a fraction of the KMeans cost; the assignment scan is
     # persisted because bucketed / window-form / checksum branches all
     # re-read it (cachereg generation lifecycle, like the operators).
-    from accident_prediction_montreal_spark import cachereg
-
     assigned, cents = build_ivf_index(
         emb, n_cells=8, sample_fraction=0.25, max_iter=5
     )
-    assigned = assigned.persist()
-    cachereg.register("plans.sim_ann_bucketed_recall", assigned, emb)
+    assigned = cached.persist(assigned)
     bucketed = ivf_cosine_topk_bucketed(
         queries, assigned, cents, k=k, n_probe=n_probe
     )
@@ -1284,7 +1282,7 @@ _PQ_NQ = 5  # queries = vec_id < 5
 _PQ_TOPK = 5
 
 # Fold-exact squared L2 between two DOUBLE[] expressions, the exact
-# term order of operators/kmeans._sq_dist: ‖a‖² − 2·a·b + ‖b‖².
+# term order of operators/kmeans.sq_dist: ‖a‖² − 2·a·b + ‖b‖².
 _D2 = (
     "list_dot_product({a}, {a})"
     " - 2.0 * list_dot_product({a}, {b})"

@@ -667,9 +667,9 @@ def x12_backfill_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         backfill_month_shards,
     )
 
-    _, out_dir = fixture_dir("bfevo", sf_dir)
+    out_dir, _ = session_dir("bfevo", sf_dir)
     # The two-phase _SUCCESS choreography below is the test subject;
-    # stale shards from an interrupted earlier run would make phase-1
+    # shards from an earlier call in this session would make phase-1
     # completeness ambiguous, so start clean.
     shutil.rmtree(out_dir, ignore_errors=True)
 
@@ -1017,10 +1017,7 @@ def x21_ann_pruned_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Two consumers (the layout write and the in-memory probe twin) —
     # persisted so the assignment scan+argmax runs once; the write
     # below is the materializing action (guide §5).
-    from accident_prediction_montreal_spark import cachereg
-
-    assigned = assigned.persist()
-    cachereg.register("plans.x21_ann_pruned_layout", assigned)
+    assigned = cachereg.generation("plans.x21_ann_pruned_layout").persist(assigned)
     out_dir, _ = session_dir("ivfpart", sf_dir)
     (
         assigned.select("vec_id", "embedding", "cell_id")

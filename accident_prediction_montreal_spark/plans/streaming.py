@@ -587,16 +587,12 @@ def st_pipeline_capstone(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lazy per batch, and an unpersisted dim re-ran the full events
     # scan + distinct exchange inside EVERY micro-batch (2x here, every
     # trigger in production) just to rebuild the same broadcast table.
-    from accident_prediction_montreal_spark import cachereg
-
-    dim = (
+    dim = cachereg.generation("plans.st_pipeline_capstone").persist(
         load_table(spark, "events", sf_dir)
         .select("user_id")
         .distinct()
         .withColumn("tier", (F.col("user_id") % 5).cast("int"))
-        .persist()
     )
-    cachereg.register("plans.st_pipeline_capstone", dim)
     dim.count()
 
     base, _ = session_dir("stcap", sf_dir)

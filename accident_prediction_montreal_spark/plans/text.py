@@ -376,10 +376,11 @@ def text_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_quality_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from accident_prediction_montreal_spark.operators.text import token_count
 
-    docs = load_table(spark, "documents", sf_dir).select(
-        "doc_id", token_count(F.col("text")).alias("n_tokens")
-    ).persist()
-    cachereg.register("plans.text_quality_deciles", docs)
+    docs = cachereg.generation("plans.text_quality_deciles").persist(
+        load_table(spark, "documents", sf_dir).select(
+            "doc_id", token_count(F.col("text")).alias("n_tokens")
+        )
+    )
     qs = F.array(*[F.lit(i / 10.0) for i in range(1, 10)])
     edges = docs.agg(F.percentile_approx("n_tokens", qs, 10000).alias("__e"))
     v = F.col("n_tokens").cast("double")
@@ -791,7 +792,7 @@ def text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     def term_eq(term: str):
         # closure per term — NOT `lambda x, t=t`: a two-parameter lambda
         # makes pyspark pass the ELEMENT INDEX as the second argument,
-        # silently rebinding t (see dedup.minhash_signature)
+        # silently rebinding t (see dedup.minhash_signature_hashed)
         return lambda x: x == F.lit(term)
 
     # dl + per-term tfs as ONE struct behind inline(): four separate
@@ -813,8 +814,9 @@ def text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted (cachereg) so the tokenizer map stage runs once total —
     # at 100 TB this is the "materialize the term-frequency table"
     # step every two-phase ranking pipeline has.
-    tf = docs.select("doc_id", F.inline(F.array(_bind_once(toks, packed)))).persist()
-    cachereg.register("plans.text.bm25", tf)
+    tf = cachereg.generation("plans.text.bm25").persist(
+        docs.select("doc_id", F.inline(F.array(_bind_once(toks, packed))))
+    )
     stats = tf.agg(
         F.count(F.lit(1)).cast("double").alias("n_docs"),
         F.avg("dl").alias("avgdl"),

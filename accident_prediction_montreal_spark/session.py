@@ -18,6 +18,12 @@ from contextlib import contextmanager
 from pyspark.sql import SparkSession
 
 
+def local_cpus() -> str:
+    """The ``local[N]`` core count: ``SPARK_GRAFT_CPUS`` when set, else
+    the cores this process may run on."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
 def get_session(
     app_name: str = "accident_prediction_montreal_spark",
     master: str | None = None,
@@ -31,10 +37,10 @@ def get_session(
     coalesces small partitions and splits skewed ones, so the static
     ``spark.sql.shuffle.partitions`` is only an upper bound.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cpus()
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = int(cpus) if cpus.isdigit() else len(os.sched_getaffinity(0))
 
     builder = (
         SparkSession.builder.appName(app_name)

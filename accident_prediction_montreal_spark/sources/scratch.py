@@ -15,13 +15,18 @@ in one of two kinds:
 * ``fixture_dir`` — one directory per events file, keyed by its real
   path, size and mtime: a cache of derived inputs (stream fixtures,
   backfill shards) shared by every session and kept across processes.
-  Regenerated testdata gets a new key.
+  Regenerated testdata gets a new key. Each fixture records its source
+  identity in a ``_SOURCE`` file (Spark's file sources skip ``_``
+  names); handing out a key removes the siblings of the same kind whose
+  recorded source is gone or changed, and never a sibling without a
+  record.
 """
 
 from __future__ import annotations
 
 import atexit
 import hashlib
+import json
 import os
 import shutil
 import tempfile
@@ -48,12 +53,44 @@ def session_dir(prefix: str, sf_dir: str) -> tuple[str, str]:
     return path, key
 
 
+def _identity(src: str) -> dict:
+    st = os.stat(src)
+    return {"path": src, "size": st.st_size, "mtime_ns": st.st_mtime_ns}
+
+
 def fixture_dir(kind: str, sf_dir: str) -> tuple[str, str]:
     """(events source file, fixture dir keyed by its path, size and mtime)."""
     src = os.path.realpath(os.path.join(sf_dir, "events.parquet"))
-    st = os.stat(src)
-    tag = hashlib.md5(f"{src}:{st.st_size}:{st.st_mtime_ns}".encode()).hexdigest()
-    return src, _root(kind, tag[:12])
+    ident = _identity(src)
+    tag = hashlib.md5(f"{src}:{ident['size']}:{ident['mtime_ns']}".encode()).hexdigest()
+    path = _root(kind, tag[:12])
+    os.makedirs(path, exist_ok=True)
+    record = os.path.join(path, "_SOURCE")
+    if not os.path.exists(record):
+        tmp = f"{record}.{os.getpid()}"
+        with open(tmp, "w") as f:
+            json.dump(ident, f)
+        os.replace(tmp, record)
+    _remove_stale_fixtures(os.path.dirname(path))
+    return src, path
+
+
+def _remove_stale_fixtures(kind_dir: str) -> None:
+    """Remove each fixture under ``kind_dir`` whose recorded source is
+    gone or no longer has the recorded size and mtime."""
+    for name in os.listdir(kind_dir):
+        fix = os.path.join(kind_dir, name)
+        try:
+            with open(os.path.join(fix, "_SOURCE")) as f:
+                rec = json.load(f)
+        except (OSError, ValueError):
+            continue  # no record: not ours to judge
+        try:
+            stale = _identity(rec["path"]) != rec
+        except FileNotFoundError:
+            stale = True
+        if stale:
+            shutil.rmtree(fix, ignore_errors=True)
 
 
 @atexit.register

@@ -30,7 +30,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 from pyspark.sql import SparkSession  # noqa: E402
 
 from accident_prediction_montreal_spark.plans import REGISTRY  # noqa: E402
-from accident_prediction_montreal_spark.session import get_session  # noqa: E402
+from accident_prediction_montreal_spark.session import get_session, local_cpus  # noqa: E402
 from accident_prediction_montreal_spark.sources.registry import TABLES  # noqa: E402
 
 
@@ -39,10 +39,9 @@ def vanilla_session() -> SparkSession:
 
     Only master/memory/UI are set (environment plumbing, not semantics).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     return (
         SparkSession.builder.appName("oracle-check-vanilla")
-        .master(f"local[{cpus}]")
+        .master(f"local[{local_cpus()}]")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .getOrCreate()

@@ -216,9 +216,10 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     from accident_prediction_montreal_spark.plans import REGISTRY
+    from accident_prediction_montreal_spark.session import local_cpus
 
     spark = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder.master(f"local[{local_cpus()}]")
         .appName("fuzz-triage")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.ui.enabled", "false")

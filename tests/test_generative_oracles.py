@@ -290,7 +290,7 @@ def _materialize_events(spark, tmpdir: str, rows) -> str:
 # outing: an all-NULL-value frame makes collect_list return an empty
 # array, and the even-length median branch then evaluated
 # element_at(arr, 0) — an ANSI runtime error (INVALID_INDEX_OF_ZERO)
-# where DuckDB's median returns NULL (fixed in wave6.py the same
+# where DuckDB's median returns NULL (fixed in plans/timeseries.py the same
 # round). A one-off triage additionally held a34_funnel_timing and
 # a16_running_distinct green over the same seeds + 10 deterministic
 # draws (kept out of the per-run set for suite wall time).

@@ -16,7 +16,7 @@ llm_dataset_card driver red in rounds 9 and 10 while the local
 ``fetchall()``-based harness (which yields Python ints for HUGEINT)
 stayed green. This test would have caught it: reverting the
 ``CAST(... AS BIGINT)`` wrappers in llm_dataset_card's ``__all__``
-UNION branch (plans/wave10.py) makes it fail with
+UNION branch (plans/text.py) makes it fail with
 ``llm_dataset_card: chars_sum:HUGEINT``.
 
 Contract reference: plans/registry.py module docstring ("oracle result

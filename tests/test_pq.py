@@ -1,7 +1,7 @@
 """Product-quantization operator tests (operators/pq.py, r14).
 
 The value-level correctness of sim_pq_adc_topk is owned by the DuckDB
-oracle (plans/wave14.py); these tests pin the operator PROPERTIES the
+oracle (plans/similarity.py); these tests pin the operator PROPERTIES the
 oracle can't see: the seed-identity reconstruction law, the degenerate-
 vector contract, partitioning determinism, and the scale shape of the
 encode/scan plans.

@@ -56,3 +56,33 @@ def test_session_dirs_removed_at_exit(spark, tmp_path):
     left = sorted(p.name for p in (tmp / "spark_graft_csvsink").iterdir())
     assert left == ["othersession"]
     assert (other / "part-0.csv").read_text() == "written by another session\n"
+
+
+def test_fixture_dir_removes_stale_siblings(tmp_path, monkeypatch):
+    import tempfile
+
+    from accident_prediction_montreal_spark.sources.scratch import fixture_dir
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    sf_a, sf_b = tmp_path / "a", tmp_path / "b"
+    for sf in (sf_a, sf_b):
+        sf.mkdir()
+        (sf / "events.parquet").write_bytes(b"v1")
+    _, old_a = fixture_dir("2batch", str(sf_a))
+    _, kept_b = fixture_dir("2batch", str(sf_b))
+    for fix in (old_a, kept_b):  # what a fixture writer leaves
+        os.makedirs(fix, exist_ok=True)
+        pathlib.Path(fix, "a_early.parquet").write_bytes(b"rows")
+    unrecorded = tmp_path / "tmp" / "spark_graft_2batch" / "norecord"
+    unrecorded.mkdir(parents=True)
+
+    src = sf_a / "events.parquet"
+    src.write_bytes(b"v2, regenerated")
+    st = src.stat()
+    os.utime(src, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    _, new_a = fixture_dir("2batch", str(sf_a))
+
+    assert new_a != old_a
+    assert not os.path.exists(old_a)
+    assert os.path.isdir(new_a) and os.path.isdir(kept_b)
+    assert unrecorded.is_dir()
