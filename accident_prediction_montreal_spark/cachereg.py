@@ -22,7 +22,9 @@ SITE, and the contract is:
   makes a lazy consumer fail ("Checkpoint block … not found"). So a
   checkpoint-backed result stays valid until the caller releases it.
 * ``register(site, *handles)`` swaps generations for handles that are
-  not DataFrames (a ``Broadcast``): anything with ``unpersist()``.
+  not DataFrames: anything with ``unpersist()``. Broadcasts enter the
+  registry this way, through ``operators/ivf.py::broadcast_unit_rows``,
+  the engine's one SparkContext broadcast (one site per caller).
 
 Callers that materialize eagerly can release their sites afterwards;
 bench harnesses call ``release_all()`` between timed repetitions.

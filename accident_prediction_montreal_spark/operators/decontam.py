@@ -31,7 +31,18 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from accident_prediction_montreal_spark.functions.vectors import (
+    ZERO_NORM_SCORE,
+    cosine_rows,
+    top_n,
+)
 from accident_prediction_montreal_spark.operators.dedup import word_shingle_hashes
+from accident_prediction_montreal_spark.operators.ivf import (
+    broadcast_unit_rows,
+    build_ivf_index,
+    cell_best_n,
+    probe_cells,
+)
 
 
 def contamination_pairs(
@@ -155,7 +166,8 @@ def semantic_contamination(
 
     Scale shape: eval sets are small by nature (thousands of benchmark
     rows vs a 100-TB corpus), so the unit-normalized eval MATRIX rides a
-    broadcast into an Arrow-batched ``mapInPandas`` pass: each train
+    broadcast (operators/ivf.py::broadcast_unit_rows, freed through
+    cachereg) into an Arrow-batched ``mapInPandas`` pass: each train
     batch is one numpy matmul against every eval vector (the SemDeDup
     pair-stage lesson — a crossJoin evaluating the fold-based cosine per
     pair is interpreted per element and measured 50× slower at 50k×1.4k
@@ -171,9 +183,11 @@ def semantic_contamination(
         ``max_eval_rows`` raises (misuse should be loud);
       * ``'bucketed'`` — the giant-eval scale path: an IVF coarse
         quantizer (operators/ivf.py) is fit on the EVAL side, each train
-        vector probes only its ``n_probe`` nearest of ``n_cells`` cells,
-        and the cosine + best-match resolve inside the cell join — no
-        driver collect, both sides stay distributed. Approximate when
+        vector probes only its ``n_probe`` nearest of ``n_cells`` cells
+        (``probe_cells``), and the cosine + best-match resolve inside
+        the cell join (``cell_best_n``, the stages bucketed IVF top-k
+        is built from) — no driver collect, both sides stay
+        distributed. Approximate when
         ``n_probe < n_cells`` (a match in an unprobed cell is missed —
         exact duplicates are always found via the quantizer's self-hit
         guarantee); ``n_probe = n_cells`` is exact but degenerates to
@@ -250,17 +264,13 @@ def semantic_contamination(
                 ]
             ),
         )
-    # Sorted ascending by eval_id: numpy argmax returns the FIRST max,
+    # Sorted ascending by eval_id: top_n's argmax returns the FIRST max,
     # which is then exactly the (cosine DESC, eval_id ASC) tie-break.
     # dtype inferred: numeric ids become int64, string ids stay objects —
     # either indexes fine and Arrow casts to the declared output type.
-    ev_ids = np.array([r[0] for r in ev_rows])
-    ev = np.stack([np.asarray(r[1], dtype=np.float64) for r in ev_rows])
-    ev_norm = np.sqrt((ev * ev).sum(axis=1, keepdims=True))
-    ev_norm[ev_norm == 0.0] = 1.0
-    ev_unit_t = (ev / ev_norm).T  # (dim, n_eval)
-    sc = train.sparkSession.sparkContext
-    bc = sc.broadcast((ev_ids, ev_unit_t))
+    bc = broadcast_unit_rows(
+        train.sparkSession, "operators.semantic_contamination", ev_rows
+    )
 
     id_type = train.schema[train_id].dataType
     eval_id_type = eval_df.schema[eval_id].dataType
@@ -272,7 +282,7 @@ def semantic_contamination(
         ]
     )
 
-    def probe(batches):
+    def flag(batches):
         import pandas as pd
 
         ids_e, eut = bc.value
@@ -294,17 +304,13 @@ def semantic_contamination(
                     f"embeddings in {vec_col!r} (dims seen: "
                     f"{sorted({len(v) for v in vecs})})"
                 ) from exc
-            xn = np.sqrt((x * x).sum(axis=1, keepdims=True))
-            zero_rows = xn[:, 0] == 0.0
-            xn[zero_rows] = 1.0
-            g = (x / xn) @ eut  # (batch, n_eval)
-            # Same contract as the bucketed path (g[zx,:]=-2.0 there):
-            # a zero-norm train vector NEVER flags, at any threshold —
-            # without the sentinel it would sit at cosine 0.0 vs every
-            # eval row and flag whenever threshold <= 0, making the two
-            # physical strategies (and 'auto' routing) disagree.
-            g[zero_rows, :] = -2.0
-            j = g.argmax(axis=1)
+            # Same contract as the bucketed path: a zero-norm train
+            # vector NEVER flags, at any threshold — at cosine 0.0 vs
+            # every eval row it would flag whenever threshold <= 0,
+            # making the two physical strategies (and 'auto' routing)
+            # disagree.
+            g = cosine_rows(x, eut, ZERO_NORM_SCORE)  # (batch, n_eval)
+            j = top_n(g, ids_e, 1)[:, 0]
             best = g[np.arange(len(j)), j]
             keep = best >= threshold
             yield pd.DataFrame(
@@ -317,10 +323,10 @@ def semantic_contamination(
 
     # Explicit cast mirrors the eval side: non-double element types are
     # widened HERE (loudly, by Spark's cast rules) rather than by an
-    # implicit numpy conversion deep inside the probe.
+    # implicit numpy conversion deep inside the batch.
     return train.select(
         train_id, F.col(vec_col).cast("array<double>").alias(vec_col)
-    ).mapInPandas(probe, out_schema)
+    ).mapInPandas(flag, out_schema)
 
 
 def _semantic_contamination_bucketed(
@@ -343,26 +349,11 @@ def _semantic_contamination_bucketed(
 
     100-TB plan shape — the TRAIN side shuffles exactly once, reduced:
 
-      1. probe-cell selection is a ZERO-SHUFFLE Arrow-batched
-         ``mapInPandas``: the centroids are bounded driver-local rows
-         (n_cells of them), so each train batch picks its top-
-         ``n_probe`` cells with one numpy matmul against the centroid
-         matrix — NOT ivf_cosine_topk's row_number window (which
-         would shuffle |train| x n_cells rows on the query id), and
-         NOT a literal array_sort of zip_with/aggregate cosines (whose
-         interpreted folds measured ~9 s for 20k x 8 cells x 64 dims
-         at sf1 — the HOF lesson yet again);
-      2. per-cell scoring NEVER materializes candidate pairs: probes
-         and the eval cell index COGROUP on cell_id and one numpy Gram
-         matmul per cell scores every (train, eval) combination inside
-         the task, emitting only the threshold-flagged best-per-train
-         rows (the SemDeDup pair-stage pattern). The two rejected
-         forms, both measured at sf1 on 2.7M candidates: expression
-         cosine in the join (35.7 s — interpreted HOF folds) and a
-         row-wise-vectorized mapInPandas OVER the joined pairs (~11 s
-         — the matmul was sub-second but the join materialized every
-         pair as two 64-dim arrays through the shuffle and Arrow);
-         cogrouping moves each vector across the wire ONCE;
+      1. ``operators/ivf.py::probe_cells`` picks each train vector's
+         cells with no shuffle;
+      2. ``operators/ivf.py::cell_best_n`` (n = 1 plus the threshold)
+         scores each cell with one Gram matmul and emits only the
+         flagged best-per-train rows;
       3. the cross-cell best match is a groupBy-MIN over a
          (-cosine, eval_id) struct — map-side partial combine ships
          ~|flagged train| rows per partition, never the full candidate
@@ -373,181 +364,42 @@ def _semantic_contamination_bucketed(
     counts (thousands+) keep cells narrow, and a hot cell splits by
     raising ``n_cells`` — the quantizer, not the join, is the knob.
     """
-    import numpy as np
-    from pyspark.sql import types as T
-    from accident_prediction_montreal_spark.operators.ivf import build_ivf_index
-
     ev = eval_df.select(
         eval_id, F.col(vec_col).cast("array<double>").alias(vec_col)
     )
     n_cells = max(1, min(n_cells, ev.limit(n_cells).count()))
-    n_probe = min(n_probe, n_cells)
-    qv = f"__{vec_col}_q"
     tr = train.select(
-        train_id, F.col(vec_col).cast("array<double>").alias(qv)
-    )
-    pair_schema_types = (
-        train.schema[train_id].dataType,
-        eval_df.schema[eval_id].dataType,
+        train_id, F.col(vec_col).cast("array<double>").alias(vec_col)
     )
     if n_cells < 2:
         # Degenerate quantizer (eval side of 1 row, or caller asked for
         # one cell): a single cell means "probe everything" — no KMeans
         # fit (MLlib requires k >= 2), one trivial cell label on both
-        # sides, the cogroup matmul below is then exhaustive and exact.
+        # sides, the per-cell matmul is then exhaustive and exact.
         assigned = ev.withColumn("cell_id", F.lit(0))
         probes = tr.withColumn("cell_id", F.lit(0))
-        return _cell_best_join(
-            probes, assigned, threshold, train_id, eval_id, vec_col, qv,
-            pair_schema_types,
+    else:
+        assigned, cents = build_ivf_index(
+            ev, n_cells=n_cells, vec_col=vec_col, id_col=eval_id,
+            max_iter=max_iter,
         )
-    assigned, cents = build_ivf_index(
-        ev, n_cells=n_cells, vec_col=vec_col, id_col=eval_id,
-        max_iter=max_iter,
-    )
-    # Bounded pull: n_cells centroid rows (the same driver-local list
-    # build_ivf_index itself materialized from the fitted model).
-    cent_rows = cents.orderBy("cell_id").collect()
-    cent_ids = np.array([int(c["cell_id"]) for c in cent_rows], dtype=np.int32)
-    cent_mat = np.stack(
-        [np.asarray(c["centroid"], dtype=np.float64) for c in cent_rows]
-    )
-    cent_norm = np.sqrt((cent_mat * cent_mat).sum(axis=1, keepdims=True))
-    cent_norm[cent_norm == 0.0] = 1.0
-    cent_unit_t = (cent_mat / cent_norm).T  # (dim, n_cells)
-    sc = train.sparkSession.sparkContext
-    bc_cents = sc.broadcast((cent_ids, cent_unit_t, n_probe))
-
-    probe_schema = T.StructType(
-        [
-            T.StructField(train_id, train.schema[train_id].dataType),
-            T.StructField(qv, T.ArrayType(T.DoubleType())),
-            T.StructField("cell_id", T.IntegerType()),
-        ]
-    )
-
-    def assign_probes(batches):
-        import pandas as pd
-
-        ids_c, cut, npb = bc_cents.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            try:
-                x = np.stack(pdf[qv].to_numpy()).astype(np.float64)
-            except (ValueError, TypeError) as exc:
-                raise ValueError(
-                    "semantic_contamination (bucketed): null/ragged "
-                    "embedding in the train vector column — filter or "
-                    "impute before decontamination"
-                ) from exc
-            xn = np.sqrt((x * x).sum(axis=1, keepdims=True))
-            zero = xn[:, 0] == 0.0
-            xn[zero] = 1.0
-            g = (x / xn) @ cut  # (batch, n_cells)
-            # Zero-norm rows get sentinel -2.0 everywhere: the probe
-            # ranking then falls to the cell_id ASC tie-break — cells
-            # 0..n_probe-1 by RULE, matching build_ivf_index's zero-norm
-            # assignment of cell 0 (self-hit preserved).
-            g[zero, :] = -2.0
-            # lexsort: primary -g (sim DESC), secondary cell_id ASC —
-            # the identical ranking ivf_cosine_topk's window produces.
-            order = np.lexsort(
-                (np.broadcast_to(ids_c, g.shape), -g), axis=1
-            )[:, :npb]
-            n, k = order.shape
-            yield pd.DataFrame(
-                {
-                    train_id: pdf[train_id].to_numpy().repeat(k),
-                    qv: pdf[qv].to_numpy().repeat(k),
-                    "cell_id": ids_c[order].ravel(),
-                }
-            )
-
-    probes = tr.mapInPandas(assign_probes, probe_schema)
-    return _cell_best_join(
-        probes, assigned, threshold, train_id, eval_id, vec_col, qv,
-        pair_schema_types,
-    )
-
-
-def _cell_best_join(
-    probes: DataFrame,
-    assigned: DataFrame,
-    threshold: float,
-    train_id: str,
-    eval_id: str,
-    vec_col: str,
-    qv: str,
-    id_types: tuple,
-) -> DataFrame:
-    """Cogroup-per-cell Gram matmul + cross-cell best-match resolution
-    (stages 2-3 of the bucketed plan; see _semantic_contamination_bucketed)."""
-    import numpy as np
-    from pyspark.sql import types as T
-
-    pair_schema = T.StructType(
-        [
-            T.StructField(train_id, id_types[0]),
-            T.StructField(eval_id, id_types[1]),
-            T.StructField("__cos", T.DoubleType()),
-        ]
-    )
-
-    def cell_best(left, right):
-        import pandas as pd
-
-        if not len(left) or not len(right):
-            return pd.DataFrame(
-                {train_id: [], eval_id: [], "__cos": []}
-            ).astype({"__cos": "float64"})
-        try:
-            x = np.stack(left[qv].to_numpy()).astype(np.float64)
-            y = np.stack(right[vec_col].to_numpy()).astype(np.float64)
-        except (ValueError, TypeError) as exc:
-            raise ValueError(
-                "semantic_contamination (bucketed): null/ragged "
-                f"embedding in {vec_col!r} — filter or impute "
-                "before decontamination"
-            ) from exc
-        # Sorted ascending by eval_id so argmax's first-max IS the
-        # (cosine DESC, eval_id ASC) tie-break — same as the broadcast
-        # path.
-        order = np.argsort(right[eval_id].to_numpy(), kind="stable")
-        y = y[order]
-        ids_e = right[eval_id].to_numpy()[order]
-        xn = np.sqrt((x * x).sum(axis=1, keepdims=True))
-        zx = xn[:, 0] == 0.0
-        xn[zx] = 1.0
-        yn = np.sqrt((y * y).sum(axis=1, keepdims=True))
-        yn[yn == 0.0] = 1.0
-        g = (x / xn) @ (y / yn).T  # (n_train_in_cell, n_eval_in_cell)
-        g[zx, :] = -2.0  # zero-norm train vectors never flag
-        j = g.argmax(axis=1)
-        bestc = g[np.arange(len(j)), j]
-        keep = bestc >= threshold
-        return pd.DataFrame(
-            {
-                train_id: left[train_id].to_numpy()[keep],
-                eval_id: ids_e[j[keep]],
-                "__cos": bestc[keep],
-            }
+        probes = probe_cells(
+            tr, cents, min(n_probe, n_cells), train_id, vec_col,
+            site="operators.semantic_contamination.centroids",
+            bad="semantic_contamination (bucketed): null/ragged embedding "
+            "in the train vector column — filter or impute before "
+            "decontamination",
         )
-
-    cand = (
-        probes.groupBy("cell_id")
-        .cogroup(assigned.groupBy("cell_id"))
-        .applyInPandas(cell_best, pair_schema)
+    cand = cell_best_n(
+        probes, assigned, 1, train_id, vec_col, eval_id, vec_col,
+        threshold=threshold,
+        bad=f"semantic_contamination (bucketed): null/ragged embedding in "
+        f"{vec_col!r} — filter or impute before decontamination",
     )
-    best = (
-        cand.groupBy(train_id)
-        .agg(
-            F.min(
-                F.struct(
-                    (-F.col("__cos")).alias("negcos"), F.col(eval_id).alias("e")
-                )
-            ).alias("__b")
-        )
+    best = cand.groupBy(train_id).agg(
+        F.min(
+            F.struct((-F.col("cosine")).alias("negcos"), F.col(eval_id).alias("e"))
+        ).alias("__b")
     )
     return best.select(
         train_id,

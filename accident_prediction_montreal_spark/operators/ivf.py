@@ -18,10 +18,19 @@ raise ``n_probe`` to trade cost for recall (n_probe = n_cells ≡ exact).
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from accident_prediction_montreal_spark.functions.vectors import cosine_similarity
+from accident_prediction_montreal_spark import cachereg
+from accident_prediction_montreal_spark.functions.vectors import (
+    ZERO_NORM_SCORE,
+    cosine_rows,
+    cosine_similarity,
+    stack_rows,
+    top_n,
+    unit_rows,
+)
 
 
 def build_ivf_index(
@@ -205,13 +214,10 @@ def ivf_cosine_topk(
     row_number window that shuffles |queries| x n_cells rows, and the
     per-candidate cosine is the expression form (interpreted
     zip_with/aggregate folds). Both are fine at serving volumes and
-    wrong for a MASSIVE query side — there, use the decontamination
-    pattern instead (operators/decontam.py::_semantic_contamination_
-    bucketed): zero-shuffle probe selection via an Arrow mapInPandas
-    against the driver-local centroid matrix, then a cogroup-per-cell
-    numpy Gram matmul that never materializes candidate pairs through
-    an exchange (35.7 -> 3.7 s measured at sf1 on a 20k-query side;
-    PERF.md r10).
+    wrong for a MASSIVE query side — there, use
+    :func:`ivf_cosine_topk_bucketed` (zero-shuffle ``probe_cells``, then
+    the cogroup-per-cell ``cell_best_n``; 35.7 -> 3.7 s measured at sf1
+    on a 20k-query side, PERF.md r10).
     """
     probes = (
         queries.crossJoin(F.broadcast(centroids))
@@ -237,6 +243,162 @@ def ivf_cosine_topk(
     )
 
 
+def broadcast_unit_rows(spark, site: str, rows: list):
+    """Broadcast ``(ids, unit_t)`` for bounded driver-local ``rows`` of
+    (id, vector): ids as a numpy array in row order, ``unit_t`` the
+    (dim, n_rows) matrix of unit rows. The one way a broadcast enters
+    the engine: the returned ``Broadcast`` is registered as cachereg
+    ``site``'s generation, because the plans reading it are lazy and
+    cannot free it at return — the site's next call or ``release_all()``
+    unpersists its executor copies (the driver keeps the value, so an
+    older plan still runs)."""
+    ids = np.array([r[0] for r in rows])
+    unit, _ = unit_rows(np.stack([np.asarray(r[1], dtype=np.float64) for r in rows]))
+    bc = spark.sparkContext.broadcast((ids, unit.T))
+    cachereg.register(site, bc)
+    return bc
+
+
+def probe_cells(
+    rows: DataFrame,
+    centroids: DataFrame,
+    n_probe: int,
+    id_col: str,
+    vec_col: str,
+    site: str,
+    bad: str | None = None,
+) -> DataFrame:
+    """Each row once per probed cell: (``id_col``, ``vec_col``,
+    cell_id) for its ``n_probe`` nearest centroids, ranked (cosine DESC,
+    cell_id ASC) — the ranking of ivf_cosine_topk's window and of
+    build_ivf_index's assignment.
+
+    ZERO-SHUFFLE: the centroids (n_cells rows) ride a broadcast
+    (``broadcast_unit_rows`` under ``site``) into an Arrow-batched
+    mapInPandas, so each batch picks its cells with one numpy matmul —
+    no |rows| x n_cells window exchange, and no literal array_sort of
+    zip_with/aggregate cosines (interpreted folds measured ~9 s for
+    20k x 8 cells x 64 dims at sf1). A zero-norm row scores −2.0
+    against every cell, so it probes cells 0..n_probe−1 by RULE — the
+    cell build_ivf_index assigns zero-norm vectors to comes first
+    (self-hit preserved). ``bad`` names the error a null or ragged
+    vector raises.
+    """
+    from pyspark.sql import types as T
+
+    cents = sorted(
+        centroids.select("cell_id", "centroid").collect(), key=lambda r: r[0]
+    )  # <= n_cells rows
+    bc = broadcast_unit_rows(rows.sparkSession, site, cents)
+    n = min(n_probe, len(cents))
+    schema = T.StructType(
+        [
+            T.StructField(id_col, rows.schema[id_col].dataType),
+            T.StructField(vec_col, T.ArrayType(T.DoubleType())),
+            T.StructField("cell_id", centroids.schema["cell_id"].dataType),
+        ]
+    )
+
+    def assign(batches):
+        import pandas as pd
+
+        ids, unit_t = bc.value
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            vecs = pdf[vec_col].to_numpy()
+            g = cosine_rows(stack_rows(vecs, bad), unit_t, ZERO_NORM_SCORE)
+            top = top_n(g, ids, n)
+            kk = top.shape[1]
+            yield pd.DataFrame(
+                {
+                    id_col: pdf[id_col].to_numpy().repeat(kk),
+                    vec_col: vecs.repeat(kk),
+                    "cell_id": ids[top].ravel(),
+                }
+            )
+
+    return rows.select(
+        id_col, F.col(vec_col).cast("array<double>").alias(vec_col)
+    ).mapInPandas(assign, schema)
+
+
+def cell_best_n(
+    probes: DataFrame,
+    corpus: DataFrame,
+    n: int,
+    left_id: str,
+    left_vec: str,
+    right_id: str,
+    right_vec: str,
+    threshold: float | None = None,
+    bad: str | None = None,
+) -> DataFrame:
+    """(``left_id``, ``right_id``, cosine): each probe row's best ``n``
+    corpus rows INSIDE its cell, ranked (cosine DESC, right id ASC).
+
+    Probes and corpus COGROUP on cell_id and one numpy Gram matmul per
+    cell scores every combination inside the task (the SemDeDup
+    pair-stage pattern), so each vector crosses the wire ONCE and
+    candidate pairs never go through an exchange; the shuffle after it
+    carries at most n rows per probe row. The two rejected forms, both
+    measured at sf1 on 2.7M candidates: expression cosine in a join
+    (35.7 s — interpreted HOF folds) and a vectorized mapInPandas over
+    the joined pairs (~11 s — the join shipped every pair as two
+    64-dim arrays through the shuffle and Arrow).
+
+    Without ``threshold`` a zero-norm probe row scores 0.0. With it,
+    rows scoring under it drop and a zero-norm probe row scores −2.0,
+    so it never flags. ``bad`` names the error a null or ragged vector
+    raises. The cross-cell step is the caller's.
+    """
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [
+            T.StructField(left_id, probes.schema[left_id].dataType),
+            T.StructField(right_id, corpus.schema[right_id].dataType),
+            T.StructField("cosine", T.DoubleType()),
+        ]
+    )
+    zero_score = None if threshold is None else ZERO_NORM_SCORE
+
+    def best_n(left, right):
+        import pandas as pd
+
+        if not len(left) or not len(right):
+            return pd.DataFrame(
+                {left_id: [], right_id: [], "cosine": []}
+            ).astype({"cosine": "float64"})
+        x = stack_rows(left[left_vec].to_numpy(), bad)
+        y = stack_rows(right[right_vec].to_numpy(), bad)
+        # Sorted by id: top_n's argmax (n == 1) then breaks ties by id.
+        order = np.argsort(right[right_id].to_numpy(), kind="stable")
+        ids = right[right_id].to_numpy()[order]
+        g = cosine_rows(x, unit_rows(y[order])[0].T, zero_score)
+        top = top_n(g, ids, n)
+        cos = g[np.arange(len(g))[:, None], top].ravel()
+        out = pd.DataFrame(
+            {
+                left_id: left[left_id].to_numpy().repeat(top.shape[1]),
+                right_id: ids[top].ravel(),
+                "cosine": cos,
+            }
+        )
+        return out if threshold is None else out[cos >= threshold]
+
+    right = corpus.select(
+        "cell_id",
+        right_id,
+        F.col(right_vec).cast("array<double>").alias(right_vec),
+    )
+    return (
+        probes.groupBy("cell_id")
+        .cogroup(right.groupBy("cell_id"))
+        .applyInPandas(best_n, schema)
+    )
+
+
 def ivf_cosine_topk_bucketed(
     queries: DataFrame,
     assigned_corpus: DataFrame,
@@ -248,139 +410,30 @@ def ivf_cosine_topk_bucketed(
     corpus_id: str = "vec_id",
     corpus_vec: str = "embedding",
 ) -> DataFrame:
-    """MASSIVE-query-side twin of :func:`ivf_cosine_topk` — the regime
-    split documented there, now implemented: same output contract
-    (query_id, corpus_id, cosine, rank<=k; ties cosine DESC, id ASC),
-    but the physical plan is the decontamination pattern
-    (operators/decontam.py::_semantic_contamination_bucketed, measured
-    35.7 -> 3.7 s at sf1 on a 20k-query side):
+    """MASSIVE-query-side twin of :func:`ivf_cosine_topk`: same output
+    contract (query_id, corpus_id, cosine, rank<=k; ties cosine DESC,
+    id ASC), built from this module's two shared Arrow stages (measured
+    35.7 -> 3.7 s at sf1 on a 20k-query side, PERF.md r10):
 
-      * probe selection is ZERO-SHUFFLE: centroids (<= n_cells rows)
-        collect driver-side and broadcast as a numpy matrix into an
-        Arrow mapInPandas — no |queries| x n_cells window exchange;
-      * per probed cell, a cogroup-per-cell numpy Gram matmul emits
-        each query's CELL-LOCAL top-k — candidate pairs never
-        materialize through an exchange (the shuffle carries at most
-        n_probe x k rows per query);
+      * ``probe_cells`` picks each query's ``n_probe`` cells with no
+        shuffle;
+      * ``cell_best_n`` (n = k) emits each query's CELL-LOCAL top-k —
+        the shuffle carries at most n_probe x k rows per query;
       * the global top-k re-ranks that bounded union with the same
         (cosine DESC, id ASC) window.
 
     Exact when n_probe = n_cells (property: equals ivf_cosine_topk and
     the brute-force scan — tested). Zero-norm vectors are undefined
-    input, mirroring cosine_similarity's contract; for determinism they
-    follow build_ivf_index's convention anyway (sentinel sim -2.0 to
-    every cell, so the cell_id-ascending tie-break probes cell 0 first
-    — the cell the builder assigns zero-norm corpus vectors to).
+    input, mirroring cosine_similarity's contract; for determinism a
+    zero-norm query probes cells from cell 0 (the cell build_ivf_index
+    assigns zero-norm corpus vectors to) and scores 0.0 inside them.
     """
-    import numpy as np
-    from pyspark.sql import types as T
-
-    from accident_prediction_montreal_spark import cachereg
-
-    cents = centroids.select("cell_id", "centroid").collect()  # <= n_cells
-    ids_c = np.array([r["cell_id"] for r in cents], dtype=np.int64)
-    cmat = np.stack([np.asarray(r["centroid"], dtype=np.float64) for r in cents])
-    cn = np.sqrt((cmat * cmat).sum(axis=1, keepdims=True))
-    cn[cn == 0.0] = 1.0
-    cunit_t = (cmat / cn).T
-    bc = queries.sparkSession.sparkContext.broadcast((ids_c, cunit_t))
-    # The returned plan is lazy, so the broadcast can't be destroyed
-    # here; generation-scoped lifecycle via cachereg (Broadcast has the
-    # same unpersist() surface as DataFrame) — the next invocation or a
-    # release_all() frees the previous generation's executor copies.
-    cachereg.register("operators.ivf_cosine_topk_bucketed", bc)
-    npb = min(n_probe, len(ids_c))
-
-    qid_type = queries.schema[query_id].dataType
-    cid_type = assigned_corpus.schema[corpus_id].dataType
-    cell_type = centroids.schema["cell_id"].dataType
-    probe_schema = T.StructType(
-        [
-            T.StructField(query_id, qid_type),
-            T.StructField(query_vec, T.ArrayType(T.DoubleType())),
-            T.StructField("cell_id", cell_type),
-        ]
+    probes = probe_cells(
+        queries, centroids, n_probe, query_id, query_vec,
+        site="operators.ivf_cosine_topk_bucketed",
     )
-
-    def assign_probes(batches):
-        import pandas as pd
-
-        ids_cc, cut = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.stack(pdf[query_vec].to_numpy()).astype(np.float64)
-            xn = np.sqrt((x * x).sum(axis=1, keepdims=True))
-            zero = xn[:, 0] == 0.0
-            xn[zero] = 1.0
-            g = (x / xn) @ cut  # (batch, n_cells)
-            # build_ivf_index's zero-norm rule, mirrored: sentinel -2.0
-            # to every cell -> tie-break probes cell 0 (+ next ids) by
-            # RULE, aligning both code paths on one convention.
-            g[zero] = -2.0
-            order = np.lexsort(
-                (np.broadcast_to(ids_cc, g.shape), -g), axis=1
-            )[:, :npb]
-            n, kk = order.shape
-            yield pd.DataFrame(
-                {
-                    query_id: pdf[query_id].to_numpy().repeat(kk),
-                    query_vec: pdf[query_vec].to_numpy().repeat(kk),
-                    "cell_id": ids_cc[order].ravel(),
-                }
-            )
-
-    probes = queries.select(
-        query_id, F.col(query_vec).cast("array<double>").alias(query_vec)
-    ).mapInPandas(assign_probes, probe_schema)
-
-    pair_schema = T.StructType(
-        [
-            T.StructField(query_id, qid_type),
-            T.StructField(corpus_id, cid_type),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-
-    def cell_topk(left, right):
-        import pandas as pd
-
-        if not len(left) or not len(right):
-            return pd.DataFrame(
-                {query_id: [], corpus_id: [], "cosine": []}
-            ).astype({"cosine": "float64"})
-        x = np.stack(left[query_vec].to_numpy()).astype(np.float64)
-        y = np.stack(right[corpus_vec].to_numpy()).astype(np.float64)
-        order = np.argsort(right[corpus_id].to_numpy(), kind="stable")
-        y = y[order]
-        ids = right[corpus_id].to_numpy()[order]
-        xn = np.sqrt((x * x).sum(axis=1, keepdims=True))
-        xn[xn == 0.0] = 1.0
-        yn = np.sqrt((y * y).sum(axis=1, keepdims=True))
-        yn[yn == 0.0] = 1.0
-        g = (x / xn) @ (y / yn).T  # (queries_in_cell, corpus_in_cell)
-        kk = min(k, g.shape[1])
-        ordk = np.lexsort(
-            (np.broadcast_to(ids, g.shape), -g), axis=1
-        )[:, :kk]
-        rows = np.arange(len(g))[:, None]
-        return pd.DataFrame(
-            {
-                query_id: left[query_id].to_numpy().repeat(kk),
-                corpus_id: ids[ordk].ravel(),
-                "cosine": g[rows, ordk].ravel(),
-            }
-        )
-
-    corpus = assigned_corpus.select(
-        "cell_id",
-        corpus_id,
-        F.col(corpus_vec).cast("array<double>").alias(corpus_vec),
-    )
-    cand = (
-        probes.groupBy("cell_id")
-        .cogroup(corpus.groupBy("cell_id"))
-        .applyInPandas(cell_topk, pair_schema)
+    cand = cell_best_n(
+        probes, assigned_corpus, k, query_id, query_vec, corpus_id, corpus_vec
     )
     w = Window.partitionBy(query_id).orderBy(
         F.col("cosine").desc(), F.col(corpus_id).asc()

@@ -20,6 +20,8 @@ from accident_prediction_montreal_spark.functions.vectors import (
     cosine_similarity,
     dot_product,
     l2_norm,
+    stack_rows,
+    unit_rows,
     valid_vectors,
 )
 
@@ -254,10 +256,8 @@ def cell_cosine_pairs(
         ids = pdf[id_col].to_numpy()
         order = np.argsort(ids)
         ids = ids[order]
-        x = np.stack(pdf[vec_col].to_numpy()[order]).astype(np.float64)
-        norms = np.sqrt((x * x).sum(axis=1, keepdims=True))
-        norms[norms == 0.0] = 1.0  # zero vectors match nothing at t > 0
-        u = x / norms
+        # zero vectors stay zero rows: they match nothing at t > 0
+        u, _ = unit_rows(stack_rows(pdf[vec_col].to_numpy()[order]))
         n = len(ids)
         a_out, b_out = [], []
         for s in range(0, n, block):

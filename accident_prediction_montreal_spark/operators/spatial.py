@@ -750,7 +750,6 @@ def idw_interpolate_radius(
     sample_coords: tuple[str, str] = ("lat", "lon"),
     station_coords: tuple[str, str] = ("station_lat", "station_lon"),
     power: float = 2.0,
-    min_cos_lat: float | None = None,
 ) -> DataFrame:
     """Radius-truncated IDW — the declared scale path next to the exact
     ``idw_interpolate``.
@@ -785,21 +784,15 @@ def idw_interpolate_radius(
     """
     s_lat, s_lon = sample_coords
     t_lat, t_lon = station_coords
-    use_grid = True
-    if min_cos_lat is None:
-        # Exact extreme |lat| in ONE agg job — no quantile tail that
-        # would falsely shrink the cell for outlier-latitude stations.
-        max_abs_lat = stations.agg(F.max(F.abs(F.col(t_lat)))).first()[0]
-        # widest |lat| the radius must survive: the extreme station
-        # latitude plus the radius itself in degrees.
-        worst_lat = float(max_abs_lat or 0.0) + radius_m / _M_PER_DEG
-        cos_worst = math.cos(math.radians(min(worst_lat, 90.0)))
-        if worst_lat >= 90.0 or cos_worst < 0.05:
-            use_grid = False  # polar fallback: exhaustive, never lossy
-        else:
-            min_cos_lat = cos_worst
-    elif min_cos_lat < 0.05:
-        use_grid = False
+    # Exact extreme |lat| in ONE agg job — no quantile tail that would
+    # falsely shrink the cell for outlier-latitude stations.
+    max_abs_lat = stations.agg(F.max(F.abs(F.col(t_lat)))).first()[0]
+    # widest |lat| the radius must survive: the extreme station latitude
+    # plus the radius itself in degrees.
+    worst_lat = float(max_abs_lat or 0.0) + radius_m / _M_PER_DEG
+    min_cos_lat = math.cos(math.radians(min(worst_lat, 90.0)))
+    # polar fallback: exhaustive, never lossy
+    use_grid = not (worst_lat >= 90.0 or min_cos_lat < 0.05)
 
     # Per-row cosines hoisted out of the candidate loop (bit-exact; the
     # station side computes its cosine BEFORE the 9x cell replication,

@@ -16,7 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from accident_prediction_montreal_spark import cachereg
 from accident_prediction_montreal_spark.functions.cyclic import cyclic_encode
 from accident_prediction_montreal_spark.functions.solar import solar_elevation
 from accident_prediction_montreal_spark.operators.encoding import target_encode
@@ -93,24 +92,10 @@ def positive_samples(
     road_points: DataFrame,
     weather: DataFrame,
     station_coords: DataFrame,
-    truncate_lineage: bool = False,
 ) -> DataFrame:
-    """§3.1: matched accidents + road features + IDW weather + date features.
-
-    ``truncate_lineage`` localCheckpoints the two deepest subtrees (the
-    kNN match and the IDW weather) so everything stacked on top — the
-    solar/cyclic feature columns and build_dataset's ~10-call fan-out —
-    analyzes over shallow plans: Catalyst re-analyzes the whole input
-    tree on EVERY DataFrame call, which at full pipeline width costs
-    more driver time than the executors spend computing (PERF.md r6/r7).
-    Off by default (callers composing ONE lazy plan, e.g. for a single
-    collect, keep full lineage); the apm capstone turns it on. On a real
-    cluster prefer a reliable checkpoint dir for executor-loss recovery.
-    """
+    """§3.1: matched accidents + road features + IDW weather + date features."""
     roads = road_features(road_points)
     match = match_accidents_with_roads(accidents, road_points)
-    if truncate_lineage:
-        match = cachereg.checkpoint("pipeline.dataset", match, eager=True)
     base = (
         accidents.join(match, "accident_id")
         .join(roads.drop("loc_lat", "loc_long"), "street_id")
@@ -118,8 +103,6 @@ def positive_samples(
         .withColumn("sample_id", _sample_id(F.lit("pos"), "accident_id"))
     )
     wx = weather_for_samples(base, smooth_risky_weather(weather), station_coords)
-    if truncate_lineage:
-        wx = cachereg.checkpoint("pipeline.dataset", wx, eager=True)
     return _add_date_features(base.join(wx, "sample_id"))
 
 

@@ -9,10 +9,12 @@ Semantics preserved:
   final:  one street per accident (closest center among the union),
           deterministic tie-breaks throughout (§7.4).
 
-Spark-first differences: candidate generation uses the grid-bucketed
-equi-join (knn_join_grid) instead of a full cross join — the 100-TB
-lever called out in SURVEY.md §4 — with ``exhaustive=True`` falling back
-to the reference's crossJoin form for verification.
+Spark-first differences: above ``SMALL_SIDE_THRESHOLD`` street centers,
+candidate generation is the exact grid-bucketed equi-join
+(knn_join_grid_exact: density-sized cells, per-point proof, escalation)
+instead of a full cross join — the 100-TB lever called out in SURVEY.md
+§4; a small center side keeps the reference's crossJoin form, which is
+also what ``exhaustive=True`` forces.
 """
 
 from __future__ import annotations
@@ -22,7 +24,11 @@ from pyspark.sql import functions as F
 
 from accident_prediction_montreal_spark import cachereg
 from accident_prediction_montreal_spark.functions.geo import haversine_meters
-from accident_prediction_montreal_spark.operators.spatial import knn_join, knn_join_grid
+from accident_prediction_montreal_spark.operators.spatial import knn_join, knn_join_grid_exact
+
+#: Street centers (after dedup) up to which the auto-selected candidate
+#: generator is the exhaustive crossJoin-broadcast kNN.
+SMALL_SIDE_THRESHOLD = 10_000
 
 
 def _top_k_centers(
@@ -30,7 +36,6 @@ def _top_k_centers(
     road_centers: DataFrame,
     k: int,
     exhaustive: bool,
-    cell_deg: float,
     size_known: bool = False,
 ) -> DataFrame:
     kwargs = dict(
@@ -52,7 +57,7 @@ def _top_k_centers(
             **kwargs,
         )
     else:
-        out = knn_join_grid(accidents, road_centers, cell_deg=cell_deg, **kwargs)
+        out = knn_join_grid_exact(accidents, road_centers, **kwargs)
     return out.select("accident_id", "loc_lat", "loc_long", "street_id")
 
 
@@ -86,14 +91,12 @@ def match_accidents_with_roads(
     k: int = 5,
     max_distance_m: float = 10.0,
     exhaustive: bool | None = None,
-    cell_deg: float = 0.1,
-    small_side_threshold: int = 10_000,
 ) -> DataFrame:
     """(accident_id, street_id) — one street per accident.
 
     ``exhaustive=None`` (default) auto-selects the candidate generator,
     the broadcast-join-style planner decision: when the street-center
-    side is small (≤ ``small_side_threshold`` after dedup — one cheap
+    side is small (≤ ``SMALL_SIDE_THRESHOLD`` after dedup — one cheap
     count, the same price AQE pays for its runtime stats) the
     crossJoin-broadcast exhaustive kNN wins, because the escalating grid
     spends several proof-round actions of fixed job overhead that only
@@ -116,11 +119,11 @@ def match_accidents_with_roads(
     size_known = False
     if exhaustive is None:
         road_centers = cached.persist(road_centers)
-        exhaustive = road_centers.count() <= small_side_threshold
+        exhaustive = road_centers.count() <= SMALL_SIDE_THRESHOLD
         size_known = exhaustive
 
     top_k = cached.persist(
-        _top_k_centers(acc, road_centers, k, exhaustive, cell_deg, size_known=size_known)
+        _top_k_centers(acc, road_centers, k, exhaustive, size_known=size_known)
     )
 
     first_match = cached.persist(_closest_point(top_k.join(points, "street_id")))

@@ -18,7 +18,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from accident_prediction_montreal_spark.plans import REGISTRY  # noqa: E402
-from check_oracle import vanilla_session  # noqa: E402
+from check_oracle import release, vanilla_session  # noqa: E402
 
 
 def main() -> int:
@@ -42,6 +42,8 @@ def main() -> int:
                 (tuple(r) for r in REGISTRY[n].fn(spark, sf_dir).collect()),
                 key=repr,
             )
+            # the 64-partition call must not read what the first made
+            release(spark)
             spark.conf.set("spark.sql.shuffle.partitions", "64")
             r2 = sorted(
                 (tuple(r) for r in REGISTRY[n].fn(spark, sf_dir).collect()),
@@ -51,6 +53,8 @@ def main() -> int:
             print(f"ERR  {n}: {str(e)[:160]}")
             bad.append(n)
             continue
+        finally:
+            release(spark)
         if r1 == r2:
             print(f"ok   {n}: {len(r1)} rows stable")
         else:

@@ -29,6 +29,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from pyspark.sql import SparkSession  # noqa: E402
 
+from accident_prediction_montreal_spark import cachereg  # noqa: E402
 from accident_prediction_montreal_spark.plans import REGISTRY  # noqa: E402
 from accident_prediction_montreal_spark.session import get_session, local_cpus  # noqa: E402
 from accident_prediction_montreal_spark.sources.registry import TABLES  # noqa: E402
@@ -46,6 +47,13 @@ def vanilla_session() -> SparkSession:
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .getOrCreate()
     )
+
+
+def release(spark: SparkSession) -> None:
+    """Free every cache, checkpoint and broadcast the last query made, so
+    the next query cannot pass by reusing them."""
+    cachereg.release_all()
+    spark.catalog.clearCache()
 
 
 def canon(value):
@@ -109,6 +117,8 @@ def main() -> int:
             failures.append(name)
             print(f"FAIL {name}: spark error\n{traceback.format_exc()}")
             continue
+        finally:
+            release(spark)
         if spec.oracle is None:
             print(f"ok   {name}: rows-only ({len(srows)} rows)")
             continue

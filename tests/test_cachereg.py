@@ -1,7 +1,9 @@
 """cachereg is the one home for cached and checkpointed engine frames: no
-other engine module persists, caches, checkpoints or unpersists; a
-repeated call of a persisting query keeps its cache; and releasing a
-checkpointing query's site frees its blocks."""
+other engine module persists, caches, checkpoints or unpersists, and no
+SparkContext broadcast escapes ``cachereg.register``; a repeated call of
+a persisting query keeps its cache; releasing a checkpointing query's
+site frees its blocks; and releasing frees every broadcast semantic
+decontamination made."""
 
 from __future__ import annotations
 
@@ -24,9 +26,22 @@ def _is_generation(node: ast.AST) -> bool:
     )
 
 
+def _is_register(node: ast.AST) -> bool:
+    """``cachereg.register(...)``."""
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "register"
+        and isinstance(node.func.value, ast.Name)
+        and node.func.value.id == "cachereg"
+    )
+
+
 def _stray_calls(tree: ast.Module) -> list[tuple[int, str]]:
     """Materializer calls whose receiver is not a cachereg generation
-    handle, per top-level scope."""
+    handle, and SparkContext broadcasts (not the ``F.broadcast`` join
+    hint) whose result the same scope never passes to
+    ``cachereg.register``, per top-level scope."""
     found = []
     for scope in tree.body:
         handles = {
@@ -36,6 +51,29 @@ def _stray_calls(tree: ast.Module) -> list[tuple[int, str]]:
             for t in node.targets
             if isinstance(t, ast.Name)
         }
+        registered = {
+            a.id
+            for node in ast.walk(scope)
+            if _is_register(node)
+            for a in node.args
+            if isinstance(a, ast.Name)
+        }
+        for node in ast.walk(scope):
+            if (
+                isinstance(node, ast.Assign)
+                and isinstance(node.value, ast.Call)
+                and isinstance(node.value.func, ast.Attribute)
+                and node.value.func.attr == "broadcast"
+                and not (
+                    isinstance(node.value.func.value, ast.Name)
+                    and node.value.func.value.id == "F"
+                )
+                and not all(
+                    isinstance(t, ast.Name) and t.id in registered
+                    for t in node.targets
+                )
+            ):
+                found.append((node.lineno, "broadcast"))
         for node in ast.walk(scope):
             if not (
                 isinstance(node, ast.Call)
@@ -74,6 +112,17 @@ def f(df):
     assert [a for _, a in _stray_calls(ast.parse(src))] == [
         "persist", "localCheckpoint", "unpersist", "cache"
     ]
+
+
+def test_guard_sees_unregistered_broadcasts():
+    src = """
+def f(spark, df, x):
+    bc = spark.sparkContext.broadcast(x)
+    cachereg.register("s", bc)
+    stray = spark.sparkContext.broadcast(x)
+    return df.join(F.broadcast(df), "k"), bc, stray
+"""
+    assert _stray_calls(ast.parse(src)) == [(5, "broadcast")]
 
 
 def _documents(spark, sf_dir: pathlib.Path) -> str:
@@ -141,3 +190,48 @@ def test_release_frees_checkpoints(spark):
     assert _storage(spark) > before
     cachereg.release_all()
     assert _settled(spark, want=before) == before
+
+
+def test_release_frees_decontamination_broadcasts(spark, monkeypatch):
+    from pyspark import SparkContext
+    from pyspark.broadcast import Broadcast
+
+    from accident_prediction_montreal_spark import cachereg
+    from accident_prediction_montreal_spark.operators.decontam import (
+        semantic_contamination,
+    )
+
+    made, freed = [], []
+    real_broadcast, real_unpersist = SparkContext.broadcast, Broadcast.unpersist
+
+    def broadcast(self, value):
+        made.append(real_broadcast(self, value))
+        return made[-1]
+
+    def unpersist(self, blocking=False):
+        freed.append(self)
+        return real_unpersist(self, blocking)
+
+    monkeypatch.setattr(SparkContext, "broadcast", broadcast)
+    monkeypatch.setattr(Broadcast, "unpersist", unpersist)
+    eval_df = spark.createDataFrame(
+        [(100 + i, [1.0, float(i), float(i % 2)]) for i in range(6)],
+        ["eval_id", "embedding"],
+    )
+    train = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0]), (1, [1.0, 5.0, 1.0]), (2, [0.0, 0.0, 0.0])],
+        ["train_id", "embedding"],
+    )
+    got = {
+        strategy: sorted(
+            (r.train_id, r.eval_id)
+            for r in semantic_contamination(
+                train, eval_df, strategy=strategy, n_cells=3, n_probe=3
+            ).collect()
+        )
+        for strategy in ("broadcast", "bucketed")
+    }
+    cachereg.release_all()
+    assert got["broadcast"] == got["bucketed"] == [(0, 100), (1, 105)]
+    assert len(made) == 2
+    assert all(any(b is f for f in freed) for b in made)
