@@ -1,6 +1,5 @@
 from accident_prediction_montreal_spark.functions.geo import (
     haversine_meters,
-    grid_cell,
     EARTH_RADIUS_M,
 )
 from accident_prediction_montreal_spark.functions.cyclic import cyclic_encode
@@ -14,7 +13,6 @@ from accident_prediction_montreal_spark.functions.vectors import (
 
 __all__ = [
     "haversine_meters",
-    "grid_cell",
     "EARTH_RADIUS_M",
     "cyclic_encode",
     "solar_elevation",

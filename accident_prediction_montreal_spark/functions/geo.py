@@ -66,18 +66,3 @@ def haversine_meters_coslat(
     a = F.pow(F.sin(dphi / 2), 2) + cos1 * cos2 * F.pow(F.sin(dlam / 2), 2)
     return F.lit(2.0 * EARTH_RADIUS_M) * F.atan2(F.sqrt(a), F.sqrt(1 - a))
 
-
-def grid_cell(lat: Column | str, lon: Column | str, cell_deg: float) -> Column:
-    """Struct (cell_i, cell_j) bucketing a point into a lat/lon grid.
-
-    The scale-path prefilter for the spatial kNN join (SURVEY.md §4): instead
-    of the reference's full cross join (preprocess.py:77), candidates are
-    generated by an equi-join on cell ids (plus neighbor cells), turning an
-    O(N·M) shuffle into a hash join on a bounded key.
-    """
-    lat = F.col(lat) if isinstance(lat, str) else lat
-    lon = F.col(lon) if isinstance(lon, str) else lon
-    return F.struct(
-        F.floor(lat / F.lit(cell_deg)).cast("long").alias("cell_i"),
-        F.floor(lon / F.lit(cell_deg)).cast("long").alias("cell_j"),
-    )

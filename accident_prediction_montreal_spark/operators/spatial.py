@@ -7,8 +7,9 @@ The reference builds both from relational primitives (SURVEY.md §2 J8, A6):
     (reference src/preprocess.py:360-398)
 
 This module ships the reference-faithful forms plus the 100-TB scale path:
-a grid-bucketed kNN join that replaces the O(N·M) cross join with an
-equi-join on spatial cells (SURVEY.md §4), so the shuffle is bounded by
+one grid-candidate stage (_grid_candidates) that replaces the O(N·M)
+cross join with an equi-join on spatial cells (SURVEY.md §4), shared by
+the grid kNN join and radius-truncated IDW, so the shuffle is bounded by
 candidate pairs instead of the full cartesian product.
 """
 
@@ -21,16 +22,53 @@ from pyspark.sql import functions as F
 
 from accident_prediction_montreal_spark import cachereg
 from accident_prediction_montreal_spark.functions.geo import (
-    haversine_meters,
+    EARTH_RADIUS_M,
     haversine_meters_coslat,
 )
 
 
-_EARTH_RADIUS_M = 6371000.0
+# meters per degree of latitude (R * pi / 180); longitude shrinks by cos(lat).
+_M_PER_DEG = EARTH_RADIUS_M * math.pi / 180
 # knn_join_grid_exact's cachereg sites: its checkpointed results, and
 # the per-round candidate caches it frees once the result is cut.
 _KNN_SITE = "operators.spatial.knn_join_grid_exact"
 _KNN_ROUNDS_SITE = "operators.spatial.knn_join_grid_exact.rounds"
+
+# knn_join_grid_exact's fixed tuning (see its docstring for each role).
+#: Cell growth factor per escalation round.
+GROWTH = 3.0
+#: Grid rounds before the stragglers go to the exhaustive fallback.
+MAX_ROUNDS = 3
+#: Curvature slack on the radius a 3x3 block is proven to cover.
+MARGIN = 0.95
+#: Expected 3x3-block occupancy, in multiples of k, of a density-sized
+#: cell. 32 (not an occupancy-oriented 4): the PROOF needs
+#: cell >= ~3x the typical k-th-neighbor distance r_k = sqrt(kA/(pi n))
+#: (plus cos-lat slack), and cell/r_k = sqrt(SAFETY*pi/8.64), so 32 puts
+#: round one at ~3.4x r_k and almost every point proves immediately.
+#: Undersized cells don't break exactness, they just pay extra
+#: escalation rounds (measured: 4 cost 3 rounds ~= 3x the wall time of
+#: one well-sized round).
+SAFETY = 32.0
+#: |left|·|right| (or residue·|right|) pairs up to which the exhaustive
+#: broadcast join replaces a grid round.
+FALLBACK_BUDGET_PAIRS = 2_000_000
+
+
+def _with_coslat(
+    left: DataFrame,
+    right: DataFrame,
+    left_coords: tuple[str, str],
+    right_coords: tuple[str, str],
+) -> tuple[DataFrame, DataFrame]:
+    """Each side with its per-ROW ``cos(radians(lat))`` as ``_l_coslat``
+    / ``_r_coslat`` — paid once per point before any pairing or cell
+    replication, not once per pair (haversine_meters_coslat is
+    bit-identical to the per-pair form)."""
+    return (
+        left.withColumn("_l_coslat", F.cos(F.radians(F.col(left_coords[0])))),
+        right.withColumn("_r_coslat", F.cos(F.radians(F.col(right_coords[0])))),
+    )
 
 
 def _dist_and_rank(
@@ -52,25 +90,25 @@ def _dist_and_rank(
     functions/geo.py::haversine_meters' expression shape (degrees
     subtracted before radians; atan2 form) so the values are
     bit-identical to the unranked formula the oracle mirrors. cos(lat)
-    comes from the precomputed per-POINT columns ``_l_coslat`` /
-    ``_r_coslat`` when the caller provides them — the same
+    comes from the per-POINT columns ``_l_coslat`` / ``_r_coslat`` that
+    every caller's pairs carry (_with_coslat) — the same
     cos(radians(lat)) expression, evaluated per point instead of per
     pair. Measured 30% off the grid-join wall time at sf0.1.
     """
     lat1, lon1 = F.col(left_coords[0]), F.col(left_coords[1])
     lat2, lon2 = F.col(right_coords[0]), F.col(right_coords[1])
-    cos1 = F.col("_l_coslat") if "_l_coslat" in joined.columns else F.cos(F.radians(lat1))
-    cos2 = F.col("_r_coslat") if "_r_coslat" in joined.columns else F.cos(F.radians(lat2))
     a = (
         F.pow(F.sin(F.radians(lat2 - lat1) / 2), 2)
-        + cos1 * cos2 * F.pow(F.sin(F.radians(lon2 - lon1) / 2), 2)
+        + F.col("_l_coslat")
+        * F.col("_r_coslat")
+        * F.pow(F.sin(F.radians(lon2 - lon1) / 2), 2)
     )
     # row_number (not rank) + right-id tie-break: deterministic under equal
     # distances — SURVEY.md §7.4 flags the reference's tie-sensitivity
     # (src/preprocess.py:91,116) as a parity hazard.
     order = Window.partitionBy(left_id).orderBy(F.col("_hav_a").asc(), F.col(right_id).asc())
     dist = (
-        F.lit(2.0 * _EARTH_RADIUS_M)
+        F.lit(2.0 * EARTH_RADIUS_M)
         * F.atan2(F.sqrt(F.col("_hav_a")), F.sqrt(1 - F.col("_hav_a")))
     )
     if a_bound_col is not None:
@@ -127,8 +165,8 @@ def knn_join(
 
     ``max_broadcast_rows`` guards the quadratic path at scale: the
     broadcast (right) side is counted first and the call fails loudly if
-    it exceeds the cap, pointing at ``knn_join_grid`` — the cost is one
-    cheap count of the SMALL side, never a scan of ``left``. Pass
+    it exceeds the cap, pointing at ``knn_join_grid_exact`` — the cost
+    is one cheap count of the SMALL side, never a scan of ``left``. Pass
     ``None`` to opt out (verification twins at fixture scale).
 
     ``a_bound_col`` (optional, a column on ``left``): per-point upper
@@ -142,11 +180,10 @@ def knn_join(
         if n_right > max_broadcast_rows:
             raise ValueError(
                 f"knn_join broadcast side has {n_right} rows > "
-                f"max_broadcast_rows={max_broadcast_rows}; use knn_join_grid "
-                "(bucketed scale path) or pass max_broadcast_rows=None"
+                f"max_broadcast_rows={max_broadcast_rows}; use knn_join_grid_exact "
+                "(exact bucketed scale path) or pass max_broadcast_rows=None"
             )
-    lcos = left.withColumn("_l_coslat", F.cos(F.radians(F.col(left_coords[0]))))
-    rcos = right.withColumn("_r_coslat", F.cos(F.radians(F.col(right_coords[0]))))
+    lcos, rcos = _with_coslat(left, right, left_coords, right_coords)
     joined = lcos.crossJoin(F.broadcast(rcos))
     return _dist_and_rank(
         joined, left_id, right_id, left_coords, right_coords, k,
@@ -154,55 +191,34 @@ def knn_join(
     )
 
 
-def estimate_cell_deg(
-    points: DataFrame,
-    k: int,
-    coords: tuple[str, str] = ("rlat", "rlon"),
-    sample_fraction: float | None = None,
-    safety: float = 4.0,
-    seed: int = 42,
-) -> float:
-    """Data-driven ``cell_deg`` for ``knn_join_grid``: size cells so a 3x3
-    neighbor block is EXPECTED to hold ``safety * k`` points.
-
-    Density comes from one pass over (a seeded sample of) ``points``: a
-    1%–99% quantile-trimmed bounding box (outliers would explode the box
-    and undersize the cells) and a count. Solving
-    9 * cell² * density = safety * k gives
-    cell = sqrt(safety * k * area / (9 * n)).
-
-    Assumes roughly uniform density inside the trimmed box — the right
-    prior for city-scale point sets like the reference's road network
-    (SURVEY §4); for heavily clustered data raise ``safety`` or validate
-    with a sampled exactness probe against ``knn_join`` (the shipped
-    tests do exactly that). Driver-side scalars here are config
-    estimation, not data movement — two tiny jobs on the sample.
-    """
-    area, n = _density_scan(points, coords, sample_fraction, seed)
-    if n < k + 1:
-        raise ValueError(f"need more than k={k} points to estimate density, got {n}")
-    # 98% trim per axis keeps ~96% of points in the box; fold into density.
-    return float((safety * k * area / (9.0 * 0.96 * n)) ** 0.5)
+#: A 3x3 block of c-degree cells spans 9·c² square degrees, and the
+#: 1%–99% trim per axis keeps ~96% of the points inside the measured box.
+_BLOCK_FILL = 9.0 * 0.96
 
 
-def _density_scan(
-    points: DataFrame,
-    coords: tuple[str, str],
-    sample_fraction: float | None,
-    seed: int,
-) -> tuple[float, int]:
+def _density_cell_deg(area: float, n: int, k: int) -> float:
+    """Cell size whose 3x3 block is EXPECTED to hold ``SAFETY * k`` of
+    ``n`` points spread roughly uniformly over ``area`` square degrees:
+    solving _BLOCK_FILL · cell² · n / area = SAFETY · k."""
+    return float((SAFETY * k * area / (_BLOCK_FILL * n)) ** 0.5)
+
+
+def _block_occupancy(cell_deg: float, n: int, area: float) -> float:
+    """Expected points in one 3x3 block of ``cell_deg`` cells (at most n)
+    — the same uniform-density model as :func:`_density_cell_deg`."""
+    return min(_BLOCK_FILL * cell_deg**2 * n / area, float(n))
+
+
+def _density_scan(points: DataFrame, coords: tuple[str, str]) -> tuple[float, int]:
     """Trimmed bounding-box area + row count in ONE fused agg job
     (percentile_approx is an aggregate, so it shares the scan with the
     count — measured vs the two-job approxQuantile-then-count form this
-    replaced). The count is reused by ``knn_join_grid_exact``'s
-    residue-fallback sizing so the scan is paid once."""
+    replaced). A 1%–99% quantile trim per axis keeps outliers from
+    exploding the box and undersizing the cells. The count is reused by
+    ``knn_join_grid_exact``'s residue-fallback sizing so the scan is
+    paid once."""
     lat, lon = coords
-    pts = (
-        points.sample(withReplacement=False, fraction=sample_fraction, seed=seed)
-        if sample_fraction is not None
-        else points
-    )
-    row = pts.agg(
+    row = points.agg(
         F.percentile_approx(lat, F.array(F.lit(0.01), F.lit(0.99)), 10000).alias("qlat"),
         F.percentile_approx(lon, F.array(F.lit(0.01), F.lit(0.99)), 10000).alias("qlon"),
         # Same quantiles in the [0, 360) longitude representation: a
@@ -212,8 +228,10 @@ def _density_scan(
         # the cell size) honest for seam-straddling data, where the
         # naive box overestimated the area ~1000x and produced cells so
         # large the grid join degenerated toward the cross join.
+        # (lon + 360) % 360: non-negative dividend, so Spark's remainder
+        # is already the [0, 360) representative.
         F.percentile_approx(
-            F.pmod(F.col(lon) + F.lit(360.0), F.lit(360.0)),
+            (F.col(lon) + F.lit(360.0)) % F.lit(360.0),
             F.array(F.lit(0.01), F.lit(0.99)),
             10000,
         ).alias("qlon_wrapped"),
@@ -230,11 +248,99 @@ def _density_scan(
     return float(area), n
 
 
-def _with_cell(df: DataFrame, lat: str, lon: str, cell_deg: float) -> DataFrame:
-    """Assign each row its (cell_i, cell_j) grid cell."""
-    return df.withColumn(
-        "cell_i", F.floor(F.col(lat) / cell_deg).cast("long")
-    ).withColumn("cell_j", F.floor(F.col(lon) / cell_deg).cast("long"))
+def seam_shadows_active(lon_cell: float) -> bool:
+    """Whether the grid covers the antimeridian via shadow copies.
+
+    Two floors gate it: the ±360° shadow must land ≥3 cells from its
+    true copy (no self-join block overlap), and the exactness proof's
+    small-angle lon-coverage bound degrades by more than its 5%
+    curvature margin past ~60° cells (d >= b·(1 − g²/24), g in radians:
+    1 − (π/3)²/24 ≈ 0.954) — giant escalation cells therefore run
+    without shadows and the proof falls back to seam REFUSAL there;
+    radius IDW takes its exhaustive pairing instead."""
+    return lon_cell <= 60.0
+
+
+def _grid_candidates(
+    left: DataFrame,
+    right: DataFrame,
+    lat_cell: float,
+    lon_cell: float,
+    left_coords: tuple[str, str],
+    right_coords: tuple[str, str],
+    how: str = "inner",
+) -> DataFrame:
+    """The spatial family's candidate stage: every (left, right) pair
+    whose grid cells are at most one cell apart on each axis, carrying
+    both sides' ``_l_coslat`` / ``_r_coslat`` and the ``cell_i`` /
+    ``cell_j`` join keys.
+
+    Cells are ``lat_cell`` x ``lon_cell`` degrees (floor of the raw
+    coordinate over the cell). Each right point is replicated into its
+    cell and the 8 neighbors; left points join on their own cell only —
+    so every pair within one cell width per axis is a candidate, and
+    the join is a plain hash/sort-merge equi-join that AQE can size.
+    ``how='left_outer'`` keeps left points whose 3x3 block is empty as
+    one row with null right columns.
+
+    The ANTIMERIDIAN is covered by SHADOW replication (when
+    ``seam_shadows_active(lon_cell)``): right points within 3·lon_cell
+    of lon ±180 also emit the 3x3 block of their ∓360°-shifted
+    longitude. Coordinates stay raw (the haversine's sin² of half-angle
+    differences is wrap-correct as-is), so a seam-straddling pair lands
+    in the same cell block like any other pair, and interior data sees
+    the exact same tiling as without shadows. No pair is produced twice:
+    with cells ≤ 60° a shadow's cell_j is at least 360/lon_cell ≥ 6
+    cells from its true copy's, so the two 3x3 blocks are disjoint and a
+    left cell meets at most one of them — which is what lets radius IDW
+    sum over the candidates without double-counting a weight. Callers
+    whose cells are wider take an exhaustive pairing instead.
+    """
+    lcos, rcos = _with_coslat(left, right, left_coords, right_coords)
+    left_cells = lcos.withColumn(
+        "cell_i", F.floor(F.col(left_coords[0]) / lat_cell).cast("long")
+    ).withColumn("cell_j", F.floor(F.col(left_coords[1]) / lon_cell).cast("long"))
+
+    # Right-side replication in ONE pass: every point explodes into its
+    # 3x3 block; seam-band points ALSO emit the block of their shadow
+    # longitude — a per-row conditional concat, not a second scan/union
+    # branch (a union form re-read the whole right side and cost ~15% on
+    # the grid-heavy apm pipeline whose data never touches the seam).
+    rlat, rlon = F.col(right_coords[0]), F.col(right_coords[1])
+    bi = F.floor(rlat / lat_cell).cast("long")
+    bj = F.floor(rlon / lon_cell).cast("long")
+
+    def block(i0: Column, j0: Column) -> list[Column]:
+        return [
+            F.struct((i0 + a).alias("ci"), (j0 + b).alias("cj"))
+            for a in (-1, 0, 1)
+            for b in (-1, 0, 1)
+        ]
+
+    cells = F.array(*block(bi, bj))
+    if seam_shadows_active(lon_cell):
+        shifted = F.when(rlon > 0, rlon - F.lit(360.0)).otherwise(
+            rlon + F.lit(360.0)
+        )
+        bj_shadow = F.floor(shifted / lon_cell).cast("long")
+        empty = F.array().cast("array<struct<ci:bigint,cj:bigint>>")
+        cells = F.concat(
+            cells,
+            F.when(
+                F.abs(rlon) > F.lit(180.0 - 3.0 * lon_cell),
+                F.array(*block(bi, bj_shadow)),
+            ).otherwise(empty),
+        )
+    base = rcos.columns
+    right_cells = (
+        rcos.withColumn("__cell", F.explode(cells))
+        .select(
+            *base,
+            F.col("__cell.ci").alias("cell_i"),
+            F.col("__cell.cj").alias("cell_j"),
+        )
+    )
+    return left_cells.join(right_cells, ["cell_i", "cell_j"], how)
 
 
 def knn_join_grid(
@@ -250,10 +356,9 @@ def knn_join_grid(
 ) -> DataFrame:
     """Scale-path kNN join: equi-join on spatial grid cells (SURVEY.md §4).
 
-    Each right point is replicated into its cell and the 8 neighbors; left
-    points join on their own cell only — every pair within one cell width
-    is a candidate, and the join is a plain hash/sort-merge equi-join that
-    AQE can size. Exact whenever the true k-th neighbor lies within
+    Candidates come from the shared 3x3 grid stage (_grid_candidates,
+    square ``cell_deg`` cells, antimeridian shadows included), then the
+    usual rank. Exact whenever the true k-th neighbor lies within
     ``cell_deg`` degrees; callers pick ``cell_deg`` from data density
     (larger cell → closer to exhaustive, smaller → cheaper) — or use
     ``knn_join_grid_exact``, which turns that tuning into a guarantee.
@@ -263,81 +368,12 @@ def knn_join_grid(
     null ``right_id``/``distance_m`` (rank 1), making coverage holes
     visible in-band instead of requiring an anti-join to re-discover
     them. The public contract is the inner join.
-
-    The ANTIMERIDIAN is covered by SHADOW replication (when
-    ``seam_shadows_active``): right points within 3·cell_deg of lon ±180
-    get one extra copy whose CELL INDICES are computed from lon ∓ 360 —
-    coordinates stay raw (the haversine's sin² of half-angle differences
-    is wrap-correct as-is), so a seam-straddling pair lands in the same
-    cell block like any other pair. Interior data sees the exact same
-    tiling as without shadows (no anchor shift), and a shadow can never
-    double-join: its cell_j is ~360/cell_deg >= 6 cells away from the
-    true copy's.
     """
-    lcos = left.withColumn("_l_coslat", F.cos(F.radians(F.col(left_coords[0]))))
-    # cos(lat) computed once per point, BEFORE the 9x cell replication
-    rcos = right.withColumn("_r_coslat", F.cos(F.radians(F.col(right_coords[0]))))
-    left_cells = _with_cell(lcos, left_coords[0], left_coords[1], cell_deg)
-
-    # Right-side replication in ONE pass: every point explodes into its
-    # 3x3 block; seam-band points (within 3·cell_deg of lon ±180) ALSO
-    # emit the 3x3 block of their ±360°-shifted longitude — a per-row
-    # conditional concat, not a second scan/union branch (a union form
-    # re-read the whole right side and cost ~15% on the grid-heavy apm
-    # pipeline whose data never touches the seam).
-    rlat, rlon = F.col(right_coords[0]), F.col(right_coords[1])
-    bi = F.floor(rlat / cell_deg).cast("long")
-    bj = F.floor(rlon / cell_deg).cast("long")
-
-    def block(i0: Column, j0: Column) -> list[Column]:
-        return [
-            F.struct((i0 + a).alias("ci"), (j0 + b).alias("cj"))
-            for a in (-1, 0, 1)
-            for b in (-1, 0, 1)
-        ]
-
-    cells = F.array(*block(bi, bj))
-    if seam_shadows_active(cell_deg):
-        shifted = F.when(rlon > 0, rlon - F.lit(360.0)).otherwise(
-            rlon + F.lit(360.0)
-        )
-        bj_shadow = F.floor(shifted / cell_deg).cast("long")
-        empty = F.array().cast("array<struct<ci:bigint,cj:bigint>>")
-        cells = F.concat(
-            cells,
-            F.when(
-                F.abs(rlon) > F.lit(180.0 - 3.0 * cell_deg),
-                F.array(*block(bi, bj_shadow)),
-            ).otherwise(empty),
-        )
-    base = rcos.columns
-    right_cells = (
-        rcos.withColumn("__cell", F.explode(cells))
-        .select(
-            *base,
-            F.col("__cell.ci").alias("cell_i"),
-            F.col("__cell.cj").alias("cell_j"),
-        )
+    joined = _grid_candidates(
+        left, right, cell_deg, cell_deg, left_coords, right_coords, _how
     )
-    joined = left_cells.join(right_cells, ["cell_i", "cell_j"], _how)
     out = _dist_and_rank(joined, left_id, right_id, left_coords, right_coords, k)
     return out.drop("cell_i", "cell_j")
-
-
-def seam_shadows_active(cell_deg: float) -> bool:
-    """Whether knn_join_grid covers the antimeridian via shadow copies.
-
-    Two floors gate it: the ±360° shadow must land ≥3 cells from its
-    true copy (no self-join block overlap), and the exactness proof's
-    small-angle lon-coverage bound degrades by more than its 5%
-    curvature margin past ~60° cells (d >= b·(1 − g²/24), g in radians:
-    1 − (π/3)²/24 ≈ 0.954) — giant escalation cells therefore run
-    without shadows and the proof falls back to seam REFUSAL there."""
-    return cell_deg <= 60.0
-
-
-# meters per degree of latitude (R * pi / 180); longitude shrinks by cos(lat).
-_M_PER_DEG = 111194.92664455873
 
 
 def knn_join_grid_exact(
@@ -349,12 +385,6 @@ def knn_join_grid_exact(
     right_id: str = "rid",
     left_coords: tuple[str, str] = ("lat", "lon"),
     right_coords: tuple[str, str] = ("rlat", "rlon"),
-    growth: float = 3.0,
-    max_rounds: int = 3,
-    margin: float = 0.95,
-    safety: float = 32.0,
-    verify: str = "eager",
-    fallback_budget_pairs: int = 2_000_000,
 ) -> DataFrame:
     """EXACT kNN join at grid cost: density-sized cells + per-point
     verification + escalation.
@@ -366,19 +396,19 @@ def knn_join_grid_exact(
     dataset went quadratic at 10x scale). This wrapper makes exactness a
     guarantee instead of a tuning outcome:
 
-      1. size cells from data density (``estimate_cell_deg``) unless
-         given — a 3x3 block is EXPECTED to hold ~4k candidates;
+      1. size cells from data density (``_density_cell_deg``) unless
+         given — a 3x3 block is EXPECTED to hold ``SAFETY``·k candidates;
       2. grid-join + rank, then verify per left point: it is PROVEN
          exact iff it found k candidates AND its k-th distance is under
          the radius the 3x3 block guarantees to cover
-         (cell_deg * m/deg * cos(lat), x ``margin`` for curvature slack
+         (cell_deg * m/deg * cos(lat), x ``MARGIN`` for curvature slack
          — anything outside the block differs by more than one cell in
          some axis and is therefore farther);
-      3. only unproven points re-run at ``growth``x the cell — unless
+      3. only unproven points re-run at ``GROWTH``x the cell — unless
          the residue × |right| is already small enough
-         (``fallback_budget_pairs``, and |right| under the broadcast
+         (``FALLBACK_BUDGET_PAIRS``, and |right| under the broadcast
          cap) that the exhaustive broadcast join finishes it cheaper
-         than another grid round; after ``max_rounds`` the stragglers
+         than another grid round; after ``MAX_ROUNDS`` the stragglers
          fall back to the exhaustive join regardless.
 
     The verification window shares the ranking window's partitioning, so
@@ -387,7 +417,7 @@ def knn_join_grid_exact(
     and how the proof closes them: cells degrade near the poles
     (``worst_cos`` goes to 0, so polar points never prove); the
     ANTIMERIDIAN is handled constructively — seam-band right points get
-    ±360° shadow copies for cell assignment (seam_shadows_active), so
+    ±360° shadow copies for cell assignment (_grid_candidates), so
     seam-straddling points prove like any others; only under giant
     shadow-less escalation cells does the proof fall back to refusing
     seam-adjacent points (|lon| > 180 − 2·cell_deg → unproven).
@@ -396,53 +426,28 @@ def knn_join_grid_exact(
     guarantee therefore holds for global extents, not just city-scale
     data.
 
-    ``verify`` controls eagerness. The default ``'eager'`` runs the
-    proof/escalation loop, which triggers a few small Spark actions per
-    round (a convergence scalar) plus an eager ``localCheckpoint`` of
-    the (≤ k·|left|-row) result — the price of the guarantee. Pass
-    ``verify='off'`` (with an explicit ``cell_deg``) for a fully LAZY
-    single grid pass that composes into a larger unexecuted plan with
-    ZERO jobs at construction time — exactness is then back to the
-    plain-grid contract ("exact iff the true k-th neighbor is within
-    one cell width"), so use it only where a downstream gate tolerates
-    that, and keep ``'eager'`` anywhere the guarantee matters.
+    The loop triggers a few small Spark actions per round (a
+    convergence scalar) plus an eager ``localCheckpoint`` of the
+    (≤ k·|left|-row) result — the price of the guarantee.
 
     ``left_id`` must uniquely key ``left`` (the ranking and proof
     windows partition by it — duplicate ids would merge distinct
     points' candidate lists).
     """
-    if verify not in ("eager", "off"):
-        raise ValueError(f"verify must be 'eager' or 'off', got {verify!r}")
     n_right: int | None = None
     area: float | None = None
     if cell_deg is None:
-        # safety=32, not estimate_cell_deg's occupancy-oriented 4: the
-        # PROOF needs cell >= ~3x the typical k-th-neighbor distance
-        # r_k = sqrt(kA/(pi n)) (plus cos-lat slack), and
-        # cell/r_k = sqrt(safety*pi/8.64) — safety 32 puts round one at
-        # ~3.4x r_k so almost every point proves immediately (expected
-        # block occupancy 32k candidates per point: bounded, linear).
-        # Undersized cells don't break exactness, they just pay extra
-        # escalation rounds (measured: safety 4 cost 3 rounds ~= 3x the
-        # wall time of one well-sized round).
-        area, n_right = _density_scan(right, right_coords, None, 42)
+        area, n_right = _density_scan(right, right_coords)
         if n_right < k + 1:
             raise ValueError(
                 f"need more than k={k} points to estimate density, got {n_right}"
             )
-        cell_deg = float((safety * k * area / (9.0 * 0.96 * n_right)) ** 0.5)
-
-    if verify == "off":
-        # Composition mode: one lazy grid pass, no actions, no persist —
-        # embeds into a larger plan without triggering jobs here.
-        return knn_join_grid(
-            left, right, k, cell_deg, left_id, right_id, left_coords, right_coords
-        )
+        cell_deg = _density_cell_deg(area, n_right, k)
 
     if n_right is not None and n_right <= 1_000_000:
         # Round-0 short-circuit, the in-loop residue cost model applied
         # to the WHOLE problem (r14; guide §1.2): when |left|·|right| is
-        # already inside ``fallback_budget_pairs``, a grid round cannot
+        # already inside ``FALLBACK_BUDGET_PAIRS``, a grid round cannot
         # beat the one bounded broadcast join it would fall back to
         # anyway — at bench scale the grid round + proof + escalation
         # machinery was ~10 of the query's 15 jobs for zero benefit
@@ -452,7 +457,7 @@ def knn_join_grid_exact(
         # scale, never a full pass over left. Exactness is unchanged —
         # the exhaustive join is the same fallback the loop trusts, and
         # both paths share _dist_and_rank's deterministic tie-break.
-        cap = fallback_budget_pairs // max(n_right, 1)
+        cap = FALLBACK_BUDGET_PAIRS // max(n_right, 1)
         if cap > 0 and left.select(left_id).limit(cap + 1).count() <= cap:
             out = knn_join(
                 left, right, k, left_id, right_id, left_coords,
@@ -467,7 +472,7 @@ def knn_join_grid_exact(
     resolved_chunks: list[DataFrame] = []
     rounds = cachereg.generation(_KNN_ROUNDS_SITE)
     out_cols = None
-    for _ in range(max_rounds):
+    for _ in range(MAX_ROUNDS):
         # LEFT OUTER grid join: a left point whose 3x3 block is EMPTY
         # surfaces as one null-candidate row (rank 1) instead of
         # vanishing from the output — so coverage holes are detected
@@ -515,7 +520,7 @@ def knn_join_grid_exact(
         proven = F.coalesce(
             seam_safe
             & (nk == k)
-            & (dk <= F.lit(cell_deg * _M_PER_DEG * margin) * worst_cos),
+            & (dk <= F.lit(cell_deg * _M_PER_DEG * MARGIN) * worst_cos),
             F.lit(False),
         )
         flagged = rounds.persist(
@@ -545,7 +550,7 @@ def knn_join_grid_exact(
             F.col("_nk") == k,
             F.pow(
                 F.sin(
-                    F.col("_dk") * F.lit((1.0 + 1e-9) / (2.0 * _EARTH_RADIUS_M))
+                    F.col("_dk") * F.lit((1.0 + 1e-9) / (2.0 * EARTH_RADIUS_M))
                 ),
                 2,
             ),
@@ -595,7 +600,7 @@ def knn_join_grid_exact(
         # candidates found) put all |right| rows through it. A grid
         # round costs ~0.5 s fixed (join+window+action machinery) plus
         # its own occupancy-sized window — and typically still needs a
-        # fallback after it. ``fallback_budget_pairs`` (2M) remains the
+        # fallback after it. ``FALLBACK_BUDGET_PAIRS`` (2M) remains the
         # unconditional floor for tiny residues; when density is
         # unknown (caller-supplied cell_deg) the floor is the only
         # criterion. At cluster scale a huge right side fails the
@@ -626,21 +631,16 @@ def knn_join_grid_exact(
                 math.radians(min(float(max_bad_lat or 0.0) + cell_deg, 89.0))
             )
             if cos_w > 0.05:
-                needed = max_dk / (_M_PER_DEG * margin * cos_w)
+                needed = max_dk / (_M_PER_DEG * MARGIN * cos_w)
         next_cell = min(
-            max(cell_deg * growth, needed * 1.05), cell_deg * growth * 8.0
+            max(cell_deg * GROWTH, needed * 1.05), cell_deg * GROWTH * 8.0
         )
         if n_right is None:
             n_right = right.count()
-        exhaust_now = n_bad * n_right <= fallback_budget_pairs
+        exhaust_now = n_bad * n_right <= FALLBACK_BUDGET_PAIRS
         if not exhaust_now and area is not None:
-            occ_cur = min(
-                9.0 * cell_deg**2 * 0.96 * n_right / area, float(n_right)
-            )
-            occ_next = min(
-                9.0 * next_cell**2 * 0.96 * n_right / area,
-                float(n_right),
-            )
+            occ_cur = _block_occupancy(cell_deg, n_right, area)
+            occ_next = _block_occupancy(next_cell, n_right, area)
             exhaust_win_rows = (
                 n_bad_nobound * n_right + (n_bad - n_bad_nobound) * occ_cur
             )
@@ -658,7 +658,7 @@ def knn_join_grid_exact(
     if residue is not None:
         # Exhaustive join for the residue. Correct at any geometry; the
         # residue is tiny by construction (short-circuit bound or
-        # max_rounds of proof failures). The per-point _a_bound from the
+        # MAX_ROUNDS of proof failures). The per-point _a_bound from the
         # last proof round (k-th-candidate distance, an upper bound on
         # the true k-th) prunes the ranking window's input — the true
         # top-k all sit at or under the bound, so the prefiltered result
@@ -678,7 +678,7 @@ def knn_join_grid_exact(
         out = out.unionByName(chunk)
     # Materialize the (small, <= k*|left|-row) result and cut its lineage so
     # the per-round candidate caches can be released NOW — without this,
-    # each call leaks up to max_rounds persisted candidate joins for the
+    # each call leaks up to MAX_ROUNDS persisted candidate joins for the
     # rest of the session.
     out = cachereg.checkpoint(_KNN_SITE, out, eager=True)
     cachereg.release(_KNN_ROUNDS_SITE)
@@ -758,15 +758,16 @@ def idw_interpolate_radius(
     weights every sample), which is fine while stations stay
     station-like (thousands) but quadratic if both sides scale. The
     standard practice at scale is a search radius: only stations within
-    ``radius_m`` contribute. Implemented as the same 3x3 grid equi-join
-    as the kNN scale path — cells sized so one cell always covers the
-    radius in longitude degrees at the EXTREME station latitude (exact
-    max(|lat|) from one fused agg scan; a quantile-based band would
-    silently drop in-radius stations for latitude-outlier points) —
-    then the exact
-    haversine filter and the same NaN-masked weighted aggregation. Cost
-    per sample is the station count inside ~9 radius-cells: bounded by
-    physics, not by table size.
+    ``radius_m`` contribute. Candidates come from the same 3x3 grid
+    stage as the kNN scale path (_grid_candidates, antimeridian shadows
+    included), with cells sized so one cell always covers the radius:
+    latitude cells are radius-sized, longitude cells are inflated by
+    1/cos at the EXTREME station latitude (exact max(|lat|) from one
+    fused agg scan; a quantile-based band would silently drop in-radius
+    stations for latitude-outlier points). Then a latitude band, the
+    exact haversine filter and the same NaN-masked weighted
+    aggregation. Cost per sample is the station count inside ~9
+    radius-cells: bounded by physics, not by table size.
 
     Samples with NO station inside the radius produce no output row
     (exactly like the SQL GROUP BY over radius-filtered pairs that
@@ -778,9 +779,11 @@ def idw_interpolate_radius(
     shrinking cells (which would DROP in-radius high-latitude pairs),
     the operator falls back to the exhaustive broadcast pairing with
     the identical radius filter + aggregation, so results match the
-    grid path at any latitude. Cells also carry a 5% slack on top of
-    the worst-latitude bound, mirroring the kNN proof's curvature
-    margin (negligible at km-scale radii, free to keep).
+    grid path at any latitude. It does the same when the longitude cell
+    is too wide for shadow replication (seam_shadows_active), where the
+    cells cover most of the globe anyway. Cells also carry a 5% slack
+    on top of the worst-latitude bound, mirroring the kNN proof's
+    curvature margin (negligible at km-scale radii, free to keep).
     """
     s_lat, s_lon = sample_coords
     t_lat, t_lon = station_coords
@@ -791,67 +794,20 @@ def idw_interpolate_radius(
     # plus the radius itself in degrees.
     worst_lat = float(max_abs_lat or 0.0) + radius_m / _M_PER_DEG
     min_cos_lat = math.cos(math.radians(min(worst_lat, 90.0)))
-    # polar fallback: exhaustive, never lossy
-    use_grid = not (worst_lat >= 90.0 or min_cos_lat < 0.05)
-
-    # Per-row cosines hoisted out of the candidate loop (bit-exact; the
-    # station side computes its cosine BEFORE the 9x cell replication,
-    # so it is also paid once per station, not once per replica).
-    samples = samples.withColumn("__idw_cos_s", F.cos(F.radians(F.col(s_lat))))
-    stations = stations.withColumn("__idw_cos_t", F.cos(F.radians(F.col(t_lat))))
-    d = haversine_meters_coslat(
-        s_lat, s_lon, t_lat, t_lon, "__idw_cos_s", "__idw_cos_t"
+    # 1.05: curvature/rounding slack — oversizing cells is always safe
+    # (more candidates), undersizing drops in-radius pairs. Axes are
+    # sized independently (r6): latitude degrees are radius-sized
+    # everywhere, only LONGITUDE needs the 1/cos inflation — a shared
+    # inflated cell wastes a cos(lat) factor of candidates on the lat
+    # axis (~30% fewer haversine evaluations at 45 deg, more toward the
+    # poles).
+    lat_cell = radius_m / _M_PER_DEG * 1.05
+    lon_cell = radius_m / _M_PER_DEG / min_cos_lat * 1.05
+    # polar or globe-wide cells: exhaustive, never lossy
+    use_grid = (
+        worst_lat < 90.0 and min_cos_lat >= 0.05 and seam_shadows_active(lon_cell)
     )
     if use_grid:
-        # 1.05: curvature/rounding slack — oversizing cells is always
-        # safe (more candidates), undersizing drops in-radius pairs.
-        # Axes are sized independently (r6): latitude degrees are
-        # radius-sized everywhere, only LONGITUDE needs the 1/cos
-        # inflation — a shared inflated cell wastes a cos(lat) factor
-        # of candidates on the lat axis (~30% fewer haversine
-        # evaluations at 45 deg, more toward the poles).
-        lat_cell = radius_m / _M_PER_DEG * 1.05
-        cell_deg = radius_m / _M_PER_DEG / min_cos_lat * 1.05
-        # ANTIMERIDIAN: longitude cells must WRAP, or an in-radius pair
-        # straddling lon ±180 lands in far-apart cell_j and is silently
-        # dropped (the kNN path refuses proofs near the seam instead;
-        # an aggregate can't refuse, so the grid itself wraps). The lon
-        # axis is tiled with n_lon = floor(360/cell_deg) cells of
-        # exactly 360/n_lon >= cell_deg degrees (oversize-safe), and
-        # cell_j arithmetic is mod n_lon. Below 4 lon cells the 3x3
-        # neighbor block would self-overlap (duplicate pairs would
-        # double-count IDW sums) — the cells cover most of the globe
-        # then anyway, so use the exhaustive pairing.
-        n_lon = int(360.0 // cell_deg)
-        if n_lon < 4:
-            use_grid = False
-    if use_grid:
-        lon_cell = 360.0 / n_lon
-
-        def wrap_j(col: Column) -> Column:
-            return F.pmod(F.floor((col + F.lit(180.0)) / F.lit(lon_cell)).cast("long"), F.lit(n_lon))
-
-        sample_cells = samples.withColumn(
-            "cell_i", F.floor(F.col(s_lat) / lat_cell).cast("long")
-        ).withColumn("cell_j", wrap_j(F.col(s_lon)))
-        base = stations.columns
-        offsets = F.array(
-            *[
-                F.struct(F.lit(a).alias("di"), F.lit(b).alias("dj"))
-                for a in (-1, 0, 1)
-                for b in (-1, 0, 1)
-            ]
-        )
-        station_cells = (
-            stations.withColumn("base_i", F.floor(F.col(t_lat) / lat_cell).cast("long"))
-            .withColumn("base_j", wrap_j(F.col(t_lon)))
-            .withColumn("off", F.explode(offsets))
-            .select(
-                *base,
-                (F.col("base_i") + F.col("off.di")).alias("cell_i"),
-                F.pmod(F.col("base_j") + F.col("off.dj"), F.lit(n_lon)).alias("cell_j"),
-            )
-        )
         # Cheap latitude band BEFORE the trig: a 3-cell block spans
         # ~3.15r of latitude but only |dlat| <= r can be in radius —
         # one abs-subtract rejects ~1/3 of candidates without touching
@@ -860,11 +816,13 @@ def idw_interpolate_radius(
         # longitude gets no such prefilter — its degree width varies
         # and wraps, exactly what the haversine handles).
         lat_band = radius_m / _M_PER_DEG * 1.0001
-        joined = sample_cells.join(station_cells, ["cell_i", "cell_j"]).filter(
-            F.abs(F.col(s_lat) - F.col(t_lat)) <= lat_band
-        )
+        joined = _grid_candidates(
+            samples, stations, lat_cell, lon_cell, sample_coords, station_coords
+        ).filter(F.abs(F.col(s_lat) - F.col(t_lat)) <= lat_band)
     else:
-        joined = samples.crossJoin(F.broadcast(stations))
+        scos, tcos = _with_coslat(samples, stations, sample_coords, station_coords)
+        joined = scos.crossJoin(F.broadcast(tcos))
+    d = haversine_meters_coslat(s_lat, s_lon, t_lat, t_lon, "_l_coslat", "_r_coslat")
     joined = (
         joined.withColumn("_d", d)
         .filter(F.col("_d") <= radius_m)

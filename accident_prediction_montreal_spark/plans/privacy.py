@@ -18,6 +18,10 @@ from accident_prediction_montreal_spark.operators.mixing import (
     lcg_uniform,
     lcg_uniform_sql,
 )
+from accident_prediction_montreal_spark.operators.text import (
+    EMAIL_PATTERN,
+    PHONE_PATTERN,
+)
 from accident_prediction_montreal_spark.plans.registry import register
 from accident_prediction_montreal_spark.sources.registry import load_table
 
@@ -234,10 +238,6 @@ def p15_generalization_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_EMAIL = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
-_PHONE = r"\+?[0-9][0-9()\- ]{6,}[0-9]"
-
-
 @register(
     "privacy_release_pipeline",
     oracle=f"""
@@ -249,9 +249,9 @@ _PHONE = r"\+?[0-9][0-9()\- ]{6,}[0-9]"
     ),
     scrub AS (
       SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs,
-        CAST(SUM(len(regexp_extract_all(t, '{_EMAIL}'))) AS DOUBLE) AS n_emails,
+        CAST(SUM(len(regexp_extract_all(t, '{EMAIL_PATTERN}'))) AS DOUBLE) AS n_emails,
         CAST(SUM(len(regexp_extract_all(
-          regexp_replace(t, '{_EMAIL}', '<EMAIL>', 'g'), '{_PHONE}'))) AS DOUBLE)
+          regexp_replace(t, '{EMAIL_PATTERN}', '<EMAIL>', 'g'), '{PHONE_PATTERN}'))) AS DOUBLE)
           AS n_phones
       FROM planted
     ),

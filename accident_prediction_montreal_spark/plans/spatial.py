@@ -335,14 +335,15 @@ def a6_idw_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("c_custkey", F.round("acctbal_idw", 6).alias("acctbal_idw"))
 
 
-# --- A6 radius IDW across the antimeridian (r6: wrapped lon cells) ------------
+# --- A6 radius IDW across the antimeridian (shadow cells) ---------------------
 
 # MID-latitude seam fixture (~45.4 N, lon raw 179.9..180.24 wrapping to
 # the negative side): cos(lat) ~ 0.70, so idw_interpolate_radius takes
 # its GRID path (the polar fixture above would fall back to exhaustive
-# and never exercise the wrap) — in-radius sample-station pairs
-# routinely straddle lon ±180, and a non-wrapping cell_j would silently
-# drop their weight from the interpolation sums.
+# and never exercise the seam) — in-radius sample-station pairs
+# routinely straddle lon ±180, and a grid without the seam stations'
+# ±360° shadow cells would silently drop their weight from the
+# interpolation sums.
 IDW_SEAM_LAT = "45.4 + (c_custkey % 997) / 3000.0"
 IDW_SEAM_LON_RAW = "179.9 + (c_custkey % 1009) / 3000.0"
 IDW_SEAM_RLAT = "45.4 + (s_suppkey % 89) / 300.0"
@@ -379,11 +380,11 @@ IDW_SEAM_RLON_RAW = "179.9 + (s_suppkey % 97) / 300.0"
     description="Radius-truncated IDW over an ANTIMERIDIAN-straddling "
     "mid-latitude fixture (r6): the oracle's exhaustive cross join is "
     "wrap-correct by construction, so stations within 2 km ACROSS lon "
-    "±180 must contribute their weight — exercising the r6 modular "
-    "lon-cell wrap in idw_interpolate_radius's grid path (cos ~0.70 "
-    "here, so the polar fallback does NOT absorb the case; a "
-    "non-wrapping grid loses the cross-seam stations and the weighted "
-    "means hash-mismatch).",
+    "±180 must contribute their weight — exercising the ±360° shadow "
+    "cells of the grid-candidate stage idw_interpolate_radius shares "
+    "with the kNN scale path (cos ~0.70 here, so the polar fallback "
+    "does NOT absorb the case; a grid without shadows loses the "
+    "cross-seam stations and the weighted means hash-mismatch).",
 )
 def a6_idw_seam(spark: SparkSession, sf_dir: str) -> DataFrame:
     from accident_prediction_montreal_spark.operators.spatial import (

@@ -18,6 +18,8 @@ from accident_prediction_montreal_spark.operators.mixing import (
     lcg_uniform_sql,
 )
 from accident_prediction_montreal_spark.operators.text import (
+    EMAIL_PATTERN,
+    PHONE_PATTERN,
     STOPWORDS,
     fingerprint,
     language_id,
@@ -262,7 +264,7 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_pii_scrub",
-    oracle="""
+    oracle=f"""
     WITH planted AS (
       SELECT doc_id,
         text || ' contact user' || doc_id || '@example.com or +1 (514) 555-'
@@ -271,10 +273,10 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT doc_id,
       CAST(len(regexp_extract_all(t,
-        '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}')) AS BIGINT) AS n_emails,
+        '{EMAIL_PATTERN}')) AS BIGINT) AS n_emails,
       md5(regexp_replace(regexp_replace(t,
-        '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        '\\+?[0-9][0-9()\\- ]{6,}[0-9]', '<PHONE>', 'g')) AS masked_md5
+        '{EMAIL_PATTERN}', '<EMAIL>', 'g'),
+        '{PHONE_PATTERN}', '<PHONE>', 'g')) AS masked_md5
     FROM planted
     """,
     description="PII scrubbing (pre-training text scrub): plant a deterministic "
@@ -285,10 +287,7 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     "mask hash-mismatches.",
 )
 def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from accident_prediction_montreal_spark.operators.text import (
-        EMAIL_PATTERN,
-        mask_pii,
-    )
+    from accident_prediction_montreal_spark.operators.text import mask_pii
 
     docs = load_table(spark, "documents", sf_dir)
     planted = docs.select(

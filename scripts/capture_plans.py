@@ -6,19 +6,44 @@ Writes <out_dir>/<query>_<suffix>.txt for each query (default: the bench
 HEADLINE set). Queries whose fn() executes eagerly (writes fixtures, fits
 models) still produce the plan of the RETURNED DataFrame — the judge-facing
 artifact for the final query shape.
+
+Captures are normalised (``normalise``) so two captures of the same tree
+are byte-identical and a plain ``diff`` compares two trees: session-global
+counters are renumbered by first appearance, and the build time goes to
+stdout only.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 from pathlib import Path
 import time
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from accident_prediction_montreal_spark.plans import REGISTRY  # noqa: E402
-from accident_prediction_montreal_spark.session import get_session  # noqa: E402
+#: Session-global counters a formatted plan prints: expression ids
+#: (``name#12``), exchange plan ids (``[plan_id=7]``) and the RDD ids of
+#: checkpointed or DataFrame-from-RDD leaves (``MapPartitionsRDD[309]``).
+_COUNTERS = (
+    re.compile(r"(#)(\d+)"),
+    re.compile(r"(plan_id=)(\d+)"),
+    re.compile(r"(RDD\[)(\d+)"),
+)
+
+
+def normalise(plan: str) -> str:
+    """Renumber each counter family by first appearance (1, 2, ...), so
+    references inside one plan stay readable while the numbering no
+    longer depends on what the session ran before."""
+    for pattern in _COUNTERS:
+        seen: dict[str, int] = {}
+        plan = pattern.sub(
+            lambda m: f"{m.group(1)}{seen.setdefault(m.group(2), len(seen) + 1)}",
+            plan,
+        )
+    return plan
 
 
 def formatted_plan(df) -> str:
@@ -28,6 +53,9 @@ def formatted_plan(df) -> str:
 
 
 def main() -> None:
+    from accident_prediction_montreal_spark.plans import REGISTRY
+    from accident_prediction_montreal_spark.session import get_session
+
     out_dir, suffix = sys.argv[1], sys.argv[2]
     names = sys.argv[3:]
     if not names:
@@ -47,9 +75,9 @@ def main() -> None:
         build_s = time.perf_counter() - t0
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
-            f.write(f"-- {name} ({suffix}); fn-build+analyze: {build_s:.3f}s\n")
-            f.write(plan)
-        print(f"{name}: {build_s:.3f}s build -> {path}")
+            f.write(f"-- {name}\n")
+            f.write(normalise(plan))
+        print(f"{name}: {build_s:.3f}s fn-build+analyze -> {path}")
 
 
 if __name__ == "__main__":

@@ -56,7 +56,7 @@ def test_road_features_shape(spark, geo):
     }
 
 
-def test_matching_invariants(spark, geo):
+def test_matching_invariants(spark, geo, monkeypatch):
     roads, accidents, *_ = geo
     match = match_accidents_with_roads(accidents, roads, exhaustive=False).persist()
     # exactly one street per accident, every accident matched
@@ -67,6 +67,14 @@ def test_matching_invariants(spark, geo):
     a = {(r["accident_id"], r["street_id"]) for r in match.collect()}
     b = {(r["accident_id"], r["street_id"]) for r in exhaustive.collect()}
     assert a == b
+    # At these sizes knn_join_grid_exact answers with its round-0
+    # exhaustive short-circuit; a zero budget forces the grid rounds
+    # and the per-point proof under the matching wrapper.
+    from accident_prediction_montreal_spark.operators import spatial
+
+    monkeypatch.setattr(spatial, "FALLBACK_BUDGET_PAIRS", 0)
+    grid = match_accidents_with_roads(accidents, roads, exhaustive=False)
+    assert {(r["accident_id"], r["street_id"]) for r in grid.collect()} == b
 
 
 def test_full_dataset_and_training(spark, geo):

@@ -126,7 +126,8 @@ def test_estimate_cell_deg_grid_matches_exhaustive(spark):
     import random
 
     from accident_prediction_montreal_spark.operators.spatial import (
-        estimate_cell_deg,
+        _density_cell_deg,
+        _density_scan,
     )
 
     for seed, n_right in ((1, 120), (2, 400)):
@@ -146,7 +147,7 @@ def test_estimate_cell_deg_grid_matches_exhaustive(spark):
             ["id", "lat", "lon"],
         )
         k = 3
-        cell = estimate_cell_deg(right, k)
+        cell = _density_cell_deg(*_density_scan(right, ("rlat", "rlon")), k)
         got = {
             (r["id"], r["rid"], r["knn_rank"])
             for r in knn_join_grid(left, right, k=k, cell_deg=cell).collect()
@@ -160,7 +161,8 @@ def test_estimate_cell_deg_grid_matches_exhaustive(spark):
 
 def test_estimate_cell_deg_scales_with_density(spark):
     from accident_prediction_montreal_spark.operators.spatial import (
-        estimate_cell_deg,
+        _density_cell_deg,
+        _density_scan,
     )
 
     import random
@@ -170,11 +172,12 @@ def test_estimate_cell_deg_scales_with_density(spark):
         [(i, 45.0 + rng.random(), -73.0 + rng.random()) for i in range(n)],
         ["rid", "rlat", "rlon"],
     )
-    sparse, dense = estimate_cell_deg(mk(100), 3), estimate_cell_deg(mk(1600), 3)
+    cell = lambda df: _density_cell_deg(*_density_scan(df, ("rlat", "rlon")), 3)  # noqa: E731
+    sparse, dense = cell(mk(100)), cell(mk(1600))
     assert dense < sparse  # 16x density → ~4x smaller cells
 
 
-def test_knn_grid_exact_equals_exhaustive_even_with_empty_blocks(spark):
+def test_knn_grid_exact_equals_exhaustive_even_with_empty_blocks(spark, monkeypatch):
     """The escalating exact grid join must equal the exhaustive join even
     when the first round's cells are so small that some left points have
     EMPTY 3x3 blocks (the silent-loss regression: such points never
@@ -182,6 +185,7 @@ def test_knn_grid_exact_equals_exhaustive_even_with_empty_blocks(spark):
     anti-join, not dropped)."""
     import random
 
+    from accident_prediction_montreal_spark.operators import spatial
     from accident_prediction_montreal_spark.operators.spatial import (
         knn_join_grid_exact,
     )
@@ -199,15 +203,14 @@ def test_knn_grid_exact_equals_exhaustive_even_with_empty_blocks(spark):
         [(i, 45.40 + rng.random() * 0.31, -73.70 + rng.random() * 0.31) for i in range(40)],
         ["id", "lat", "lon"],
     )
+    # FALLBACK_BUDGET_PAIRS=0 disables the round-0 exhaustive
+    # short-circuit (this fixture is tiny, so the default budget would
+    # skip the grid machinery under test entirely).
+    monkeypatch.setattr(spatial, "FALLBACK_BUDGET_PAIRS", 0)
     for k in (1, 3):
-        # fallback_budget_pairs=0 disables the round-0 exhaustive
-        # short-circuit (this fixture is tiny, so the default budget
-        # would skip the grid machinery under test entirely).
         got = {
             (r["id"], r["rid"], r["knn_rank"])
-            for r in knn_join_grid_exact(
-                left, right, k=k, fallback_budget_pairs=0
-            ).collect()
+            for r in knn_join_grid_exact(left, right, k=k).collect()
         }
         want = {
             (r["id"], r["rid"], r["knn_rank"])
@@ -216,13 +219,14 @@ def test_knn_grid_exact_equals_exhaustive_even_with_empty_blocks(spark):
         assert got == want, f"k={k}"
 
 
-def test_knn_grid_exact_round0_short_circuit(spark):
+def test_knn_grid_exact_round0_short_circuit(spark, monkeypatch):
     """When |left|·|right| fits the fallback budget, the auto-cell eager
     path takes one exhaustive broadcast join instead of a grid round —
     and the result must be IDENTICAL (same rows, same deterministic
     tie-breaks) to the grid-forced path on the same data."""
     import random
 
+    from accident_prediction_montreal_spark.operators import spatial
     from accident_prediction_montreal_spark.operators.spatial import (
         knn_join_grid_exact,
     )
@@ -237,7 +241,8 @@ def test_knn_grid_exact_round0_short_circuit(spark):
         ["id", "lat", "lon"],
     )
     fast = knn_join_grid_exact(left, right, k=3)          # short-circuits
-    slow = knn_join_grid_exact(left, right, k=3, fallback_budget_pairs=0)
+    monkeypatch.setattr(spatial, "FALLBACK_BUDGET_PAIRS", 0)
+    slow = knn_join_grid_exact(left, right, k=3)
     key = lambda r: (r["id"], r["knn_rank"])  # noqa: E731
     fast_rows = sorted(
         ((r["id"], r["knn_rank"], r["rid"]) for r in fast.collect())
@@ -249,12 +254,13 @@ def test_knn_grid_exact_round0_short_circuit(spark):
     assert set(fast.columns) == set(slow.columns)
 
 
-def test_knn_grid_exact_tiny_cell_forces_escalation(spark):
+def test_knn_grid_exact_tiny_cell_forces_escalation(spark, monkeypatch):
     """Start from a deliberately undersized cell: every point fails the
     round-one proof and the answer must still be exact after escalation
     (or the exhaustive fallback)."""
     import random
 
+    from accident_prediction_montreal_spark.operators import spatial
     from accident_prediction_montreal_spark.operators.spatial import (
         knn_join_grid_exact,
     )
@@ -268,9 +274,10 @@ def test_knn_grid_exact_tiny_cell_forces_escalation(spark):
         [(i, 45.4 + rng.random() * 0.2, -73.7 + rng.random() * 0.2) for i in range(20)],
         ["id", "lat", "lon"],
     )
+    monkeypatch.setattr(spatial, "MAX_ROUNDS", 2)
     got = {
         (r["id"], r["rid"], r["knn_rank"])
-        for r in knn_join_grid_exact(left, right, k=2, cell_deg=0.001, max_rounds=2).collect()
+        for r in knn_join_grid_exact(left, right, k=2, cell_deg=0.001).collect()
     }
     want = {
         (r["id"], r["rid"], r["knn_rank"]) for r in knn_join(left, right, k=2).collect()
@@ -310,30 +317,6 @@ def test_knn_grid_exact_antimeridian_seam(spark):
     }
     assert got == want
     assert (1, 1000, 1) in got  # the cross-seam neighbor is rank 1
-
-
-def test_knn_grid_exact_verify_off_is_lazy_and_composable(spark):
-    """verify='off' + explicit cell_deg must trigger ZERO Spark jobs at
-    construction time so the operator embeds into a larger lazy plan;
-    executing the composed plan still yields the plain-grid result."""
-    from accident_prediction_montreal_spark.operators.spatial import (
-        knn_join_grid_exact,
-    )
-
-    left, right = _points(spark)
-    labels = spark.createDataFrame([(1, "downtown")], ["id", "zone"])
-    sc = spark.sparkContext
-    sc.setJobGroup("lazy-knn-check", "composability probe")
-    try:
-        out = knn_join_grid_exact(left, right, k=3, cell_deg=0.5, verify="off")
-        composed = out.join(labels, "id")  # still no action
-        jobs = sc.statusTracker().getJobIdsForGroup("lazy-knn-check")
-        assert list(jobs) == [], f"construction triggered jobs: {jobs}"
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    rows = composed.orderBy("knn_rank").collect()
-    assert [r["rid"] for r in rows] == [10, 20, 30]
-    assert all(r["zone"] == "downtown" for r in rows)
 
 
 def test_idw_radius_polar_fallback_keeps_in_radius_pairs(spark):
@@ -486,3 +469,76 @@ def test_knn_grid_plain_finds_cross_seam_neighbor_via_shadows(spark):
     }
     # every cross-seam pair is within 0.1°-ish and must be a candidate
     assert got == {(1, 1000), (1, 2000), (2, 1000), (2, 2000)}
+
+
+def test_idw_radius_seam_at_shadow_limit(spark):
+    """Longitude cells just under the 60° shadow limit (high latitude,
+    large radius): nearly every station gets a ±360° shadow copy, and
+    in-radius pairs straddle lon ±180 — the grid must still equal the
+    truncated brute force, so no sample meets a station both through
+    its true copy and its shadow (a duplicated pair would double-count
+    the weighted sums)."""
+    import random
+
+    from accident_prediction_montreal_spark.operators import spatial
+    from accident_prediction_montreal_spark.operators.spatial import (
+        idw_interpolate_radius,
+        seam_shadows_active,
+    )
+
+    rng = random.Random(17)
+
+    def seam_lon():
+        lon = 150.0 + rng.random() * 60.0  # 150..210, wrapped below
+        return lon - 360.0 if lon > 180.0 else lon
+
+    stations = spark.createDataFrame(
+        [
+            (i, 76.0 + rng.random() * 4.9, seam_lon(),
+             float("nan") if i % 9 == 0 else rng.random() * 30.0)
+            for i in range(60)
+        ]
+        + [(1000, 80.9, 179.5, 12.0)],  # pins max |lat|, hence the cell
+        ["sid", "station_lat", "station_lon", "temp"],
+    )
+    samples = spark.createDataFrame(
+        [(i, 74.0 + rng.random() * 8.0, seam_lon()) for i in range(40)],
+        ["sample_id", "lat", "lon"],
+    )
+    radius = 500_000.0
+    # the operator's longitude cell for this fixture sits just under 60°
+    deg = radius / spatial._M_PER_DEG
+    lon_cell = deg / math.cos(math.radians(80.9 + deg)) * 1.05
+    assert 55.0 < lon_cell and seam_shadows_active(lon_cell)
+
+    got = {
+        r["sample_id"]: r["temp"]
+        for r in idw_interpolate_radius(
+            samples, stations, ["temp"], radius_m=radius
+        ).collect()
+    }
+
+    def hav(a, b, c, d):
+        p = math.sin(math.radians(c - a) / 2) ** 2 + math.cos(math.radians(a)) * math.cos(
+            math.radians(c)
+        ) * math.sin(math.radians(d - b) / 2) ** 2
+        return 2 * 6371000.0 * math.atan2(math.sqrt(p), math.sqrt(1 - p))
+
+    st = stations.collect()
+    want = {}
+    n_cross_seam = 0
+    for s in samples.collect():
+        num = den = 0.0
+        for t in st:
+            d = hav(s["lat"], s["lon"], t["station_lat"], t["station_lon"])
+            if d <= radius and not math.isnan(t["temp"]):
+                n_cross_seam += (s["lon"] > 0) != (t["station_lon"] > 0)
+                w = 1.0 / d**2
+                num += w * t["temp"]
+                den += w
+        if den > 0.0:
+            want[s["sample_id"]] = num / den
+    assert n_cross_seam > 0  # the fixture really straddles the seam
+    assert set(got) == set(want)
+    for sid, v in want.items():
+        assert got[sid] == pytest.approx(v, rel=1e-9), sid
