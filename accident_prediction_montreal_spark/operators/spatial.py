@@ -706,18 +706,13 @@ def idw_interpolate(
     the only shuffle is on ``sample_id``.
     """
     # Per-ROW cosines hoisted out of the quadratic pair loop (bit-exact
-    # — haversine_meters_coslat is the same expression; r14, guide §1.2
-    # per-task work): |S|+|T| cosines instead of 2·|S|·|T|.
-    samples = samples.withColumn(
-        "__idw_cos_s", F.cos(F.radians(F.col(sample_coords[0])))
-    )
-    stations = stations.withColumn(
-        "__idw_cos_t", F.cos(F.radians(F.col(station_coords[0])))
-    )
+    # — haversine_meters_coslat is the same expression): |S|+|T| cosines
+    # instead of 2·|S|·|T|.
+    samples, stations = _with_coslat(samples, stations, sample_coords, station_coords)
     d = haversine_meters_coslat(
         sample_coords[0], sample_coords[1],
         station_coords[0], station_coords[1],
-        "__idw_cos_s", "__idw_cos_t",
+        "_l_coslat", "_r_coslat",
     )
     # try_divide: a station exactly at the sample (d=0) yields a NULL
     # weight (ignored), identical to DuckDB's x/0→NULL — and it cannot

@@ -6,6 +6,21 @@ AQE on, Arrow on, UTC timezone pinned so timestamp semantics match the
 DuckDB oracle, shuffle partitions sized to the local core count instead
 of the 2.x default of 200.
 
+Generated code stays resident across queries. Spark keeps the Janino
+classes it compiles in one JVM-wide LRU cache keyed by the source text,
+100 entries by default. One pass of a workload needs more than that
+(perfbench ``adhoc`` 143 classes, ``bulk`` 103, bench.py's 22-query
+headline 381), and the queries rotate, so at the default nearly every
+warm execution compiled its classes again and HotSpot JIT-compiled the
+new bytecode again. ``CODEGEN_CACHE_ENTRIES`` holds the largest of
+those working sets with room for the cache's per-segment LRU (PERF.md,
+"Per-execution fixed costs"). Whole-stage class names also leave out
+the codegen stage id: AQE numbers stages in the order it creates them,
+which follows the order in which earlier stages finish, so the same
+plan could render different source text on the next execution and miss
+the cache (``m2_random_undersampler`` recompiled up to 22 classes on
+some warm executions and none on others).
+
 On a real cluster the same factory applies — only ``master`` and the
 memory knobs change; shuffle partitioning is left to AQE coalescing.
 """
@@ -22,6 +37,11 @@ def local_cpus() -> str:
     """The ``local[N]`` core count: ``SPARK_GRAFT_CPUS`` when set, else
     the cores this process may run on."""
     return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
+#: ``spark.sql.codegen.cache.maxEntries``, a static conf: it sizes the
+#: JVM-wide generated-class cache once, when the first session starts.
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def get_session(
@@ -51,6 +71,8 @@ def get_session(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # ANSI off: x/0 → NULL (matches DuckDB and the SQL oracle), not an error.
         .config("spark.sql.ansi.enabled", "false")
         # Read INT64 TIMESTAMP(NANOS) parquet (events.ts) as long; the

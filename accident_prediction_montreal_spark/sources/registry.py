@@ -129,6 +129,9 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     files are readable (as bigint) by every later read on that session.
     ``streaming/finite.py::events_stream`` sets the same conf, the same
     way, when its events file is INT64 nanos.
+
+    The file schema is inferred once per file state (``_read_parquet``);
+    every call still builds a fresh relation.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {sorted(TABLES)}")
@@ -138,9 +141,10 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     # runtime, on whatever session we were given; the loader below converts
     # the resulting bigint to timestamp micros. Runtime-settable: verified.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    df, schema = _read_parquet(spark, path)
     expected = set(TABLES[name].fieldNames())
-    missing = expected - set(df.columns)
+    missing = expected - set(schema.fieldNames())
     if missing:
         raise ValueError(f"table {name!r} at {sf_dir} missing columns {sorted(missing)}")
     # Event-time columns are TIMESTAMP_NTZ engine-wide (naive micros,
@@ -159,7 +163,7 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     #     wall-clock arithmetic, session-TZ-independent).
     #   * instant timestamp (isAdjustedToUTC) — strip to the stored
     #     micros via unix_micros, rebuild NTZ the same way.
-    actual = dict(df.dtypes)
+    actual = {f.name: f.dataType.simpleString() for f in schema.fields}
     cols = []
     for field in TABLES[name].fields:
         declared = field.dataType.simpleString()
@@ -173,6 +177,60 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
         else:
             cols.append(F.col(field.name))
     return df.select(*cols)
+
+
+# Schema memo. Inference submits a one-task parquet footer job (about
+# 45 ms warm) on every read; a read with the inferred schema given
+# submits none. The memo holds StructTypes only, never a DataFrame: a
+# shared relation would give two load_table calls the same attribute ids
+# and break self-joins.
+#: Confs that change what parquet inference returns for the same files.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+)
+#: resolved path -> (identity key, schema) of its latest inference.
+_SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
+
+
+def _schema_key(spark: SparkSession, path: str) -> tuple:
+    """(name, size, mtime_ns) of every file under a local ``path`` plus
+    the session's inference confs. No files (a missing or non-local
+    path) gives an empty file part, which is never memoized."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        files = (("", st.st_size, st.st_mtime_ns),)
+    else:
+        found = []
+        for root, _, names in os.walk(path):
+            for n in names:
+                full = os.path.join(root, n)
+                st = os.stat(full)
+                found.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+        files = tuple(sorted(found))
+    return files, tuple(spark.conf.get(c) for c in _INFERENCE_CONFS)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> tuple[DataFrame, T.StructType]:
+    """``spark.read.parquet(path)`` and its schema. The schema is inferred
+    only when the files under ``path`` or the session's inference confs
+    differ from the last inference; else the read is given the memoized
+    schema. The key is taken before inferring, so a file rewritten
+    during inference re-infers on the next call."""
+    real = os.path.realpath(path)
+    key = _schema_key(spark, path)
+    hit = _SCHEMAS.get(real)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path), hit[1]
+    df = spark.read.parquet(path)
+    schema = df.schema
+    if key[0]:
+        _SCHEMAS[real] = (key, schema)
+    return df, schema
 
 
 _NTZ_EPOCH = "TIMESTAMP_NTZ'1970-01-01 00:00:00'"
